@@ -13,12 +13,15 @@ streaming iteration, so the idiomatic decomposition (SURVEY.md §7) is:
   shuffle of the big side, the canonical scalable k-means step.
 - ``update``: posexplode to (cluster, dim, value) → hash-aggregate
   mean. Shuffle carries k×64 group rows, nothing more.
-- ``lloyd_iterate``: a driver loop that collects the k×64 centroid
-  matrix each iteration (deliberately tiny) and rebuilds the centroid
-  DataFrame from literals — every iteration's plan is constant-size,
-  which avoids the exponential plan-growth trap of chaining DataFrames
-  (SURVEY.md §7 hard-part 1). No localCheckpoint needed because each
-  iteration re-derives from the base scan + literal centroids.
+- the co-operator itself, shared by ``kmeans_parallel_init``,
+  ``lloyd_iterate`` and ``streaming.kmeans.StreamingKMeans``: ONE
+  Arrow-native kernel — :func:`_decode` (zero-copy embedding matrix),
+  :func:`_score` (argmax X·Cᵀ − bias) and :func:`_accumulate`
+  (per-centroid partial sums) — run by thin ``mapInArrow`` combiners.
+  The model reaches every combiner through one side file
+  (:class:`_ModelFile`), so each driver loop plans its passes once and
+  only the k×d matrix changes between rounds: constant-size plans, no
+  literal or lineage growth (SURVEY.md §7 hard-part 1).
 
 Embeddings are unit-normalized (SURVEY.md §1.3), so dot product ==
 cosine similarity; "nearest" = argmax dot, tie-broken on lowest
@@ -27,10 +30,20 @@ cluster id for determinism.
 
 from __future__ import annotations
 
+import contextlib
+import os
+import tempfile
+import uuid
+from functools import partial
+
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ..functions.vector import dot64, emb_finite, sql_emb_finite
+from ..functions.vector import dot64, sql_emb_finite
+
+_STATS_SCHEMA = "cid int, psum array<double>, n bigint"
+_DELTA_SCHEMA = "kind int, vec_id bigint, cid int, psum array<double>, n bigint"
 
 
 def init_centroids(embeddings: DataFrame, k: int = 10) -> DataFrame:
@@ -58,23 +71,18 @@ def kmeans_parallel_init(
     init (collapses when the id order correlates with one cluster) and
     sequential k-means++ (k driver round-trips, unusable at scale).
 
-    Each of the ``rounds`` passes is ONE mapInPandas scan (numpy GEMM
-    against the broadcast candidate matrix — the lloyd_iterate
-    discipline: constant-size plans, only sampled candidates reach the
-    driver). Points are sampled with probability min(1, l*d²/Σd²)
-    where d² = 2-2·(max dot) on unit-normalized vectors and l = 2k per
-    round; the "randomness" is a deterministic splitmix-style hash of
-    (vec_id, round, seed), so init is reproducible run-to-run — same
-    discipline as every other hash-derived draw in this repo. The
-    O(k·rounds) candidates are then weighted by their nearest-point
-    counts and reduced to k centers with weighted k-means++ on the
-    driver (tiny: candidate matrix is k·rounds·2 × d).
+    Each round is one cost pass and one sample pass of the kernel's
+    combiners, planned once per fit (only sampled candidates reach the
+    driver). A point is sampled with probability min(1, l·d²/Σd²),
+    d² = 2−2·(max dot) on unit vectors, l = 2k, drawn from a
+    deterministic splitmix-style hash of (vec_id, round, seed), so init
+    is reproducible run-to-run. The O(k·rounds) candidates are then
+    weighted by their nearest-point counts and reduced to k centers
+    with weighted k-means++ on the driver (a k·rounds·2 × d matrix).
 
     Returns a (k×d numpy array, cids array) pair compatible with
     lloyd_iterate's internals / StreamingKMeans.
     """
-    import numpy as np
-
     ids_emb = embeddings.select("vec_id", "embedding")
     seed_rows = ids_emb.orderBy("vec_id").limit(1).collect()
     if not seed_rows:
@@ -85,75 +93,38 @@ def kmeans_parallel_init(
     C = np.array([list(seed_rows[0].embedding)], dtype="float64")
     ell = oversample or 2 * k
 
-    def pass_fn(Cm, ell, denom, rnd):
-        import pandas as pd
-
-        def fn(batches):
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                X = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-                d2 = np.maximum(0.0, 2.0 - 2.0 * (X @ Cm.T).max(axis=1))
-                # Deterministic per-(vec_id, round) uniform in [0, 1).
-                h = (
-                    (pdf["vec_id"].to_numpy().astype(np.uint64) * np.uint64(0x9E3779B97F4A7C15))
-                    ^ (np.uint64(rnd * 1_000_003 + seed))
-                ) * np.uint64(0xBF58476D1CE4E5B9)
-                u = (h >> np.uint64(11)).astype(np.float64) / float(1 << 53)
-                p = np.minimum(1.0, ell * d2 / denom) if denom > 0 else d2 * 0
-                m = u < p
-                yield pd.DataFrame(
-                    {
-                        "vec_id": pdf["vec_id"][m],
-                        "embedding": pdf["embedding"][m],
-                    }
-                )
-
-        return fn
-
-    def cost_fn(Cm):
-        import pandas as pd
-
-        def fn(batches):
-            total = 0.0
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                X = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-                total += float(
-                    np.maximum(0.0, 2.0 - 2.0 * (X @ Cm.T).max(axis=1)).sum()
-                )
-            yield pd.DataFrame({"c": [total]})
-
-        return fn
-
     cached = ids_emb.persist()
-    try:
-        for rnd in range(rounds):
-            denom = sum(
-                r.c
-                for r in cached.mapInPandas(cost_fn(C), "c double").collect()
-            )
-            if denom <= 0:
-                break
-            new = cached.mapInPandas(
-                pass_fn(C, ell, denom, rnd),
-                "vec_id bigint, embedding array<float>",
-            ).collect()
-            if new:
-                C = np.vstack(
-                    [C] + [np.array(list(r.embedding), dtype="float64") for r in new]
+    with _ModelFile() as model:
+        embs = cached.select("embedding")
+        cost_df = embs.mapInArrow(partial(_cost_combiner, model.path), "c double")
+        sample_df = cached.mapInArrow(
+            partial(_sample_combiner, model.path),
+            "vec_id bigint, embedding array<double>",
+        )
+        weight_df = embs.mapInArrow(
+            partial(_stats_combiner, model.path), _STATS_SCHEMA
+        )
+        try:
+            for rnd in range(rounds):
+                model.publish(C, np.arange(len(C)))
+                denom = sum(r.c for r in cost_df.collect())
+                if denom <= 0:
+                    break
+                model.publish(
+                    C, np.arange(len(C)), ell=ell, denom=denom,
+                    salt=np.uint64(rnd * 1_000_003 + seed),
                 )
-        # Weight candidates by nearest-point counts (one more pass).
-        parts = cached.mapInPandas(
-            _partial_stats_fn(C, np.arange(len(C))),
-            "cid int, psum array<double>, n bigint",
-        ).collect()
-        w = np.zeros(len(C), dtype="float64")
-        for r in parts:
-            w[int(r.cid)] += float(r.n)
-    finally:
-        cached.unpersist()
+                new = sample_df.collect()
+                if new:
+                    C = np.vstack(
+                        [C] + [np.array(r.embedding, dtype="float64") for r in new]
+                    )
+            # Weight candidates by nearest-point counts (one more pass).
+            cand = np.arange(len(C))
+            model.publish(C, cand)
+            w = _fold_partials(weight_df.collect(), cand, C.shape[1])[1].astype(float)
+        finally:
+            cached.unpersist()
 
     # Driver-side weighted k-means++ seeding + weighted Lloyd over the
     # tiny candidate set, with deterministic multi-restart: a single
@@ -229,6 +200,47 @@ def update(assigned: DataFrame) -> DataFrame:
     )
 
 
+# -- the kernel ------------------------------------------------------
+
+
+class _ModelFile:
+    """The one channel by which a model reaches the combiners: an npz
+    side file each task loads at start. Everything that varies per
+    call (C, cids, the Euclidean flag, k-means||'s ell/denom/salt) goes
+    in it, so a loop plans its DataFrames ONCE and re-collects them
+    every round (r13: re-planning cost ~150 ms per Lloyd round).
+    ``publish`` swaps atomically; leaving the ``with`` block unlinks
+    the file, so leave it only after the last action that could
+    recompute from it. Driver-local tmp suits local mode; a cluster
+    deploy needs shared storage, like the parquet assignment state."""
+
+    def __init__(self):
+        self.path = os.path.join(
+            tempfile.gettempdir(), f"fsk_kmeans_model-{uuid.uuid4().hex[:12]}.npz"
+        )
+
+    def publish(self, C, cids, euclidean: bool = False, **extra) -> None:
+        tmp = f"{self.path}.tmp-{uuid.uuid4().hex[:8]}"
+        with open(tmp, "wb") as f:
+            np.savez(f, C=C, cids=cids, euclidean=euclidean, **extra)
+        os.replace(tmp, self.path)
+
+    def __enter__(self):
+        return self
+
+    def __exit__(self, *exc):
+        with contextlib.suppress(OSError):
+            os.unlink(self.path)
+
+
+def _load_model(path: str) -> dict:
+    """The published model as a dict, plus its score ``bias``."""
+    with np.load(path) as f:
+        m = {name: f[name] for name in f.files}
+    m["bias"] = _euclid_bias(m["C"], bool(m["euclidean"]))
+    return m
+
+
 def _euclid_bias(C, euclidean: bool):
     """Per-centroid score bias turning argmax-dot into argmin-Euclidean:
     argmin ||x−c||² == argmax (x·c − ||c||²/2), EXACTLY (the ||x||²
@@ -237,158 +249,207 @@ def _euclid_bias(C, euclidean: bool):
     raw-coordinate inputs (the CLI's CSV lat/lon mode) without the
     bias let large-magnitude centroids absorb everything (review r6).
     """
-    import numpy as np
-
     return 0.5 * (C * C).sum(axis=1) if euclidean else np.float64(0.0)
 
 
-def _partial_stats_fn(C, cids, euclidean: bool = False):
-    """Per-partition combiner: vectorized assignment (numpy GEMM) +
-    per-cluster partial sums/counts. Emits k rows per partition — the
-    map-side combine that makes an iteration shuffle-free."""
-    import numpy as np
-    import pandas as pd
-
-    bias = _euclid_bias(C, euclidean)
-
-    def fn(batches):
-        k, d = C.shape
-        sums = np.zeros((k, d))
-        counts = np.zeros(k, dtype="int64")
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            X = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            best = np.argmax(X @ C.T - bias, axis=1)  # ties → lowest index == lowest cid
-            for j in range(k):
-                members = X[best == j]
-                if len(members):
-                    sums[j] += members.sum(axis=0)
-                    counts[j] += len(members)
-        yield pd.DataFrame(
-            {"cid": cids, "psum": list(sums), "n": counts}
-        )
-
-    return fn
+def _decode(batch, d: int, col: str = "embedding"):
+    """An Arrow batch's embedding ListArray as an n×d float64 matrix:
+    a zero-copy flatten + reshape, widened to float64 (a probe at
+    10k×64: 0.4 ms, against 9–12 ms for np.stack over pandas objects).
+    A reshape would silently misalign rows on a null or wrong-length
+    embedding, so both raise a ValueError naming the column."""
+    arr = batch.column(col)
+    if arr.null_count:
+        raise ValueError(f"{col}: {arr.null_count} null embedding(s)")
+    lens = np.diff(np.asarray(arr.offsets))
+    if (lens != d).any():
+        i = int(np.flatnonzero(lens != d)[0])
+        raise ValueError(f"{col}: row {i} has {lens[i]} elements, expected {d}")
+    flat = arr.flatten().to_numpy(zero_copy_only=False)
+    return flat.astype(np.float64, copy=False).reshape(len(arr), d)
 
 
-def _partial_stats_fn_from_file(cpath, cids, d, euclidean: bool = False):
-    """The :func:`_partial_stats_fn` combiner with the centroid matrix
-    read from ``cpath`` AT TASK START instead of baked into the
-    closure. This lets the driver loop build the iteration DataFrame
-    ONCE and re-collect it each Lloyd round: a fresh mapInPandas plan
-    per iteration paid ~150 ms/round of driver-side re-analysis +
-    codegen on an unchanged plan shape (r13 measurement: 20 rounds
-    5.01 s fresh-plan vs 4.23 s plan-once, partials bit-identical).
-    The k×d matrix crosses via a tiny npy file — the side-channel
-    analog of re-broadcasting the model per iteration; at cluster
-    scale ``cpath`` must live on shared storage (the lakehouse tmp
-    root), exactly like StreamingKMeans' parquet assignment state."""
-    import numpy as np
-    import pandas as pd
-
-    def fn(batches):
-        C = np.load(cpath)
-        bias = _euclid_bias(C, euclidean)
-        k = C.shape[0]
-        sums = np.zeros((k, d))
-        counts = np.zeros(k, dtype="int64")
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            X = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            best = np.argmax(X @ C.T - bias, axis=1)  # ties → lowest index == lowest cid
-            for j in range(k):
-                members = X[best == j]
-                if len(members):
-                    sums[j] += members.sum(axis=0)
-                    counts[j] += len(members)
-        yield pd.DataFrame(
-            {"cid": cids, "psum": list(sums), "n": counts}
-        )
-
-    return fn
+def _score(X, m):
+    """Nearest centroid position of every row of X, and its score:
+    argmax(X·Cᵀ − bias), ties → lowest position (== lowest cid)."""
+    s = X @ m["C"].T - m["bias"]
+    best = np.argmax(s, axis=1)
+    return best, s[np.arange(len(X)), best]
 
 
-def _reassign_delta_fn(C, cids, euclidean: bool = False):
-    """Per-partition combiner for REASSIGNMENT-aware streaming k-means
-    (the reference co-operator's Feature add/remove arithmetic,
-    SURVEY.md §1.1/§3.1 [PK]): each arriving point is assigned to the
-    argmax-dot centroid; if the ``old_cid`` column (the batch LEFT
-    JOINED against the parquet-backed assignment state — no broadcast
-    driver dict, streaming/kmeans.py) says it was previously assigned
-    to a DIFFERENT cluster, its vector is subtracted from that
-    cluster's delta (remove) as it is added to the new one. Emits two
-    row kinds in one pass:
+def _accumulate(X, pos, k: int):
+    """Per-centroid (sums, counts) of the rows of X, row i folded into
+    centroid ``pos[i]``. A k-iteration mask loop: a probe measured it
+    fastest and bit-stable (1.9 ms at 10k×64, k=10; np.add.at 7.3 ms,
+    reduceat 5.6 ms, one-hot GEMM 2.5 ms)."""
+    sums = np.zeros((k, X.shape[1]))
+    counts = np.zeros(k, dtype="int64")
+    for j in range(k):
+        members = X[pos == j]
+        sums[j] = members.sum(axis=0)
+        counts[j] = len(members)
+    return sums, counts
 
-      kind=0 — per-cluster delta partials (cid, psum, n), k rows per
-               partition, where psum/n may be negative (removals);
-      kind=1 — per-point new assignments (vec_id, cid), ONE row per
-               distinct vec_id in the partition (the final overlay
-               entry — a within-batch duplicate must not commit two
-               state rows, or the next batch's join fans it out);
-               these rows are WRITTEN to the next assignment-state
-               generation in Spark, never collected.
 
-    Assumes a point arrives at most once per micro-batch partition
-    overlap-free (re-arrivals happen ACROSS batches — the reference's
-    pattern, where the same immutable Feature re-enters the loop as
-    centroids move); a within-batch duplicate in the same partition is
-    handled sequentially via a local overlay."""
-    import numpy as np
-    import pandas as pd
+def _list_column(rows):
+    """The rows of an n×d array as an Arrow list<double> column."""
+    import pyarrow as pa
 
-    def fn(batches):
-        k, d = C.shape
-        pos = {int(c): j for j, c in enumerate(cids)}
-        bias = _euclid_bias(C, euclidean)
-        overlay: dict = {}
-        sums = np.zeros((k, d))
-        counts = np.zeros(k, dtype="int64")
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            X = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            ids = pdf["vec_id"].to_numpy()
-            olds = pdf["old_cid"].to_numpy()  # NaN where never seen
-            best = np.argmax(X @ C.T - bias, axis=1)  # ties → lowest index/cid
-            for i in range(len(ids)):
-                vid = int(ids[i])
-                j = int(best[i])
-                sums[j] += X[i]
-                counts[j] += 1
-                old = overlay.get(
-                    vid, None if pd.isna(olds[i]) else int(olds[i])
-                )
-                if old is not None:
-                    jo = pos[int(old)]
-                    sums[jo] -= X[i]
-                    counts[jo] -= 1
-                overlay[vid] = int(cids[j])
-        # Final overlay entries — one kind=1 row per DISTINCT vec_id.
-        out_ids = list(overlay)
-        out_cids = [overlay[v] for v in out_ids]
-        yield pd.DataFrame(
+    n, d = rows.shape
+    offsets = pa.array(np.arange(0, (n + 1) * d, d, dtype="int32"))
+    return pa.ListArray.from_arrays(offsets, pa.array(rows.ravel()))
+
+
+def _fold_partials(rows, cids, d: int):
+    """Driver side: sum per-partition (cid, psum, n) partials into k×d
+    sums and k counts, row j ↔ cids[j]."""
+    pos = {int(c): j for j, c in enumerate(cids)}
+    sums = np.zeros((len(cids), d))
+    counts = np.zeros(len(cids), dtype="int64")
+    for r in rows:
+        j = pos[int(r.cid)]
+        sums[j] += np.array(r.psum)
+        counts[j] += int(r.n)
+    return sums, counts
+
+
+def _stats_combiner(path, batches):
+    """Per-partition (cid, psum, n) partials, k rows per partition —
+    the map-side combine that makes an iteration shuffle-free."""
+    import pyarrow as pa
+
+    m = _load_model(path)
+    k, d = m["C"].shape
+    sums = np.zeros((k, d))
+    counts = np.zeros(k, dtype="int64")
+    for b in batches:
+        X = _decode(b, d)
+        s, c = _accumulate(X, _score(X, m)[0], k)
+        sums += s
+        counts += c
+    yield pa.RecordBatch.from_pydict(
+        {"cid": m["cids"].astype("int32"), "psum": _list_column(sums), "n": counts}
+    )
+
+
+def _assign_combiner(path, batches):
+    """(vec_id, cluster_id) of every row."""
+    import pyarrow as pa
+
+    m = _load_model(path)
+    for b in batches:
+        best, _ = _score(_decode(b, m["C"].shape[1]), m)
+        yield pa.RecordBatch.from_pydict(
             {
-                "kind": np.zeros(k, dtype="int32"),
-                "vec_id": np.zeros(k, dtype="int64"),
-                "cid": cids.astype("int32"),
-                "psum": list(sums),
-                "n": counts,
+                "vec_id": b.column("vec_id").cast(pa.int64()),
+                "cluster_id": m["cids"][best].astype("int32"),
             }
         )
-        if out_ids:
-            yield pd.DataFrame(
-                {
-                    "kind": np.ones(len(out_ids), dtype="int32"),
-                    "vec_id": np.array(out_ids, dtype="int64"),
-                    "cid": np.array(out_cids, dtype="int32"),
-                    "psum": [None] * len(out_ids),
-                    "n": np.zeros(len(out_ids), dtype="int64"),
-                }
-            )
 
-    return fn
+
+def _d2(X, m):
+    """Squared distance to the nearest centre, 2 − 2·max dot, on unit
+    vectors (k-means|| runs on the dot metric)."""
+    return np.maximum(0.0, 2.0 - 2.0 * _score(X, m)[1])
+
+
+def _cost_combiner(path, batches):
+    """One row: the partition's Σd² against the current candidates."""
+    import pyarrow as pa
+
+    m = _load_model(path)
+    d = m["C"].shape[1]
+    total = sum((float(_d2(_decode(b, d), m).sum()) for b in batches), 0.0)
+    yield pa.RecordBatch.from_pydict({"c": [total]})
+
+
+def _sample_combiner(path, batches):
+    """k-means|| sampling: keep a row with probability
+    min(1, ell·d²/denom), drawn from a deterministic splitmix-style
+    hash of (vec_id, salt)."""
+    import pyarrow as pa
+
+    m = _load_model(path)
+    d = m["C"].shape[1]
+    ell, denom, salt = float(m["ell"]), float(m["denom"]), m["salt"]
+    for b in batches:
+        X = _decode(b, d)
+        d2 = _d2(X, m)
+        ids = b.column("vec_id").to_numpy(zero_copy_only=False)
+        h = (
+            (ids.astype(np.uint64) * np.uint64(0x9E3779B97F4A7C15)) ^ salt
+        ) * np.uint64(0xBF58476D1CE4E5B9)
+        u = (h >> np.uint64(11)).astype(np.float64) / float(1 << 53)
+        p = np.minimum(1.0, ell * d2 / denom) if denom > 0 else d2 * 0
+        keep = u < p
+        yield pa.RecordBatch.from_pydict(
+            {"vec_id": ids[keep].astype("int64"), "embedding": _list_column(X[keep])}
+        )
+
+
+def _reassign_combiner(path, batches):
+    """REASSIGNMENT-aware streaming combiner (the reference
+    co-operator's Feature add/remove arithmetic, SURVEY.md §1.1/§3.1
+    [PK]): every arrival is added to its nearest centroid and removed
+    from its previous cluster — ``old_cid`` (the batch LEFT JOINED
+    against the assignment state; null when never seen) for a point's
+    first copy in the partition, the cluster its previous copy just
+    joined for a later one. That is the sequential overlay's semantics,
+    vectorized through each row's previous-occurrence index over the
+    whole partition (the caller co-locates every copy of a vec_id).
+    Emits kind=0 rows — k (cid, psum, n) delta partials, possibly
+    negative — and kind=1 rows — ONE (vec_id, cid) per distinct vec_id,
+    its last copy's cluster, written to the next state generation in
+    Spark (two rows for one point would fan out the next join)."""
+    import pyarrow as pa
+
+    m = _load_model(path)
+    cids = m["cids"]
+    k, d = m["C"].shape
+    sums = np.zeros((k, d))
+    counts = np.zeros(k, dtype="int64")
+    batches = [b for b in batches if b.num_rows]
+    out_ids = out_cids = np.zeros(0, dtype="int64")
+    if batches:
+        b = pa.Table.from_batches(batches).combine_chunks().to_batches()[0]
+        X = _decode(b, d)
+        ids = b.column("vec_id").to_numpy()
+        best, _ = _score(X, m)
+        old = b.column("old_cid")
+        has_old = old.is_valid().to_numpy(zero_copy_only=False)
+        old = old.fill_null(int(cids[0])).to_numpy()
+        by_cid = np.argsort(cids)
+        old_pos = by_cid[np.searchsorted(cids, old, sorter=by_cid).clip(max=k - 1)]
+        if (cids[old_pos] != old).any():
+            raise ValueError(f"old_cid: {sorted(set(old) - set(cids))} not in cids")
+        # Previous copy of each row's vec_id, in arrival order.
+        srt = np.argsort(ids, kind="stable")
+        same = ids[srt[1:]] == ids[srt[:-1]]
+        repeat = np.zeros(len(ids), dtype=bool)
+        repeat[srt[1:]] = same
+        prev = np.zeros(len(ids), dtype=np.intp)
+        prev[srt[1:]] = srt[:-1]
+        removed = repeat | has_old
+        sums, counts = _accumulate(X, best, k)
+        rm_sums, rm_counts = _accumulate(
+            X[removed], np.where(repeat, best[prev], old_pos)[removed], k
+        )
+        sums -= rm_sums
+        counts -= rm_counts
+        last = srt[np.append(~same, True)]
+        out_ids, out_cids = ids[last], cids[best[last]]
+    m_out = len(out_ids)
+    yield pa.RecordBatch.from_pydict(
+        {
+            "kind": np.repeat(np.array([0, 1], dtype="int32"), [k, m_out]),
+            "vec_id": np.append(np.zeros(k, dtype="int64"), out_ids),
+            "cid": np.append(cids, out_cids).astype("int32"),
+            "psum": pa.concat_arrays(
+                [_list_column(sums), pa.nulls(m_out, pa.list_(pa.float64()))]
+            ),
+            "n": np.append(counts, np.zeros(m_out, dtype="int64")),
+        }
+    )
 
 
 def lloyd_iterate(
@@ -402,16 +463,12 @@ def lloyd_iterate(
 ) -> DataFrame:
     """Full Lloyd's to convergence; returns final (vec_id, cluster_id).
 
-    Scale shape: each iteration is ONE narrow mapInPandas pass over the
-    (cached) embeddings — vectorized numpy assignment against the
-    broadcast k×d centroid matrix, combined map-side into k partial
-    (sum, count) rows per partition. Only k×P tiny rows reach the
-    driver; there is no shuffle at all per iteration, and the plan is
-    constant-size (no literal growth, no lineage growth — SURVEY.md §7
-    hard-part 1 solved by construction).
+    Scale shape: each iteration is ONE narrow kernel pass over the
+    cached embeddings, combined map-side into k partial (sum, count)
+    rows per partition — only k×P tiny rows reach the driver, with no
+    shuffle. The pass is planned once and re-collected every round;
+    only the side file's matrix changes (SURVEY.md §7 hard-part 1).
     """
-    import numpy as np
-
     if init is not None:
         # e.g. kmeans_parallel_init's (k×d matrix, cids) pair
         C, cids = init
@@ -421,95 +478,40 @@ def lloyd_iterate(
         cent_rows = init_centroids(embeddings, k).collect()
         if not cent_rows:
             # Clear message instead of a numpy shape error deep in a
-            # mapInPandas worker (review r6).
+            # combiner (review r6).
             raise ValueError("lloyd_iterate: embeddings table is empty")
         cids = np.array(sorted(int(r.cid) for r in cent_rows))
         by_cid = {int(r.cid): [float(x) for x in r.cemb] for r in cent_rows}
         C = np.array([by_cid[c] for c in cids])  # k×d, row j ↔ cids[j]
 
-    import os
-    import tempfile
-    import uuid
-
     cached = embeddings.select("vec_id", "embedding").persist()
-    # Plan the per-iteration pass ONCE (r13, guide §1.2 step 2): the
-    # only thing that changes between Lloyd rounds is the k×d centroid
-    # matrix, so it crosses via a side file the combiner loads at task
-    # start (_partial_stats_fn_from_file) and the SAME DataFrame is
-    # re-collected every round — no per-round re-analysis/codegen.
-    # np.save + os.replace keeps the swap atomic. Driver-local tmp is
-    # correct for local mode; a cluster deploy points this at shared
-    # storage (see the combiner's docstring).
-    cdir = tempfile.gettempdir()
-    cpath = os.path.join(cdir, f"fsk_lloyd_C-{uuid.uuid4().hex[:12]}.npy")
-    d_dim = int(C.shape[1])
-    iter_df = cached.select("embedding").mapInPandas(
-        _partial_stats_fn_from_file(cpath, cids, d_dim, euclidean),
-        "cid int, psum array<double>, n bigint",
-    )
-
-    def _publish(mat):
-        tmp = f"{cpath}.tmp-{uuid.uuid4().hex[:8]}"
-        with open(tmp, "wb") as f:
-            np.save(f, mat)
-        os.replace(tmp, cpath)
-
-    try:
-        for _ in range(max_iter):
-            # select("embedding"): the combiner never reads vec_id, and
-            # an opaque mapInPandas defeats column pruning (guide §4.1)
-            # — project the one needed column so the Arrow exchange
-            # carries d floats per row, not d floats + an id.
-            _publish(C)
-            partials = iter_df.collect()
-            sums = np.zeros_like(C)
-            counts = np.zeros(len(cids), dtype="int64")
-            pos = {int(c): j for j, c in enumerate(cids)}
-            for r in partials:
-                j = pos[int(r.cid)]
-                sums[j] += np.array(r.psum)
-                counts[j] += int(r.n)
-            new_C = C.copy()  # empty cluster keeps its previous centroid
-            nz = counts > 0
-            new_C[nz] = sums[nz] / counts[nz, None]
-            shift = float(np.abs(new_C - C).max())
-            C = new_C
-            if shift < tol:
-                break
-
-        final_fn = _final_assign_fn(C, cids, euclidean)
-        # Materialize the final assignment BEFORE the finally-block
-        # unpersists the input: the returned DataFrame is lazy, and
-        # without this the cache would be gone by the time any caller
-        # acts on it, re-scanning the source on every downstream action.
-        return cached.mapInPandas(
-            final_fn, "vec_id bigint, cluster_id int"
-        ).localCheckpoint(eager=True)
-    finally:
-        cached.unpersist()
+    with _ModelFile() as model:
+        # select("embedding"): an opaque mapInArrow defeats column
+        # pruning (guide §4.1), and the combiner never reads vec_id.
+        iter_df = cached.select("embedding").mapInArrow(
+            partial(_stats_combiner, model.path), _STATS_SCHEMA
+        )
         try:
-            os.unlink(cpath)
-        except OSError:
-            pass
+            for _ in range(max_iter):
+                model.publish(C, cids, euclidean)
+                sums, counts = _fold_partials(iter_df.collect(), cids, C.shape[1])
+                new_C = C.copy()  # empty cluster keeps its previous centroid
+                nz = counts > 0
+                new_C[nz] = sums[nz] / counts[nz, None]
+                shift = float(np.abs(new_C - C).max())
+                C = new_C
+                if shift < tol:
+                    break
 
-
-def _final_assign_fn(C, cids, euclidean: bool = False):
-    import numpy as np
-    import pandas as pd
-
-    bias = _euclid_bias(C, euclidean)
-
-    def fn(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            X = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            best = np.argmax(X @ C.T - bias, axis=1)
-            yield pd.DataFrame(
-                {"vec_id": pdf["vec_id"], "cluster_id": cids[best]}
-            )
-
-    return fn
+            model.publish(C, cids, euclidean)
+            # Materialize the lazy result BEFORE the cache and the side
+            # file go: a caller's action could recompute from neither.
+            return cached.mapInArrow(
+                partial(_assign_combiner, model.path),
+                "vec_id bigint, cluster_id int",
+            ).localCheckpoint(eager=True)
+        finally:
+            cached.unpersist()
 
 
 # Shared DuckDB oracle CTE: one Lloyd assignment step (ten seed

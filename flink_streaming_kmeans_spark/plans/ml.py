@@ -117,8 +117,9 @@ def q_kmeans_stream(spark, sf_dir):
     in batch order with increasing mtimes; a file-source readStream
     with ``maxFilesPerTrigger=1`` + ``availableNow`` delivers exactly
     5 micro-batches to ``foreachBatch(StreamingKMeans)`` (one narrow
-    mapInPandas combine-assign per batch, k×P partial rows to the
-    driver, MacQueen batch update — streaming/kmeans.py). Output: one
+    mapInArrow pass of the shared k-means kernel per batch, k×P
+    partial rows to the driver, MacQueen batch update —
+    streaming/kmeans.py). Output: one
     row per centroid (cluster_id, n_points, centroid_norm) — k rows
     always, the rows-tier contract. No SQL oracle: iterative streaming
     state is outside DuckDB's model (SURVEY §2 rows-tier rule); Lloyd

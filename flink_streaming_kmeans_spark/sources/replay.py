@@ -118,13 +118,23 @@ def batch_input_dir(
         pdir = os.path.join(staged, f"{bno_col}={b}")
         if not os.path.isdir(pdir):
             raise ValueError(f"batch {b} of {bno_col} produced no rows")
-        src = next(
-            f for f in sorted(os.listdir(pdir)) if f.endswith(".parquet")
-        )
-        dst = os.path.join(in_dir, f"batch-{k:05d}.parquet")
-        shutil.copy(os.path.join(pdir, src), dst)
-        os.utime(dst, (1_000_000_000 + k, 1_000_000_000 + k))
+        _deliver(pdir, in_dir, k)
     return in_dir
+
+
+def _deliver(pdir: str, in_dir: str, k: int) -> None:
+    """Copy a staged ``bno=`` dir's parquet file to in_dir as batch k,
+    with the k-th monotone mtime. The staging write puts each batch in
+    exactly one file; any other count fails loudly, since taking one of
+    several would silently drop the others' rows from the replay."""
+    files = sorted(f for f in os.listdir(pdir) if f.endswith(".parquet"))
+    if len(files) != 1:
+        raise ValueError(
+            f"{pdir}: expected one parquet file per batch, found {len(files)}"
+        )
+    dst = os.path.join(in_dir, f"batch-{k:05d}.parquet")
+    shutil.copy(os.path.join(pdir, files[0]), dst)
+    os.utime(dst, (1_000_000_000 + k, 1_000_000_000 + k))
 
 
 def stage_time_batches(
@@ -150,13 +160,13 @@ def stage_time_batches(
     invariant broke — fail loudly, never renumber (a silently shifted
     batch file re-orders every later trigger).
 
-    Only for plain ``range(n)`` replays: sentinel-appending drives
-    (session / slide / left-outer join) need the row count BEFORE the
-    append index and keep their stats-job path; re-delivery sequences
-    (the reassignment drive) name batches explicitly via
-    :func:`batch_input_dir`. The sweep override
-    (``SPARK_GRAFT_STREAM_BATCHES``) is honored here, before the
-    split, per the replay_batch_count contract."""
+    The sentinel-appending drives (session / slide / left-outer join)
+    take their append index from the returned ``n_actual`` and their
+    bounds from :func:`staged_footer_stats`; only explicit sequences
+    (the reassignment drive's re-deliveries, q_kmeans_stream's
+    ``vec_id mod 5`` split) go through :func:`batch_input_dir`. The
+    sweep override (``SPARK_GRAFT_STREAM_BATCHES``) is honored here,
+    before the split, per the replay_batch_count contract."""
     b = replay_batch_count(target)
     staged = os.path.join(d, "staged")
     # TIMESTAMP_MICROS for the staged files, scoped to this write:
@@ -164,18 +174,23 @@ def stage_time_batches(
     # which carries NO footer min/max — staged_footer_stats would
     # always fall back to the agg job it exists to remove. INT64 µs
     # round-trips bit-identically through the replay read (explicit
-    # schema either way) and is the modern format every lake writer
-    # uses; scoping keeps the rest of the engine's writes untouched.
+    # schema either way). Scoped, not session-wide: set session-wide,
+    # it changed every other parquet write too, and the degenerate-
+    # parity suite's DuckDB reads of Spark-written timestamp fixtures
+    # diverged on five queries. The save/restore is session-global, so
+    # it runs under _DRIVE_LOCK like run_available_now's scopes (r13
+    # ADVICE: unlocked, two drives could leak it or drop it mid-write).
     spark = df.sparkSession
     _ts_key = "spark.sql.parquet.outputTimestampType"
-    _saved_ts = spark.conf.get(_ts_key, "INT96")
-    spark.conf.set(_ts_key, "TIMESTAMP_MICROS")
-    try:
-        time_batch_col(df, b, order_cols).repartition(b, bno_col).write.mode(
-            "overwrite"
-        ).partitionBy(bno_col).parquet(staged)
-    finally:
-        spark.conf.set(_ts_key, _saved_ts)
+    with _DRIVE_LOCK:
+        _saved_ts = spark.conf.get(_ts_key, "INT96")
+        spark.conf.set(_ts_key, "TIMESTAMP_MICROS")
+        try:
+            time_batch_col(df, b, order_cols).repartition(
+                b, bno_col
+            ).write.mode("overwrite").partitionBy(bno_col).parquet(staged)
+        finally:
+            spark.conf.set(_ts_key, _saved_ts)
     present = sorted(
         int(name.split("=", 1)[1])
         for name in os.listdir(staged)
@@ -188,13 +203,7 @@ def stage_time_batches(
     in_dir = os.path.join(d, "in")
     os.makedirs(in_dir, exist_ok=True)
     for k in present:
-        pdir = os.path.join(staged, f"{bno_col}={k}")
-        src = next(
-            f for f in sorted(os.listdir(pdir)) if f.endswith(".parquet")
-        )
-        dst = os.path.join(in_dir, f"batch-{k:05d}.parquet")
-        shutil.copy(os.path.join(pdir, src), dst)
-        os.utime(dst, (1_000_000_000 + k, 1_000_000_000 + k))
+        _deliver(os.path.join(staged, f"{bno_col}={k}"), in_dir, k)
     return in_dir, len(present)
 
 
@@ -301,7 +310,9 @@ def run_available_now(
     pending eviction batch — the engine's own checkpoint-resume path
     (pinned by tests/test_streaming.py::
     test_filesink_checkpoint_resume_equals_single_run), so the
-    append-sink contents equal the single-run answer exactly. Free in
+    append-sink contents equal the single-run answer exactly; if the
+    restarted query still skips it, raise a RuntimeError naming the
+    drive rather than return partial state. Free in
     the normal case (one progress-list read); never valid together
     with ``final_no_data_batch=False``. The probe is sound for these
     drives because their replay NEVER delivers an empty data batch
@@ -382,6 +393,11 @@ def run_available_now(
                 if ensure_eviction and not _eviction_ran(q):
                     q = writer.trigger(availableNow=True).start()
                     _await(q)
+                    if not _eviction_ran(q):
+                        raise RuntimeError(
+                            f"{name}: the eviction batch did not run, even"
+                            " after a restart — the tail rows are missing"
+                        )
                 return q
         finally:
             if saved_ndb is not None:

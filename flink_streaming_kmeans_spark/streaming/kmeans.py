@@ -9,10 +9,10 @@ iteration feedback edge.
 
 Spark Structured Streaming has no iteration edge; the idiomatic
 replacement (SURVEY.md §2.9/§7) is ``foreachBatch`` + driver-held
-state: per micro-batch, one narrow mapInPandas pass computes
-vectorized assignments and per-cluster partial (sum, count) against
-the CURRENT centroids; the driver then applies the batch MacQueen
-update
+state: per micro-batch, one narrow mapInArrow pass of the shared
+k-means kernel (operators/kmeans.py) computes vectorized assignments
+and per-cluster partial (sum, count) against the CURRENT centroids;
+the driver then applies the batch MacQueen update
 
     c' = (c * n + batch_sum) / (n + batch_count)
 
@@ -52,10 +52,18 @@ the join's shuffle partitioning.
 from __future__ import annotations
 
 import os
+from functools import partial
 
 from pyspark.sql import DataFrame
 
-from ..operators.kmeans import _partial_stats_fn, _reassign_delta_fn
+from ..operators.kmeans import (
+    _DELTA_SCHEMA,
+    _STATS_SCHEMA,
+    _fold_partials,
+    _ModelFile,
+    _reassign_combiner,
+    _stats_combiner,
+)
 
 _ASSIGN_SCHEMA = "vec_id bigint, cid int"
 
@@ -268,92 +276,74 @@ class StreamingKMeans:
         new one — the reference co-operator's add/remove arithmetic —
         so every centroid stays the exact mean of its CURRENT members
         and total mass equals the number of distinct points seen."""
-        import numpy as np
-
         from pyspark.sql import functions as F
 
-        sums = np.zeros_like(self.C)
-        counts = np.zeros(len(self.cids), dtype="int64")
-        pos = {int(c): j for j, c in enumerate(self.cids)}
-        if not self.track:
-            # embedding only: the combiner never reads vec_id (guide
-            # §4.1 — opaque fns defeat column pruning; project first).
-            partials = batch_df.select("embedding").mapInPandas(
-                _partial_stats_fn(self.C, self.cids, self.euclidean),
-                "cid int, psum array<double>, n bigint",
-            ).collect()
-            if not partials:
-                return
-            for r in partials:
-                j = pos[int(r.cid)]
-                sums[j] += np.array(r.psum)
-                counts[j] += int(r.n)
-        else:
-            # No empty-batch pre-check: the replay scaffolding never
-            # delivers an empty file (batch_input_dir raises on one),
-            # and a pathological empty batch is harmless here — zero
-            # partials, a state generation identical to its parent —
-            # so an isEmpty() probe would spend one job per batch
-            # guarding a case that cannot occur.
-            spark = batch_df.sparkSession
-            state = self._assign_state(spark)
-            joined = batch_df.select("vec_id", "embedding").join(
-                state.withColumnRenamed("cid", "old_cid"), "vec_id", "left"
-            )
-            # Co-locate every copy of a vec_id in ONE mapInPandas
-            # partition (review r6): when the state side broadcasts
-            # (tiny state, the common case) the join preserves the
-            # batch's scan partitioning, and a within-batch duplicate
-            # spanning two scan splits would run the overlay twice —
-            # double-subtracting its old cluster and committing two
-            # state rows that the next batch's join fans out. The
-            # overlay's sequential semantics are order-independent
-            # here because a re-arrival carries the same vector
-            # (module contract), so argmax lands on the same cluster.
-            # (Partition count follows spark.sql.shuffle.partitions,
-            # which the evidence drive scopes down to 2.)
-            joined = joined.repartition("vec_id")
-            out = joined.mapInPandas(
-                _reassign_delta_fn(self.C, self.cids, self.euclidean),
-                "kind int, vec_id bigint, cid int,"
-                " psum array<double>, n bigint",
-            ).persist()
-            try:
-                # k rows per partition; may carry negative removals.
-                for r in out.where(F.col("kind") == 0).collect():
-                    j = pos[int(r.cid)]
-                    sums[j] += np.array(r.psum)
-                    counts[j] += int(r.n)
-                # Next state generation, committed entirely in Spark:
-                # rows for re-arrivals REPLACE their old row
-                # (anti-join), first arrivals append. Nothing
-                # data-proportional reaches the driver.
-                new_assign = out.where(F.col("kind") == 1).select(
-                    "vec_id", "cid"
+        d = self.C.shape[1]
+        # The side file outlives every action that could recompute from
+        # it — on the tracked path that is past out.unpersist().
+        with _ModelFile() as model:
+            model.publish(self.C, self.cids, self.euclidean)
+            if not self.track:
+                # embedding only: the combiner never reads vec_id (guide
+                # §4.1 — opaque fns defeat column pruning; project first).
+                partials = batch_df.select("embedding").mapInArrow(
+                    partial(_stats_combiner, model.path), _STATS_SCHEMA
+                ).collect()
+                if not partials:
+                    return
+                sums, counts = _fold_partials(partials, self.cids, d)
+            else:
+                # No empty-batch pre-check: replay never delivers an
+                # empty file, and an empty batch is harmless here (zero
+                # partials, a generation equal to its parent).
+                spark = batch_df.sparkSession
+                state = self._assign_state(spark)
+                joined = batch_df.select("vec_id", "embedding").join(
+                    state.withColumnRenamed("cid", "old_cid"), "vec_id", "left"
                 )
-                gen = self._assign_gen + 1
-                merged = state.join(
-                    new_assign, "vec_id", "left_anti"
-                ).unionByName(new_assign)
-                merged.write.mode("overwrite").parquet(self._gen_path(gen))
-            finally:
-                out.unpersist()
-            self._assign_gen = gen
-            # Explicit schema (guide §6; r12): skips one footer-
-            # inference pass per micro-batch.
-            self._assign_df = spark.read.schema(_ASSIGN_SCHEMA).parquet(
-                self._gen_path(gen)
-            )
-            # Prune generation gen-2: gen is live, gen-1 stays as the
-            # crash-recovery fallback (a crash between this commit and
-            # the npz _save leaves meta pointing at gen-1; deleting
-            # only gen-2 keeps that restart path intact). On-disk
-            # state is therefore <= 2 generations = O(distinct
-            # points), matching the module docstring.
-            if gen >= 2:
-                import shutil
+                # Co-locate every copy of a vec_id in ONE combiner
+                # partition (review r6): a broadcast state join keeps the
+                # scan partitioning, and a duplicate spanning two splits
+                # would be removed twice and commit two state rows.
+                # Order among copies is moot: a re-arrival carries the
+                # same vector (module contract), so argmax agrees.
+                joined = joined.repartition("vec_id")
+                out = joined.mapInArrow(
+                    partial(_reassign_combiner, model.path), _DELTA_SCHEMA
+                ).persist()
+                try:
+                    # k rows per partition; may carry negative removals.
+                    sums, counts = _fold_partials(
+                        out.where(F.col("kind") == 0).collect(), self.cids, d
+                    )
+                    # Next state generation, committed entirely in Spark:
+                    # rows for re-arrivals REPLACE their old row
+                    # (anti-join), first arrivals append. Nothing
+                    # data-proportional reaches the driver.
+                    new_assign = out.where(F.col("kind") == 1).select(
+                        "vec_id", "cid"
+                    )
+                    gen = self._assign_gen + 1
+                    merged = state.join(
+                        new_assign, "vec_id", "left_anti"
+                    ).unionByName(new_assign)
+                    merged.write.mode("overwrite").parquet(self._gen_path(gen))
+                finally:
+                    out.unpersist()
+                self._assign_gen = gen
+                # Explicit schema (guide §6; r12): skips one footer-
+                # inference pass per micro-batch.
+                self._assign_df = spark.read.schema(_ASSIGN_SCHEMA).parquet(
+                    self._gen_path(gen)
+                )
+                # Prune generation gen-2: gen is live, gen-1 stays as the
+                # crash-recovery fallback (a crash between this commit
+                # and the npz _save leaves meta pointing at gen-1), so
+                # on-disk state is <= 2 generations = O(distinct points).
+                if gen >= 2:
+                    import shutil
 
-                shutil.rmtree(self._gen_path(gen - 2), ignore_errors=True)
+                    shutil.rmtree(self._gen_path(gen - 2), ignore_errors=True)
         self.S += sums
         self.n += counts
         nz = self.n > 0

@@ -10,7 +10,7 @@ map sink is explicitly out of scope (SURVEY.md §7).
 Ours: read points from CSV text lines (``id,x,y``-style numeric
 columns, the reference's ingest) or a parquet embeddings table
 (``vec_id, embedding array<float>``), run Lloyd's k-means
-(operators/kmeans.py — the same scalable mapInPandas iteration the
+(operators/kmeans.py — the same scalable mapInArrow iteration the
 registered queries use), write ``(vec_id, cluster_id)`` parquet, and
 print a one-line JSON summary.
 

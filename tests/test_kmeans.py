@@ -77,58 +77,183 @@ def test_iter_matches_numpy_reference(spark, registry):
     assert agree >= 0.99, f"only {agree:.3f} agreement with numpy reference"
 
 
-def test_sidefile_combiner_bit_identical(spark):
-    """r13: lloyd_iterate plans its per-iteration pass once and ships
-    the centroid matrix via a side file the combiner loads at task
-    start (_partial_stats_fn_from_file). The partials must be
-    BIT-identical to the closure-baked combiner's — same GEMM, same
-    tie-break, same accumulation order — or the plan-once rewrite
-    would silently change which Lloyd fixpoint the loop reaches."""
-    import os
-    import tempfile
-    import uuid
-
-    import numpy as np
+def test_kernel_partials_bit_equal_numpy(spark):
+    """The one k-means kernel (decode → argmax(X·Cᵀ − bias) → mask-loop
+    sums) run as the Lloyd/streaming combiner must give partials
+    BIT-equal to a driver-side numpy computation in the same order:
+    per partition, per Arrow batch, per cluster mask — or the Arrow
+    decode or the side-file model would silently change which Lloyd
+    fixpoint the loop reaches. Small Arrow batches put several batches
+    in every partition; both metrics are checked."""
+    from functools import partial
 
     from flink_streaming_kmeans_spark.functions.vector import emb_finite
     from flink_streaming_kmeans_spark.operators.kmeans import (
-        _partial_stats_fn,
-        _partial_stats_fn_from_file,
+        _STATS_SCHEMA,
+        _ModelFile,
+        _stats_combiner,
         init_centroids,
     )
     from flink_streaming_kmeans_spark.sources.loader import load_table
     from pyspark.sql import functions as F
 
-    e = load_table(spark, SF_SMOKE, "embeddings").where(
-        F.col("vec_id").isNotNull() & emb_finite("embedding")
-    ).select("embedding")
-    cent = init_centroids(
-        load_table(spark, SF_SMOKE, "embeddings").where(
-            F.col("vec_id").isNotNull() & emb_finite("embedding")
-        )
-    ).collect()
+    e = (
+        load_table(spark, SF_SMOKE, "embeddings")
+        .where(F.col("vec_id").isNotNull() & emb_finite("embedding"))
+        .select("vec_id", "embedding")
+        .repartition(3, "vec_id")
+        .localCheckpoint()
+    )
+    cent = init_centroids(e).collect()
     cids = np.array(sorted(int(r.cid) for r in cent))
     by = {int(r.cid): [float(x) for x in r.cemb] for r in cent}
     C = np.array([by[c] for c in cids])
-
-    schema = "cid int, psum array<double>, n bigint"
-    closure = e.mapInPandas(_partial_stats_fn(C, cids), schema).collect()
-    cpath = os.path.join(
-        tempfile.gettempdir(), f"fsk_test_C-{uuid.uuid4().hex[:8]}.npy"
-    )
-    np.save(cpath, C)
+    parts = [
+        np.array([r.embedding for r in p], dtype=np.float64)
+        for p in e.select("embedding").rdd.glom().collect()
+    ]
+    assert len(parts) == 3
+    batch = 64
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, str(batch))
     try:
-        sidefile = e.mapInPandas(
-            _partial_stats_fn_from_file(cpath, cids, C.shape[1]), schema
-        ).collect()
+        for euclidean in (False, True):
+            bias = 0.5 * (C * C).sum(axis=1) if euclidean else 0.0
+            with _ModelFile() as model:
+                model.publish(C, cids, euclidean)
+                got = e.select("embedding").mapInArrow(
+                    partial(_stats_combiner, model.path), _STATS_SCHEMA
+                ).collect()
+            assert len(got) == len(parts) * len(cids)
+            for p, X in enumerate(parts):
+                sums = np.zeros_like(C)
+                counts = np.zeros(len(cids), dtype="int64")
+                for i in range(0, len(X), batch):
+                    Xb = X[i : i + batch]
+                    best = np.argmax(Xb @ C.T - bias, axis=1)
+                    for j in range(len(cids)):
+                        sums[j] += Xb[best == j].sum(axis=0)
+                        counts[j] += int((best == j).sum())
+                rows = got[p * len(cids) : (p + 1) * len(cids)]
+                assert [int(r.cid) for r in rows] == cids.tolist()
+                for j, r in enumerate(rows):
+                    assert int(r.n) == counts[j], (euclidean, p, j)
+                    assert np.array_equal(np.array(r.psum), sums[j]), (
+                        f"partition {p} cid {r.cid} psum drifted"
+                    )
     finally:
-        os.unlink(cpath)
-    a = {int(r.cid): (np.array(r.psum), int(r.n)) for r in closure}
-    b = {int(r.cid): (np.array(r.psum), int(r.n)) for r in sidefile}
-    assert set(a) == set(b)
-    for c in a:
-        assert a[c][1] == b[c][1]
-        assert np.array_equal(a[c][0], b[c][0]), f"cid {c} psum drifted"
+        spark.conf.set(key, saved)
+
+
+def _sequential_overlay(C, cids, batches):
+    """The per-row reassign overlay the vectorized combiner replaced,
+    kept verbatim as the reference: each row is added to its argmax
+    cluster and removed from its previous one (the overlay's value for
+    a vec_id already seen in the partition, else old_cid)."""
+    import pandas as pd
+
+    k, d = C.shape
+    pos = {int(c): j for j, c in enumerate(cids)}
+    overlay: dict = {}
+    sums = np.zeros((k, d))
+    counts = np.zeros(k, dtype="int64")
+    for pdf in batches:
+        X = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
+        ids = pdf["vec_id"].to_numpy()
+        olds = pdf["old_cid"].to_numpy()
+        best = np.argmax(X @ C.T, axis=1)
+        for i in range(len(ids)):
+            vid = int(ids[i])
+            j = int(best[i])
+            sums[j] += X[i]
+            counts[j] += 1
+            old = overlay.get(vid, None if pd.isna(olds[i]) else int(olds[i]))
+            if old is not None:
+                jo = pos[int(old)]
+                sums[jo] -= X[i]
+                counts[jo] -= 1
+            overlay[vid] = int(cids[j])
+    return sums, counts, overlay
+
+
+@pytest.mark.parametrize("seed", range(5))
+def test_reassign_combiner_equals_sequential_overlay(seed):
+    """The vectorized reassign combiner equals the sequential overlay
+    on seeded partitions with within-partition duplicates (inside one
+    Arrow batch and across batches), null old_cid, and unsorted cids.
+    Counts and new assignments match exactly; the sums match to float
+    rounding, because the vectorized fold subtracts removals after the
+    adds instead of interleaving them row by row."""
+    import pyarrow as pa
+
+    from flink_streaming_kmeans_spark.operators.kmeans import (
+        _ModelFile,
+        _reassign_combiner,
+    )
+
+    rng = np.random.default_rng(seed)
+    k, d, n = 6, 8, 400
+    C = rng.standard_normal((k, d))
+    cids = rng.permutation(np.arange(100, 100 + k))
+    ids = rng.integers(0, 150, n)  # ~150 distinct ids in 400 rows
+    X = rng.standard_normal((n, d)).astype(np.float32)
+    X = X[np.unique(ids, return_inverse=True)[1]] if seed % 2 else X
+    old = [None if rng.random() < 0.4 else int(rng.choice(cids)) for _ in ids]
+    schema = pa.schema(
+        [("vec_id", pa.int64()), ("embedding", pa.list_(pa.float32())),
+         ("old_cid", pa.int32())]
+    )
+    cuts = [0, 97, 98, 250, n]
+    batches = [
+        pa.RecordBatch.from_pydict(
+            {"vec_id": ids[a:b], "embedding": [list(x) for x in X[a:b]],
+             "old_cid": old[a:b]},
+            schema=schema,
+        )
+        for a, b in zip(cuts, cuts[1:])
+    ]
+    ref_sums, ref_counts, ref_overlay = _sequential_overlay(
+        C, cids, [b.to_pandas() for b in batches]
+    )
+    with _ModelFile() as model:
+        model.publish(C, cids)
+        out = pa.Table.from_batches(
+            list(_reassign_combiner(model.path, iter(batches)))
+        ).to_pylist()
+    deltas = [r for r in out if r["kind"] == 0]
+    assert [r["cid"] for r in deltas] == cids.tolist()
+    assert [r["n"] for r in deltas] == ref_counts.tolist()
+    np.testing.assert_allclose(
+        np.array([r["psum"] for r in deltas]), ref_sums, rtol=0, atol=1e-9
+    )
+    assigned = [(r["vec_id"], r["cid"]) for r in out if r["kind"] == 1]
+    assert dict(assigned) == ref_overlay
+    assert len(assigned) == len(ref_overlay)  # one row per distinct vec_id
+
+
+@pytest.mark.parametrize("bad", [[1.0], None], ids=["ragged", "null"])
+def test_decode_rejects_ragged_and_null_embeddings(spark, bad):
+    """A flatten+reshape would silently misalign every later row on a
+    wrong-length embedding (np.stack used to crash instead): the kernel
+    must raise a ValueError naming the column, on the Lloyd path and
+    on both StreamingKMeans paths."""
+    from flink_streaming_kmeans_spark.operators.kmeans import lloyd_iterate
+    from flink_streaming_kmeans_spark.streaming.kmeans import StreamingKMeans
+
+    rows = [(i, [1.0, float(i)]) for i in range(6)] + [(6, bad)]
+    df = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
+    init = ([[1.0, 0.0], [0.0, 1.0]], [0, 1])
+    want = "ValueError: embedding: " + (
+        "row .* has 1 elements, expected 2" if bad else "1 null embedding"
+    )
+    with pytest.raises(Exception, match=want):
+        lloyd_iterate(spark, df, k=2, max_iter=2, init=init)
+    for track in (False, True):
+        skm = StreamingKMeans(*init, track_assignments=track)
+        with pytest.raises(Exception, match=want):
+            skm.update_batch(df)
+        assert skm.batches_seen == 0 and int(skm.n.sum()) == 0
 
 
 def test_iter_better_than_random_and_uses_k_clusters(spark, registry):

@@ -363,3 +363,65 @@ def test_stage_time_batches_clamp_empty_and_invariants(spark, tmp_path, monkeypa
     dov = str(tmp_path / "override")
     _, nov = stage_time_batches(frame(9), dov, 3)
     assert nov == 2
+
+
+def test_staging_rejects_a_batch_split_across_files(spark, tmp_path):
+    """batch_input_dir and stage_time_batches deliver ONE file per
+    ``bno=`` dir. A dir holding several (here forced by
+    maxRecordsPerFile=1) must raise instead of silently replaying
+    only the first file's rows."""
+    import datetime as dt
+
+    import pytest
+
+    from flink_streaming_kmeans_spark.sources.replay import (
+        batch_input_dir,
+        stage_time_batches,
+    )
+
+    df = spark.createDataFrame(
+        [(i, dt.datetime(2024, 1, 1, 0, i, 0), i % 2) for i in range(6)],
+        "event_id bigint, ts timestamp, bno int",
+    )
+    key = "spark.sql.files.maxRecordsPerFile"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "1")
+    try:
+        with pytest.raises(ValueError, match="expected one parquet file"):
+            batch_input_dir(df, str(tmp_path / "seq"), [0, 1])
+        with pytest.raises(ValueError, match="expected one parquet file"):
+            stage_time_batches(df.drop("bno"), str(tmp_path / "time"), 2)
+    finally:
+        spark.conf.set(key, saved)
+    # the same frames stage fine with one file per batch
+    assert stage_time_batches(df.drop("bno"), str(tmp_path / "ok"), 2)[1] == 2
+
+
+def test_ensure_eviction_raises_when_restart_skips_eviction():
+    """If the single ensure_eviction restart ALSO ends without the
+    zero-input eviction batch, run_available_now must raise a
+    RuntimeError naming the drive, never return partial state."""
+    import pytest
+
+    from flink_streaming_kmeans_spark.sources.replay import run_available_now
+
+    class _Query:
+        recentProgress = [{"batchId": 0, "numInputRows": 5}]
+
+        def awaitTermination(self, timeout):
+            return True
+
+    class _Writer:
+        starts = 0
+
+        def trigger(self, **kw):
+            return self
+
+        def start(self):
+            self.starts += 1
+            return _Query()
+
+    w = _Writer()
+    with pytest.raises(RuntimeError, match="q_fake_drive"):
+        run_available_now(w, "q_fake_drive", ensure_eviction=True)
+    assert w.starts == 2  # one run plus exactly one restart

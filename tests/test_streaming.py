@@ -1389,7 +1389,9 @@ def test_concurrent_drives_leave_session_confs_restored(spark, registry):
     serializes the conf-scoped region under a module lock; this pins
     the invariant the multi-tenant contract relies on: after ANY
     concurrent drive pair, the session confs are back to baseline and
-    an eviction-dependent drive still matches its batch answer."""
+    an eviction-dependent drive still matches its batch answer. The
+    same holds for stage_time_batches' outputTimestampType flip, which
+    each q_stream_tumble drive makes."""
     import threading
 
     queries, _ = registry
@@ -1397,6 +1399,7 @@ def test_concurrent_drives_leave_session_confs_restored(spark, registry):
         "spark.sql.streaming.noDataMicroBatches.enabled", "true"
     )
     base_parts = spark.conf.get("spark.sql.shuffle.partitions")
+    base_ts = spark.conf.get("spark.sql.parquet.outputTimestampType")
 
     for _ in range(3):  # three interleavings of the racy self-pair
         ts = [
@@ -1420,6 +1423,9 @@ def test_concurrent_drives_leave_session_confs_restored(spark, registry):
         assert (
             spark.conf.get("spark.sql.shuffle.partitions") == base_parts
         ), "shuffle partitions leaked past the drive scope"
+        assert (
+            spark.conf.get("spark.sql.parquet.outputTimestampType") == base_ts
+        ), "parquet timestamp type leaked past the staging write"
 
     # and an eviction-dependent drive still emits its full tail —
     # exact: the streaming sessionization must equal its batch twin's

@@ -12,7 +12,7 @@ import sys
 import time
 
 # Anchor to the repo root via __file__, not the cwd — the script must
-# work from any directory (review r6; bench.py already does this).
+# work from any directory (review r6).
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _REPO)
 sys.path.insert(0, os.path.join(_REPO, "tests"))

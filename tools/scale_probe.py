@@ -14,8 +14,9 @@ flags a plan whose work grows faster than its input, which at 1000
 executors and 100 TB becomes the bottleneck. Results are recorded in
 SCALE.md with the run's environment noted.
 
-Each query is measured twice per dir (min kept) with the noop sink —
-the bench.py methodology, see the pass-2 comment there.
+Each query is measured twice per dir with the noop sink and the min
+kept: a query's first run in a session pays its own codegen and JIT
+warm-up, which a warm-up of some other query does not remove.
 
 --law53 mode (r11 verdict task 5): make the law-53 guard-amortization
 claim a REPEATABLE gate instead of a one-off session measurement.

@@ -8,7 +8,7 @@ hot key — what does skew alone cost?
 Both dirs hold the SAME K-fold row counts; the skewed one reassigns
 ~30% of events/orders/lineitem rows to a single head key
 (make_skewed_dir). For each shuffle-heavy query the probe reports
-skewed/uniform wall-time (min of 2, bench methodology) and asserts
+skewed/uniform wall-time (min of 2, as in scale_probe) and asserts
 the plan-audit flag set is identical (a broadcast→shuffle flip or a
 new quadratic join under skewed statistics fails the probe). A ratio
 near 1 means the plan's cost is volume-bound, not key-bound — the
