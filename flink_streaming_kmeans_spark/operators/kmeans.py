@@ -25,7 +25,8 @@ streaming iteration, so the idiomatic decomposition (SURVEY.md §7) is:
 
 Embeddings are unit-normalized (SURVEY.md §1.3), so dot product ==
 cosine similarity; "nearest" = argmax dot, tie-broken on lowest
-cluster id for determinism.
+cluster id for determinism. k-means|| init ranks by exact Euclidean
+distance instead, so it seeds unit and raw-coordinate inputs alike.
 """
 
 from __future__ import annotations
@@ -44,6 +45,8 @@ from ..functions.vector import dot64, sql_emb_finite
 
 _STATS_SCHEMA = "cid int, psum array<double>, n bigint"
 _DELTA_SCHEMA = "kind int, vec_id bigint, cid int, psum array<double>, n bigint"
+# k-means|| sampling rounds (Bahmani et al. find a handful ample at l = 2k).
+_ROUNDS = 4
 
 
 def init_centroids(embeddings: DataFrame, k: int = 10) -> DataFrame:
@@ -59,29 +62,39 @@ def init_centroids(embeddings: DataFrame, k: int = 10) -> DataFrame:
     )
 
 
-def kmeans_parallel_init(
-    embeddings: DataFrame,
-    k: int = 10,
-    rounds: int = 4,
-    oversample: int | None = None,
-    seed: int = 0x5EED,
-):
+def first_k_init(embeddings: DataFrame, k: int = 10):
+    """:func:`init_centroids` as a (k×d float64 matrix, cids) pair,
+    rows in cid order — the driver-side model every first-k fit starts
+    from. Raises a ValueError on an empty input (a numpy shape error
+    deep in a combiner hid the actual problem, review r6)."""
+    rows = sorted(init_centroids(embeddings, k).collect(), key=lambda r: r.cid)
+    if not rows:
+        raise ValueError("embeddings table is empty")
+    C = np.array([list(r.cemb) for r in rows], dtype="float64")
+    return C, np.array([int(r.cid) for r in rows])
+
+
+def kmeans_parallel_init(embeddings: DataFrame, k: int = 10, seed: int = 0x5EED):
     """k-means|| initialization (Bahmani et al., "Scalable k-means++",
     VLDB 2012) — the distributed replacement for both naive first-k
     init (collapses when the id order correlates with one cluster) and
     sequential k-means++ (k driver round-trips, unusable at scale).
 
-    Each round is one cost pass and one sample pass of the kernel's
-    combiners, planned once per fit (only sampled candidates reach the
-    driver). A point is sampled with probability min(1, l·d²/Σd²),
-    d² = 2−2·(max dot) on unit vectors, l = 2k, drawn from a
-    deterministic splitmix-style hash of (vec_id, round, seed), so init
-    is reproducible run-to-run. The O(k·rounds) candidates are then
-    weighted by their nearest-point counts and reduced to k centers
-    with weighted k-means++ on the driver (a k·rounds·2 × d matrix).
+    Each of 4 rounds is one cost pass and one sample pass of the
+    kernel's combiners, planned once per fit (only sampled candidates
+    reach the driver). A point is sampled with probability
+    min(1, l·d²/Σd²), l = 2k, drawn from a deterministic splitmix-style
+    hash of (vec_id, round, seed), so init is reproducible run-to-run.
+    d² is the exact squared Euclidean distance to the nearest candidate
+    (:func:`_d2`), for unit and raw-coordinate inputs alike. One more
+    pass weights each candidate by its nearest-point count. The reduce
+    (:func:`_reduce`) is deterministic, with no restarts: a weighted
+    farthest-first traversal (Gonzalez, TCS 1985) seeded at the
+    heaviest candidate, then weighted Lloyd rounds over the candidates.
 
     Returns a (k×d numpy array, cids array) pair compatible with
-    lloyd_iterate's internals / StreamingKMeans.
+    lloyd_iterate's internals / StreamingKMeans; fewer than k rows when
+    the input has fewer than k distinct points.
     """
     ids_emb = embeddings.select("vec_id", "embedding")
     seed_rows = ids_emb.orderBy("vec_id").limit(1).collect()
@@ -91,7 +104,6 @@ def kmeans_parallel_init(
         # problem (review r6).
         raise ValueError("kmeans_parallel_init: embeddings table is empty")
     C = np.array([list(seed_rows[0].embedding)], dtype="float64")
-    ell = oversample or 2 * k
 
     cached = ids_emb.persist()
     with _ModelFile() as model:
@@ -105,13 +117,13 @@ def kmeans_parallel_init(
             partial(_stats_combiner, model.path), _STATS_SCHEMA
         )
         try:
-            for rnd in range(rounds):
-                model.publish(C, np.arange(len(C)))
+            for rnd in range(_ROUNDS):
+                model.publish(C, np.arange(len(C)), euclidean=True)
                 denom = sum(r.c for r in cost_df.collect())
                 if denom <= 0:
                     break
                 model.publish(
-                    C, np.arange(len(C)), ell=ell, denom=denom,
+                    C, np.arange(len(C)), euclidean=True, ell=2 * k, denom=denom,
                     salt=np.uint64(rnd * 1_000_003 + seed),
                 )
                 new = sample_df.collect()
@@ -121,46 +133,38 @@ def kmeans_parallel_init(
                     )
             # Weight candidates by nearest-point counts (one more pass).
             cand = np.arange(len(C))
-            model.publish(C, cand)
+            model.publish(C, cand, euclidean=True)
             w = _fold_partials(weight_df.collect(), cand, C.shape[1])[1].astype(float)
         finally:
             cached.unpersist()
 
-    # Driver-side weighted k-means++ seeding + weighted Lloyd over the
-    # tiny candidate set, with deterministic multi-restart: a single
-    # ++ draw occasionally seeds two candidates in one true cluster
-    # (measured 0.8 vs 0.97 purity downstream); candidates are k·rounds
-    # rows, so trying several streams and keeping the lowest weighted
-    # inertia costs microseconds and removes the variance.
-    def reduce_once(restart: int):
-        rng_state = seed + 0x9E37 * restart
-        centers = [int(np.argmax(w))]
-        for _ in range(1, min(k, len(C))):
-            d2 = np.maximum(
-                0.0, 2.0 - 2.0 * (C @ C[centers].T).max(axis=1)
-            ) * np.maximum(w, 1e-12)
-            if d2.sum() <= 0:
-                break
-            rng_state = (
-                rng_state * 6364136223846793005 + 1442695040888963407
-            ) % (1 << 63)
-            target = (rng_state / float(1 << 63)) * d2.sum()
-            centers.append(int(np.searchsorted(np.cumsum(d2), target)))
-        M = C[centers].copy()
-        for _ in range(10):
-            a = np.argmax(C @ M.T, axis=1)
-            for j in range(len(M)):
-                sel = a == j
-                if w[sel].sum() > 0:
-                    M[j] = (C[sel] * w[sel, None]).sum(axis=0) / w[sel].sum()
-        inertia = float(
-            (np.maximum(0.0, 2.0 - 2.0 * (C @ M.T).max(axis=1)) * w).sum()
-        )
-        return inertia, M
+    M = _reduce(C, w, k)
+    return M, np.arange(len(M))
 
-    _, M = min((reduce_once(r) for r in range(8)), key=lambda t: t[0])
-    cids = np.arange(len(M))
-    return M, cids
+
+def _reduce(C, w, k: int):
+    """k centres from the weighted candidates C, deterministically: a
+    weighted farthest-first traversal seeded at the heaviest candidate
+    (each step adds the candidate with the largest w·d² to the chosen
+    set; stops early when that is 0, i.e. on duplicate candidates),
+    then weighted Lloyd rounds in which an empty cluster keeps its
+    row. Every distance and sum goes through the kernel."""
+    chosen = [int(np.argmax(w))]
+    while len(chosen) < k:
+        wd2 = w * _d2(C, _euclidean_model(C[chosen]))
+        wd2[chosen] = 0.0
+        j = int(np.argmax(wd2))
+        if wd2[j] <= 0:
+            break
+        chosen.append(j)
+    M = C[chosen]
+    for _ in range(10):
+        pos = _score(C, _euclidean_model(M))[0]
+        sums, _ = _accumulate(C * w[:, None], pos, len(M))
+        total = np.bincount(pos, weights=w, minlength=len(M))
+        nz = total > 0
+        M[nz] = sums[nz] / total[nz, None]
+    return M
 
 
 def assign(
@@ -220,10 +224,7 @@ class _ModelFile:
         )
 
     def publish(self, C, cids, euclidean: bool = False, **extra) -> None:
-        tmp = f"{self.path}.tmp-{uuid.uuid4().hex[:8]}"
-        with open(tmp, "wb") as f:
-            np.savez(f, C=C, cids=cids, euclidean=euclidean, **extra)
-        os.replace(tmp, self.path)
+        _write_npz(self.path, C=C, cids=cids, euclidean=euclidean, **extra)
 
     def __enter__(self):
         return self
@@ -233,12 +234,26 @@ class _ModelFile:
             os.unlink(self.path)
 
 
+def _write_npz(path: str, **arrays) -> None:
+    """Write an npz file atomically: tmp file + os.replace, so a
+    reader sees the old file or the new one, never a torn write."""
+    tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
+    with open(tmp, "wb") as f:
+        np.savez(f, **arrays)
+    os.replace(tmp, path)
+
+
 def _load_model(path: str) -> dict:
     """The published model as a dict, plus its score ``bias``."""
     with np.load(path) as f:
         m = {name: f[name] for name in f.files}
     m["bias"] = _euclid_bias(m["C"], bool(m["euclidean"]))
     return m
+
+
+def _euclidean_model(C) -> dict:
+    """A driver-side Euclidean model for :func:`_score` and :func:`_d2`."""
+    return {"C": C, "bias": _euclid_bias(C, True)}
 
 
 def _euclid_bias(C, euclidean: bool):
@@ -348,9 +363,9 @@ def _assign_combiner(path, batches):
 
 
 def _d2(X, m):
-    """Squared distance to the nearest centre, 2 − 2·max dot, on unit
-    vectors (k-means|| runs on the dot metric)."""
-    return np.maximum(0.0, 2.0 - 2.0 * _score(X, m)[1])
+    """Squared Euclidean distance to the nearest centre of a Euclidean
+    model: ||x||² − 2·(x·c − ||c||²/2) == ||x − c||², for any input."""
+    return np.maximum(0.0, (X * X).sum(axis=1) - 2.0 * _score(X, m)[1])
 
 
 def _cost_combiner(path, batches):
@@ -469,29 +484,18 @@ def lloyd_iterate(
     shuffle. The pass is planned once and re-collected every round;
     only the side file's matrix changes (SURVEY.md §7 hard-part 1).
     """
-    if init is not None:
-        # e.g. kmeans_parallel_init's (k×d matrix, cids) pair
-        C, cids = init
-        C = np.array(C, dtype="float64")
-        cids = np.array(cids)
-    else:
-        cent_rows = init_centroids(embeddings, k).collect()
-        if not cent_rows:
-            # Clear message instead of a numpy shape error deep in a
-            # combiner (review r6).
-            raise ValueError("lloyd_iterate: embeddings table is empty")
-        cids = np.array(sorted(int(r.cid) for r in cent_rows))
-        by_cid = {int(r.cid): [float(x) for x in r.cemb] for r in cent_rows}
-        C = np.array([by_cid[c] for c in cids])  # k×d, row j ↔ cids[j]
+    # init: e.g. kmeans_parallel_init's (k×d matrix, cids) pair.
+    C, cids = init if init is not None else first_k_init(embeddings, k)
+    C, cids = np.array(C, dtype="float64"), np.array(cids)
 
     cached = embeddings.select("vec_id", "embedding").persist()
-    with _ModelFile() as model:
-        # select("embedding"): an opaque mapInArrow defeats column
-        # pruning (guide §4.1), and the combiner never reads vec_id.
-        iter_df = cached.select("embedding").mapInArrow(
-            partial(_stats_combiner, model.path), _STATS_SCHEMA
-        )
-        try:
+    try:
+        with _ModelFile() as model:
+            # select("embedding"): an opaque mapInArrow defeats column
+            # pruning (guide §4.1), and the combiner never reads vec_id.
+            iter_df = cached.select("embedding").mapInArrow(
+                partial(_stats_combiner, model.path), _STATS_SCHEMA
+            )
             for _ in range(max_iter):
                 model.publish(C, cids, euclidean)
                 sums, counts = _fold_partials(iter_df.collect(), cids, C.shape[1])
@@ -502,16 +506,22 @@ def lloyd_iterate(
                 C = new_C
                 if shift < tol:
                     break
+        return assign_fitted(cached, C, cids, euclidean)
+    finally:
+        cached.unpersist()
 
-            model.publish(C, cids, euclidean)
-            # Materialize the lazy result BEFORE the cache and the side
-            # file go: a caller's action could recompute from neither.
-            return cached.mapInArrow(
-                partial(_assign_combiner, model.path),
-                "vec_id bigint, cluster_id int",
-            ).localCheckpoint(eager=True)
-        finally:
-            cached.unpersist()
+
+def assign_fitted(embeddings: DataFrame, C, cids, euclidean: bool = False) -> DataFrame:
+    """(vec_id, cluster_id) of every row under a fitted model (k×d C,
+    row j ↔ cids[j]): one kernel pass, materialized BEFORE its side
+    file goes, so a caller's action never recomputes from it (nor from
+    an input the caller drops afterwards)."""
+    with _ModelFile() as model:
+        model.publish(C, cids, euclidean)
+        return embeddings.select("vec_id", "embedding").mapInArrow(
+            partial(_assign_combiner, model.path),
+            "vec_id bigint, cluster_id int",
+        ).localCheckpoint(eager=True)
 
 
 # Shared DuckDB oracle CTE: one Lloyd assignment step (ten seed

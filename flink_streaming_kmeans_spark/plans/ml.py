@@ -15,7 +15,13 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..functions.vector import emb_finite, mround, sql_davg, sql_mround
-from ..operators.kmeans import assign, init_centroids, lloyd_iterate, update
+from ..operators.kmeans import (
+    assign,
+    first_k_init,
+    init_centroids,
+    lloyd_iterate,
+    update,
+)
 from ..sources.loader import _tmp_out, fan_out, load_table, local_df
 from ..sources.replay import batch_input_dir, run_available_now
 from .registry import register
@@ -136,10 +142,7 @@ def q_kmeans_stream(spark, sf_dir):
         # with ASSIGN_CTE's emb CTE (r7 NULL-entity-id probe)
         F.col("vec_id").isNotNull() & emb_finite("embedding")
     ).select("vec_id", "embedding")
-    cent = init_centroids(e).collect()
-    skm = StreamingKMeans(
-        [list(r.cemb) for r in cent], [int(r.cid) for r in cent]
-    )
+    skm = StreamingKMeans(*first_k_init(e))
 
     d = _tmp_out("kstream", sf_dir)
     in_dir = batch_input_dir(

@@ -434,7 +434,7 @@ def q_kmeans_stream_reassign(spark, sf_dir):
     restart are asserted in tests/test_streaming.py."""
     import numpy as np
 
-    from ..operators.kmeans import init_centroids
+    from ..operators.kmeans import first_k_init
     from ..streaming.kmeans import StreamingKMeans
 
     e = (
@@ -444,14 +444,11 @@ def q_kmeans_stream_reassign(spark, sf_dir):
         .where(F.col("vec_id").isNotNull() & emb_finite("embedding"))
         .select("vec_id", "embedding")
     )
-    cent = init_centroids(e).collect()
-    skm = StreamingKMeans(
-        [list(r.cemb) for r in cent],
-        [int(r.cid) for r in cent],
-        track_assignments=True,
-    )
-
     d = _tmp_out("kstream_reassign", sf_dir)
+    skm = StreamingKMeans(
+        *first_k_init(e), track_assignments=True,
+        assign_dir=os.path.join(d, "assign"),
+    )
     # 3 primary batches (vec_id mod 3) + re-delivery of batches 0-1:
     # 5 triggers. The evidence needs (a) multi-batch arrival so the
     # centroids move between deliveries and (b) re-delivered batches

@@ -63,6 +63,7 @@ from ..operators.kmeans import (
     _ModelFile,
     _reassign_combiner,
     _stats_combiner,
+    _write_npz,
 )
 
 _ASSIGN_SCHEMA = "vec_id bigint, cid int"
@@ -70,7 +71,9 @@ _ASSIGN_SCHEMA = "vec_id bigint, cid int"
 
 class StreamingKMeans:
     """Driver-held online k-means centroid state, updated per
-    micro-batch; assignment memory (when tracked) lives in parquet.
+    micro-batch; assignment memory (when tracked) lives in parquet
+    generations ``state-v{gen}`` under ``assign_dir``, which tracking
+    requires and whose lifetime the caller owns.
 
     ``state_path`` makes the centroid state durable across query
     restarts: after every applied batch the (C, S, n, cids, meta)
@@ -114,38 +117,13 @@ class StreamingKMeans:
         # is what makes removal exact when one is.
         self.S = np.zeros_like(self.C)
         self.track = bool(track_assignments)
-        self._assign_dir = None
+        if self.track and assign_dir is None:
+            # The caller owns the state's lifetime: a default home would
+            # need a sweep that guesses when another run's state is dead.
+            raise ValueError("track_assignments=True requires an assign_dir")
+        self._assign_dir = assign_dir if self.track else None
         self._assign_gen = -1  # generation of the live state parquet
         self._assign_df: DataFrame | None = None  # lazy, session-bound
-        if self.track:
-            if assign_dir is None:
-                # Default home: a SEPARATE state root with a 24-hour
-                # age GC — NOT loader._tmp_out's 30-minute root
-                # (review r6: a stream idle >30 min would have had its
-                # LIVE assignment state rmtree'd by any other query's
-                # _tmp_out call — durable-state loss from an unrelated
-                # process). Each generation commit refreshes the dir
-                # mtime, so only runs dead for a full day are reaped.
-                import shutil
-                import tempfile
-                import time
-                import uuid
-
-                root = os.path.join(tempfile.gettempdir(), "fsk_spark_state")
-                os.makedirs(root, exist_ok=True)
-                cutoff = time.time() - 86400
-                for name in os.listdir(root):
-                    p = os.path.join(root, name)
-                    try:
-                        if os.path.getmtime(p) < cutoff:
-                            shutil.rmtree(p, ignore_errors=True)
-                    except OSError:
-                        pass
-                assign_dir = os.path.join(
-                    root, f"kmeans_assign-{uuid.uuid4().hex[:12]}"
-                )
-                os.makedirs(assign_dir, exist_ok=True)
-            self._assign_dir = assign_dir
         self.batches_seen = 0
         self.last_batch_id = -1
         self.state_path = state_path
@@ -194,14 +172,10 @@ class StreamingKMeans:
     # -- durable centroid state --------------------------------------
 
     def _save(self) -> None:
-        import io
-        import uuid
-
         import numpy as np
 
-        buf = io.BytesIO()
-        np.savez(
-            buf,
+        _write_npz(
+            self.state_path,
             C=self.C,
             S=self.S,
             cids=self.cids,
@@ -212,10 +186,6 @@ class StreamingKMeans:
             ),
             track=np.array([self.track], dtype="int64"),
         )
-        tmp = f"{self.state_path}.tmp-{uuid.uuid4().hex}"
-        with open(tmp, "wb") as f:
-            f.write(buf.getvalue())
-        os.replace(tmp, self.state_path)
 
     def _load(self) -> None:
         import numpy as np

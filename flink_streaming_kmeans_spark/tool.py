@@ -53,7 +53,9 @@ def build_arg_parser() -> argparse.ArgumentParser:
         choices=["first-k", "kmeans||"],
         default="first-k",
         help="centroid init: deterministic first-k ids (reference-"
-        "faithful) or scalable k-means|| oversampling (Bahmani)",
+        "faithful) or scalable k-means|| oversampling (Bahmani) by exact "
+        "Euclidean distance, reduced by a deterministic weighted "
+        "farthest-first pass with no random restarts",
     )
     p.add_argument("--output", required=True, help="output parquet dir")
     p.add_argument(
@@ -126,7 +128,7 @@ def load_points(spark, path: str, fmt: str, header: bool = True):
 
 
 def main(argv: list[str] | None = None) -> int:
-    from .operators.kmeans import kmeans_parallel_init, lloyd_iterate
+    from .operators.kmeans import first_k_init, kmeans_parallel_init, lloyd_iterate
     from .session import get_spark
 
     args = build_arg_parser().parse_args(argv)
@@ -144,7 +146,9 @@ def main(argv: list[str] | None = None) -> int:
     # Parquet embeddings keep the unit-vector dot contract.
     euclidean = fmt == "csv"
     init = (
-        kmeans_parallel_init(pts, k=args.k) if args.init == "kmeans||" else None
+        kmeans_parallel_init(pts, k=args.k)
+        if args.init == "kmeans||"
+        else first_k_init(pts, k=args.k)
     )
     extra: dict = {}
     if args.stream:
@@ -154,15 +158,7 @@ def main(argv: list[str] | None = None) -> int:
             spark, pts, k=args.k, max_iter=args.max_iters, init=init,
             euclidean=euclidean,
         )
-    skm = extra.pop("_skm", None)
     assigned.write.mode("overwrite").parquet(args.output)
-    if skm is not None and skm._assign_dir:
-        # The O(points) parquet assignment-state generations served
-        # their purpose once the output is written — don't leave them
-        # for the 24-hour state-root GC (review r6).
-        import shutil
-
-        shutil.rmtree(skm._assign_dir, ignore_errors=True)
 
     back = spark.read.parquet(args.output)
     sizes = {
@@ -187,34 +183,22 @@ def main(argv: list[str] | None = None) -> int:
 def _run_streaming(spark, pts, args, init, euclidean=False):
     """KMeansTool's streaming topology: micro-batch replay through a
     file-source Structured Streaming query + online MacQueen state
-    (streaming/kmeans.py). Returns (assignments DataFrame, summary)."""
+    (streaming/kmeans.py). Returns (materialized assignments DataFrame,
+    summary); every file it wrote is gone by then."""
     import os
     import shutil
     import tempfile
 
-    from .operators.kmeans import assign, init_centroids
-    from .streaming.kmeans import StreamingKMeans
-
-    if init is not None:
-        C, cids = init
-        skm = StreamingKMeans(
-            C.tolist(), [int(c) for c in cids],
-            track_assignments=args.reassign, euclidean=euclidean,
-        )
-    else:
-        cent = init_centroids(pts, k=args.k).collect()
-        if not cent:
-            raise SystemExit("input has no points")
-        skm = StreamingKMeans(
-            [list(r.cemb) for r in cent],
-            [int(r.cid) for r in cent],
-            track_assignments=args.reassign, euclidean=euclidean,
-        )
-
+    from .operators.kmeans import assign_fitted
     from .sources.replay import batch_input_dir, run_available_now, time_batch_col
+    from .streaming.kmeans import StreamingKMeans
 
     d = tempfile.mkdtemp(prefix="fsk_tool_stream_")
     try:
+        skm = StreamingKMeans(
+            *init, track_assignments=args.reassign,
+            assign_dir=os.path.join(d, "assign"), euclidean=euclidean,
+        )
         # Contiguous ntile ranges, clamped to the point count — the
         # previous pmod(vec_id, n) split raised on any empty residue
         # class (fewer points than batches, or id patterns skipping a
@@ -238,40 +222,20 @@ def _run_streaming(spark, pts, args, init, euclidean=False):
             # (review r6).
             partitions=args.parallelism or 4,
         )
+        if args.reassign:
+            # Assignment memory IS the result (reference keyed state),
+            # read from the parquet state table, never collected.
+            assigned = skm.assign_df(spark).select(
+                "vec_id", F.col("cid").alias("cluster_id")
+            ).localCheckpoint(eager=True)
+        else:
+            assigned = assign_fitted(pts, skm.C, skm.cids, euclidean)
     finally:
         shutil.rmtree(d, ignore_errors=True)
-        # The parquet assignment-state generations are O(points) per
-        # batch; drop them as soon as the output is derived... they
-        # are still needed below for assign_df, so cleanup happens in
-        # main()'s inline shutil.rmtree(skm._assign_dir) block right
-        # after the output write (via the popped `_skm` handle).
-
-    from .sources.loader import local_df
-
-    if args.reassign:
-        # Assignment memory IS the result (reference keyed state) —
-        # read straight from the parquet-backed state table, never
-        # collected driver-side.
-        assigned = skm.assign_df(spark).select(
-            "vec_id", F.col("cid").alias("cluster_id")
-        )
-    else:
-        cdf = local_df(
-            spark,
-            [
-                (int(c), [float(x) for x in row])
-                for c, row in zip(skm.cids, skm.C)
-            ],
-            "cid int, cemb array<float>",
-        )
-        assigned = assign(pts, cdf, euclidean=euclidean).select(
-            "vec_id", F.col("cid").alias("cluster_id")
-        )
     return assigned, {
         "mode": "stream",
         "batches_seen": skm.batches_seen,
         "reassign": bool(args.reassign),
-        "_skm": skm,
     }
 
 

@@ -233,7 +233,7 @@ def test_reassign_combiner_equals_sequential_overlay(seed):
 
 
 @pytest.mark.parametrize("bad", [[1.0], None], ids=["ragged", "null"])
-def test_decode_rejects_ragged_and_null_embeddings(spark, bad):
+def test_decode_rejects_ragged_and_null_embeddings(spark, tmp_path, bad):
     """A flatten+reshape would silently misalign every later row on a
     wrong-length embedding (np.stack used to crash instead): the kernel
     must raise a ValueError naming the column, on the Lloyd path and
@@ -250,7 +250,9 @@ def test_decode_rejects_ragged_and_null_embeddings(spark, bad):
     with pytest.raises(Exception, match=want):
         lloyd_iterate(spark, df, k=2, max_iter=2, init=init)
     for track in (False, True):
-        skm = StreamingKMeans(*init, track_assignments=track)
+        skm = StreamingKMeans(
+            *init, track_assignments=track, assign_dir=str(tmp_path / "assign")
+        )
         with pytest.raises(Exception, match=want):
             skm.update_batch(df)
         assert skm.batches_seen == 0 and int(skm.n.sum()) == 0
@@ -352,3 +354,50 @@ def test_kmeans_parallel_init_beats_adversarial_naive(spark):
     # split clusters it cannot fix); k-means|| init is exact (1.0).
     assert kpp >= 0.95, (kpp, naive)
     assert kpp > naive, (kpp, naive)
+
+
+def _clustered_points(rng, n: int, k: int, d: int, spread: float):
+    """n unit vectors in d dims around k random unit centres; returns
+    (float32 n×d array, int labels)."""
+    centres = rng.standard_normal((k, d))
+    centres /= np.linalg.norm(centres, axis=1, keepdims=True)
+    labels = rng.integers(0, k, n)
+    x = centres[labels] + spread * rng.standard_normal((n, d))
+    x /= np.linalg.norm(x, axis=1, keepdims=True)
+    return x.astype(np.float32), labels
+
+
+def test_kmeans_parallel_init_wins_every_cluster_at_spread_005(spark, tmp_path):
+    """2,000 64-d unit points in 16 clusters at per-dimension spread
+    0.05: k-means|| init plus 6 Lloyd rounds must win every true
+    cluster (each is the majority label of some fitted cluster) on
+    every seed. The candidates cover all 16 clusters here, so a miss
+    is the reduce's: a random k-means++ draw over them can seed two
+    centres in one cluster and leave another without one."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from flink_streaming_kmeans_spark.operators.kmeans import (
+        kmeans_parallel_init,
+        lloyd_iterate,
+    )
+
+    k, n, d = 16, 2000, 64
+    merged = {}
+    for seed in range(10):
+        x, labels = _clustered_points(np.random.default_rng(seed), n, k, d, 0.05)
+        path = str(tmp_path / f"points-{seed}.parquet")
+        emb = pa.ListArray.from_arrays(
+            pa.array(np.arange(0, n * d + 1, d, dtype=np.int32)), pa.array(x.ravel())
+        )
+        pq.write_table(pa.table({"vec_id": np.arange(n), "embedding": emb}), path)
+        e = spark.read.parquet(path)
+        init = kmeans_parallel_init(e, k=k)
+        out = lloyd_iterate(spark, e, k=k, max_iter=6, tol=0.0, init=init)
+        by_cluster: dict = {}
+        for r in out.collect():
+            by_cluster.setdefault(r.cluster_id, []).append(labels[r.vec_id])
+        won = {Counter(v).most_common(1)[0][0] for v in by_cluster.values()}
+        if len(won) < k:
+            merged[seed] = len(won)
+    assert not merged, f"seeds winning fewer than {k} clusters: {merged}"

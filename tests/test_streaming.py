@@ -723,7 +723,7 @@ def test_streaming_kmeans_state_hygiene(spark, tmp_path):
         )
 
 
-def test_streaming_kmeans_reassignment_property(spark):
+def test_streaming_kmeans_reassignment_property(spark, tmp_path):
     """Property: under arbitrary re-delivery patterns, reassignment
     tracking keeps (a) Σn == #distinct points, (b) per-cluster n equal
     to the assignment-map occupancy, and (c) every centroid equal to
@@ -741,7 +741,8 @@ def test_streaming_kmeans_reassignment_property(spark):
         init = rng.randn(k, dim)
         init = init / np.linalg.norm(init, axis=1, keepdims=True)
         skm = StreamingKMeans(init.tolist(), list(range(k)),
-                              track_assignments=True)
+                              track_assignments=True,
+                              assign_dir=str(tmp_path / f"assign-{seed}"))
 
         delivered: set = set()
         for bid in range(4):
@@ -1434,3 +1435,12 @@ def test_concurrent_drives_leave_session_confs_restored(spark, registry):
     n_stream = queries["q_stream_session"](spark, SF_SMOKE).count()
     n_batch = queries["q_win_session"](spark, SF_SMOKE).count()
     assert n_stream == n_batch, (n_stream, n_batch)
+
+
+def test_streaming_kmeans_tracking_requires_assign_dir():
+    """Tracked state lives only where the caller says: no default
+    home, no sweep of other runs' state."""
+    from flink_streaming_kmeans_spark.streaming.kmeans import StreamingKMeans
+
+    with pytest.raises(ValueError, match="assign_dir"):
+        StreamingKMeans([[1.0, 0.0]], [0], track_assignments=True)

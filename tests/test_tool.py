@@ -178,3 +178,27 @@ def test_tool_stream_fewer_points_than_batches(spark, tmp_path):
                "--stream-batches", "5", "--output", out])
     assert rc == 0
     assert spark.read.parquet(out).count() == 3
+
+
+def test_tool_csv_kmeans_parallel_init_finds_every_group(spark, tmp_path, capsys):
+    """--init kmeans|| on raw lat/lon CSV must find the k groups. Init
+    needs the true Euclidean distance here: the unit-vector form
+    2 − 2·dot puts every raw point at d² = 0 from the first candidate,
+    which ends init with one centre and one cluster."""
+    import numpy as np
+
+    from flink_streaming_kmeans_spark.tool import main
+
+    rng = np.random.default_rng(3)
+    centres = np.array([[40.71, -74.01], [40.78, -73.97], [40.68, -73.94]])
+    pts = centres[np.arange(600) % 3] + 0.004 * rng.standard_normal((600, 2))
+    csv = tmp_path / "rides.csv"
+    csv.write_text(
+        "id,lat,lon\n" + "".join(f"{i},{a:.6f},{b:.6f}\n" for i, (a, b) in enumerate(pts))
+    )
+    rc = main(["--input", str(csv), "--format", "csv", "--k", "3",
+               "--init", "kmeans||", "--output", str(tmp_path / "out")])
+    assert rc == 0
+    summary = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert summary["n_points"] == 600
+    assert sorted(summary["clusters"].values()) == [200, 200, 200], summary
