@@ -82,6 +82,24 @@ def load_manifest(root: str, version: int | None = None) -> dict:
         return json.load(f)
 
 
+def footer_min_max(md, col: str):
+    """``(min, max)`` of ``col`` folded over every row group of a
+    parquet footer ``md`` — no data pages read. None when the column
+    is absent, the file has no row groups, or any row group lacks exact
+    min/max: the caller must not guess a bound then."""
+    idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
+    if col not in idx or md.num_row_groups == 0:
+        return None
+    lo = hi = None
+    for rg in range(md.num_row_groups):
+        s = md.row_group(rg).column(idx[col]).statistics
+        if s is None or not s.has_min_max:
+            return None
+        lo = s.min if lo is None else min(lo, s.min)
+        hi = s.max if hi is None else max(hi, s.max)
+    return lo, hi
+
+
 def _file_stats(path: str, cols: list[str]) -> tuple[int, dict]:
     """(row_count, {col: [min, max]}) from the parquet FOOTER — no data
     pages read. The same stats Iceberg keeps per data file; written
@@ -89,32 +107,19 @@ def _file_stats(path: str, cols: list[str]) -> tuple[int, dict]:
     import pyarrow.parquet as pq
 
     md = pq.ParquetFile(path).metadata
-    idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
     stats: dict = {}
     for c in cols:
-        if c not in idx:
-            continue
-        lo = hi = None
-        for rg in range(md.num_row_groups):
-            s = md.row_group(rg).column(idx[c]).statistics
-            if s is None or not s.has_min_max:
-                lo = hi = None
-                break
-            lo = s.min if lo is None else min(lo, s.min)
-            hi = s.max if hi is None else max(hi, s.max)
-        if lo is not None:
-            # The manifest is JSON, so only JSON-native stat values are
-            # recorded — pyarrow returns bytes for binary-physical
-            # columns and datetime.date / datetime.datetime / Decimal
-            # for date, timestamp, and decimal logical types, all of
-            # which json.dumps rejects. A skipped stat only disables
-            # file-skipping for that column, never correctness.
-            if not (
-                isinstance(lo, (int, float, str, bool))
-                and isinstance(hi, (int, float, str, bool))
-            ):
-                continue
-            stats[c] = [lo, hi]
+        mm = footer_min_max(md, c)
+        # The manifest is JSON, so only JSON-native stat values are
+        # recorded — pyarrow returns bytes for binary-physical columns
+        # and datetime.date / datetime.datetime / Decimal for date,
+        # timestamp, and decimal logical types, all of which json.dumps
+        # rejects. A skipped stat only disables file-skipping for that
+        # column, never correctness.
+        if mm is not None and all(
+            isinstance(v, (int, float, str, bool)) for v in mm
+        ):
+            stats[c] = list(mm)
     return md.num_rows, stats
 
 

@@ -23,7 +23,7 @@ from ..operators.kmeans import (
     update,
 )
 from ..sources.loader import _tmp_out, fan_out, load_table, local_df
-from ..sources.replay import batch_input_dir, run_available_now
+from ..sources.replay import batch_input_dir, replay_stream, run_available_now
 from .registry import register
 
 # Shared oracle CTE: one Lloyd assignment step in DuckDB — defined in
@@ -121,7 +121,7 @@ def q_kmeans_stream(spark, sf_dir):
     Deterministic drive: the embeddings table is split into 5 fixed
     micro-batch files by ``vec_id mod 5``, copied into the source dir
     in batch order with increasing mtimes; a file-source readStream
-    with ``maxFilesPerTrigger=1`` + ``availableNow`` delivers exactly
+    taking one file per trigger + ``availableNow`` delivers exactly
     5 micro-batches to ``foreachBatch(StreamingKMeans)`` (one narrow
     mapInArrow pass of the shared k-means kernel per batch, k×P
     partial rows to the driver, MacQueen batch update —
@@ -150,9 +150,7 @@ def q_kmeans_stream(spark, sf_dir):
     )
 
     run_available_now(
-        spark.readStream.schema(e.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(in_dir)
+        replay_stream(spark, in_dir, e.schema)
         .writeStream.foreachBatch(skm.foreach_batch())
         .option("checkpointLocation", os.path.join(d, "ckpt")),
         "q_kmeans_stream",

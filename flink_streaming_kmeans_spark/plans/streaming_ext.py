@@ -10,9 +10,9 @@ window prefix mid-round; see the rotation plan there).
   window matrix the r5 verdict asked for (task 6).
 
 Same scaffolding as plans/streams.py: contiguous-time replay batches
-(sources/replay.py), one sentinel batch to push the watermark past
-the data span, availableNow's final no-data micro-batch running the
-tail eviction, engine-side parquet file sink.
+read through sources/replay.replay_stream, one sentinel batch to push
+the watermark past the data span, availableNow's final no-data
+micro-batch running the tail eviction, engine-side parquet file sink.
 """
 
 from __future__ import annotations
@@ -26,9 +26,10 @@ from ..functions.vector import client_ntz, dsum, sql_dsum, sql_ts_valid, ts_vali
 from ..sources.loader import _tmp_out, load_table, local_df
 from ..sources.replay import (
     append_batch,
+    replay_stream,
     run_available_now,
     stage_time_batches,
-    staged_footer_stats,
+    staged_bounds,
 )
 from .registry import register
 
@@ -89,7 +90,7 @@ def q_stream_slide(spark, sf_dir):
     )
     d = _tmp_out("stream_slide", sf_dir)
     # Staging-derived clamp + empty guard (r13 — see plans/streams.py
-    # q_stream_dedup; replaces the pre-drive agg(max,count) stats job).
+    # q_stream_dedup).
     in_dir, n_batches = stage_time_batches(ev, d, 2)
     if n_batches == 0:
         # timestamp_ntz matches the client_ntz non-empty path (law 47
@@ -97,19 +98,14 @@ def q_stream_slide(spark, sf_dir):
         return spark.createDataFrame(
             [], "win_start timestamp_ntz, n_events bigint, sum_value double"
         )
-    # Sentinel bound from the staged footers — zero Spark jobs (r13,
-    # guide §6; see q_stream_session).
-    _, _, top = staged_footer_stats(in_dir, "ts")
-    if top is None:
-        top = ev.agg(F.max("ts").alias("m")).collect()[0].m
+    # Sentinel bound from the staged footers (see q_stream_session).
+    _, top = staged_bounds(ev, in_dir, "ts")
     t3 = top + timedelta(days=3)
     sent = local_df(spark, [(-1, t3, 0.0)], ev.schema)
     append_batch(sent, in_dir, n_batches)
 
     agg = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(in_dir)
+        replay_stream(spark, in_dir, ev.schema)
         .withWatermark("ts", "2 hours")
         .groupBy(F.window("ts", "10 minutes", "5 minutes").alias("w"))
         .agg(F.count(F.lit(1)).alias("n_events"), dsum("value", "sum_value"))

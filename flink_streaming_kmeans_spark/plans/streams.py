@@ -50,23 +50,12 @@ from ..sources.replay import (
     append_batch,
     batch_input_dir,
     memory_sink_name,
+    replay_stream,
     run_available_now,
     stage_time_batches,
-    staged_footer_stats,
+    staged_bounds,
 )
 from .registry import register
-
-# (The former _probe_batches / _write_time_batches helpers are gone —
-# r13: the batch-count clamp + empty-source guard now fall out of the
-# staging write itself (sources/replay.stage_time_batches, one driver
-# job per drive removed), and the sentinel bounds / quantile bin
-# domain come from the staged files' parquet footers
-# (replay.staged_footer_stats, the pre-drive agg-stats job removed).
-# Only the re-delivery drive (q_kmeans_stream_reassign) still names
-# its batch sequence explicitly via batch_input_dir.)
-
-
-_run_available_now = run_available_now
 
 
 @register(
@@ -139,11 +128,8 @@ def q_stream_dedup(spark, sf_dir):
     # bit-exact copies, and an id-collision with DISTINCT payloads is
     # upstream corruption whose surviving copy is arrival-order/
     # watermark-dependent — outside the hash domain.
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(in_dir)
-        .withWatermark("ts", "2 hours")
+    stream = replay_stream(spark, in_dir, ev.schema).withWatermark(
+        "ts", "2 hours"
     )
     deduped = (
         stream.withColumn(
@@ -166,7 +152,7 @@ def q_stream_dedup(spark, sf_dir):
     # no-data micro-batch only evicts state that the availableNow
     # query is about to discard anyway — a full trigger (~0.4 s) for
     # zero output rows. Output identical (3-SF oracle-verified).
-    _run_available_now(
+    run_available_now(
         deduped.writeStream.format("parquet")
         .option("path", sink_dir)
         .option("checkpointLocation", os.path.join(d, "ckpt")),
@@ -237,15 +223,8 @@ def q_stream_join(spark, sf_dir):
             [], "user_id bigint, p_id bigint, c_id bigint"
         )
 
-    def src():
-        return (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(in_dir)
-        )
-
     p = (
-        src()
+        replay_stream(spark, in_dir, ev.schema)
         .where(F.col("event_type") == "purchase")
         .select(
             "user_id",
@@ -255,7 +234,7 @@ def q_stream_join(spark, sf_dir):
         .withWatermark("p_ts", "2 hours")
     )
     c = (
-        src()
+        replay_stream(spark, in_dir, ev.schema)
         .where(F.col("event_type") == "click")
         .select(
             F.col("user_id").alias("c_user"),
@@ -283,7 +262,7 @@ def q_stream_join(spark, sf_dir):
     # for zero output rows. The LEFT join twin keeps the default: its
     # unmatched rows emit exactly there. Output identical
     # (3-SF oracle-verified).
-    _run_available_now(
+    run_available_now(
         joined.writeStream.format("parquet")
         .option("path", sink_dir)
         .outputMode("append")
@@ -397,10 +376,8 @@ def q_stream_upsert(spark, sf_dir):
         if not batch_df.isEmpty():
             merge_cow(spark, root, batch_df, _merge_fn)
 
-    _run_available_now(
-        spark.readStream.schema(src.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(in_dir)
+    run_available_now(
+        replay_stream(spark, in_dir, src.schema)
         .writeStream.foreachBatch(fb)
         .option("checkpointLocation", os.path.join(d, "ckpt")),
         "q_stream_upsert",
@@ -465,10 +442,8 @@ def q_kmeans_stream_reassign(spark, sf_dir):
     # so 2 reducers beat 4 on pure task overhead (7 batches x join +
     # state write each); the conf is load-sized, not code-sized — see
     # session.scoped_shuffle_partitions.
-    _run_available_now(
-        spark.readStream.schema(e.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(in_dir)
+    run_available_now(
+        replay_stream(spark, in_dir, e.schema)
         .writeStream.foreachBatch(skm.foreach_batch())
         .option("checkpointLocation", os.path.join(d, "ckpt")),
         "q_kmeans_stream_reassign",
@@ -569,14 +544,10 @@ def q_stream_session(spark, sf_dir):
         return spark.createDataFrame(
             [], "user_id bigint, session_start timestamp_ntz, n_events bigint"
         )
-    # Sentinel bound from the staged files' parquet FOOTERS — zero
-    # Spark jobs (r13, guide §6; replaces the agg(max,count) stats
-    # job). ts is NULL-free here (ts_valid gate), so footer max ==
-    # agg max; the agg fallback covers a stats-less footer, loudly
-    # not silently (staged_footer_stats' contract).
-    _, _, top = staged_footer_stats(in_dir, "ts")
-    if top is None:
-        top = ev.agg(F.max("ts").alias("m")).collect()[0].m
+    # Sentinel bound from the staged files' parquet footers, no Spark
+    # job (r13, guide §6). ts is NULL-free here (ts_valid gate), so
+    # footer max == agg max.
+    _, top = staged_bounds(ev, in_dir, "ts")
     # Python timedelta == SQL INTERVAL here: both are fixed 72h
     # offsets on a UTC timestamp. local_df keeps the 1-row sentinel
     # write off the Python-RDD path (sources/loader.local_df).
@@ -586,9 +557,7 @@ def q_stream_session(spark, sf_dir):
     append_batch(sent1, in_dir, n_batches)
 
     agg = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(in_dir)
+        replay_stream(spark, in_dir, ev.schema)
         .withWatermark("ts", "2 hours")
         .groupBy("user_id", F.session_window("ts", "30 minutes").alias("w"))
         .agg(F.count(F.lit(1)).alias("n_events"))
@@ -598,7 +567,7 @@ def q_stream_session(spark, sf_dir):
     # sink; the sentinel filter and the exactly-once assertion run in
     # Spark over the sink — the driver sees only one boolean.
     sink_dir = os.path.join(d, "sink")
-    _run_available_now(
+    run_available_now(
         agg.writeStream.format("parquet")
         .option("path", sink_dir)
         .outputMode("append")
@@ -817,11 +786,7 @@ def q_stream_cep(spark, sf_dir):
         # driver-side pass per micro-batch.
         state["df"] = spark.read.schema(state_schema).parquet(path)
 
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
+    stream = replay_stream(spark, in_dir, ev.schema)
     # partitions stays 4 (r13 probe): this drive has NO state store
     # (foreachBatch; the parquet generations are the state) and its
     # triggers carry real per-batch compute — the cogrouped pandas NFA
@@ -884,11 +849,7 @@ def q_stream_hll(spark, sf_dir):
     if cnt == 0:
         return spark.createDataFrame([], "bucket int, max_rank int")
 
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
+    stream = replay_stream(spark, in_dir, ev.schema)
     br = stream.select(
         F.expr(
             "CAST(conv(substr(md5(cast(user_id as string)), 1, 15), 16, 10)"
@@ -971,11 +932,8 @@ def q_stream_join_left(spark, sf_dir):
         return spark.createDataFrame(
             [], "user_id bigint, p_id bigint, c_id bigint"
         )
-    # Sentinel bound from the staged footers — zero Spark jobs (r13,
-    # guide §6; see q_stream_session).
-    _, _, top = staged_footer_stats(in_dir, "ts")
-    if top is None:
-        top = ev.agg(F.max("ts").alias("m")).collect()[0].m
+    # Sentinel bound from the staged footers (see q_stream_session).
+    _, top = staged_bounds(ev, in_dir, "ts")
     # Python timedelta == SQL INTERVAL on a UTC timestamp; local_df
     # keeps the 2-row sentinel write off the Python-RDD path.
     t3 = top + timedelta(days=3)
@@ -986,15 +944,8 @@ def q_stream_join_left(spark, sf_dir):
     )
     append_batch(s1, in_dir, n_batches)
 
-    def src():
-        return (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(in_dir)
-        )
-
     p = (
-        src()
+        replay_stream(spark, in_dir, ev.schema)
         .where(F.col("event_type") == "purchase")
         .select(
             "user_id",
@@ -1004,7 +955,7 @@ def q_stream_join_left(spark, sf_dir):
         .withWatermark("p_ts", "2 hours")
     )
     c = (
-        src()
+        replay_stream(spark, in_dir, ev.schema)
         .where(F.col("event_type") == "click")
         .select(
             F.col("user_id").alias("c_user"),
@@ -1027,7 +978,7 @@ def q_stream_join_left(spark, sf_dir):
     # sink; the sentinel filter runs in Spark over the sink read-back,
     # and nothing data-proportional crosses the driver.
     sink_dir = os.path.join(d, "sink")
-    _run_available_now(
+    run_available_now(
         joined.writeStream.format("parquet")
         .option("path", sink_dir)
         .outputMode("append")
@@ -1126,25 +1077,14 @@ def q_stream_quantile(spark, sf_dir):
         return spark.createDataFrame(
             [], "p int, bin bigint, lo bigint, hi bigint"
         )
-    # Bin domain from the staged files' parquet FOOTERS — zero Spark
-    # jobs (r13, guide §6; replaces the min/max/count stats job).
-    # Integer footer stats are EXACT and exclude NULLs, and n_chars is
-    # NULL-free here (isNotNull gate), so footer min/max == agg
-    # min/max — the binning codebook is bit-identical. Agg fallback if
-    # a footer ever lacks stats (staged_footer_stats' contract).
-    _, mn, mx = staged_footer_stats(in_dir, "n_chars")
-    if mn is None:
-        r = d.agg(
-            F.min("n_chars").alias("mn"), F.max("n_chars").alias("mx")
-        ).collect()[0]
-        mn, mx = r.mn, r.mx
+    # Bin domain from the staged files' parquet footers, no Spark job
+    # (r13, guide §6). Integer footer stats are EXACT and exclude
+    # NULLs, and n_chars is NULL-free here (isNotNull gate), so footer
+    # min/max == agg min/max — the binning codebook is bit-identical.
+    mn, mx = staged_bounds(d, in_dir, "n_chars")
     width = mx - mn + 1
 
-    stream = (
-        spark.readStream.schema(d.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
+    stream = replay_stream(spark, in_dir, d.schema)
     hist = (
         stream.select(
             F.expr(f"((n_chars - {mn}) * 128) div {width}").alias("bin")
@@ -1201,11 +1141,7 @@ def q_stream_topk(spark, sf_dir):
     if n_batches == 0:
         return spark.createDataFrame([], "tok string, n bigint, rank int")
 
-    stream = (
-        spark.readStream.schema(d.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
+    stream = replay_stream(spark, in_dir, d.schema)
     counts = (
         stream.select(F.explode(F.split("text", " ")).alias("tok"))
         .groupBy("tok")

@@ -26,10 +26,7 @@ from pyspark.sql import functions as F
 from ..functions.hashing import DUCK_H60, SPARK_H60
 from ..functions.vector import client_ntz, davg, dsum, dsumr, emb_finite, fin, isum64, mround, sql_davg, sql_dsum, sql_emb_finite, sql_fin, sql_mround, sql_ts_valid, ts_valid
 from ..sources.loader import _tmp_out, fan_out, load_table, local_df
-from ..sources.replay import (
-    run_available_now,
-    stage_time_batches,
-)
+from ..sources.replay import replay_stream, run_available_now, stage_time_batches
 from .registry import register
 
 # 60-bit md5 prefix as BIGINT — canonical copies in
@@ -370,9 +367,7 @@ def q_stream_tumble(spark, sf_dir):
             state[r.win_start] = (r.n_events, None if s is None else float(s))
 
     agg = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(in_dir)
+        replay_stream(spark, in_dir, ev.schema)
         .withWatermark("ts", "2 hours")
         .groupBy(F.window("ts", "1 hour").alias("w"))
         .agg(

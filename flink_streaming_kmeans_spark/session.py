@@ -11,9 +11,7 @@ place. Two paths:
 
 Scale notes (100 TB): these confs are the local-mode projection of the
 cluster posture — AQE on (runtime re-plan, skew-join splitting,
-shuffle-partition coalescing), broadcast threshold left to default,
-shuffle partitions sized by env so a cluster deploy can raise it to
-cores×3 without code changes.
+shuffle-partition coalescing), broadcast threshold left to default.
 """
 
 from __future__ import annotations
@@ -54,8 +52,12 @@ RUNTIME_CONFS: dict[str, str] = {
 }
 
 
-def shuffle_partitions() -> str:
-    return os.environ.get("SPARK_GRAFT_SHUFFLE", "32")
+# Build-time defaults. SHUFFLE_PARTITIONS is the batch-sized reducer
+# count; AQE coalesces it down at runtime, and the streaming drives
+# scope their own (scoped_shuffle_partitions). CODEGEN_CACHE_ENTRIES:
+# see get_spark.
+SHUFFLE_PARTITIONS = "32"
+CODEGEN_CACHE_ENTRIES = "4096"
 
 
 # ensure_confs memo: (python-session id) -> the RUNTIME_CONFS snapshot
@@ -133,7 +135,7 @@ def get_spark(app_name: str = "flink-streaming-kmeans-spark") -> SparkSession:
     builder = (
         SparkSession.builder.appName(app_name)
         .master(os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]"))
-        .config("spark.sql.shuffle.partitions", shuffle_partitions())
+        .config("spark.sql.shuffle.partitions", SHUFFLE_PARTITIONS)
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
         # Headroom for long sessions: hundreds of whole-stage-codegen
@@ -156,10 +158,7 @@ def get_spark(app_name: str = "flink-streaming-kmeans-spark") -> SparkSession:
         # plan shapes sizes this with its query count (entries are
         # source + bytecode, ~100 KB each; 4096 ≈ worst-case 400 MB
         # against a 32 g heap).
-        .config(
-            "spark.sql.codegen.cache.maxEntries",
-            os.environ.get("SPARK_GRAFT_CODEGEN_CACHE", "4096"),
-        )
+        .config("spark.sql.codegen.cache.maxEntries", CODEGEN_CACHE_ENTRIES)
     )
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)

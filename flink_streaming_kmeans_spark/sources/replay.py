@@ -1,19 +1,21 @@
-"""Micro-batch replay scaffolding for the streaming evidence drives.
+"""Micro-batch replay: the source of every streaming drive.
 
-Every streaming drive (plans/streams.py, plans/ml.py q_kmeans_stream,
-plans/training.py q_stream_tumble, tool.py --stream) replays a bounded
-table as a sequence of parquet files consumed by a FileStreamSource
-with maxFilesPerTrigger=1. Two invariants make that a faithful drive:
+Every streaming drive replays a bounded table as a sequence of parquet
+files read by a FileStreamSource that takes one file per trigger. The
+drives it serves: the ten in plans/streams.py, plans/ml.py
+q_kmeans_stream, plans/streaming_ext.py q_stream_slide,
+plans/training.py q_stream_tumble and tool.py --stream. Two
+invariants make that a faithful drive:
 
 - one FILE per logical batch, so each trigger is exactly one batch;
 - monotone mtimes in delivery order, which pins the FileStreamSource
   processing order (it sorts by modification time).
 
-This module is the single implementation of that scaffolding (it was
-once copy-pasted per drive) plus the shared availableNow runner with
-the fail-loudly timeout (r4 ADVICE: an ignored awaitTermination
-boolean silently returns partial state) and the scoped state-partition
-sizing (session.scoped_shuffle_partitions).
+This module owns that scaffolding end to end: staging the batch files,
+the reader over them (:func:`replay_stream`, the only place that sets
+``maxFilesPerTrigger``), their column bounds (:func:`staged_bounds`),
+and the shared availableNow runner with its fail-loudly timeout and
+scoped state-partition sizing (session.scoped_shuffle_partitions).
 """
 
 from __future__ import annotations
@@ -27,6 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from ..operators.lakehouse import footer_min_max
 from ..session import scoped_shuffle_partitions
 
 # Serializes the conf-scoped streaming-drive region across threads on
@@ -162,7 +165,7 @@ def stage_time_batches(
 
     The sentinel-appending drives (session / slide / left-outer join)
     take their append index from the returned ``n_actual`` and their
-    bounds from :func:`staged_footer_stats`; only explicit sequences
+    bounds from :func:`staged_bounds`; only explicit sequences
     (the reassignment drive's re-deliveries, q_kmeans_stream's
     ``vec_id mod 5`` split) go through :func:`batch_input_dir`. The
     sweep override (``SPARK_GRAFT_STREAM_BATCHES``) is honored here,
@@ -171,8 +174,8 @@ def stage_time_batches(
     staged = os.path.join(d, "staged")
     # TIMESTAMP_MICROS for the staged files, scoped to this write:
     # Spark's default parquet timestamp output is deprecated INT96,
-    # which carries NO footer min/max — staged_footer_stats would
-    # always fall back to the agg job it exists to remove. INT64 µs
+    # which carries NO footer min/max — staged_bounds would always
+    # fall back to the agg job it exists to remove. INT64 µs
     # round-trips bit-identically through the replay read (explicit
     # schema either way). Scoped, not session-wide: set session-wide,
     # it changed every other parquet write too, and the degenerate-
@@ -207,45 +210,41 @@ def stage_time_batches(
     return in_dir, len(present)
 
 
-def staged_footer_stats(in_dir: str, col: str):
-    """``(total_rows, col_min, col_max)`` straight from the staged
-    batch files' parquet FOOTERS — zero Spark jobs (r13, guide §6/§1.5;
-    the same footer-stats surface the lakehouse manifest records via
-    operators/lakehouse._file_stats). Replaces the pre-drive
-    ``agg(max, count).collect()`` stats job for the sentinel-appending
-    drives: the staged files are Spark-written from the already
-    loaded/filtered frame, so a timestamp column is physical
-    timestamp(us) (tz-aware on read-back here — the loader's
-    ns-vs-us variance never reaches staged files) and integer stats
-    are exact. Statistics exclude NULLs, matching MIN/MAX semantics;
-    the callers stage NULL-free columns anyway (ts_valid /
-    isNotNull-gated frames). Returns ``(rows, None, None)`` when any
-    file lacks exact min/max for ``col`` — callers must fall back to
-    the agg job, never guess."""
+def replay_stream(spark, in_dir: str, schema) -> DataFrame:
+    """The streaming read of a staged batch dir: one file per trigger,
+    so each trigger delivers exactly one staged batch. ``schema`` is
+    the staged frame's, so the source never infers one."""
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(in_dir)
+    )
+
+
+def staged_bounds(df: DataFrame, in_dir: str, col: str):
+    """``(min, max)`` of ``col`` over the batch files staged from
+    ``df``, read from their parquet FOOTERS with no Spark job (the
+    per-file zone-map stats the lakehouse manifest also records). The
+    staged files are Spark-written from the already filtered frame, so
+    integer stats are exact and a timestamp column is INT64 µs
+    (stage_time_batches), tz-aware on read-back here. Statistics
+    exclude NULLs, matching MIN/MAX. When any footer lacks exact
+    min/max for ``col`` (an all-NULL column, an INT96 timestamp), one
+    agg job on ``df`` gives the bounds instead: never a guess."""
     import pyarrow.parquet as pq
 
-    total = 0
     lo = hi = None
-    ok = True
     for f in sorted(os.listdir(in_dir)):
         if not f.endswith(".parquet"):
             continue
         md = pq.ParquetFile(os.path.join(in_dir, f)).metadata
-        total += md.num_rows
-        idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
-        if col not in idx:
-            ok = False
-            continue
-        for rg in range(md.num_row_groups):
-            s = md.row_group(rg).column(idx[col]).statistics
-            if s is None or not s.has_min_max:
-                ok = False
-                break
-            lo = s.min if lo is None else min(lo, s.min)
-            hi = s.max if hi is None else max(hi, s.max)
-    if not ok:
-        return total, None, None
-    return total, lo, hi
+        mm = footer_min_max(md, col)
+        if mm is None:
+            r = df.agg(F.min(col).alias("lo"), F.max(col).alias("hi"))
+            return tuple(r.collect()[0])
+        lo = mm[0] if lo is None else min(lo, mm[0])
+        hi = mm[1] if hi is None else max(hi, mm[1])
+    return lo, hi
 
 
 def run_available_now(

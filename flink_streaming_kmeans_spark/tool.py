@@ -190,7 +190,7 @@ def _run_streaming(spark, pts, args, init, euclidean=False):
     import tempfile
 
     from .operators.kmeans import assign_fitted
-    from .sources.replay import batch_input_dir, run_available_now, time_batch_col
+    from .sources.replay import replay_stream, run_available_now, stage_time_batches
     from .streaming.kmeans import StreamingKMeans
 
     d = tempfile.mkdtemp(prefix="fsk_tool_stream_")
@@ -199,19 +199,14 @@ def _run_streaming(spark, pts, args, init, euclidean=False):
             *init, track_assignments=args.reassign,
             assign_dir=os.path.join(d, "assign"), euclidean=euclidean,
         )
-        # Contiguous ntile ranges, clamped to the point count — the
-        # previous pmod(vec_id, n) split raised on any empty residue
-        # class (fewer points than batches, or id patterns skipping a
-        # residue) — review r6. ntile over vec_id order can never
-        # leave a batch empty.
-        n_b = max(1, min(args.stream_batches, pts.limit(args.stream_batches).count()))
-        in_dir = batch_input_dir(
-            time_batch_col(pts, n_b, order_cols=("vec_id",)), d, range(n_b)
+        # Contiguous ntile ranges over vec_id order. The staging write
+        # clamps the batch count to the point count, so no batch is
+        # empty even with fewer points than batches (review r6).
+        in_dir, _ = stage_time_batches(
+            pts, d, max(1, args.stream_batches), order_cols=("vec_id",)
         )
         run_available_now(
-            spark.readStream.schema(pts.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(in_dir)
+            replay_stream(spark, in_dir, pts.schema)
             .writeStream.foreachBatch(skm.foreach_batch())
             .option("checkpointLocation", os.path.join(d, "ckpt")),
             "--stream",

@@ -92,8 +92,10 @@ def test_head_key_owns_a_third(spark, skewed_sf):
 def test_aqe_skew_split_fires_on_skewed_fixture(spark, skewed_sf):
     from skew_probe import aqe_skew_split_fires
 
-    assert aqe_skew_split_fires(spark, skewed_sf), (
-        "OptimizeSkewedJoin never split the planted hot join partition"
+    fires, stages = aqe_skew_split_fires(spark, skewed_sf)
+    assert fires, (
+        "OptimizeSkewedJoin never split the planted hot join partition; "
+        f"final-plan shuffle stages as (map tasks, shuffle partitions): {stages}"
     )
 
 

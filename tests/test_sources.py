@@ -425,3 +425,52 @@ def test_ensure_eviction_raises_when_restart_skips_eviction():
     with pytest.raises(RuntimeError, match="q_fake_drive"):
         run_available_now(w, "q_fake_drive", ensure_eviction=True)
     assert w.starts == 2  # one run plus exactly one restart
+
+
+def test_staged_bounds_reads_footers_and_falls_back_to_agg(
+    spark, tmp_path, monkeypatch
+):
+    """staged_bounds equals the agg min/max on a timestamp column and
+    on an integer column, read from the staged footers with no agg
+    job; a footer with no min/max (an all-NULL column) takes exactly
+    one agg job on the staged frame instead."""
+    import datetime as dt
+
+    from flink_streaming_kmeans_spark.sources.replay import (
+        stage_time_batches,
+        staged_bounds,
+    )
+
+    t0 = dt.datetime(2024, 3, 9, 22, 15, 0, 123456)
+    df = spark.createDataFrame(
+        [(i, t0 + dt.timedelta(minutes=37 * i), 100 - 7 * i, None) for i in range(12)],
+        "event_id bigint, ts timestamp, n bigint, blank bigint",
+    )
+    in_dir, nb = stage_time_batches(df, str(tmp_path / "s"), 3)
+    assert nb == 3
+
+    aggs = []
+    real_agg = type(df).agg
+
+    def counting_agg(self, *a, **kw):
+        aggs.append(a)
+        return real_agg(self, *a, **kw)
+
+    def agg_bounds(col):
+        r = real_agg(df, F.min(col), F.max(col)).collect()[0]
+        return r[0], r[1]
+
+    def instant(v):
+        # Spark collects timestamps as naive process-local datetimes;
+        # the footers carry UTC-adjusted ones. Compare the instants.
+        return v if v.tzinfo else v.astimezone()
+
+    monkeypatch.setattr(type(df), "agg", counting_agg)
+    lo, hi = staged_bounds(df, in_dir, "ts")
+    want = agg_bounds("ts")
+    assert (instant(lo), instant(hi)) == (instant(want[0]), instant(want[1]))
+    assert staged_bounds(df, in_dir, "n") == agg_bounds("n") == (23, 100)
+    assert aggs == [], "the footer path ran an agg job"
+
+    assert staged_bounds(df, in_dir, "blank") == agg_bounds("blank") == (None, None)
+    assert len(aggs) == 1, "a stats-less footer must take one agg job"

@@ -1279,7 +1279,7 @@ def test_stream_dedup_single_streaming_scan(spark, monkeypatch):
     from flink_streaming_kmeans_spark.plans import streams as S
 
     seen = {}
-    real = S._run_available_now
+    real = S.run_available_now
 
     def spy(writer, name, spark=None, **kw):
         plan = writer._df._jdf.queryExecution().logical().toString()
@@ -1297,7 +1297,7 @@ def test_stream_dedup_single_streaming_scan(spark, monkeypatch):
         }
         return q
 
-    monkeypatch.setattr(S, "_run_available_now", spy)
+    monkeypatch.setattr(S, "run_available_now", spy)
     df = S.q_stream_dedup(spark, SF_SMOKE)
     out_rows = df.count()
     assert out_rows > 0

@@ -37,7 +37,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from flink_streaming_kmeans_spark.plans.registry import collect  # noqa: E402
-from flink_streaming_kmeans_spark.session import get_spark  # noqa: E402
+from flink_streaming_kmeans_spark.session import SHUFFLE_PARTITIONS, get_spark  # noqa: E402
 from flink_streaming_kmeans_spark.sources.loader import load_table  # noqa: E402
 import plan_audit  # noqa: E402
 
@@ -189,10 +189,29 @@ def bucketed_time_range(spark, sf_dir: str):
     )
 
 
-def aqe_skew_split_fires(spark, skewed_dir: str) -> bool:
+def _shuffle_stages(adaptive) -> list[tuple[int, int]]:
+    """``(map tasks, shuffle partitions)`` of every shuffle stage in a
+    materialized adaptive plan, walked through its query stages."""
+    out, todo = [], [adaptive.executedPlan()]
+    while todo:
+        node = todo.pop()
+        if node.getClass().getSimpleName().endswith("QueryStageExec"):
+            if node.nodeName() == "ShuffleQueryStage":
+                s = node.shuffle()
+                out.append((s.numMappers(), s.numPartitions()))
+            todo.append(node.plan())
+            continue
+        kids = node.children()
+        todo.extend(kids.apply(i) for i in range(kids.size()))
+    return out
+
+
+def aqe_skew_split_fires(spark, skewed_dir: str) -> tuple[bool, list]:
     """orders⋈lineitem on the planted hot l_orderkey: demote broadcast
     and scope the split thresholds to local sizes, then look for
-    skew=true in the FINAL adaptive plan.
+    skew=true in the FINAL adaptive plan. Returns that flag and the
+    final plan's shuffle stages as ``(map tasks, shuffle partitions)``,
+    the two counts the split geometry depends on.
 
     maxPartitionBytes is scoped down too, and that one is a finding,
     not a convenience: OptimizeSkewedJoin splits a skewed reduce
@@ -205,8 +224,17 @@ def aqe_skew_split_fires(spark, skewed_dir: str) -> bool:
     granularity; locally we scope the split geometry to match. The
     deployment rule this encodes: compaction must not produce files
     so large that maxPartitionBytes yields fewer map tasks than the
-    skew split needs."""
+    skew split needs.
+
+    The shuffle-partition count is pinned for the reduce side of the
+    same geometry: OptimizeSkewedJoin needs a partition larger than
+    skewedPartitionFactor (2) times the median, and at 2 partitions the
+    median is the mean of the two, which neither can exceed twice. A
+    count left low by an earlier caller on the session therefore hides
+    the split (measured on the x3 test fixture: skew=true at 32 and 4
+    partitions, not at 2)."""
     tuned = {
+        "spark.sql.shuffle.partitions": SHUFFLE_PARTITIONS,
         "spark.sql.autoBroadcastJoinThreshold": "-1",
         "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "2.0",
         "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "16KB",
@@ -240,8 +268,8 @@ def aqe_skew_split_fires(spark, skewed_dir: str) -> bool:
             )
         )
         j.collect()  # materialize → final adaptive plan
-        plan = j._jdf.queryExecution().executedPlan().toString()
-        return "skew=true" in plan
+        adaptive = j._jdf.queryExecution().executedPlan()
+        return "skew=true" in adaptive.toString(), _shuffle_stages(adaptive)
     finally:
         for k, v in saved.items():
             if v is None:
@@ -497,8 +525,8 @@ def main() -> int:
         f"{base_row['skewed_s']}s) — identical output"
     )
 
-    fires = aqe_skew_split_fires(spark, skewed)
-    print(f"aqe_skew_split_fires={fires}")
+    fires, stages = aqe_skew_split_fires(spark, skewed)
+    print(f"aqe_skew_split_fires={fires} shuffle_stages={stages}")
     print(json.dumps({
         "rows": rows,
         "binned_interval_join": interval,
