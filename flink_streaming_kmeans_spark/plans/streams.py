@@ -441,7 +441,7 @@ def q_kmeans_stream_reassign(spark, sf_dir):
     # partitions=2: the per-batch state join shuffles ~5000 tiny rows,
     # so 2 reducers beat 4 on pure task overhead (7 batches x join +
     # state write each); the conf is load-sized, not code-sized — see
-    # session.scoped_shuffle_partitions.
+    # the partition-count comment in replay.run_available_now.
     run_available_now(
         replay_stream(spark, in_dir, e.schema)
         .writeStream.foreachBatch(skm.foreach_batch())

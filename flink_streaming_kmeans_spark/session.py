@@ -9,6 +9,8 @@ place. Two paths:
   may not have our confs). Every query entry point calls it; it is
   idempotent and cheap.
 
+Any conf changed for a bounded scope goes through :func:`scoped_confs`.
+
 Scale notes (100 TB): these confs are the local-mode projection of the
 cluster posture — AQE on (runtime re-plan, skew-join splitting,
 shuffle-partition coalescing), broadcast threshold left to default.
@@ -16,7 +18,9 @@ shuffle-partition coalescing), broadcast threshold left to default.
 
 from __future__ import annotations
 
+import contextlib
 import os
+import threading
 
 from pyspark.sql import SparkSession
 
@@ -54,7 +58,7 @@ RUNTIME_CONFS: dict[str, str] = {
 
 # Build-time defaults. SHUFFLE_PARTITIONS is the batch-sized reducer
 # count; AQE coalesces it down at runtime, and the streaming drives
-# scope their own (scoped_shuffle_partitions). CODEGEN_CACHE_ENTRIES:
+# scope their own (replay.run_available_now). CODEGEN_CACHE_ENTRIES:
 # see get_spark.
 SHUFFLE_PARTITIONS = "32"
 CODEGEN_CACHE_ENTRIES = "4096"
@@ -65,11 +69,10 @@ CODEGEN_CACHE_ENTRIES = "4096"
 # load_table, so the suite used to pay len(RUNTIME_CONFS) py4j
 # conf.set round-trips per source-table load — pure driver-side
 # planning overhead (guide §1.2 step 2). The memo key includes the
-# FULL snapshot, not a boolean: tools/config_sweep.py installs
-# overrides by mutating RUNTIME_CONFS itself and relies on the next
-# query entry re-applying them (and re-applying the restored values
-# afterwards) — a snapshot mismatch re-runs the sets exactly as
-# before, so that contract is unchanged.
+# FULL snapshot, not a boolean: scoped_confs overrides RUNTIME_CONFS
+# entries for its scope and relies on the next query entry
+# re-applying them (and re-applying the restored values afterwards)
+# — a snapshot mismatch re-runs the sets.
 _ENSURED: dict[int, tuple] = {}
 
 
@@ -100,33 +103,54 @@ def ensure_confs(spark: SparkSession) -> SparkSession:
     return spark
 
 
-class scoped_shuffle_partitions:
-    """Temporarily set ``spark.sql.shuffle.partitions`` (restored on
-    exit, even on error).
+# Serializes every session-global conf flip across threads on one
+# session — see scoped_confs.
+_DRIVE_LOCK = threading.RLock()
 
-    Stateful Structured Streaming fixes the state-store partition
-    count to this conf at FIRST checkpoint creation, and every
-    micro-batch then pays a per-partition state commit (delta file +
-    maintenance) regardless of row count. The evidence drives replay a
-    bounded table as 3 tiny micro-batches into a fresh checkpoint, so
-    the batch-sized 32 buys nothing and costs 32 state commits per
-    stateful op per trigger; they scope it down to a handful instead
-    (measured on q_stream_join: 21 s -> ~6 s at sf0.1). At production
-    scale this is the knob you SIZE UP with state volume — the point
-    is that state partitioning is load-dependent config, not code.
+
+@contextlib.contextmanager
+def scoped_confs(spark: SparkSession, confs: dict[str, str]):
+    """Set ``confs`` on the session for the scope; restore every key on
+    exit, even on error, unsetting keys that were unset before. The one
+    save/restore of session confs in the package.
+
+    A key in RUNTIME_CONFS is overridden there too for the scope, so an
+    ``ensure_confs`` call inside it (every query entry point makes one)
+    keeps the scoped value instead of reverting it; the entry is
+    restored on exit, and the changed snapshot makes the next
+    ``ensure_confs`` re-apply the baseline.
+
+    CONCURRENCY (r13 close, found by the round-close full suite via
+    the multi-tenant contract test's q_stream_tumble self-pair): these
+    flips are SESSION-GLOBAL. Two drives on one session from two
+    threads race an unlocked save/restore — T1 saves "true"/32 and sets
+    "false"/2, T2 then SAVES T1's scoped value as its own baseline, and
+    whichever restores last leaves the scoped value stuck session-wide.
+    A leaked ``noDataMicroBatches=false`` deterministically drops the
+    append-finalization drives' tail (session 943/946 rows, exactly the
+    eviction set). So the whole scope — save, set, body, restore — runs
+    under one module RLock: concurrent scopes on one session serialize,
+    batch work outside a scope is untouched, and a same-thread nested
+    scope cannot deadlock and restores the outer scope's value. A
+    ``foreachBatch`` body must never enter a scope: it runs on another
+    thread while the drive's thread holds the lock waiting for it, so
+    it would deadlock.
     """
-
-    def __init__(self, spark: SparkSession, n: int):
-        self.spark, self.n = spark, n
-
-    def __enter__(self):
-        self.saved = self.spark.conf.get("spark.sql.shuffle.partitions")
-        self.spark.conf.set("spark.sql.shuffle.partitions", str(self.n))
-        return self.spark
-
-    def __exit__(self, *exc):
-        self.spark.conf.set("spark.sql.shuffle.partitions", self.saved)
-        return False
+    with _DRIVE_LOCK:
+        saved = {k: spark.conf.get(k, None) for k in confs}
+        saved_runtime = {k: RUNTIME_CONFS[k] for k in confs if k in RUNTIME_CONFS}
+        try:
+            for k, v in confs.items():
+                spark.conf.set(k, v)
+            RUNTIME_CONFS.update({k: confs[k] for k in saved_runtime})
+            yield
+        finally:
+            RUNTIME_CONFS.update(saved_runtime)
+            for k, v in saved.items():
+                if v is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, v)
 
 
 def get_spark(app_name: str = "flink-streaming-kmeans-spark") -> SparkSession:

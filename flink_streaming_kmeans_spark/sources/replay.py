@@ -15,14 +15,14 @@ This module owns that scaffolding end to end: staging the batch files,
 the reader over them (:func:`replay_stream`, the only place that sets
 ``maxFilesPerTrigger``), their column bounds (:func:`staged_bounds`),
 and the shared availableNow runner with its fail-loudly timeout and
-scoped state-partition sizing (session.scoped_shuffle_partitions).
+scoped state-partition sizing. Its conf flips go through
+session.scoped_confs.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
-import threading
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
@@ -30,11 +30,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..operators.lakehouse import footer_min_max
-from ..session import scoped_shuffle_partitions
-
-# Serializes the conf-scoped streaming-drive region across threads on
-# one session — see run_available_now's CONCURRENCY note (r13 close).
-_DRIVE_LOCK = threading.RLock()
+from ..session import scoped_confs
 
 
 def replay_batch_count(n: int) -> int:
@@ -125,11 +121,12 @@ def batch_input_dir(
     return in_dir
 
 
-def _deliver(pdir: str, in_dir: str, k: int) -> None:
-    """Copy a staged ``bno=`` dir's parquet file to in_dir as batch k,
-    with the k-th monotone mtime. The staging write puts each batch in
-    exactly one file; any other count fails loudly, since taking one of
-    several would silently drop the others' rows from the replay."""
+def _deliver(pdir: str, in_dir: str, k: int) -> str:
+    """Copy a staged dir's parquet file to in_dir as batch k, with the
+    k-th monotone mtime, and return its path. The staging write puts
+    each batch in exactly one file; any other count fails loudly, since
+    taking one of several would silently drop the others' rows from the
+    replay."""
     files = sorted(f for f in os.listdir(pdir) if f.endswith(".parquet"))
     if len(files) != 1:
         raise ValueError(
@@ -138,6 +135,7 @@ def _deliver(pdir: str, in_dir: str, k: int) -> None:
     dst = os.path.join(in_dir, f"batch-{k:05d}.parquet")
     shutil.copy(os.path.join(pdir, files[0]), dst)
     os.utime(dst, (1_000_000_000 + k, 1_000_000_000 + k))
+    return dst
 
 
 def stage_time_batches(
@@ -180,20 +178,14 @@ def stage_time_batches(
     # schema either way). Scoped, not session-wide: set session-wide,
     # it changed every other parquet write too, and the degenerate-
     # parity suite's DuckDB reads of Spark-written timestamp fixtures
-    # diverged on five queries. The save/restore is session-global, so
-    # it runs under _DRIVE_LOCK like run_available_now's scopes (r13
-    # ADVICE: unlocked, two drives could leak it or drop it mid-write).
-    spark = df.sparkSession
-    _ts_key = "spark.sql.parquet.outputTimestampType"
-    with _DRIVE_LOCK:
-        _saved_ts = spark.conf.get(_ts_key, "INT96")
-        spark.conf.set(_ts_key, "TIMESTAMP_MICROS")
-        try:
-            time_batch_col(df, b, order_cols).repartition(
-                b, bno_col
-            ).write.mode("overwrite").partitionBy(bno_col).parquet(staged)
-        finally:
-            spark.conf.set(_ts_key, _saved_ts)
+    # diverged on five queries.
+    with scoped_confs(
+        df.sparkSession,
+        {"spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS"},
+    ):
+        time_batch_col(df, b, order_cols).repartition(
+            b, bno_col
+        ).write.mode("overwrite").partitionBy(bno_col).parquet(staged)
     present = sorted(
         int(name.split("=", 1)[1])
         for name in os.listdir(staged)
@@ -250,7 +242,7 @@ def staged_bounds(df: DataFrame, in_dir: str, col: str):
 def run_available_now(
     writer,
     name: str,
-    spark=None,
+    spark,
     partitions: int = 4,
     timeout: int = 300,
     final_no_data_batch: bool = True,
@@ -267,8 +259,8 @@ def run_available_now(
     triggers carry real per-batch compute keep 4 — the r13 interleaved
     A/B measured parts=2 WORSE for those (q_stream_session 3.0→3.5 s,
     q_stream_hll 1.7→1.9 s: halving task parallelism cost more than
-    the saved commits). Load-sized, not code-sized — see
-    session.scoped_shuffle_partitions; output is partition-count
+    the saved commits). Why the count is scoped at all: see the
+    comment above the scope below. Output is partition-count
     invariant (the 5-vs-32 reducer sweep + SPARK_GRAFT_STREAM_BATCHES
     sweeps assert exactly that).
 
@@ -290,11 +282,6 @@ def run_available_now(
     interval join emits quadratically many pairs in per-key density —
     correct semantics, more wall time); the default stays 300 s so
     drive hangs still fail loudly everywhere else.
-
-    When ``spark`` is given, the query starts (creating its
-    state-store layout) under a scoped shuffle-partition count sized
-    for these bounded drives — see session.scoped_shuffle_partitions
-    for the measurement and the production-sizing note.
 
     ``ensure_eviction=True`` (the APPEND-finalization drives: session /
     slide / left-outer join, whose tail rows emit ONLY in the final
@@ -318,48 +305,22 @@ def run_available_now(
     (stage_time_batches raises on one; sentinel batches carry rows),
     so last-progress ``numInputRows == 0`` ⟺ the eviction batch ran.
 
-    CONCURRENCY (r13 close, found by the round-close full suite via
-    the multi-tenant contract test's q_stream_tumble self-pair): the
-    shuffle-partition scope and the no-data-batch scope are SESSION-
-    GLOBAL conf flips with save/restore. Two drives on one session
-    from two threads race them — T1 saves "true"/32 and sets
-    "false"/2, T2 then SAVES T1's scoped value as its own baseline,
-    and whichever restores last can leave the scoped value stuck
-    session-wide. The shuffle-partition variant of this race is as
-    old as the scoping (r5) but output-invisible (every drive is
-    partition-count invariant); the r13 no-data scope made it
-    output-VISIBLE — a leaked ``false`` deterministically drops the
-    append-finalization drives' tail (session 943/946 rows, exactly
-    the eviction set; reproduced by forcing the conf). Fix: one
-    module-level RLock serializes the conf-scoped region (flip →
-    start → awaitTermination → restore). Concurrent streaming drives
-    on one session serialize; batch work is untouched; a same-thread
-    re-entry cannot deadlock (RLock). That is the honest multi-tenant
-    posture: session-global knobs demand session-level mutual
-    exclusion, and the drives' correctness must never depend on a
-    racy conf window — ``ensure_eviction`` below stays as the
-    independent belt for engine-side termination races.
+    Both conf flips form one session.scoped_confs scope around start,
+    await and the eviction restart, so concurrent drives on one session
+    serialize there (see its CONCURRENCY note).
 
     Returns the TERMINATED StreamingQuery so callers (the single-scan
     plan pin in tests/test_streaming.py, r9 verdict task 4) can read
     executed-run evidence — ``recentProgress[*].sources`` is one entry
     per physical streaming source the run actually scanned, which is
     stronger than any pre-start plan inspection."""
-    import contextlib
-
     if ensure_eviction and not final_no_data_batch:
         raise ValueError(
             f"{name}: ensure_eviction requires the final no-data batch"
         )
-    scope = (
-        scoped_shuffle_partitions(spark, partitions)
-        if spark is not None
-        else contextlib.nullcontext()
-    )
     t_env = os.environ.get("SPARK_GRAFT_STREAM_TIMEOUT")
     if t_env:
         timeout = max(1, int(t_env))
-    ndb_key = "spark.sql.streaming.noDataMicroBatches.enabled"
 
     def _await(query):
         if not query.awaitTermination(timeout):
@@ -378,29 +339,31 @@ def run_available_now(
         last = progress[-1]
         return int(last.get("numInputRows", 0)) == 0
 
-    # The whole conf-scoped region — flip, start, await, restore —
-    # runs under the module lock (docstring CONCURRENCY note).
-    with _DRIVE_LOCK:
-        saved_ndb = None
-        if spark is not None and not final_no_data_batch:
-            saved_ndb = spark.conf.get(ndb_key, "true")
-            spark.conf.set(ndb_key, "false")
-        try:
-            with scope:
-                q = writer.trigger(availableNow=True).start()
-                _await(q)
-                if ensure_eviction and not _eviction_ran(q):
-                    q = writer.trigger(availableNow=True).start()
-                    _await(q)
-                    if not _eviction_ran(q):
-                        raise RuntimeError(
-                            f"{name}: the eviction batch did not run, even"
-                            " after a restart — the tail rows are missing"
-                        )
-                return q
-        finally:
-            if saved_ndb is not None:
-                spark.conf.set(ndb_key, saved_ndb)
+    # Stateful Structured Streaming fixes the state-store partition
+    # count to spark.sql.shuffle.partitions at FIRST checkpoint
+    # creation, and every micro-batch then pays a per-partition state
+    # commit (delta file + maintenance) regardless of row count. These
+    # drives replay a bounded table as a few tiny micro-batches into a
+    # fresh checkpoint, so the batch-sized 32 buys nothing and costs 32
+    # state commits per stateful op per trigger; a handful instead
+    # measured 21 s -> ~6 s on q_stream_join at sf0.1. At production
+    # scale this is the knob you SIZE UP with state volume: state
+    # partitioning is load-dependent config, not code.
+    confs = {"spark.sql.shuffle.partitions": str(partitions)}
+    if not final_no_data_batch:
+        confs["spark.sql.streaming.noDataMicroBatches.enabled"] = "false"
+    with scoped_confs(spark, confs):
+        q = writer.trigger(availableNow=True).start()
+        _await(q)
+        if ensure_eviction and not _eviction_ran(q):
+            q = writer.trigger(availableNow=True).start()
+            _await(q)
+            if not _eviction_ran(q):
+                raise RuntimeError(
+                    f"{name}: the eviction batch did not run, even"
+                    " after a restart — the tail rows are missing"
+                )
+        return q
 
 
 def append_batch(df: DataFrame, in_dir: str, k: int) -> str:
@@ -417,11 +380,8 @@ def append_batch(df: DataFrame, in_dir: str, k: int) -> str:
     frames separately costs milliseconds."""
     stage = os.path.join(in_dir, f"_sent_stage_{k}")
     df.coalesce(1).write.mode("overwrite").parquet(stage)
-    f = next(x for x in sorted(os.listdir(stage)) if x.endswith(".parquet"))
-    dst = os.path.join(in_dir, f"batch-{k:05d}.parquet")
-    shutil.move(os.path.join(stage, f), dst)
+    dst = _deliver(stage, in_dir, k)
     shutil.rmtree(stage, ignore_errors=True)
-    os.utime(dst, (1_000_000_000 + k, 1_000_000_000 + k))
     return dst
 
 

@@ -12,6 +12,7 @@ import pytest
 
 from conftest import SF_SMOKE
 from oracle import _canon_rows
+from flink_streaming_kmeans_spark.session import scoped_confs
 
 CANDIDATES = [
     "q_sort_limit",
@@ -105,16 +106,12 @@ PARTITION_SENSITIVE = [
 
 
 def _check_partition_invariance(spark, queries, name):
-    key = "spark.sql.shuffle.partitions"
-    saved = spark.conf.get(key)
-    try:
-        spark.conf.set(key, "5")
-        a = _hash_of(queries[name](spark, SF_SMOKE))
-        spark.conf.set(key, "32")
-        b = _hash_of(queries[name](spark, SF_SMOKE))
-        assert a == b
-    finally:
-        spark.conf.set(key, saved)
+    hashes = []
+    for n in ("5", "32"):
+        with scoped_confs(spark, {"spark.sql.shuffle.partitions": n}):
+            hashes.append(_hash_of(queries[name](spark, SF_SMOKE)))
+    a, b = hashes
+    assert a == b
 
 
 @pytest.mark.parametrize("name", PARTITION_SENSITIVE)

@@ -38,6 +38,7 @@ sys.path.insert(
 )
 
 from conftest import SF_SMOKE  # noqa: E402
+from flink_streaming_kmeans_spark.session import scoped_confs  # noqa: E402
 from oracle import check_parity  # noqa: E402
 
 # (config set, query) — each pair exercises the machinery the set swaps.
@@ -71,7 +72,7 @@ def test_config_invariance(spark, registry, duck_smoke, set_name, query):
     import config_sweep
 
     queries, oracles = registry
-    with config_sweep.apply_config_set(spark, config_sweep.CONFIG_SETS[set_name]):
+    with scoped_confs(spark, config_sweep.CONFIG_SETS[set_name]):
         r = check_parity(
             spark, duck_smoke, query, queries[query], oracles[query], SF_SMOKE
         )

@@ -24,6 +24,7 @@ import numpy as np
 import pytest
 
 from conftest import SF_SMOKE
+from flink_streaming_kmeans_spark.session import scoped_confs
 
 pytestmark = pytest.mark.slow  # slow lane — see pytest.ini
 
@@ -114,10 +115,9 @@ def test_kernel_partials_bit_equal_numpy(spark):
     ]
     assert len(parts) == 3
     batch = 64
-    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    saved = spark.conf.get(key)
-    spark.conf.set(key, str(batch))
-    try:
+    with scoped_confs(
+        spark, {"spark.sql.execution.arrow.maxRecordsPerBatch": str(batch)}
+    ):
         for euclidean in (False, True):
             bias = 0.5 * (C * C).sum(axis=1) if euclidean else 0.0
             with _ModelFile() as model:
@@ -142,8 +142,6 @@ def test_kernel_partials_bit_equal_numpy(spark):
                     assert np.array_equal(np.array(r.psum), sums[j]), (
                         f"partition {p} cid {r.cid} psum drifted"
                     )
-    finally:
-        spark.conf.set(key, saved)
 
 
 def _sequential_overlay(C, cids, batches):

@@ -29,6 +29,7 @@ sys.path.insert(
 )
 
 from conftest import SF_SMOKE  # noqa: E402
+from flink_streaming_kmeans_spark.session import scoped_confs  # noqa: E402
 
 
 def test_no_undocumented_quadratic_or_row_python(spark, registry):
@@ -61,9 +62,7 @@ def test_subset_copartition_rule_flags_and_sanctions(spark):
 
     from flink_streaming_kmeans_spark.sources.loader import fan_out
 
-    saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
+    with scoped_confs(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
         df = spark.range(100_000).select(
             (F.col("id") % 7).alias("k"), (F.col("id") % 50).alias("x")
         )
@@ -91,8 +90,6 @@ def test_subset_copartition_rule_flags_and_sanctions(spark):
         assert plan_audit.subset_copartition_violations(
             side().join(side(), ["doc_id", "x"])
         ) == []
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
 
 
 def test_law53_lane_contract_live_and_parser(spark, registry):

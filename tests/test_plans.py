@@ -19,6 +19,7 @@ import re
 import pytest
 
 from conftest import SF_T2
+from flink_streaming_kmeans_spark.session import scoped_confs
 
 
 def plan_of(df, mode: str = "formatted") -> str:
@@ -281,10 +282,7 @@ def test_aqe_splits_skewed_join_partitions(spark):
         "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "16KB",
         "spark.sql.adaptive.advisoryPartitionSizeInBytes": "16KB",
     }
-    saved = {k: spark.conf.get(k, None) for k in tuned}
-    try:
-        for k, v in tuned.items():
-            spark.conf.set(k, v)
+    with scoped_confs(spark, tuned):
         left = spark.range(300_000).select(
             F.when(F.col("id") < 200_000, F.lit(7))
             .otherwise((F.col("id") % 999) + 10)
@@ -298,12 +296,6 @@ def test_aqe_splits_skewed_join_partitions(spark):
         assert len(j.collect()) == 589_100
         p = plan_of(j)  # executed → final adaptive plan
         assert "skew=true" in p, p
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 def test_runtime_bloom_filter_prunes_fact_side(spark):
@@ -322,10 +314,7 @@ def test_runtime_bloom_filter_prunes_fact_side(spark):
         "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "0",
         "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold": "100MB",
     }
-    saved = {k: spark.conf.get(k, None) for k in tuned}
-    try:
-        for k, v in tuned.items():
-            spark.conf.set(k, v)
+    with scoped_confs(spark, tuned):
         assert spark.conf.get("spark.sql.optimizer.runtime.bloomFilter.enabled") == "true"
         l = load_table(spark, SF_T2, "lineitem")
         o = load_table(spark, SF_T2, "orders").where(
@@ -339,12 +328,6 @@ def test_runtime_bloom_filter_prunes_fact_side(spark):
         p = j._jdf.queryExecution().optimizedPlan().toString()
         assert "bloom_filter_agg" in p, p
         assert "might_contain" in p, p
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 def test_compute_heavy_scans_fan_out(spark, registry):

@@ -31,6 +31,7 @@ import pytest
 from oracle import check_parity, make_duckdb
 
 from conftest import SF_SMOKE
+from flink_streaming_kmeans_spark.session import scoped_confs
 
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(
     os.path.abspath(__file__))), "tools"))
@@ -184,7 +185,6 @@ def test_chained_same_key_join_blocks_skew_split(spark):
         "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "16KB",
         "spark.sql.adaptive.advisoryPartitionSizeInBytes": "16KB",
     }
-    saved = {k: spark.conf.get(k, None) for k in tuned}
 
     def fact_and_dims():
         # hot key 7 owns 200k of 300k fact rows (the synthetic twin of
@@ -202,10 +202,7 @@ def test_chained_same_key_join_blocks_skew_split(spark):
         keep = spark.range(1_200).select(F.col("id").alias("k"))
         return fact, dim, keep
 
-    try:
-        for k, v in tuned.items():
-            spark.conf.set(k, v)
-
+    with scoped_confs(spark, tuned):
         # Arm 1 — CHAINED: dim ⋈semi keep on k, then ⋈ fact on k. The
         # inner join's left side reuses the semi join's partitioning →
         # not a fresh shuffle stage → no split, despite the identical
@@ -232,9 +229,3 @@ def test_chained_same_key_join_blocks_skew_split(spark):
         assert "isFinalPlan=false" not in p2
         assert "skew=true" in p2, p2
         assert n1 == n2 and n1 > 0
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)

@@ -10,6 +10,7 @@ import tempfile
 from pyspark.sql import functions as F
 
 from conftest import SF_SMOKE
+from flink_streaming_kmeans_spark.session import scoped_confs
 
 
 def test_csv_point_ingest_roundtrip(spark):
@@ -383,21 +384,16 @@ def test_staging_rejects_a_batch_split_across_files(spark, tmp_path):
         [(i, dt.datetime(2024, 1, 1, 0, i, 0), i % 2) for i in range(6)],
         "event_id bigint, ts timestamp, bno int",
     )
-    key = "spark.sql.files.maxRecordsPerFile"
-    saved = spark.conf.get(key)
-    spark.conf.set(key, "1")
-    try:
+    with scoped_confs(spark, {"spark.sql.files.maxRecordsPerFile": "1"}):
         with pytest.raises(ValueError, match="expected one parquet file"):
             batch_input_dir(df, str(tmp_path / "seq"), [0, 1])
         with pytest.raises(ValueError, match="expected one parquet file"):
             stage_time_batches(df.drop("bno"), str(tmp_path / "time"), 2)
-    finally:
-        spark.conf.set(key, saved)
     # the same frames stage fine with one file per batch
     assert stage_time_batches(df.drop("bno"), str(tmp_path / "ok"), 2)[1] == 2
 
 
-def test_ensure_eviction_raises_when_restart_skips_eviction():
+def test_ensure_eviction_raises_when_restart_skips_eviction(spark):
     """If the single ensure_eviction restart ALSO ends without the
     zero-input eviction batch, run_available_now must raise a
     RuntimeError naming the drive, never return partial state."""
@@ -423,8 +419,53 @@ def test_ensure_eviction_raises_when_restart_skips_eviction():
 
     w = _Writer()
     with pytest.raises(RuntimeError, match="q_fake_drive"):
-        run_available_now(w, "q_fake_drive", ensure_eviction=True)
+        run_available_now(w, "q_fake_drive", spark, ensure_eviction=True)
     assert w.starts == 2  # one run plus exactly one restart
+
+
+def test_scoped_confs_restores_every_key(spark):
+    """scoped_confs restores a set key, unsets a key that was unset,
+    restores after an exception, keeps a RUNTIME_CONFS key's scoped
+    value through ensure_confs, and nests on one thread without
+    deadlock, its exit restoring the outer scope's value."""
+    import pytest
+
+    from flink_streaming_kmeans_spark import session
+
+    set_key = "spark.fsk.test.scopedSet"
+    unset_key = "spark.fsk.test.scopedUnset"
+    rt_key = "spark.sql.adaptive.enabled"
+    spark.conf.set(set_key, "12345")
+    base_rt = spark.conf.get(rt_key)
+    assert session.RUNTIME_CONFS[rt_key] == base_rt == "true"
+
+    with scoped_confs(spark, {set_key: "-1", unset_key: "7"}):
+        assert spark.conf.get(set_key) == "-1"
+        assert spark.conf.get(unset_key) == "7"
+    assert spark.conf.get(set_key) == "12345"
+    assert spark.conf.get(unset_key, None) is None
+
+    with pytest.raises(ZeroDivisionError):
+        with scoped_confs(spark, {set_key: "-1", unset_key: "7"}):
+            1 / 0
+    assert spark.conf.get(set_key) == "12345"
+    assert spark.conf.get(unset_key, None) is None
+
+    with scoped_confs(spark, {rt_key: "false"}):
+        session.ensure_confs(spark)
+        assert spark.conf.get(rt_key) == "false"
+        assert session.RUNTIME_CONFS[rt_key] == "false"
+    assert spark.conf.get(rt_key) == base_rt
+    assert session.RUNTIME_CONFS[rt_key] == base_rt
+    session.ensure_confs(spark)
+    assert spark.conf.get(rt_key) == base_rt
+
+    with scoped_confs(spark, {set_key: "-1"}):
+        with scoped_confs(spark, {set_key: "77"}):
+            assert spark.conf.get(set_key) == "77"
+        assert spark.conf.get(set_key) == "-1"
+    assert spark.conf.get(set_key) == "12345"
+    spark.conf.unset(set_key)
 
 
 def test_staged_bounds_reads_footers_and_falls_back_to_agg(

@@ -11,12 +11,8 @@ several threads at once. The hazards are all shared-session state:
   a no-op);
 - streaming drives' memory-sink names and sink/checkpoint dirs
   (uuid-unique via loader._tmp_out — by design);
-- scoped session confs (session.scoped_shuffle_partitions toggles a
-  SESSION-GLOBAL conf around streaming drives: a concurrent batch
-  query can plan under the scoped value, and interleaved restores can
-  leave the scoped value installed — harmless for RESULTS because
-  reducer-count invariance is proven registry-wide (5-vs-32 sweep),
-  which is exactly why correctness survives this race);
+- scoped session confs (session.scoped_confs flips SESSION-GLOBAL
+  confs around streaming drives, serialized under one lock);
 - Spark's own thread-safety for concurrent job submission.
 
 Two phases:

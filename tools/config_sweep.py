@@ -41,11 +41,10 @@ query against the (config-independent) DuckDB oracle:
                       inside an object agg shows up here.
 
 All of these are documented runtime SQLConfs (set per-session; no JVM
-restart needed). AQE lives in session.RUNTIME_CONFS, which every query
-entry point re-applies via ensure_confs() — so overrides are installed
-into RUNTIME_CONFS itself for the duration of a config set and
-restored afterward; a plain spark.conf.set would be silently undone by
-the first query.
+restart needed). Each set runs inside one session.scoped_confs scope,
+which also overrides session.RUNTIME_CONFS for its keys: AQE lives
+there, and every query entry point re-applies it via ensure_confs(), so
+a plain spark.conf.set would be silently undone by the first query.
 
 The DuckDB oracle result is config-independent, so each oracle runs
 ONCE and its canonical hash is reused across all config sets (the
@@ -69,9 +68,8 @@ sys.path.insert(0, os.path.join(_REPO, "tests"))
 
 from oracle import _canon_rows, make_duckdb  # noqa: E402
 
-from flink_streaming_kmeans_spark import session as session_mod  # noqa: E402
 from flink_streaming_kmeans_spark.plans.registry import collect  # noqa: E402
-from flink_streaming_kmeans_spark.session import get_spark  # noqa: E402
+from flink_streaming_kmeans_spark.session import get_spark, scoped_confs  # noqa: E402
 
 CONFIG_SETS: dict[str, dict[str, str]] = {
     "no_codegen": {
@@ -113,38 +111,6 @@ CONFIG_SETS: dict[str, dict[str, str]] = {
         "spark.sql.objectHashAggregate.sortBased.fallbackThreshold": "2",
     },
 }
-
-
-class apply_config_set:
-    """Install a config set into BOTH the live session and
-    session.RUNTIME_CONFS (so per-query ensure_confs re-applies the
-    override instead of reverting it); restore both on exit."""
-
-    def __init__(self, spark, overrides: dict[str, str]):
-        self.spark = spark
-        self.overrides = overrides
-
-    def __enter__(self):
-        self.saved_runtime = dict(session_mod.RUNTIME_CONFS)
-        self.saved_conf = {}
-        for k, v in self.overrides.items():
-            try:
-                self.saved_conf[k] = self.spark.conf.get(k)
-            except Exception:
-                self.saved_conf[k] = None  # was unset -> unset on exit
-            session_mod.RUNTIME_CONFS[k] = v
-            self.spark.conf.set(k, v)
-        return self.spark
-
-    def __exit__(self, *exc):
-        session_mod.RUNTIME_CONFS.clear()
-        session_mod.RUNTIME_CONFS.update(self.saved_runtime)
-        for k, old in self.saved_conf.items():
-            if old is None:
-                self.spark.conf.unset(k)
-            else:
-                self.spark.conf.set(k, old)
-        return False
 
 
 def oracle_hashes(con, oracles: dict[str, str], todo: list[str]) -> dict[str, tuple]:
@@ -196,7 +162,7 @@ def main() -> int:
         overrides = CONFIG_SETS[set_name]
         t_set = time.time()
         n_ok = 0
-        with apply_config_set(spark, overrides):
+        with scoped_confs(spark, overrides):
             for name in todo:
                 try:
                     sdf = queries[name](spark, sf_dir)

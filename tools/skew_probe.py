@@ -37,7 +37,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from flink_streaming_kmeans_spark.plans.registry import collect  # noqa: E402
-from flink_streaming_kmeans_spark.session import SHUFFLE_PARTITIONS, get_spark  # noqa: E402
+from flink_streaming_kmeans_spark.session import SHUFFLE_PARTITIONS, get_spark, scoped_confs  # noqa: E402
 from flink_streaming_kmeans_spark.sources.loader import load_table  # noqa: E402
 import plan_audit  # noqa: E402
 
@@ -241,10 +241,7 @@ def aqe_skew_split_fires(spark, skewed_dir: str) -> tuple[bool, list]:
         "spark.sql.adaptive.advisoryPartitionSizeInBytes": "16KB",
         "spark.sql.files.maxPartitionBytes": "262144",
     }
-    saved = {k: spark.conf.get(k, None) for k in tuned}
-    try:
-        for k, v in tuned.items():
-            spark.conf.set(k, v)
+    with scoped_confs(spark, tuned):
         from pyspark.sql import functions as F
 
         o = load_table(spark, skewed_dir, "orders")
@@ -270,12 +267,6 @@ def aqe_skew_split_fires(spark, skewed_dir: str) -> tuple[bool, list]:
         j.collect()  # materialize → final adaptive plan
         adaptive = j._jdf.queryExecution().executedPlan()
         return "skew=true" in adaptive.toString(), _shuffle_stages(adaptive)
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 def q18_skew_curve(spark, uniform: str, skewed: str) -> dict:
@@ -372,40 +363,34 @@ def q18_skew_curve(spark, uniform: str, skewed: str) -> dict:
         "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "16KB",
         "spark.sql.adaptive.advisoryPartitionSizeInBytes": "16KB",
     }
-    saved = {k: spark.conf.get(k, None) for k in tuned}
     reg = QUERIES["q_tpch_q18"]
     out = {"join_rows": {}, "configs": {}}
     for tag, d in (("uniform", uniform), ("skewed", skewed)):
         out["join_rows"][tag] = join_volume(d)
     vol = out["join_rows"]["skewed"] / max(out["join_rows"]["uniform"], 1)
-    try:
-        for cfg, fn in (("default", reg), ("scoped", reg),
-                        ("bcast_semi", q18_bcast_semi)):
-            if cfg != "default":
-                for k, v in tuned.items():
-                    spark.conf.set(k, v)
-            t_u, _ = timed(fn, uniform)
-            t_s, skew_nodes = timed(fn, skewed)
-            raw = t_s / max(t_u, 1e-9)
-            out["configs"][cfg] = {
-                "uniform_s": round(t_u, 1),
-                "skewed_s": round(t_s, 1),
-                "ratio": round(raw, 2),
-                "ratio_per_join_row": round(raw / vol, 2),
-                "skew_split_fired": skew_nodes > 0,
-            }
-            print(
-                f"q18[{cfg:10s}] uniform {t_u:6.1f}s -> skewed {t_s:6.1f}s "
-                f"x{raw:.2f} (per-join-row x{raw / vol:.2f}) "
-                f"skew_split={skew_nodes > 0}",
-                flush=True,
-            )
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+
+    def measure(cfg, fn):
+        t_u, _ = timed(fn, uniform)
+        t_s, skew_nodes = timed(fn, skewed)
+        raw = t_s / max(t_u, 1e-9)
+        out["configs"][cfg] = {
+            "uniform_s": round(t_u, 1),
+            "skewed_s": round(t_s, 1),
+            "ratio": round(raw, 2),
+            "ratio_per_join_row": round(raw / vol, 2),
+            "skew_split_fired": skew_nodes > 0,
+        }
+        print(
+            f"q18[{cfg:10s}] uniform {t_u:6.1f}s -> skewed {t_s:6.1f}s "
+            f"x{raw:.2f} (per-join-row x{raw / vol:.2f}) "
+            f"skew_split={skew_nodes > 0}",
+            flush=True,
+        )
+
+    measure("default", reg)
+    with scoped_confs(spark, tuned):
+        measure("scoped", reg)
+        measure("bcast_semi", q18_bcast_semi)
     out["volume_ratio"] = round(vol, 2)
     out["ok"] = (
         out["configs"]["bcast_semi"]["skew_split_fired"]
