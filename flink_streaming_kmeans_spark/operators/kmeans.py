@@ -167,29 +167,19 @@ def _reduce(C, w, k: int):
     return M
 
 
-def assign(
-    embeddings: DataFrame, centroids: DataFrame, euclidean: bool = False
-) -> DataFrame:
+def assign(embeddings: DataFrame, centroids: DataFrame) -> DataFrame:
     """Score every vector against every centroid, keep the best row
     per vector (ties → lowest cid). Columns: (vec_id, embedding, cid,
-    dot). Default metric is argmax-dot — correct for unit-normalized
-    vectors (the embeddings contract); ``euclidean=True`` subtracts
-    the per-centroid ||c||²/2 bias, turning the ranking into exact
-    argmin-Euclidean for raw-coordinate inputs (see _euclid_bias)."""
+    dot). The metric is argmax-dot — correct for unit-normalized
+    vectors (the embeddings contract)."""
     scored = embeddings.crossJoin(F.broadcast(centroids)).select(
-        "vec_id", "embedding", "cid", dot64("embedding", "cemb").alias("dot"),
-        *(
-            [(dot64("cemb", "cemb") / 2).alias("_b")]
-            if euclidean
-            else []
-        ),
+        "vec_id", "embedding", "cid", dot64("embedding", "cemb").alias("dot")
     )
-    rank_on = (F.col("dot") - F.col("_b")) if euclidean else F.col("dot")
-    w = W.partitionBy("vec_id").orderBy(rank_on.desc(), F.asc("cid"))
+    w = W.partitionBy("vec_id").orderBy(F.desc("dot"), F.asc("cid"))
     return (
         scored.withColumn("rn", F.row_number().over(w))
         .where(F.col("rn") == 1)
-        .drop("rn", *(["_b"] if euclidean else []))
+        .drop("rn")
     )
 
 

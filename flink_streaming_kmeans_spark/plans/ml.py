@@ -131,8 +131,6 @@ def q_kmeans_stream(spark, sf_dir):
     state is outside DuckDB's model (SURVEY §2 rows-tier rule); Lloyd
     parity and checkpoint-restart are asserted in tests/test_streaming.
     """
-    import os
-
     import numpy as np
 
     from ..streaming.kmeans import StreamingKMeans
@@ -151,8 +149,7 @@ def q_kmeans_stream(spark, sf_dir):
 
     run_available_now(
         replay_stream(spark, in_dir, e.schema)
-        .writeStream.foreachBatch(skm.foreach_batch())
-        .option("checkpointLocation", os.path.join(d, "ckpt")),
+        .writeStream.foreachBatch(skm.foreach_batch()),
         "q_kmeans_stream",
         spark,
     )

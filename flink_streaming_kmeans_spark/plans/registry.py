@@ -58,28 +58,21 @@ def register(name: str, oracle: str | None = None):
 # explicitly ordered this rotation; this list is the CANONICAL rotation
 # plan — module docstrings defer here).
 #
-# Round-13 window (executes the round-12 verdict task 3 — the r13 plan
-# exactly as prepped in the r12 registry comment, PLUS the one-off
-# 3-query annex the r12 verdict prescribed):
-#   ANNEX(3: q_win_range_frame, q_dedup_canonical, q_dedup_lsh — the
-#   r12 optimization round's riskiest rewrites, whose home modules
-#   (windows, llm) would otherwise wait for r14; forward-declared in
-#   collect() via _ANNEX_R13 so dict insertion order fronts them while
-#   the home modules' later @register overwrites the VALUES in place) +
-#   aggs(14, re-confirming the 4 that close the r12 window) +
-#   approx_cd(1) + setops(4) + sketches(4) + coverage(10) +
-#   corpus(first 14) = 50 exactly — refreshing the r9-era aggs-tail/
-#   approx_cd/setops/sketches/coverage rows. The annex displaces the
-#   originally planned corpus 15th + streams(first 2), all three of
-#   which have r10-era rows and are fronted in the r14 plan below.
-#   The annex is ONE-OFF: the r14 rotation deletes _ANNEX_R13.
-#
-# Round-14 plan (prepped now, oldest-first per the rotation law):
-#   corpus(15, re-confirming the 14 that close the r13 window) +
+# Round-14 window (the r14 plan exactly as prepped in the r13
+# registry comment; the r13 one-off annex is gone):
+#   corpus(15, re-confirming the 14 that closed the r13 window) +
 #   streams(10) + events(9) + udf(4) + streaming_ext(1) +
 #   lakehouse(5) + windows(first 6) = 50 exactly — refreshing every
 #   r10-era row (corpus tail / streams / events / udf / streaming_ext
-#   / lakehouse), with windows(head) starting the r11 re-sweep.
+#   / lakehouse), with windows(head) starting the r11 re-sweep. The
+#   r13 window was the annex (q_win_range_frame, q_dedup_canonical,
+#   q_dedup_lsh) + aggs(14) + approx_cd(1) + setops(4) + sketches(4)
+#   + coverage(10) + corpus(first 14).
+#
+# Round-15 plan (prepped now, oldest-first per the rotation law):
+#   windows(9, re-confirming the 6 that close the r14 window) +
+#   relational(9) + scalars(9) + ml(4) + llm(13) + textops(first 6)
+#   = 50 exactly — refreshing the r11-era rows, as the r11 window did.
 #
 # ROTATION LAW (steady state from r9 on): every registered query gets
 #   a driver-recorded hash row at most TWO testdata generations old.
@@ -120,18 +113,13 @@ def register(name: str, oracle: str | None = None):
 # semantics depend on it (verified by the full preflight sweep each
 # round).
 _MODULES = [
-    "aggs",
-    "approx_cd",  # stays ordered with aggs (r9 window pairing).
-    "setops",
-    "sketches",
-    "coverage",
-    "corpus",  # first 14 complete the r13 window (annex takes 3 slots).
+    "corpus",
     "streams",
     "events",
     "udf",
     "streaming_ext",
     "lakehouse",
-    "windows",
+    "windows",  # first 6 complete the r14 window.
     "relational",
     "scalars",
     "ml",
@@ -142,20 +130,15 @@ _MODULES = [
     "scans",
     "filters",
     "joins",
+    "aggs",
+    "approx_cd",  # stays ordered with aggs (r9 window pairing).
+    "setops",
+    "sketches",
+    "coverage",
 ]
 
-# r13 one-off window annex (r12 verdict task 3): the r12 round's
-# riskiest rewrites get their driver hash row THIS round instead of
-# waiting for their home modules' r14 slot. collect() registers these
-# names FIRST with lazy delegates; dict insertion order is fixed by
-# the first insertion, and the home modules' later @register calls
-# overwrite the VALUES (and supply the oracles) in place — so the
-# driver's first-50 window carries the real implementations, fronted.
-# DELETE this tuple (and its collect() hook) at the r14 rotation.
-_ANNEX_R13 = ("q_win_range_frame", "q_dedup_canonical", "q_dedup_lsh")
-
 # The NEXT round's plan in executable form (r11 on): the prose
-# "Round-12 plan" above, as the module order the next session will
+# "Round-15 plan" above, as the module order the next session will
 # rotate to. tests/test_rotation_law.py SIMULATES the next round
 # against this list — it synthesizes the upcoming driver record from
 # the current front-50 and asserts the prepped order still satisfies
@@ -163,18 +146,12 @@ _ANNEX_R13 = ("q_win_range_frame", "q_dedup_canonical", "q_dedup_lsh")
 # instead of during the next session's task 1. Rotating a round =
 # _MODULES ← _NEXT_MODULES, then prep the new _NEXT_MODULES.
 _NEXT_MODULES = [
-    "corpus",
-    "streams",
-    "events",
-    "udf",
-    "streaming_ext",
-    "lakehouse",
-    "windows",  # first 6 complete the r14 window; tail 3 lead r15.
+    "windows",
     "relational",
     "scalars",
     "ml",
     "llm",
-    "textops",
+    "textops",  # first 6 complete the r15 window.
     "training",
     "quality",
     "scans",
@@ -185,31 +162,13 @@ _NEXT_MODULES = [
     "setops",
     "sketches",
     "coverage",
+    "corpus",
+    "streams",
+    "events",
+    "udf",
+    "streaming_ext",
+    "lakehouse",
 ]
-
-
-def _register_annex() -> None:
-    """Forward-declare the _ANNEX_R13 names ahead of the module loop
-    (see the tuple's comment). Idempotent: skips names already
-    registered (e.g. a test imported a home module before collect()),
-    so the annex can never shadow a real implementation — only claim
-    an early dict slot that the home module's @register then fills."""
-
-    def fwd(name: str) -> QueryFn:
-        def placeholder(spark: SparkSession, sf_dir: str) -> DataFrame:
-            # Unreachable after collect(): every home module's import
-            # overwrites this entry with the real implementation. If a
-            # caller somehow runs it, fail loudly rather than recurse.
-            raise RuntimeError(
-                f"annex placeholder for {name} was never overwritten — "
-                "its home module did not register it"
-            )
-
-        return placeholder
-
-    for name in _ANNEX_R13:
-        if name not in QUERIES:
-            QUERIES[name] = fwd(name)
 
 
 def collect() -> tuple[dict[str, QueryFn], dict[str, str]]:
@@ -223,7 +182,6 @@ def collect() -> tuple[dict[str, QueryFn], dict[str, str]]:
     if not _COLLECTED:
         import importlib
 
-        _register_annex()
         for mod in _MODULES:
             fq = f"{__package__}.{mod}"
             try:

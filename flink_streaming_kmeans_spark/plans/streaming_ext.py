@@ -115,8 +115,7 @@ def q_stream_slide(spark, sf_dir):
     run_available_now(
         agg.writeStream.format("parquet")
         .option("path", sink_dir)
-        .outputMode("append")
-        .option("checkpointLocation", os.path.join(d, "ckpt")),
+        .outputMode("append"),
         "q_stream_slide",
         spark,
         # partitions stays 4 (r13 probe): parts=2 measured WORSE

@@ -26,10 +26,11 @@ strongest oracle tier its state shape admits:
   exercising the per-point remove/add arithmetic of the reference
   co-operator (streaming/kmeans.py track_assignments)
 
-WINDOW NOTE: INSIDE the round-6 correctness window (module registers
-fourth). The canonical rotation plan lives in plans/registry.py next
-to ``_MODULES``; do NOT add queries to this module while it is in
-the window prefix (round-6 additions went to plans/streaming_ext.py).
+WINDOW NOTE: this module's registration position rotates each round;
+plans/registry.py ``_MODULES`` is the canonical plan (it registers
+second in the round-14 window). Do NOT add queries to this module
+while it is in the window prefix (round-6 additions went to
+plans/streaming_ext.py).
 
 The event-time drives replay their tables as CONTIGUOUS TIME-RANGE
 micro-batch files (sources/replay.py; monotone mtimes pin
@@ -154,8 +155,7 @@ def q_stream_dedup(spark, sf_dir):
     # zero output rows. Output identical (3-SF oracle-verified).
     run_available_now(
         deduped.writeStream.format("parquet")
-        .option("path", sink_dir)
-        .option("checkpointLocation", os.path.join(d, "ckpt")),
+        .option("path", sink_dir),
         "q_stream_dedup",
         spark,
         # partitions=2 (r13): per-trigger state commit was 165-428 ms
@@ -265,8 +265,7 @@ def q_stream_join(spark, sf_dir):
     run_available_now(
         joined.writeStream.format("parquet")
         .option("path", sink_dir)
-        .outputMode("append")
-        .option("checkpointLocation", os.path.join(d, "ckpt")),
+        .outputMode("append"),
         "q_stream_join",
         spark,
         # partitions=2 (r13): this drive's triggers are state-commit-
@@ -378,8 +377,7 @@ def q_stream_upsert(spark, sf_dir):
 
     run_available_now(
         replay_stream(spark, in_dir, src.schema)
-        .writeStream.foreachBatch(fb)
-        .option("checkpointLocation", os.path.join(d, "ckpt")),
+        .writeStream.foreachBatch(fb),
         "q_stream_upsert",
         spark,
     )
@@ -444,8 +442,7 @@ def q_kmeans_stream_reassign(spark, sf_dir):
     # the partition-count comment in replay.run_available_now.
     run_available_now(
         replay_stream(spark, in_dir, e.schema)
-        .writeStream.foreachBatch(skm.foreach_batch())
-        .option("checkpointLocation", os.path.join(d, "ckpt")),
+        .writeStream.foreachBatch(skm.foreach_batch()),
         "q_kmeans_stream_reassign",
         spark,
         partitions=2,
@@ -570,8 +567,7 @@ def q_stream_session(spark, sf_dir):
     run_available_now(
         agg.writeStream.format("parquet")
         .option("path", sink_dir)
-        .outputMode("append")
-        .option("checkpointLocation", os.path.join(d, "ckpt")),
+        .outputMode("append"),
         "q_stream_session",
         spark,
         # append-mode tail sessions emit ONLY in the final eviction
@@ -981,8 +977,7 @@ def q_stream_join_left(spark, sf_dir):
     run_available_now(
         joined.writeStream.format("parquet")
         .option("path", sink_dir)
-        .outputMode("append")
-        .option("checkpointLocation", os.path.join(d, "ckpt")),
+        .outputMode("append"),
         "q_stream_join_left",
         spark,
         partitions=2,

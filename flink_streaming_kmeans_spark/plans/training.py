@@ -334,8 +334,6 @@ def q_stream_tumble(spark, sf_dir):
     the state store; the watermark bounds state growth — the standard
     production shape for continuous rollups. (The ntile split is
     drive-side scaffolding, not the operator.)"""
-    import os
-
     # event-time domain gate (r6 extreme-timestamp sweep): the
     # streaming machinery has real time boundaries — see ts_valid
     ev = load_table(spark, sf_dir, "events").where(ts_valid("ts")).select(
@@ -394,9 +392,7 @@ def q_stream_tumble(spark, sf_dir):
     # guaranteed-empty foreachBatch call. Output identical
     # (3-SF oracle-verified).
     run_available_now(
-        agg.writeStream.foreachBatch(sink)
-        .outputMode("update")
-        .option("checkpointLocation", os.path.join(d, "ckpt")),
+        agg.writeStream.foreachBatch(sink).outputMode("update"),
         "q_stream_tumble",
         spark,
         # partitions=2 (r13): per-trigger state commit was 170-210 ms

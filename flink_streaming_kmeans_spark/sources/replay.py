@@ -14,15 +14,20 @@ invariants make that a faithful drive:
 This module owns that scaffolding end to end: staging the batch files,
 the reader over them (:func:`replay_stream`, the only place that sets
 ``maxFilesPerTrigger``), their column bounds (:func:`staged_bounds`),
-and the shared availableNow runner with its fail-loudly timeout and
-scoped state-partition sizing. Its conf flips go through
-session.scoped_confs.
+and the one drive runner (:func:`run_available_now`), the only place
+that sets an availableNow trigger or a checkpoint location. Like the
+reference job, which configures checkpointing once on its execution
+environment, no drive picks its own checkpoint: the runner gives each
+drive a fresh temp dir, removed when the drive ends, unless the
+caller passes a ``checkpoint`` path to resume from. Its conf flips go
+through session.scoped_confs.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
+import tempfile
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
@@ -247,73 +252,67 @@ def run_available_now(
     timeout: int = 300,
     final_no_data_batch: bool = True,
     ensure_eviction: bool = False,
+    checkpoint: str | None = None,
 ):
-    """Start an availableNow streaming query and fail loudly on
-    timeout instead of returning partial state.
+    """Run ``writer`` as an availableNow query, the one drive runner.
+    It fails loudly on timeout instead of returning partial state.
+
+    ``checkpoint``: the query's checkpoint location, always set here;
+    a ``checkpointLocation`` the writer already carries is replaced.
+    A caller that resumes across runs passes its path, which is used
+    as given and left in place as the restart point. Without one the
+    drive checkpoints in a fresh ``tempfile.mkdtemp`` dir, removed
+    once the drive ends: finished, timed out or failed its restart.
 
     ``partitions``: every state-store commit writes one delta file
     PER STORE PER PARTITION per trigger (a stream-stream join keeps 4
     stores per partition), so drives whose triggers are state-commit-
-    dominated (the r13 per-trigger decomposition: q_stream_join
-    620-1200 ms commit of a 600-770 ms addBatch) pass 2; drives whose
-    triggers carry real per-batch compute keep 4 — the r13 interleaved
-    A/B measured parts=2 WORSE for those (q_stream_session 3.0→3.5 s,
-    q_stream_hll 1.7→1.9 s: halving task parallelism cost more than
-    the saved commits). Why the count is scoped at all: see the
-    comment above the scope below. Output is partition-count
-    invariant (the 5-vs-32 reducer sweep + SPARK_GRAFT_STREAM_BATCHES
+    dominated (r13: q_stream_join 620-1200 ms commit of a 600-770 ms
+    addBatch) pass 2; drives with real per-batch compute keep 4 — the
+    r13 interleaved A/B measured parts=2 WORSE there (q_stream_session
+    3.0→3.5 s, q_stream_hll 1.7→1.9 s). Why the count is scoped at
+    all: see the comment above the scope below. Output is partition-
+    count invariant (the 5-vs-32 reducer and SPARK_GRAFT_STREAM_BATCHES
     sweeps assert exactly that).
 
     ``final_no_data_batch=False`` scopes
     ``spark.sql.streaming.noDataMicroBatches.enabled=false`` around
-    the run (restored after). The final no-data micro-batch exists to
-    run watermark-driven state eviction/emission after the last data
-    batch; drives whose sink output is already complete by then (an
-    inner interval join and first-sight dedup emit eagerly on match;
-    an update-mode foreachBatch emits every state change on its data
-    batch) pay a full trigger — plan + state commit + offset/commit
-    log writes, 0.4-0.7 s measured — for a batch that provably emits
-    nothing. APPEND-mode finalization drives (session / slide /
-    left-outer join) MUST keep the default: their tail rows emit only
-    on that final eviction.
+    the run. The final no-data micro-batch runs watermark-driven state
+    eviction/emission after the last data batch; drives whose output
+    is already complete by then (an inner interval join and first-
+    sight dedup emit on match; an update-mode foreachBatch emits every
+    state change on its data batch) would pay a full trigger, 0.4-0.7
+    s measured, for a batch that provably emits nothing. APPEND-mode
+    finalization drives (session / slide / left-outer join) MUST keep
+    the default: their tail rows emit only on that final eviction.
 
     SPARK_GRAFT_STREAM_TIMEOUT overrides the cap for fixtures whose
     OUTPUT is legitimately huge (the adversarial-skew rung's hot-user
-    interval join emits quadratically many pairs in per-key density —
-    correct semantics, more wall time); the default stays 300 s so
-    drive hangs still fail loudly everywhere else.
+    interval join emits quadratically many pairs); the default stays
+    300 s so drive hangs still fail loudly everywhere else.
 
-    ``ensure_eviction=True`` (the APPEND-finalization drives: session /
-    slide / left-outer join, whose tail rows emit ONLY in the final
-    watermark-eviction no-data batch): after a successful termination,
-    verify from ``recentProgress`` that a zero-input batch actually
-    ran; if the engine concluded the availableNow run straight after
-    the last data batch (observed once in ~10⁴ full-suite drives —
-    the r13 close's [1-q_stream_session] flake, 943/946 rows with
-    exactly the last-2.5h session tail missing, unreproducible in 30
-    isolated runs), RESTART the writer once from the same checkpoint:
-    the restarted query sees no new files and runs precisely the
-    pending eviction batch — the engine's own checkpoint-resume path
-    (pinned by tests/test_streaming.py::
-    test_filesink_checkpoint_resume_equals_single_run), so the
-    append-sink contents equal the single-run answer exactly; if the
-    restarted query still skips it, raise a RuntimeError naming the
-    drive rather than return partial state. Free in
-    the normal case (one progress-list read); never valid together
-    with ``final_no_data_batch=False``. The probe is sound for these
-    drives because their replay NEVER delivers an empty data batch
-    (stage_time_batches raises on one; sentinel batches carry rows),
-    so last-progress ``numInputRows == 0`` ⟺ the eviction batch ran.
+    ``ensure_eviction=True`` (the APPEND-finalization drives): after a
+    successful termination, verify from ``recentProgress`` that a
+    zero-input batch actually ran. If the engine concluded straight
+    after the last data batch (observed once in ~10⁴ full-suite drives
+    — the r13 [1-q_stream_session] flake, 943/946 rows), RESTART the
+    writer once from the same checkpoint: the restarted query sees no
+    new files and runs precisely the pending eviction batch, the
+    engine's own resume path (pinned by tests/test_streaming.py::
+    test_filesink_checkpoint_resume_equals_single_run). If it still
+    skips it, raise a RuntimeError naming the drive. Free in the
+    normal case (one progress-list read); never valid together with
+    ``final_no_data_batch=False``. The probe is sound because these
+    drives' replay NEVER delivers an empty data batch, so
+    last-progress ``numInputRows == 0`` ⟺ the eviction batch ran.
 
     Both conf flips form one session.scoped_confs scope around start,
     await and the eviction restart, so concurrent drives on one session
     serialize there (see its CONCURRENCY note).
 
-    Returns the TERMINATED StreamingQuery so callers (the single-scan
-    plan pin in tests/test_streaming.py, r9 verdict task 4) can read
-    executed-run evidence — ``recentProgress[*].sources`` is one entry
-    per physical streaming source the run actually scanned, which is
-    stronger than any pre-start plan inspection."""
+    Returns the TERMINATED StreamingQuery so callers can read
+    executed-run evidence: ``recentProgress[*].sources`` has one entry
+    per physical streaming source the run actually scanned."""
     if ensure_eviction and not final_no_data_batch:
         raise ValueError(
             f"{name}: ensure_eviction requires the final no-data batch"
@@ -352,18 +351,24 @@ def run_available_now(
     confs = {"spark.sql.shuffle.partitions": str(partitions)}
     if not final_no_data_batch:
         confs["spark.sql.streaming.noDataMicroBatches.enabled"] = "false"
-    with scoped_confs(spark, confs):
-        q = writer.trigger(availableNow=True).start()
-        _await(q)
-        if ensure_eviction and not _eviction_ran(q):
-            q = writer.trigger(availableNow=True).start()
+    ckpt = tempfile.mkdtemp(prefix="fsk_ckpt_") if checkpoint is None else checkpoint
+    writer = writer.option("checkpointLocation", ckpt).trigger(availableNow=True)
+    try:
+        with scoped_confs(spark, confs):
+            q = writer.start()
             _await(q)
-            if not _eviction_ran(q):
-                raise RuntimeError(
-                    f"{name}: the eviction batch did not run, even"
-                    " after a restart — the tail rows are missing"
-                )
-        return q
+            if ensure_eviction and not _eviction_ran(q):
+                q = writer.start()
+                _await(q)
+                if not _eviction_ran(q):
+                    raise RuntimeError(
+                        f"{name}: the eviction batch did not run, even"
+                        " after a restart — the tail rows are missing"
+                    )
+            return q
+    finally:
+        if checkpoint is None:
+            shutil.rmtree(ckpt, ignore_errors=True)
 
 
 def append_batch(df: DataFrame, in_dir: str, k: int) -> str:

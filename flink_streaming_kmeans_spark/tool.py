@@ -207,8 +207,7 @@ def _run_streaming(spark, pts, args, init, euclidean=False):
         )
         run_available_now(
             replay_stream(spark, in_dir, pts.schema)
-            .writeStream.foreachBatch(skm.foreach_batch())
-            .option("checkpointLocation", os.path.join(d, "ckpt")),
+            .writeStream.foreachBatch(skm.foreach_batch()),
             "--stream",
             spark,
             timeout=600,

@@ -8,11 +8,17 @@ ranks over ties, shingle self-join aggregation, Python paths, k-means.
 
 from __future__ import annotations
 
+import glob
+import json
+import os
+
 import pytest
 
 from conftest import SF_SMOKE
 from oracle import _canon_rows
 from flink_streaming_kmeans_spark.session import scoped_confs
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 CANDIDATES = [
     "q_sort_limit",
@@ -140,12 +146,31 @@ def _current_window_names():
     return [n for n in list(queries)[:50] if n in oracles]
 
 
+def _last_recorded_window_names():
+    """The hash queries of the newest committed driver record
+    (CORRECTNESS_r*.json): the window the registry rotated away from.
+    Keeping them makes each query's check last one round past its
+    window, so a rotation adds cases and never drops the ones the
+    driver just recorded."""
+    from flink_streaming_kmeans_spark.plans.registry import collect
+
+    queries, oracles = collect()
+    records = sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json")))
+    last = json.load(open(records[-1])) if records else {}
+    return [n for n in last if n in queries and n in oracles]
+
+
 @pytest.mark.slow
 @pytest.mark.parametrize(
-    "name", sorted(set(_current_window_names()) - set(PARTITION_SENSITIVE))
+    "name",
+    sorted(
+        (set(_current_window_names()) | set(_last_recorded_window_names()))
+        - set(PARTITION_SENSITIVE)
+    ),
 )
 def test_window_partition_invariance(spark, registry, name):
     """Partition-invariance smoke over the FULL current driver window
-    (minus the PARTITION_SENSITIVE names already checked above)."""
+    and the last recorded one (minus the PARTITION_SENSITIVE names
+    already checked above)."""
     queries, _ = registry
     _check_partition_invariance(spark, queries, name)

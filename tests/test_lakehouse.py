@@ -23,6 +23,7 @@ from flink_streaming_kmeans_spark.plans.lakehouse import (
     _seed_table,
     _SEGMENTS,
 )
+from flink_streaming_kmeans_spark.sources.replay import run_available_now
 
 pytestmark = pytest.mark.slow  # slow lane — see pytest.ini
 
@@ -260,13 +261,9 @@ def test_streaming_upsert_sink(spark):
                 .option("maxFilesPerTrigger", "1")
                 .parquet(d + "/in")
             )
-            q = (
-                stream.writeStream.foreachBatch(fb)
-                .option("checkpointLocation", d + "/ckpt")
-                .trigger(availableNow=True)
-                .start()
+            run_available_now(
+                stream.writeStream.foreachBatch(fb), "lake_upsert_sink", spark
             )
-            assert q.awaitTermination(180), "stream did not terminate in 180s"
             assert latest_version(root) >= 2  # one commit per micro-batch
             got = {
                 (r.custkey, round(r.acctbal, 4))
@@ -511,16 +508,14 @@ def test_streaming_join_against_evolving_dim(spark):
 
                 merge_cow(spark, root, upd, fn)
 
-        q = (
+        run_available_now(
             spark.readStream.schema("fid bigint, k bigint")
             .option("maxFilesPerTrigger", "1")
             .parquet(d + "/in/*")
-            .writeStream.foreachBatch(fb)
-            .option("checkpointLocation", d + "/ckpt")
-            .trigger(availableNow=True)
-            .start()
+            .writeStream.foreachBatch(fb),
+            "lake_dim_refresh",
+            spark,
         )
-        assert q.awaitTermination(180), "stream did not terminate in 180s"
         assert len(seen) == 2
         assert all(lab.startswith("v0-") for _, lab in seen[0])
         assert all(lab.startswith("v1-") for _, lab in seen[1])

@@ -11,6 +11,14 @@ session.scoped_confs, the one save/restore under the drive lock. A
 hand-written save (``.conf.get(``) or restore (``.conf.unset(``)
 elsewhere in the package or tools/ skips that lock, so the second
 test fails on either outside session.py.
+
+And every availableNow drive runs through sources/replay.
+run_available_now, the one place that sets the trigger and the
+checkpoint location (a temp dir it removes, or the caller's resume
+path). The third test fails if any module of the package, tools/ or
+tests/ outside replay.py names either. perfbench/ is exempt: the
+benchmark is frozen between benchmark changes, and the runner
+replaces the checkpoint its drive sets.
 """
 
 from __future__ import annotations
@@ -21,6 +29,10 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = os.path.join(REPO, "flink_streaming_kmeans_spark")
 OWNER = os.path.join("sources", "replay.py")
 CONF_OWNER = os.path.join("flink_streaming_kmeans_spark", "session.py")
+DRIVE_OWNERS = {
+    os.path.join("flink_streaming_kmeans_spark", "sources", "replay.py"),
+    os.path.join("tests", "test_source_lockstep.py"),  # holds the needles
+}
 
 
 def _mentions(path: str, *needles: str) -> list[int]:
@@ -68,4 +80,25 @@ def test_only_session_saves_and_restores_confs():
     )
     assert _mentions(os.path.join(REPO, CONF_OWNER), ".conf.get("), (
         "scoped_confs no longer saves confs"
+    )
+
+
+def test_only_replay_starts_drives():
+    offenders = []
+    for top in ("flink_streaming_kmeans_spark", "tools", "tests"):
+        for root, _, files in os.walk(os.path.join(REPO, top)):
+            for name in sorted(files):
+                rel = os.path.relpath(os.path.join(root, name), REPO)
+                if name.endswith(".py") and rel not in DRIVE_OWNERS:
+                    offenders += [
+                        f"{rel}:{i}"
+                        for i in _mentions(
+                            os.path.join(REPO, rel),
+                            "checkpointLocation",
+                            "availableNow=True",
+                        )
+                    ]
+    assert not offenders, (
+        "run the drive through sources/replay.run_available_now instead "
+        f"of setting its trigger or checkpoint here: {offenders}"
     )

@@ -4,6 +4,7 @@ lines into Feature POJOs [PK]) and a streaming rate source."""
 
 from __future__ import annotations
 
+import os
 import shutil
 import tempfile
 
@@ -393,10 +394,13 @@ def test_staging_rejects_a_batch_split_across_files(spark, tmp_path):
     assert stage_time_batches(df.drop("bno"), str(tmp_path / "ok"), 2)[1] == 2
 
 
-def test_ensure_eviction_raises_when_restart_skips_eviction(spark):
+def test_ensure_eviction_raises_when_restart_skips_eviction(spark, tmp_path):
     """If the single ensure_eviction restart ALSO ends without the
     zero-input eviction batch, run_available_now must raise a
-    RuntimeError naming the drive, never return partial state."""
+    RuntimeError naming the drive, never return partial state. The
+    checkpoint lifecycle holds on that path too: the drive checkpoints
+    in a temp dir that is gone after the failure, while a caller's
+    ``checkpoint`` path is used as given and left on disk."""
     import pytest
 
     from flink_streaming_kmeans_spark.sources.replay import run_available_now
@@ -408,7 +412,14 @@ def test_ensure_eviction_raises_when_restart_skips_eviction(spark):
             return True
 
     class _Writer:
-        starts = 0
+        def __init__(self):
+            self.starts = 0
+            self.checkpoints = set()
+
+        def option(self, key, value):
+            # the checkpoint is the one option run_available_now sets
+            self.checkpoints.add(value)
+            return self
 
         def trigger(self, **kw):
             return self
@@ -421,6 +432,17 @@ def test_ensure_eviction_raises_when_restart_skips_eviction(spark):
     with pytest.raises(RuntimeError, match="q_fake_drive"):
         run_available_now(w, "q_fake_drive", spark, ensure_eviction=True)
     assert w.starts == 2  # one run plus exactly one restart
+    (temp,) = w.checkpoints  # the run and its restart share one dir
+    assert not os.path.exists(temp)
+
+    kept = str(tmp_path / "ckpt")
+    os.makedirs(kept)
+    w = _Writer()
+    with pytest.raises(RuntimeError, match="q_fake_drive"):
+        run_available_now(
+            w, "q_fake_drive", spark, ensure_eviction=True, checkpoint=kept
+        )
+    assert w.checkpoints == {kept} and os.path.isdir(kept)
 
 
 def test_scoped_confs_restores_every_key(spark):

@@ -14,6 +14,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from conftest import SF_SMOKE
+from flink_streaming_kmeans_spark.sources.replay import run_available_now
 
 pytestmark = pytest.mark.slow  # slow lane — see pytest.ini
 
@@ -44,18 +45,6 @@ def _events_stream(spark, sf_dir, **reader_opts):
     return df
 
 
-def _run_to_memory(df, name, mode="complete"):
-    q = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(120), "stream did not terminate in 120s"
-    return q
-
-
 def test_streaming_tumble_matches_batch(spark, registry):
     queries, _ = registry
     batch = {
@@ -68,7 +57,11 @@ def test_streaming_tumble_matches_batch(spark, registry):
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(F.col("w.start").alias("win_start"), "n_events")
     )
-    _run_to_memory(agg, "t_tumble")
+    run_available_now(
+        agg.writeStream.format("memory").queryName("t_tumble").outputMode("complete"),
+        "t_tumble",
+        spark,
+    )
     got = {
         (r.win_start, r.n_events) for r in spark.sql("SELECT * FROM t_tumble").collect()
     }
@@ -84,7 +77,11 @@ def test_streaming_session_matches_batch_count(spark, registry):
         .groupBy("user_id", F.session_window("ts", "30 minutes").alias("w"))
         .agg(F.count(F.lit(1)).alias("n_events"))
     )
-    _run_to_memory(agg, "t_session", mode="append")
+    run_available_now(
+        agg.writeStream.format("memory").queryName("t_session").outputMode("append"),
+        "t_session",
+        spark,
+    )
     # append mode emits only watermark-closed sessions; with availableNow
     # the final watermark closes all but each user's last open session.
     got_n = spark.sql("SELECT count(*) AS n FROM t_session").collect()[0].n
@@ -109,16 +106,14 @@ def test_watermark_drops_late_data(spark):
             .agg(F.count(F.lit(1)).alias("n"))
         )
         got: list = []
-        q = (
+        run_available_now(
             agg.writeStream.foreachBatch(
                 lambda bdf, bid: got.extend(bdf.collect())
-            )
-            .outputMode("update")
-            .option("checkpointLocation", d + "/ckpt")
-            .trigger(availableNow=True)
-            .start()
+            ).outputMode("update"),
+            "watermark_late",
+            spark,
+            checkpoint=d + "/ckpt",
         )
-        assert q.awaitTermination(120), "stream did not terminate in 120s"
         return got
 
     try:
@@ -181,16 +176,14 @@ def test_watermark_boundary_semantics(spark):
                 .agg(F.count(F.lit(1)).alias("n"))
             )
             got: list = []
-            q = (
+            run_available_now(
                 agg.writeStream.foreachBatch(
                     lambda bdf, bid: got.extend(bdf.collect())
-                )
-                .outputMode(mode)
-                .option("checkpointLocation", d + "/ckpt")
-                .trigger(availableNow=True)
-                .start()
+                ).outputMode(mode),
+                "watermark_boundary",
+                spark,
+                checkpoint=d + "/ckpt",
             )
-            assert q.awaitTermination(120), "stream did not terminate in 120s"
             return got
 
         try:
@@ -259,15 +252,13 @@ def test_drop_duplicates_within_watermark(spark):
             ["id"]
         )
         got: list = []
-        q = (
+        run_available_now(
             deduped.writeStream.foreachBatch(
                 lambda bdf, bid: got.extend(bdf.collect())
-            )
-            .option("checkpointLocation", d + "/ckpt")
-            .trigger(availableNow=True)
-            .start()
+            ),
+            "dedup_within_watermark",
+            spark,
         )
-        assert q.awaitTermination(120), "stream did not terminate in 120s"
         ids = sorted(r.id for r in got)
         assert ids == list(range(20)), ids  # each id exactly once
     finally:
@@ -314,14 +305,11 @@ def test_stream_stream_interval_join(spark):
             "user_id = c_user AND c_ts BETWEEN p_ts - INTERVAL 1 HOUR AND p_ts"
         ),
     )
-    q = (
-        joined.writeStream.format("memory")
-        .queryName("t_ssj")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    run_available_now(
+        joined.writeStream.format("memory").queryName("t_ssj").outputMode("append"),
+        "t_ssj",
+        spark,
     )
-    assert q.awaitTermination(180), "stream did not terminate in 180s"
     got_n = spark.sql("SELECT count(*) AS n FROM t_ssj").collect()[0].n
     assert got_n == batch_n, (got_n, batch_n)
 
@@ -347,15 +335,11 @@ def test_stateful_running_stats(spark):
             .parquet(d + "/in")
         )
         out = running_user_stats(stream)
-        q = (
-            out.writeStream.format("memory")
-            .queryName("t_tws")
-            .outputMode("update")
-            .option("checkpointLocation", d + "/ckpt")
-            .trigger(availableNow=True)
-            .start()
+        run_available_now(
+            out.writeStream.format("memory").queryName("t_tws").outputMode("update"),
+            "t_tws",
+            spark,
         )
-        assert q.awaitTermination(180), "stream did not terminate in 180s"
         # last update per user == the full batch aggregate
         final = {
             r.user_id: (r.n_events, r.total_value)
@@ -437,13 +421,12 @@ def test_streaming_kmeans_restart_and_lloyd_parity(spark):
                 .option("maxFilesPerTrigger", "1")
                 .parquet(d + "/in")
             )
-            q = (
-                stream.writeStream.foreachBatch(skm.foreach_batch())
-                .option("checkpointLocation", d + "/ckpt")
-                .trigger(availableNow=True)
-                .start()
+            run_available_now(
+                stream.writeStream.foreachBatch(skm.foreach_batch()),
+                "skm_restart",
+                spark,
+                checkpoint=d + "/ckpt",
             )
-            assert q.awaitTermination(180), "stream did not terminate in 180s"
             return skm
 
         # First incarnation sees 3 of the 5 batches, then "crashes".
@@ -513,12 +496,9 @@ def test_streaming_kmeans_macqueen(spark):
         stream = spark.readStream.schema("vec_id bigint, embedding array<float>").option(
             "maxFilesPerTrigger", "1"
         ).parquet(d + "/in")
-        q = (
-            stream.writeStream.foreachBatch(skm.foreach_batch())
-            .trigger(availableNow=True)
-            .start()
+        run_available_now(
+            stream.writeStream.foreachBatch(skm.foreach_batch()), "skm", spark
         )
-        assert q.awaitTermination(180), "stream did not terminate in 180s"
         assert skm.batches_seen >= 2, "expected multiple micro-batches"
         assert int(skm.n.sum()) == 500
         assert np.isfinite(skm.C).all()
@@ -554,15 +534,13 @@ def test_streaming_etl_to_parquet_sink(spark):
             )
             .select(F.col("w.start").alias("win_start"), "n_events", "sum_value")
         )
-        q = (
+        run_available_now(
             agg.writeStream.format("parquet")
             .option("path", d + "/out")
-            .option("checkpointLocation", d + "/ckpt")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+            .outputMode("append"),
+            "etl_parquet_sink",
+            spark,
         )
-        assert q.awaitTermination(180), "stream did not terminate in 180s"
         got = {
             r.win_start: (r.n_events, round(r.sum_value, 4))
             for r in spark.read.parquet(d + "/out").collect()
@@ -902,9 +880,7 @@ def test_complete_mode_agg_recovers_from_checkpoint(spark, tmp_path):
     from flink_streaming_kmeans_spark.sources.replay import (
         append_batch,
         batch_input_dir,
-        run_available_now,
     )
-    from conftest import SF_SMOKE
     from pyspark.sql import functions as F
 
     ev = load_table(spark, SF_SMOKE, "events").select("user_id", "event_type")
@@ -931,10 +907,10 @@ def test_complete_mode_agg_recovers_from_checkpoint(spark, tmp_path):
             agg_of(stream)
             .writeStream.outputMode("complete")
             .format("memory")
-            .queryName(qname)
-            .option("checkpointLocation", ckpt),
+            .queryName(qname),
             qname,
             spark,
+            checkpoint=ckpt,
         )
 
     run("resume_pass1")
@@ -976,7 +952,6 @@ def test_filesink_checkpoint_resume_equals_single_run(spark, tmp_path):
     from flink_streaming_kmeans_spark.sources.loader import load_table
     from flink_streaming_kmeans_spark.sources.replay import (
         batch_input_dir,
-        run_available_now,
         time_batch_col,
     )
 
@@ -1025,10 +1000,10 @@ def test_filesink_checkpoint_resume_equals_single_run(spark, tmp_path):
             run_available_now(
                 agg.writeStream.outputMode("append")
                 .format("parquet")
-                .option("path", sink)
-                .option("checkpointLocation", ckpt),
+                .option("path", sink),
                 f"{tag}_upto{upto}",
                 spark,
+                checkpoint=ckpt,
             )
             delivered = upto
         assert delivered == 3
@@ -1334,10 +1309,7 @@ def test_ensure_eviction_probe_soundness_and_guard(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from flink_streaming_kmeans_spark.sources.loader import local_df
-    from flink_streaming_kmeans_spark.sources.replay import (
-        run_available_now,
-        stage_time_batches,
-    )
+    from flink_streaming_kmeans_spark.sources.replay import stage_time_batches
 
     rows = [
         (i, dt.datetime(2024, 1, 1, 0, i, 0), float(i)) for i in range(20)
@@ -1359,7 +1331,6 @@ def test_ensure_eviction_probe_soundness_and_guard(spark, tmp_path):
         agg.writeStream.format("parquet")
         .option("path", os.path.join(d, "sink"))
         .outputMode("append")
-        .option("checkpointLocation", os.path.join(d, "ckpt"))
     )
     q = run_available_now(writer, "evict_probe", spark, ensure_eviction=True)
     progress = q.recentProgress

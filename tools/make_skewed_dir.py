@@ -30,7 +30,9 @@ make_scaled_dir): the dedup/ANN families bucket by CONTENT hash, and
 planting 30%% identical shingle sets would measure a fabricated
 quadratic candidate-pair count, not the engine's shuffle behavior —
 the content-skew story is q_dedup_cluster's star-contraction switch,
-already pytest-pinned. Values are deterministic; two builds are
+already pytest-pinned. Values and row order are deterministic; the
+windowed lineitem rewrite's row-group cuts can still differ by a
+vector between builds, so two builds are row-comparable, not
 byte-comparable.
 """
 
@@ -46,6 +48,13 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from make_scaled_dir import build as build_uniform  # noqa: E402
 
 SKEW_FRACTION_PCT = 30  # head key owns ~30% of fact rows
+
+
+def row_group_rows(n: int) -> int:
+    """Rows per row group for an ``n``-row rewritten table: 131072 at
+    the x10/x100 rungs, but about 8 row groups on a small build.
+    DuckDB cuts row groups at its 2048-row vectors, so keep to those."""
+    return min(131072, max(2048, n // 8 // 2048 * 2048))
 
 
 def skew(src: str, dest: str, k: int, null_head: bool = False) -> None:
@@ -75,12 +84,22 @@ def skew(src: str, dest: str, k: int, null_head: bool = False) -> None:
     head_cust = head("customer", "c_custkey")
     head_order = head("orders", "o_orderkey")
 
-    def rewrite(table: str, select: str) -> None:
+    def rewrite(table: str, select: str, key: str) -> None:
+        # ORDER BY the source primary key (``s.`` binds the input
+        # column, not a rewritten alias), so the head rows stay spread
+        # over the whole file, and size the row groups from the row
+        # count. Without both, a multi-threaded COPY picked the row
+        # order and the row-group cut per run, and sometimes wrote the
+        # x3 sf0.001 lineitem as ONE row group. A Parquet split is made
+        # of whole row groups, so that scan ran as one map task and
+        # skew_probe.aqe_skew_split_fires could not split the hot
+        # partition: the tests/test_skew.py gate missed intermittently.
         p = os.path.join(dest, f"{table}.parquet")
         tmp = os.path.join(dest, f"_{table}.parquet")
+        n = con.sql(f"SELECT count(*) FROM read_parquet('{p}')").fetchone()[0]
         con.sql(
-            f"COPY ({select.format(p=p)}) TO '{tmp}' "
-            f"(FORMAT PARQUET, ROW_GROUP_SIZE 131072)"
+            f"COPY ({select.format(p=p)} ORDER BY {key}) TO '{tmp}' "
+            f"(FORMAT PARQUET, ROW_GROUP_SIZE {row_group_rows(n)})"
         )
         os.replace(tmp, p)
 
@@ -89,14 +108,14 @@ def skew(src: str, dest: str, k: int, null_head: bool = False) -> None:
                CASE WHEN event_id % 10 < 3 THEN {head_user}
                     ELSE user_id END AS user_id,
                event_type, value, props
-        FROM read_parquet('{{p}}')""")
+        FROM read_parquet('{{p}}') AS s""", "s.event_id")
 
     rewrite("orders", f"""
         SELECT o_orderkey,
                CASE WHEN o_orderkey % 10 < 3 THEN {head_cust}
                     ELSE o_custkey END AS o_custkey,
                o_orderstatus, o_totalprice, o_orderdate, o_orderpriority
-        FROM read_parquet('{{p}}')""")
+        FROM read_parquet('{{p}}') AS s""", "s.o_orderkey")
 
     # Collapsed head-order rows get fresh line numbers so the
     # (l_orderkey, l_linenumber) PK stays unique table-wide.
@@ -112,7 +131,7 @@ def skew(src: str, dest: str, k: int, null_head: bool = False) -> None:
                     ELSE l_linenumber END AS l_linenumber,
                l_quantity, l_extendedprice, l_discount, l_tax,
                l_returnflag, l_linestatus, l_shipdate
-        FROM read_parquet('{{p}}')""")
+        FROM read_parquet('{{p}}') AS s""", "s.l_orderkey, s.l_linenumber")
 
     con.close()
 
