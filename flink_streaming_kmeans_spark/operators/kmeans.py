@@ -33,7 +33,6 @@ from __future__ import annotations
 
 import contextlib
 import os
-import tempfile
 import uuid
 from functools import partial
 
@@ -42,6 +41,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..functions.vector import dot64, sql_emb_finite
+from ..session import scratch_path
 
 _STATS_SCHEMA = "cid int, psum array<double>, n bigint"
 _DELTA_SCHEMA = "kind int, vec_id bigint, cid int, psum array<double>, n bigint"
@@ -205,13 +205,11 @@ class _ModelFile:
     every round (r13: re-planning cost ~150 ms per Lloyd round).
     ``publish`` swaps atomically; leaving the ``with`` block unlinks
     the file, so leave it only after the last action that could
-    recompute from it. Driver-local tmp suits local mode; a cluster
+    recompute from it. Driver-local scratch suits local mode; a cluster
     deploy needs shared storage, like the parquet assignment state."""
 
     def __init__(self):
-        self.path = os.path.join(
-            tempfile.gettempdir(), f"fsk_kmeans_model-{uuid.uuid4().hex[:12]}.npz"
-        )
+        self.path = scratch_path("kmeans_model") + ".npz"
 
     def publish(self, C, cids, euclidean: bool = False, **extra) -> None:
         _write_npz(self.path, C=C, cids=cids, euclidean=euclidean, **extra)

@@ -63,7 +63,8 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..functions.vector import dsumr, emb_finite, sql_dsumr, sql_emb_finite, sql_mround
-from ..sources.loader import _tmp_out, load_table
+from ..session import scratch_path
+from ..sources.loader import load_table
 from .registry import register
 
 # ---------------------------------------------------------------------------
@@ -90,7 +91,7 @@ def q_source_orc(spark, sf_dir):
     recomputes from the parquet source, proving the ORC round-trip
     is lossless (doubles included — ORC stores them as IEEE bits)."""
     p = load_table(spark, sf_dir, "part")
-    out = _tmp_out("orc", sf_dir)
+    out = scratch_path("orc")
     p.write.mode("overwrite").orc(out)
     back = spark.read.schema(
         "p_partkey bigint, p_name string, p_brand string, p_type string,"

@@ -17,13 +17,10 @@ swap, and every historical snapshot stays readable for free.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import functions as F
 
 from ..functions.vector import dsumr, mround, sql_dsumr, sql_mround
 from ..operators.lakehouse import (
-    _manifest_path,
     compact,
     create_table,
     load_manifest,
@@ -31,7 +28,8 @@ from ..operators.lakehouse import (
     read_changes,
     read_table,
 )
-from ..sources.loader import _tmp_out, load_table, local_df
+from ..session import scratch_path
+from ..sources.loader import load_table, local_df
 from .registry import register
 
 # Touched partitions for the merge — BUILDING + AUTOMOBILE; the other
@@ -55,7 +53,7 @@ def _seed_table(spark, sf_dir, prefix: str = "lake", fragment: bool = False) -> 
     )
     if fragment:
         c = c.repartitionByRange(8, "custkey")
-    root = _tmp_out(prefix, sf_dir)
+    root = scratch_path(prefix)
     create_table(c, root, "segment")
     return root
 
@@ -65,15 +63,15 @@ def _seed_table(spark, sf_dir, prefix: str = "lake", fragment: bool = False) -> 
 # each rebuilt the identical full snapshot write + broadcast-join
 # aggregate + copy-on-write rewrite from scratch, 3x the heavy work
 # per sweep). Snapshots are immutable once committed, so reuse cannot
-# change any result; the manifest existence check re-seeds if
-# _tmp_out's 30-minute GC reclaimed the directory between uses.
+# change any result; the root lives in the process's scratch root,
+# which lasts as long as this memo.
 _MERGED_CACHE: dict[str, tuple[str, int]] = {}
 
 
 def _seeded_merged(spark, sf_dir) -> tuple[str, int]:
     """(root, merged_version) of the canonical seed+_merge_fn table."""
     cached = _MERGED_CACHE.get(sf_dir)
-    if cached is not None and os.path.exists(_manifest_path(*cached)):
+    if cached is not None:
         return cached
     root = _seed_table(spark, sf_dir)
     v = merge_cow(spark, root, _merge_source(spark, sf_dir), _merge_fn)

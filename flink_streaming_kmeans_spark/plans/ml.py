@@ -22,7 +22,8 @@ from ..operators.kmeans import (
     lloyd_iterate,
     update,
 )
-from ..sources.loader import _tmp_out, fan_out, load_table, local_df
+from ..session import scratch_path
+from ..sources.loader import fan_out, load_table, local_df
 from ..sources.replay import batch_input_dir, replay_stream, run_available_now
 from .registry import register
 
@@ -142,7 +143,7 @@ def q_kmeans_stream(spark, sf_dir):
     ).select("vec_id", "embedding")
     skm = StreamingKMeans(*first_k_init(e))
 
-    d = _tmp_out("kstream", sf_dir)
+    d = scratch_path("kstream")
     in_dir = batch_input_dir(
         e.withColumn("bno", F.pmod("vec_id", F.lit(5))), d, range(5)
     )

@@ -13,7 +13,8 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..functions.vector import dsumr, sql_dsumr
-from ..sources.loader import _tmp_out, load_table
+from ..session import scratch_path
+from ..sources.loader import load_table
 from .registry import register
 
 
@@ -59,7 +60,7 @@ def q_sink_roundtrip(spark, sf_dir):
     li = load_table(spark, sf_dir, "lineitem").where(F.col("l_quantity") > 25)
     # Unique per-invocation dir: concurrent runs at the same scale factor
     # must not overwrite each other between the write and the re-read.
-    out = _tmp_out("rt", sf_dir)
+    out = scratch_path("rt")
     li.select("l_orderkey", "l_returnflag", "l_quantity").write.mode(
         "overwrite"
     ).parquet(out)
@@ -85,7 +86,7 @@ def q_sink_partitioned(spark, sf_dir):
     one partition and scanning the lake (tests/test_storage.py asserts
     the pruning). The oracle recomputes from the source table."""
     li = load_table(spark, sf_dir, "lineitem")
-    out = _tmp_out("part", sf_dir)
+    out = scratch_path("part")
     li.select("l_orderkey", "l_returnflag", "l_linestatus", "l_quantity").write.mode(
         "overwrite"
     ).partitionBy("l_returnflag").parquet(out)
@@ -136,7 +137,7 @@ def q_source_csv(spark, sf_dir):
     registered hash is unaffected either way; the law is the contract
     a name-emitting CSV pipeline must know."""
     s = load_table(spark, sf_dir, "supplier")
-    out = _tmp_out("csv", sf_dir)
+    out = scratch_path("csv")
     s.write.mode("overwrite").option("header", True).csv(out)
     # multiLine: the writer correctly QUOTES a name containing a
     # newline, but the default reader is line-split and shreds that
@@ -168,7 +169,7 @@ def q_source_jsonl(spark, sf_dir):
     (same rationale as q_source_csv; JSONL is the other ubiquitous
     training-data interchange format)."""
     n = load_table(spark, sf_dir, "nation")
-    out = _tmp_out("jsonl", sf_dir)
+    out = scratch_path("jsonl")
     n.write.mode("overwrite").json(out)
     back = spark.read.schema(
         "n_nationkey bigint, n_name string, n_regionkey int"

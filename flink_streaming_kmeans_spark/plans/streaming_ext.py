@@ -23,7 +23,8 @@ from datetime import timedelta
 from pyspark.sql import functions as F
 
 from ..functions.vector import client_ntz, dsum, sql_dsum, sql_ts_valid, ts_valid
-from ..sources.loader import _tmp_out, load_table, local_df
+from ..session import scratch_path
+from ..sources.loader import load_table, local_df
 from ..sources.replay import (
     append_batch,
     replay_stream,
@@ -88,7 +89,7 @@ def q_stream_slide(spark, sf_dir):
         .where(ts_valid("ts"))
         .select("event_id", "ts", "value")
     )
-    d = _tmp_out("stream_slide", sf_dir)
+    d = scratch_path("stream_slide")
     # Staging-derived clamp + empty guard (r13 — see plans/streams.py
     # q_stream_dedup).
     in_dir, n_batches = stage_time_batches(ev, d, 2)

@@ -46,7 +46,8 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..functions.vector import client_ntz, emb_finite, mround, sql_dsumr, sql_mround, sql_ts_valid, ts_valid
-from ..sources.loader import _tmp_out, load_table, local_df
+from ..session import scratch_path
+from ..sources.loader import load_table, local_df
 from ..sources.replay import (
     append_batch,
     batch_input_dir,
@@ -107,7 +108,7 @@ def q_stream_dedup(spark, sf_dir):
     # (module contract), so clamping on the union's row count rather
     # than the pre-union probe count is observationally identical.
     dups = ev.where(F.col("event_id") % 7 == 0)
-    d = _tmp_out("stream_dedup", sf_dir)
+    d = scratch_path("stream_dedup")
     in_dir, cnt = stage_time_batches(ev.unionAll(dups), d, 3)
     if cnt == 0:
         # timestamp_ntz, matching the client_ntz non-empty path (law 47
@@ -216,7 +217,7 @@ def q_stream_join(spark, sf_dir):
     )
     # Empty-source guard + ntile clamp via the staging write (r13 —
     # see q_stream_dedup): zero joined pairs is the oracle's answer.
-    d = _tmp_out("stream_join", sf_dir)
+    d = scratch_path("stream_join")
     in_dir, cnt = stage_time_batches(ev, d, 3)
     if cnt == 0:
         return spark.createDataFrame(
@@ -352,7 +353,7 @@ def q_stream_upsert(spark, sf_dir):
 
     from ..operators.lakehouse import merge_cow, read_table
 
-    d = _tmp_out("stream_upsert", sf_dir)
+    d = scratch_path("stream_upsert")
     # Batches of DISJOINT, contiguous custkey ranges (ntile on the
     # ordered key — insert keys are negated custkeys, so range-split
     # keeps every batch non-empty where a mod split would not).
@@ -419,7 +420,7 @@ def q_kmeans_stream_reassign(spark, sf_dir):
         .where(F.col("vec_id").isNotNull() & emb_finite("embedding"))
         .select("vec_id", "embedding")
     )
-    d = _tmp_out("kstream_reassign", sf_dir)
+    d = scratch_path("kstream_reassign")
     skm = StreamingKMeans(
         *first_k_init(e), track_assignments=True,
         assign_dir=os.path.join(d, "assign"),
@@ -530,7 +531,7 @@ def q_stream_session(spark, sf_dir):
     ev = load_table(spark, sf_dir, "events").where(ts_valid("ts")).select(
         "user_id", "ts", "event_id"
     )
-    d = _tmp_out("stream_session", sf_dir)
+    d = scratch_path("stream_session")
     # Staging-derived clamp + empty guard (r13 — see q_stream_dedup).
     in_dir, n_batches = stage_time_batches(ev, d, 2)
     if n_batches == 0:
@@ -682,7 +683,7 @@ def q_stream_cep(spark, sf_dir):
     )
     # Empty-source guard + ntile clamp via the staging write (r13 —
     # see q_stream_dedup): no events, no NFAs.
-    d = _tmp_out("stream_cep", sf_dir)
+    d = scratch_path("stream_cep")
     in_dir, cnt = stage_time_batches(ev, d, 3)
     if cnt == 0:
         return spark.createDataFrame(
@@ -840,7 +841,7 @@ def q_stream_hll(spark, sf_dir):
     ev = load_table(spark, sf_dir, "events").select("user_id", "ts", "event_id")
     # Empty-source guard + ntile clamp via the staging write (r13 —
     # see q_stream_dedup): an empty stream has empty registers.
-    d = _tmp_out("stream_hll", sf_dir)
+    d = scratch_path("stream_hll")
     in_dir, cnt = stage_time_batches(ev, d, 3)
     if cnt == 0:
         return spark.createDataFrame([], "bucket int, max_rank int")
@@ -920,7 +921,7 @@ def q_stream_join_left(spark, sf_dir):
     # and (b) the sentinel to flush the tail via the final no-data
     # batch. Staging-derived clamp + empty guard (r13 — see
     # q_stream_dedup).
-    d = _tmp_out("stream_join_left", sf_dir)
+    d = scratch_path("stream_join_left")
     in_dir, n_batches = stage_time_batches(ev, d, 2)
     if n_batches == 0:
         # Empty events: the LEFT join over an empty probe side is
@@ -1063,7 +1064,7 @@ def q_stream_quantile(spark, sf_dir):
         .select("doc_id", "n_chars")
         .where(F.col("n_chars").isNotNull())
     )
-    dd = _tmp_out("stream_quantile", sf_dir)
+    dd = scratch_path("stream_quantile")
     # Staging-derived clamp + empty guard (r13 — see q_stream_dedup).
     in_dir, nb = stage_time_batches(d, dd, 3, ("doc_id",))
     if nb == 0:
@@ -1129,7 +1130,7 @@ def q_stream_topk(spark, sf_dir):
     exists and none is needed (sums are order-independent — the
     split-invariance law asserted in tests/test_sketches.py)."""
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    dd = _tmp_out("stream_topk", sf_dir)
+    dd = scratch_path("stream_topk")
     # Empty-source guard + ntile clamp via the staging write (r13 —
     # see q_stream_dedup).
     in_dir, n_batches = stage_time_batches(d, dd, 3, ("doc_id",))

@@ -25,7 +25,8 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import DUCK_H60, SPARK_H60
 from ..functions.vector import client_ntz, davg, dsum, dsumr, emb_finite, fin, isum64, mround, sql_davg, sql_dsum, sql_emb_finite, sql_fin, sql_mround, sql_ts_valid, ts_valid
-from ..sources.loader import _tmp_out, fan_out, load_table, local_df
+from ..session import scratch_path
+from ..sources.loader import fan_out, load_table, local_df
 from ..sources.replay import replay_stream, run_available_now, stage_time_batches
 from .registry import register
 
@@ -343,7 +344,7 @@ def q_stream_tumble(spark, sf_dir):
     # guide §1.5 — see q_stream_dedup; the separate bounded probe job
     # is gone): zero staged batches means an empty stream, and zero
     # windows is the oracle's answer.
-    d = _tmp_out("stream_tumble", sf_dir)
+    d = scratch_path("stream_tumble")
     in_dir, n_batches = stage_time_batches(ev, d, 3)
     if n_batches == 0:
         return spark.createDataFrame(

@@ -9,7 +9,8 @@ place. Two paths:
   may not have our confs). Every query entry point calls it; it is
   idempotent and cheap.
 
-Any conf changed for a bounded scope goes through :func:`scoped_confs`.
+Any conf changed for a bounded scope goes through :func:`scoped_confs`,
+and every temp path the package writes comes from :func:`scratch_path`.
 
 Scale notes (100 TB): these confs are the local-mode projection of the
 cluster posture — AQE on (runtime re-plan, skew-join splitting,
@@ -18,9 +19,13 @@ shuffle-partition coalescing), broadcast threshold left to default.
 
 from __future__ import annotations
 
+import atexit
 import contextlib
 import os
+import shutil
+import tempfile
 import threading
+import uuid
 
 from pyspark.sql import SparkSession
 
@@ -151,6 +156,56 @@ def scoped_confs(spark: SparkSession, confs: dict[str, str]):
                     spark.conf.unset(k)
                 else:
                     spark.conf.set(k, v)
+
+
+# (owner pid, root) of this process's scratch root, made on first use.
+_SCRATCH: tuple[int, str] | None = None
+_SCRATCH_LOCK = threading.Lock()
+
+
+def scratch_path(prefix: str) -> str:
+    """A fresh unique path, not yet created, under this process's
+    scratch root: the one place the package chooses where its temp
+    files live (staged inputs, sinks, checkpoints, model side files).
+
+    The root, ``fsk-<pid>-*`` in the system temp dir, is made on first
+    use and removed at exit by the process that made it; a forked
+    child that calls this makes its own, and its exit leaves the
+    parent's alone. A process killed before its exit hook ran leaves
+    its root behind, so first use also removes every sibling root
+    whose pid no longer exists. Liveness, not age: a long-running
+    process's scratch is never reclaimed under it. Callers that are
+    done with a path earlier may still remove it themselves."""
+    global _SCRATCH
+    pid = os.getpid()
+    with _SCRATCH_LOCK:
+        if _SCRATCH is None or _SCRATCH[0] != pid:
+            _remove_dead_roots()
+            root = tempfile.mkdtemp(prefix=f"fsk-{pid}-")
+            atexit.register(_remove_root, pid, root)
+            _SCRATCH = (pid, root)
+        root = _SCRATCH[1]
+    return os.path.join(root, f"{prefix}-{uuid.uuid4().hex}")
+
+
+def _remove_root(pid: int, root: str) -> None:
+    if os.getpid() == pid:
+        shutil.rmtree(root, ignore_errors=True)
+
+
+def _remove_dead_roots() -> None:
+    base = tempfile.gettempdir()
+    for name in os.listdir(base):
+        tag, _, rest = name.partition("-")
+        pid, _, _ = rest.partition("-")
+        if tag != "fsk" or not pid.isdigit():
+            continue
+        try:
+            os.kill(int(pid), 0)
+        except ProcessLookupError:
+            shutil.rmtree(os.path.join(base, name), ignore_errors=True)
+        except OSError:
+            pass  # alive, owned by another user
 
 
 def get_spark(app_name: str = "flink-streaming-kmeans-spark") -> SparkSession:

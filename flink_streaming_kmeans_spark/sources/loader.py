@@ -17,8 +17,6 @@ DuckDB's TIMESTAMP_NS→TIMESTAMP cast.
 from __future__ import annotations
 
 import os
-import tempfile
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -180,28 +178,3 @@ def fan_out(
         return df.repartition(n, *cols)
     return df.repartition(n)
 
-
-def _tmp_out(prefix: str, sf_dir: str) -> str:
-    """Unique per-invocation sink dir + age-based GC of old siblings.
-
-    Uniqueness keeps concurrent runs from clobbering each other between
-    write and re-read; the GC (anything older than 30 min) bounds the
-    disk these round-trip queries consume across repeated bench/test
-    runs — a lazily-evaluated result can still be reading its input, so
-    same-run dirs must survive, but half-hour-old ones are dead."""
-    import shutil
-    import time
-
-    root = os.path.join(tempfile.gettempdir(), "fsk_spark_sink")
-    try:
-        cutoff = time.time() - 1800
-        for name in os.listdir(root):
-            p = os.path.join(root, name)
-            if os.path.getmtime(p) < cutoff:
-                shutil.rmtree(p, ignore_errors=True)
-    except OSError:
-        pass
-    return os.path.join(
-        root,
-        f"{prefix}-{os.path.basename(os.path.normpath(sf_dir))}-{os.getpid()}-{uuid.uuid4().hex}",
-    )

@@ -18,16 +18,15 @@ and the one drive runner (:func:`run_available_now`), the only place
 that sets an availableNow trigger or a checkpoint location. Like the
 reference job, which configures checkpointing once on its execution
 environment, no drive picks its own checkpoint: the runner gives each
-drive a fresh temp dir, removed when the drive ends, unless the
-caller passes a ``checkpoint`` path to resume from. Its conf flips go
-through session.scoped_confs.
+drive a fresh session.scratch_path dir, removed when the drive ends,
+unless the caller passes a ``checkpoint`` path to resume from. Its
+conf flips go through session.scoped_confs.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
-import tempfile
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
@@ -35,7 +34,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..operators.lakehouse import footer_min_max
-from ..session import scoped_confs
+from ..session import scoped_confs, scratch_path
 
 
 def replay_batch_count(n: int) -> int:
@@ -90,7 +89,8 @@ def time_batch_col(
 def batch_input_dir(
     df: DataFrame, d: str, sequence: Sequence[int], bno_col: str = "bno"
 ) -> str:
-    """Write one parquet file per entry of ``sequence`` under d/in.
+    """Write one parquet file per entry of ``sequence`` under d/in;
+    the d/staged write they are copied from is removed afterwards.
 
     ``df`` carries an integer batch-number column ``bno_col``; each
     sequence entry names the batch whose rows that file holds, and a
@@ -123,6 +123,7 @@ def batch_input_dir(
         if not os.path.isdir(pdir):
             raise ValueError(f"batch {b} of {bno_col} produced no rows")
         _deliver(pdir, in_dir, k)
+    shutil.rmtree(staged, ignore_errors=True)
     return in_dir
 
 
@@ -151,7 +152,8 @@ def stage_time_batches(
     bno_col: str = "bno",
 ) -> tuple[str, int]:
     """Stage up to ``target`` contiguous-order micro-batch files under
-    d/in and return ``(in_dir, n_actual)``.
+    d/in and return ``(in_dir, n_actual)``; as in
+    :func:`batch_input_dir`, the d/staged write is removed afterwards.
 
     Replaces the pre-staging ``limit(b).count()`` probe job (r13,
     guide §1.5 — one driver job per drive, and for q_stream_upsert a
@@ -204,6 +206,7 @@ def stage_time_batches(
     os.makedirs(in_dir, exist_ok=True)
     for k in present:
         _deliver(os.path.join(staged, f"{bno_col}={k}"), in_dir, k)
+    shutil.rmtree(staged, ignore_errors=True)
     return in_dir, len(present)
 
 
@@ -261,7 +264,7 @@ def run_available_now(
     a ``checkpointLocation`` the writer already carries is replaced.
     A caller that resumes across runs passes its path, which is used
     as given and left in place as the restart point. Without one the
-    drive checkpoints in a fresh ``tempfile.mkdtemp`` dir, removed
+    drive checkpoints in a fresh ``session.scratch_path`` dir, removed
     once the drive ends: finished, timed out or failed its restart.
 
     ``partitions``: every state-store commit writes one delta file
@@ -351,7 +354,7 @@ def run_available_now(
     confs = {"spark.sql.shuffle.partitions": str(partitions)}
     if not final_no_data_batch:
         confs["spark.sql.streaming.noDataMicroBatches.enabled"] = "false"
-    ckpt = tempfile.mkdtemp(prefix="fsk_ckpt_") if checkpoint is None else checkpoint
+    ckpt = scratch_path("ckpt") if checkpoint is None else checkpoint
     writer = writer.option("checkpointLocation", ckpt).trigger(availableNow=True)
     try:
         with scoped_confs(spark, confs):

@@ -187,13 +187,13 @@ def _run_streaming(spark, pts, args, init, euclidean=False):
     summary); every file it wrote is gone by then."""
     import os
     import shutil
-    import tempfile
 
     from .operators.kmeans import assign_fitted
     from .sources.replay import replay_stream, run_available_now, stage_time_batches
+    from .session import scratch_path
     from .streaming.kmeans import StreamingKMeans
 
-    d = tempfile.mkdtemp(prefix="fsk_tool_stream_")
+    d = scratch_path("tool_stream")
     try:
         skm = StreamingKMeans(
             *init, track_assignments=args.reassign,

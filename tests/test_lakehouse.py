@@ -175,7 +175,7 @@ def test_file_stats_skipping_and_compact(spark):
         compact,
         create_table,
     )
-    from flink_streaming_kmeans_spark.sources.loader import _tmp_out
+    from flink_streaming_kmeans_spark.session import scratch_path
     from flink_streaming_kmeans_spark.sources.loader import load_table
 
     c = (
@@ -187,7 +187,7 @@ def test_file_stats_skipping_and_compact(spark):
         )
         .repartitionByRange(6, "custkey")  # range layout → tight stats
     )
-    root = _tmp_out("lakestats", SF_SMOKE)
+    root = scratch_path("lakestats")
     create_table(c, root, "segment", stats_cols=["custkey"])
     m0 = load_manifest(root, 0)
     assert all(f["rows"] > 0 and "custkey" in f["stats"] for f in m0["files"])
@@ -294,7 +294,8 @@ def test_compact_sort_by_clusters_for_skipping(spark):
         compact,
         create_table,
     )
-    from flink_streaming_kmeans_spark.sources.loader import _tmp_out, load_table
+    from flink_streaming_kmeans_spark.session import scratch_path
+    from flink_streaming_kmeans_spark.sources.loader import load_table
 
     c = (
         load_table(spark, SF_T2, "customer")
@@ -305,7 +306,7 @@ def test_compact_sort_by_clusters_for_skipping(spark):
         )
         .repartition(6)  # RANDOM layout: every file spans ~full range
     )
-    root = _tmp_out("lakesort", SF_T2)
+    root = scratch_path("lakesort")
     create_table(c, root, "segment", stats_cols=["custkey"])
     files_v0 = load_manifest(root, 0)["files"]
     kept_v0 = [
@@ -382,7 +383,7 @@ def test_model_based_commit_sequence(spark):
     from pyspark.sql import functions as F
 
     from flink_streaming_kmeans_spark.operators.lakehouse import compact
-    from flink_streaming_kmeans_spark.sources.loader import _tmp_out
+    from flink_streaming_kmeans_spark.session import scratch_path
 
     rng = random.Random(42)
     segs = ["A", "B", "C"]
@@ -391,7 +392,7 @@ def test_model_based_commit_sequence(spark):
         [(k, v, s) for k, (v, s) in model.items()],
         "k bigint, val double, seg string",
     )
-    root = _tmp_out("lakemodel", SF_SMOKE)
+    root = scratch_path("lakemodel")
     create_table(df, root, "seg")
     history = {0: dict(model)}
 
@@ -467,9 +468,9 @@ def test_streaming_join_against_evolving_dim(spark):
         merge_cow,
         read_table,
     )
-    from flink_streaming_kmeans_spark.sources.loader import _tmp_out
+    from flink_streaming_kmeans_spark.session import scratch_path
 
-    root = _tmp_out("lakedim", SF_SMOKE)
+    root = scratch_path("lakedim")
     dim = spark.createDataFrame(
         [(i, f"v0-{i}", "X") for i in range(10)],
         "k bigint, label string, seg string",
@@ -678,14 +679,15 @@ def test_stats_skip_non_json_native_types(spark):
     column just gets no file-skipping), while BIGINT stats record."""
     from pyspark.sql import functions as F
 
-    from flink_streaming_kmeans_spark.sources.loader import _tmp_out, load_table
+    from flink_streaming_kmeans_spark.session import scratch_path
+    from flink_streaming_kmeans_spark.sources.loader import load_table
 
     o = load_table(spark, SF_SMOKE, "orders").select(
         F.col("o_orderkey").alias("k"),
         F.to_date("o_orderdate").alias("d"),
         (F.col("o_orderkey") % 4).cast("int").alias("p"),
     )
-    root = _tmp_out("lakedatestats", SF_SMOKE)
+    root = scratch_path("lakedatestats")
     create_table(o, root, "p", stats_cols=["k", "d"])
     m = load_manifest(root, 0)
     assert m["files"]

@@ -19,6 +19,10 @@ path). The third test fails if any module of the package, tools/ or
 tests/ outside replay.py names either. perfbench/ is exempt: the
 benchmark is frozen between benchmark changes, and the runner
 replaces the checkpoint its drive sets.
+
+Every temp path the package writes comes from session.scratch_path,
+under one per-process root removed at exit. The fourth test fails if
+any package module other than session.py picks a temp location itself.
 """
 
 from __future__ import annotations
@@ -101,4 +105,29 @@ def test_only_replay_starts_drives():
     assert not offenders, (
         "run the drive through sources/replay.run_available_now instead "
         f"of setting its trigger or checkpoint here: {offenders}"
+    )
+
+
+def test_only_session_makes_scratch():
+    offenders = []
+    for root, _, files in os.walk(PKG):
+        for name in sorted(files):
+            rel = os.path.relpath(os.path.join(root, name), REPO)
+            if name.endswith(".py") and rel != CONF_OWNER:
+                offenders += [
+                    f"{rel}:{i}"
+                    for i in _mentions(
+                        os.path.join(REPO, rel),
+                        "tempfile",
+                        "mkdtemp",
+                        "gettempdir",
+                        "_tmp_out",
+                    )
+                ]
+    assert not offenders, (
+        "take temp paths from session.scratch_path instead of choosing "
+        f"them here: {offenders}"
+    )
+    assert _mentions(os.path.join(REPO, CONF_OWNER), "tempfile.mkdtemp"), (
+        "scratch_path no longer makes the root"
     )

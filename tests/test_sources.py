@@ -313,11 +313,13 @@ def test_stage_time_batches_clamp_empty_and_invariants(spark, tmp_path, monkeypa
     parquet file with strictly monotone mtimes (the FileStreamSource
     ordering invariant); (d) the SPARK_GRAFT_STREAM_BATCHES sweep
     override is honored before the split, per the replay_batch_count
-    contract."""
+    contract; (e) only d/in is left: the staged copies are removed
+    once delivered, by batch_input_dir too."""
     import datetime as dt
     import os
 
     from flink_streaming_kmeans_spark.sources.replay import (
+        batch_input_dir,
         stage_time_batches,
     )
 
@@ -365,6 +367,15 @@ def test_stage_time_batches_clamp_empty_and_invariants(spark, tmp_path, monkeypa
     dov = str(tmp_path / "override")
     _, nov = stage_time_batches(frame(9), dov, 3)
     assert nov == 2
+
+    # (e) the replay reads only d/in; nothing else is left beside it
+    assert sorted(os.listdir(d9)) == ["in"]
+    dseq = str(tmp_path / "seq")
+    batch_input_dir(
+        frame(4).withColumn("bno", F.col("event_id") % 2), dseq, [0, 1, 0]
+    )
+    assert sorted(os.listdir(dseq)) == ["in"]
+    assert len(os.listdir(os.path.join(dseq, "in"))) == 3
 
 
 def test_staging_rejects_a_batch_split_across_files(spark, tmp_path):
@@ -537,3 +548,91 @@ def test_staged_bounds_reads_footers_and_falls_back_to_agg(
 
     assert staged_bounds(df, in_dir, "blank") == agg_bounds("blank") == (None, None)
     assert len(aggs) == 1, "a stats-less footer must take one agg job"
+
+
+def _scratch_child(tmp_path, body: str, **kw):
+    """Start ``body`` in a fresh interpreter whose temp dir is
+    tmp_path, with ``os``, ``sys`` and ``scratch_path`` imported."""
+    import subprocess
+    import sys
+
+    code = (
+        "import os, sys\n"
+        "from flink_streaming_kmeans_spark.session import scratch_path\n"
+        + body
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    return subprocess.Popen(
+        [sys.executable, "-c", code],
+        cwd=repo,
+        env=dict(os.environ, TMPDIR=str(tmp_path)),
+        stdout=subprocess.PIPE,
+        text=True,
+        **kw,
+    )
+
+
+def test_scratch_root_lifecycle(tmp_path):
+    """session.scratch_path's root lives exactly as long as the process
+    that made it (no Spark): (a) a normal exit removes it; (b) a root
+    left by a SIGKILLed process goes at the next process's first
+    scratch_path, while (c) a live sibling's root is left alone; (d) a
+    forked child's exit leaves the parent's root, and removes the
+    child's own."""
+    import signal
+    import subprocess
+
+    def run(body):
+        p = _scratch_child(tmp_path, body)
+        out, _ = p.communicate(timeout=120)
+        return p.returncode, out.split()
+
+    # (a) normal exit
+    rc, (path,) = run("p = scratch_path('a'); os.makedirs(p); print(p)\n")
+    root = os.path.dirname(path)
+    assert rc == 0 and os.path.dirname(root) == str(tmp_path)
+    assert os.path.basename(root).startswith("fsk-")
+    assert not os.path.exists(root)
+
+    # (b) + (c): a killed process's root and a live sibling's root
+    rc, (killed,) = run(
+        "p = scratch_path('b'); os.makedirs(p); print(p, flush=True)\n"
+        "os.kill(os.getpid(), 9)\n"
+    )
+    assert rc == -signal.SIGKILL and os.path.isdir(killed)
+    live = _scratch_child(
+        tmp_path,
+        "p = scratch_path('c'); os.makedirs(p); print(p, flush=True)\n"
+        "sys.stdin.read()\n",
+        stdin=subprocess.PIPE,
+    )
+    try:
+        sibling = live.stdout.readline().strip()
+        assert os.path.isdir(sibling)
+        rc, (fresh,) = run("print(scratch_path('d'))\n")
+        assert rc == 0
+        assert not os.path.exists(os.path.dirname(killed))
+        assert os.path.isdir(sibling)
+        assert not os.path.exists(os.path.dirname(fresh))
+    finally:
+        live.communicate(input="", timeout=120)
+    assert live.returncode == 0
+    assert not os.path.exists(os.path.dirname(sibling))
+
+    # (d) fork: the child inherits the exit hook, which must not act
+    # outside the pid that made the root; the child's own root goes
+    rc, out = run(
+        "p = scratch_path('e'); os.makedirs(p)\n"
+        "r, w = os.pipe()\n"
+        "pid = os.fork()\n"
+        "if pid == 0:\n"
+        "    os.write(w, os.path.dirname(scratch_path('f')).encode())\n"
+        "    sys.exit(0)\n"
+        "os.close(w)\n"
+        "child_root = os.read(r, 4096).decode()\n"
+        "os.waitpid(pid, 0)\n"
+        "print(os.path.isdir(p), child_root != os.path.dirname(p),"
+        " os.path.exists(child_root), os.path.dirname(p))\n"
+    )
+    assert rc == 0 and out[:3] == ["True", "True", "False"], out
+    assert not os.path.exists(out[3])

@@ -567,7 +567,7 @@ def test_streaming_etl_to_parquet_sink(spark):
         shutil.rmtree(d, ignore_errors=True)
 
 
-def test_streaming_kmeans_reassignment_mass_conservation(spark):
+def test_streaming_kmeans_reassignment_mass_conservation(spark, tmp_path):
     """Reference co-operator semantics (r4-verdict gap): a re-arriving
     point that the MOVED centroids place in a different cluster is
     subtracted from its old cluster as it is added to the new one —
@@ -583,7 +583,7 @@ def test_streaming_kmeans_reassignment_mass_conservation(spark):
             rows, "vec_id bigint, embedding array<float>"
         )
 
-    root = tempfile.mkdtemp(prefix="fsk_reassign_")
+    root = str(tmp_path)
     state = root + "/state.npz"
     assign_dir = root + "/assign"
     skm = StreamingKMeans(
@@ -1118,7 +1118,7 @@ def test_session_gap_boundary_semantics(spark, registry, tmp_path):
         }, (name, got)
 
 
-def test_streaming_kmeans_duplicate_across_partitions(spark):
+def test_streaming_kmeans_duplicate_across_partitions(spark, tmp_path):
     """A within-batch duplicate vec_id whose copies land in DIFFERENT
     scan partitions must still commit exactly one state row and
     subtract its old cluster exactly once (review r6: the broadcast
@@ -1129,7 +1129,7 @@ def test_streaming_kmeans_duplicate_across_partitions(spark):
 
     from flink_streaming_kmeans_spark.streaming.kmeans import StreamingKMeans
 
-    root = tempfile.mkdtemp(prefix="fsk_duppart_")
+    root = str(tmp_path)
     skm = StreamingKMeans(
         [[1.0, 0.0], [0.0, 1.0]], [0, 1],
         state_path=root + "/state.npz",

@@ -10,7 +10,7 @@ several threads at once. The hazards are all shared-session state:
   same name, same definition, so concurrent re-registration must be
   a no-op);
 - streaming drives' memory-sink names and sink/checkpoint dirs
-  (uuid-unique via loader._tmp_out — by design);
+  (uuid-unique via session.scratch_path — by design);
 - scoped session confs (session.scoped_confs flips SESSION-GLOBAL
   confs around streaming drives, serialized under one lock);
 - Spark's own thread-safety for concurrent job submission.
