@@ -17,7 +17,9 @@ streaming iteration, so the idiomatic decomposition (SURVEY.md §7) is:
   ``lloyd_iterate`` and ``streaming.kmeans.StreamingKMeans``: ONE
   Arrow-native kernel — :func:`_decode` (zero-copy embedding matrix),
   :func:`_score` (argmax X·Cᵀ − bias) and :func:`_accumulate`
-  (per-centroid partial sums) — run by thin ``mapInArrow`` combiners.
+  (per-centroid partial sums) — run by thin ``mapInArrow`` combiners,
+  and folded by :func:`_partials` both in a worker and on the driver
+  (StreamingKMeans's small-batch path), from one :func:`_model` dict.
   The model reaches every combiner through one side file
   (:class:`_ModelFile`), so each driver loop plans its passes once and
   only the k×d matrix changes between rounds: constant-size plans, no
@@ -231,17 +233,29 @@ def _write_npz(path: str, **arrays) -> None:
     os.replace(tmp, path)
 
 
+def _model(C, cids, euclidean=False, **extra) -> dict:
+    """The model dict every kernel call reads: the k×d matrix C, row
+    j ↔ cids[j], the metric flag, any per-call ``extra`` values, and
+    the score ``bias`` they imply. Combiners build it from the side
+    file (:func:`_load_model`); the driver builds it directly."""
+    return {
+        "C": C,
+        "cids": cids,
+        "euclidean": euclidean,
+        **extra,
+        "bias": _euclid_bias(C, bool(euclidean)),
+    }
+
+
 def _load_model(path: str) -> dict:
-    """The published model as a dict, plus its score ``bias``."""
+    """The published model (:meth:`_ModelFile.publish`) as a dict."""
     with np.load(path) as f:
-        m = {name: f[name] for name in f.files}
-    m["bias"] = _euclid_bias(m["C"], bool(m["euclidean"]))
-    return m
+        return _model(**{name: f[name] for name in f.files})
 
 
 def _euclidean_model(C) -> dict:
     """A driver-side Euclidean model for :func:`_score` and :func:`_d2`."""
-    return {"C": C, "bias": _euclid_bias(C, True)}
+    return _model(C, np.arange(len(C)), euclidean=True)
 
 
 def _euclid_bias(C, euclidean: bool):
@@ -316,12 +330,11 @@ def _fold_partials(rows, cids, d: int):
     return sums, counts
 
 
-def _stats_combiner(path, batches):
-    """Per-partition (cid, psum, n) partials, k rows per partition —
-    the map-side combine that makes an iteration shuffle-free."""
-    import pyarrow as pa
-
-    m = _load_model(path)
+def _partials(batches, m):
+    """Per-centroid (sums, counts) of the Arrow batches' embeddings
+    under model ``m``, folded batch by batch in arrival order — the one
+    copy of the assign-and-sum math, run by :func:`_stats_combiner` in
+    a worker and by ``StreamingKMeans`` on the driver."""
     k, d = m["C"].shape
     sums = np.zeros((k, d))
     counts = np.zeros(k, dtype="int64")
@@ -330,6 +343,16 @@ def _stats_combiner(path, batches):
         s, c = _accumulate(X, _score(X, m)[0], k)
         sums += s
         counts += c
+    return sums, counts
+
+
+def _stats_combiner(path, batches):
+    """Per-partition (cid, psum, n) partials, k rows per partition —
+    the map-side combine that makes an iteration shuffle-free."""
+    import pyarrow as pa
+
+    m = _load_model(path)
+    sums, counts = _partials(batches, m)
     yield pa.RecordBatch.from_pydict(
         {"cid": m["cids"].astype("int32"), "psum": _list_column(sums), "n": counts}
     )

@@ -123,10 +123,11 @@ def q_kmeans_stream(spark, sf_dir):
     micro-batch files by ``vec_id mod 5``, copied into the source dir
     in batch order with increasing mtimes; a file-source readStream
     taking one file per trigger + ``availableNow`` delivers exactly
-    5 micro-batches to ``foreachBatch(StreamingKMeans)`` (one narrow
-    mapInArrow pass of the shared k-means kernel per batch, k×P
-    partial rows to the driver, MacQueen batch update —
-    streaming/kmeans.py). Output: one
+    5 micro-batches to ``foreachBatch(StreamingKMeans)`` (the shared
+    k-means kernel per batch — on the driver from one bounded Arrow
+    collect for a batch within ``_DRIVER_ELEMS`` values, else one
+    narrow mapInArrow pass with k×P partial rows to the driver — then
+    the MacQueen batch update; streaming/kmeans.py). Output: one
     row per centroid (cluster_id, n_points, centroid_norm) — k rows
     always, the rows-tier contract. No SQL oracle: iterative streaming
     state is outside DuckDB's model (SURVEY §2 rows-tier rule); Lloyd

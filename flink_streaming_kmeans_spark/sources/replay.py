@@ -36,6 +36,20 @@ from pyspark.sql import functions as F
 from ..operators.lakehouse import footer_min_max
 from ..session import scoped_confs, scratch_path
 
+_LOCAL_CKPT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
+
+def _filesystem_scheme(spark, path: str) -> str:
+    """The scheme of the filesystem Hadoop resolves ``path`` to: a path
+    with no scheme resolves against fs.defaultFS, which is a cluster's
+    HDFS as often as the local ``file``."""
+    jvm = spark.sparkContext._jvm
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    return jvm.org.apache.hadoop.fs.Path(path).getFileSystem(conf).getScheme()
+
 
 def replay_batch_count(n: int) -> int:
     """The drive's micro-batch count, overridable by the
@@ -309,7 +323,11 @@ def run_available_now(
     drives' replay NEVER delivers an empty data batch, so
     last-progress ``numInputRows == 0`` ⟺ the eviction batch ran.
 
-    Both conf flips form one session.scoped_confs scope around start,
+    A checkpoint on the local filesystem, as Hadoop resolves its path,
+    also gets Spark's FileSystem-based checkpoint manager (see the
+    comment at the scope).
+
+    The conf flips form one session.scoped_confs scope around start,
     await and the eviction restart, so concurrent drives on one session
     serialize there (see its CONCURRENCY note).
 
@@ -355,6 +373,18 @@ def run_available_now(
     if not final_no_data_batch:
         confs["spark.sql.streaming.noDataMicroBatches.enabled"] = "false"
     ckpt = scratch_path("ckpt") if checkpoint is None else checkpoint
+    if _filesystem_scheme(spark, ckpt) == "file":
+        # A local checkpoint's logs go through FileSystem calls, not
+        # FileContext: without the native Hadoop library, FileContext's
+        # local permission and status calls fork a chmod or a stat from
+        # the driver JVM per log file (631 forks for a 10-trigger drive,
+        # against 136). A local-filesystem tax only: HDFS keeps
+        # FileContext, and object stores get this manager anyway. What
+        # it gives up is the atomic no-overwrite rename, so two writers
+        # of one batch id in two processes could race; in one process
+        # the drive lock serializes them (tests/test_streaming.py::
+        # test_shared_checkpoint_under_filesystem_manager).
+        confs["spark.sql.streaming.checkpointFileManagerClass"] = _LOCAL_CKPT_MANAGER
     writer = writer.option("checkpointLocation", ckpt).trigger(availableNow=True)
     try:
         with scoped_confs(spark, confs):

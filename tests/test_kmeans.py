@@ -231,29 +231,188 @@ def test_reassign_combiner_equals_sequential_overlay(seed):
 
 
 @pytest.mark.parametrize("bad", [[1.0], None], ids=["ragged", "null"])
-def test_decode_rejects_ragged_and_null_embeddings(spark, tmp_path, bad):
+def test_decode_rejects_ragged_and_null_embeddings(spark, tmp_path, monkeypatch, bad):
     """A flatten+reshape would silently misalign every later row on a
     wrong-length embedding (np.stack used to crash instead): the kernel
     must raise a ValueError naming the column, on the Lloyd path and
-    on both StreamingKMeans paths."""
+    on all three StreamingKMeans paths. The untracked driver path
+    raises it bare on the driver; the worker paths wrap it in a
+    PythonException whose text carries the same message. The rows go
+    through a parquet file, as a replayed batch does, so the batch
+    carries the size estimate the driver path needs."""
     from flink_streaming_kmeans_spark.operators.kmeans import lloyd_iterate
-    from flink_streaming_kmeans_spark.streaming.kmeans import StreamingKMeans
+    from flink_streaming_kmeans_spark.streaming import kmeans as skm_mod
 
     rows = [(i, [1.0, float(i)]) for i in range(6)] + [(6, bad)]
-    df = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
+    path = str(tmp_path / "batch")
+    spark.createDataFrame(rows, "vec_id bigint, embedding array<double>").coalesce(
+        1
+    ).write.parquet(path)
+    df = spark.read.parquet(path)
     init = ([[1.0, 0.0], [0.0, 1.0]], [0, 1])
-    want = "ValueError: embedding: " + (
+    msg = "embedding: " + (
         "row .* has 1 elements, expected 2" if bad else "1 null embedding"
     )
+    want = "ValueError: " + msg
     with pytest.raises(Exception, match=want):
         lloyd_iterate(spark, df, k=2, max_iter=2, init=init)
-    for track in (False, True):
-        skm = StreamingKMeans(
+
+    def new(track=False):
+        return skm_mod.StreamingKMeans(
             *init, track_assignments=track, assign_dir=str(tmp_path / "assign")
         )
-        with pytest.raises(Exception, match=want):
+
+    skm = new()
+    with pytest.raises(ValueError, match="^" + msg):
+        skm.update_batch(df)  # the driver path
+    assert skm.batches_seen == 0 and int(skm.n.sum()) == 0
+    tracked = new(track=True)
+    with pytest.raises(Exception, match=want):
+        tracked.update_batch(df)
+    assert tracked.batches_seen == 0 and int(tracked.n.sum()) == 0
+    monkeypatch.setattr(skm_mod, "_DRIVER_ELEMS", 0)
+    with pytest.raises(Exception, match=want):
+        skm.update_batch(df)  # the executor path
+    assert skm.batches_seen == 0 and int(skm.n.sum()) == 0
+
+
+def _vectors(spark, tmp_path, n, d=8, seed=0, same=False):
+    """n random d-dim vectors (``same``: n copies of one) as one parquet
+    file, the shape of a replayed micro-batch, and as the numpy matrix."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rng = np.random.default_rng(seed)
+    X = rng.standard_normal((n, d)) / np.sqrt(d)
+    if same:
+        X[:] = X[0]
+    path = str(tmp_path / f"vectors-{n}-{seed}-{same}.parquet")
+    emb = pa.FixedSizeListArray.from_arrays(pa.array(X.ravel()), d)
+    pq.write_table(pa.table({"vec_id": np.arange(n), "embedding": emb}), path)
+    return spark.read.schema("vec_id bigint, embedding array<double>").parquet(path), X
+
+
+def _skm_paths(monkeypatch):
+    """The streaming module with spies on both untracked paths: the
+    driver path's kernel fold and the executor path's side file."""
+    from flink_streaming_kmeans_spark.streaming import kmeans as skm_mod
+
+    calls = {"driver": 0, "executor": 0}
+    fold, model_file = skm_mod._partials, skm_mod._ModelFile
+
+    def spy_fold(*a):
+        calls["driver"] += 1
+        return fold(*a)
+
+    class SpyModelFile(model_file):
+        def __init__(self):
+            calls["executor"] += 1
+            super().__init__()
+
+    monkeypatch.setattr(skm_mod, "_partials", spy_fold)
+    monkeypatch.setattr(skm_mod, "_ModelFile", SpyModelFile)
+    return skm_mod, calls
+
+
+@pytest.mark.parametrize("euclidean", [False, True], ids=["dot", "euclidean"])
+def test_driver_path_partials_equal_executor_path(
+    spark, tmp_path, monkeypatch, euclidean
+):
+    """The untracked driver path folds the same rows through the same
+    kernel as the executor path: on one partition its (sums, counts)
+    are bit-equal to the executor path's; across partitions the fold
+    order differs, so the sums agree to 1e-12 and the counts exactly."""
+    skm_mod, calls = _skm_paths(monkeypatch)
+    k, budget = 5, skm_mod._DRIVER_ELEMS
+    one_file, X = _vectors(spark, tmp_path, 400)
+    for parts in (1, 3):
+        df = one_file if parts == 1 else one_file.repartition(parts)
+        got = {}
+        for path, b in (("driver", budget), ("executor", 0)):
+            monkeypatch.setattr(skm_mod, "_DRIVER_ELEMS", b)
+            skm = skm_mod.StreamingKMeans(X[:k], np.arange(k), euclidean=euclidean)
+            before = dict(calls)
             skm.update_batch(df)
-        assert skm.batches_seen == 0 and int(skm.n.sum()) == 0
+            assert calls[path] == before[path] + 1, (path, calls)
+            got[path] = (skm.S.copy(), skm.n.copy())
+        (ds, dn), (es, en) = got["driver"], got["executor"]
+        assert dn.sum() == 400 and dn.tolist() == en.tolist()
+        if parts == 1:
+            assert ds.tobytes() == es.tobytes()
+        else:
+            np.testing.assert_allclose(ds, es, rtol=0, atol=1e-12)
+
+
+def test_driver_gate_boundary(spark, tmp_path, monkeypatch):
+    """Under a budget of ``_DRIVER_ELEMS`` values, ``_DRIVER_ELEMS // d``
+    rows take the driver path and one more row the executor path; the
+    same batch lands on the same centroids through the other path (one
+    partition, so bit-equal). Both batches pass the no-job size
+    estimate, so the row probe is what decides here."""
+    skm_mod, calls = _skm_paths(monkeypatch)
+    k, d, gate = 4, 8, 50
+
+    def run(df, X, rows):
+        monkeypatch.setattr(skm_mod, "_DRIVER_ELEMS", rows * d)
+        before = dict(calls)
+        skm = skm_mod.StreamingKMeans(X[:k], np.arange(k))
+        skm.update_batch(df)
+        ran = [p for p in calls if calls[p] != before[p]]
+        return skm.C, ran
+
+    for n, path, other, other_gate in (
+        (gate, "driver", "executor", 0),
+        (gate + 1, "executor", "driver", gate + 1),
+    ):
+        df, X = _vectors(spark, tmp_path, n, d=d, seed=n)
+        assert skm_mod._plan_bytes(df) <= 2 * 8 * gate * d, n
+        C, ran = run(df, X, gate)
+        assert ran == [path], (n, ran)
+        C_other, ran = run(df, X, other_gate)
+        assert ran == [other], (n, ran)
+        assert C.tobytes() == C_other.tobytes(), n
+
+
+def test_small_untracked_update_runs_one_jvm_job(spark, tmp_path, monkeypatch):
+    """A small untracked update runs exactly one Spark job, and no plan
+    it executes has a Python node, so no Python worker serves it.
+
+    Above the budget the no-job size estimate skips the probe: a batch
+    whose file outweighs the budget runs only the MapInArrow job, which
+    also shows the check can fail. Under the same budget, a batch of
+    one repeated vector compresses below the estimate's bound, so it
+    pays the probe before that job."""
+    from flink_streaming_kmeans_spark.streaming import kmeans as skm_mod
+
+    sc = spark.sparkContext
+    store = spark._jsparkSession.sharedState().statusStore()
+    df, X = _vectors(spark, tmp_path, 200)
+    same, _ = _vectors(spark, tmp_path, 1000, same=True)
+
+    def update(batch, budget):
+        monkeypatch.setattr(skm_mod, "_DRIVER_ELEMS", budget)
+        group = f"skm-update-{id(batch)}-{budget}"
+        sc.setJobGroup(group, group)
+        try:
+            skm_mod.StreamingKMeans(X[:4], np.arange(4)).update_batch(batch)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+        execs = store.executionsList()
+        plans = [
+            e.physicalPlanDescription()
+            for e in (execs.apply(i) for i in range(execs.size()))
+            if any(e.jobs().contains(j) for j in jobs)
+        ]
+        python = [p for p in plans if "MapInArrow" in p or "Python" in p]
+        return len(jobs), len(plans), len(python)
+
+    assert update(df, 200 * 8) == (1, 1, 0)
+    assert skm_mod._plan_bytes(df) > 2 * 8 * 100 * 8
+    assert update(df, 100 * 8) == (1, 1, 1)
+    assert skm_mod._plan_bytes(same) <= 2 * 8 * 100 * 8
+    assert update(same, 100 * 8) == (2, 2, 1)
 
 
 def test_iter_better_than_random_and_uses_k_clusters(spark, registry):

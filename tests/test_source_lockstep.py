@@ -23,11 +23,18 @@ replaces the checkpoint its drive sets.
 Every temp path the package writes comes from session.scratch_path,
 under one per-process root removed at exit. The fourth test fails if
 any package module other than session.py picks a temp location itself.
+
+The k-means math has one copy: operators/kmeans.py's ``_decode``,
+``_score`` and ``_accumulate``, which the mapInArrow combiners and the
+StreamingKMeans driver path reach through ``_partials`` and friends.
+The fifth test fails if any other package module calls one of them, so
+a second copy of the kernel cannot grow beside a caller.
 """
 
 from __future__ import annotations
 
 import os
+import re
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = os.path.join(REPO, "flink_streaming_kmeans_spark")
@@ -131,3 +138,23 @@ def test_only_session_makes_scratch():
     assert _mentions(os.path.join(REPO, CONF_OWNER), "tempfile.mkdtemp"), (
         "scratch_path no longer makes the root"
     )
+
+
+def test_only_the_kernel_calls_its_math():
+    owner = os.path.join("flink_streaming_kmeans_spark", "operators", "kmeans.py")
+    call = re.compile(r"\b(_decode|_score|_accumulate)\(")
+    offenders = []
+    for root, _, files in os.walk(PKG):
+        for name in sorted(files):
+            rel = os.path.relpath(os.path.join(root, name), REPO)
+            if name.endswith(".py") and rel != owner:
+                with open(os.path.join(REPO, rel)) as f:
+                    offenders += [
+                        f"{rel}:{i}" for i, line in enumerate(f, 1) if call.search(line)
+                    ]
+    assert not offenders, (
+        "reach the k-means math through operators/kmeans.py (_partials, the "
+        f"combiners) instead of calling its kernel here: {offenders}"
+    )
+    with open(os.path.join(REPO, owner)) as f:
+        assert call.search(f.read()), "the kernel no longer defines its math"

@@ -155,7 +155,7 @@ def test_local_df_matches_row_list_semantics(spark):
     assert nf.d is None
 
 
-def test_csv_null_vs_empty_law(spark):
+def test_csv_null_vs_empty_law(spark, tmp_path):
     """Law 44 pinned directly (q_source_csv's carve-out): CSV cannot
     represent NULL and empty string distinctly under default options
     (both land as NULL on read), an in-band nullValue sentinel
@@ -164,8 +164,6 @@ def test_csv_null_vs_empty_law(spark):
     any of them fails loudly. Everything else round-trips exactly,
     including NUL bytes, CRLF, embedded quotes/commas and 10 KB
     values."""
-    import tempfile
-
     rows = [
         (1, None),
         (2, ""),
@@ -180,7 +178,7 @@ def test_csv_null_vs_empty_law(spark):
     schema = "k bigint, v string"
 
     # Default options: '' collapses to NULL; all hostile bytes survive.
-    d = tempfile.mkdtemp(prefix="csv_law_")
+    d = str(tmp_path)
     df.write.mode("overwrite").option("header", True).csv(d + "/dflt")
     back = {
         r.k: r.v

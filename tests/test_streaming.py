@@ -635,15 +635,11 @@ def test_streaming_kmeans_reassignment_mass_conservation(spark, tmp_path):
 
 
 def test_streaming_kmeans_state_hygiene(spark, tmp_path):
-    """Three review-r6 pins on the parquet assignment store: (a) a
+    """Two round-6 pins on the parquet assignment store: (a) a
     within-batch duplicate vec_id commits ONE state row (per-arrival
     emission would fan the next batch's join out 2x and corrupt
     mass); (b) on-disk state is bounded at <= 2 generations (live +
-    crash-recovery fallback); (c) a round-5-format npz (driver-dict
-    assignments inside the file) is refused loudly, not silently
-    resumed with an empty assignment table."""
-    import numpy as np
-
+    crash-recovery fallback)."""
     from flink_streaming_kmeans_spark.streaming.kmeans import StreamingKMeans
 
     def batch(rows):
@@ -676,29 +672,6 @@ def test_streaming_kmeans_state_hygiene(spark, tmp_path):
     gens = [d for d in os.listdir(adir) if d.startswith("state-v")]
     assert len(gens) <= 2, gens
     assert f"state-v{skm._assign_gen}" in gens
-
-    # (c) legacy round-5 state file format is refused.
-    import io
-
-    buf = io.BytesIO()
-    np.savez(
-        buf,
-        C=skm.C, S=skm.S, cids=skm.cids, n=skm.n,
-        meta=np.array([1, 0], dtype="int64"),
-        track=np.array([1], dtype="int64"),
-        assign_ids=np.array([100], dtype="int64"),
-        assign_cids=np.array([0], dtype="int64"),
-    )
-    legacy = str(tmp_path / "legacy.npz")
-    with open(legacy, "wb") as f:
-        f.write(buf.getvalue())
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="legacy"):
-        StreamingKMeans(
-            [[1.0, 0.0], [0.0, 1.0]], [0, 1],
-            state_path=legacy, track_assignments=True, assign_dir=adir,
-        )
 
 
 def test_streaming_kmeans_reassignment_property(spark, tmp_path):
@@ -1018,6 +991,105 @@ def test_filesink_checkpoint_resume_equals_single_run(spark, tmp_path):
     # and the windows the single run emitted are genuinely non-empty
     # (an all-withheld-by-watermark run would make the equality vacuous)
     assert len(single) > 0
+
+
+def test_shared_checkpoint_under_filesystem_manager(spark, tmp_path):
+    """What two writers sharing one local checkpoint get now that
+    run_available_now sends its logs through Spark's FileSystem-based
+    checkpoint manager instead of FileContext.
+
+    (a) The drive runs under that manager; the conf is scoped to it.
+    (b) Two drives started together from two threads on one checkpoint
+    serialize on the drive lock: the first applies every batch once,
+    the second resumes from its commits and applies none, and each log
+    holds every batch id once, with no temp file left.
+    (c) At the log-file level the manager still refuses a second
+    writer of an existing batch file and keeps the first writer's
+    bytes. The refusal is an exists check before the rename, not
+    FileContext's atomic no-overwrite rename: writers in two processes
+    racing between check and rename would keep the later file. In one
+    process (b) keeps them apart."""
+    import threading
+
+    from py4j.protocol import Py4JJavaError
+
+    from flink_streaming_kmeans_spark.sources.replay import (
+        _LOCAL_CKPT_MANAGER,
+        batch_input_dir,
+        replay_stream,
+    )
+
+    key = "spark.sql.streaming.checkpointFileManagerClass"
+    base = spark.conf.get(key, None)
+    df = spark.range(30).selectExpr("id", "cast(id % 3 as int) AS bno")
+    in_dir = batch_input_dir(df, str(tmp_path / "replay"), range(3))
+    ckpt = str(tmp_path / "ckpt")
+    applied = {0: [], 1: []}
+    managers = set()
+
+    def drive(w):
+        def apply(batch_df, batch_id):
+            managers.add(spark.conf.get(key, None))
+            applied[w].append((int(batch_id), batch_df.count()))
+
+        writer = replay_stream(spark, in_dir, "id bigint").writeStream
+        run_available_now(
+            writer.foreachBatch(apply), f"shared_ckpt_{w}", spark, checkpoint=ckpt
+        )
+
+    threads = [threading.Thread(target=drive, args=(w,)) for w in (0, 1)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    assert managers == {_LOCAL_CKPT_MANAGER}  # (a)
+    assert spark.conf.get(key, None) == base
+    # (b) one writer applied batches 0-2, the other nothing.
+    assert sorted(applied[0] + applied[1]) == [(0, 10), (1, 10), (2, 10)]
+    assert [] in applied.values(), applied
+    for log in ("offsets", "commits"):
+        names = sorted(os.listdir(os.path.join(ckpt, log)))
+        assert [n for n in names if not n.endswith(".crc")] == ["0", "1", "2"], names
+        assert not [n for n in names if ".tmp" in n], names
+
+    # (c) the manager refuses to replace a committed log file.
+    jvm = spark._jvm
+    hconf = spark._jsparkSession.sessionState().newHadoopConf()
+    hconf.set(key, _LOCAL_CKPT_MANAGER)
+    log = jvm.org.apache.hadoop.fs.Path(str(tmp_path / "log"))
+    managers_pkg = jvm.org.apache.spark.sql.execution.streaming.checkpointing
+    fm = managers_pkg.CheckpointFileManager.create(log, hconf)
+    assert fm.getClass().getName() == _LOCAL_CKPT_MANAGER
+    first, second = (
+        fm.createAtomic(jvm.org.apache.hadoop.fs.Path(log, "0"), False)
+        for _ in range(2)
+    )
+    first.write(bytearray(b"first"))
+    second.write(bytearray(b"second"))
+    first.close()
+    with pytest.raises(Py4JJavaError, match="FAILED_RENAME_PATH"):
+        second.close()
+    with open(tmp_path / "log" / "0", "rb") as f:
+        assert f.read() == b"first"
+
+
+def test_checkpoint_scheme_follows_default_fs(spark, tmp_path):
+    """run_available_now picks the checkpoint manager by the filesystem
+    Hadoop resolves the path to. A path with no scheme follows
+    fs.defaultFS, so it is local only while that is; an explicit
+    ``file:`` path is local under any default."""
+    from flink_streaming_kmeans_spark.session import scoped_confs
+    from flink_streaming_kmeans_spark.sources.replay import _filesystem_scheme
+
+    path = str(tmp_path / "ckpt")
+    assert _filesystem_scheme(spark, path) == "file"
+    assert _filesystem_scheme(spark, "file:" + path) == "file"
+    # Hadoop's HTTP filesystem stands in for a cluster's HDFS: creating
+    # it opens no connection.
+    with scoped_confs(spark, {"fs.defaultFS": "http://localhost:1/"}):
+        assert _filesystem_scheme(spark, path) == "http"
+        assert _filesystem_scheme(spark, "file:" + path) == "file"
+    assert _filesystem_scheme(spark, path) == "file"
 
 
 def test_stream_cep_nfa_equals_replace_count_on_random_sequences(
