@@ -20,6 +20,10 @@ streaming iteration, so the idiomatic decomposition (SURVEY.md §7) is:
   (per-centroid partial sums) — run by thin ``mapInArrow`` combiners,
   and folded by :func:`_partials` both in a worker and on the driver
   (StreamingKMeans's small-batch path), from one :func:`_model` dict.
+  A k-means|| round is one pass too: :func:`_round_combiner` returns a
+  partition's Σd² with the rows that pass :func:`_accept` under its
+  running Σd², a superset of the exact sample that the driver re-tests
+  with the true sum.
   The model reaches every combiner through one side file
   (:class:`_ModelFile`), so each driver loop plans its passes once and
   only the k×d matrix changes between rounds: constant-size plans, no
@@ -47,6 +51,7 @@ from ..session import scratch_path
 
 _STATS_SCHEMA = "cid int, psum array<double>, n bigint"
 _DELTA_SCHEMA = "kind int, vec_id bigint, cid int, psum array<double>, n bigint"
+_ROUND_SCHEMA = "cost double, vec_id bigint, d2 double, embedding array<double>"
 # k-means|| sampling rounds (Bahmani et al. find a handful ample at l = 2k).
 _ROUNDS = 4
 
@@ -82,63 +87,75 @@ def kmeans_parallel_init(embeddings: DataFrame, k: int = 10, seed: int = 0x5EED)
     init (collapses when the id order correlates with one cluster) and
     sequential k-means++ (k driver round-trips, unusable at scale).
 
-    Each of 4 rounds is one cost pass and one sample pass of the
-    kernel's combiners, planned once per fit (only sampled candidates
-    reach the driver). A point is sampled with probability
-    min(1, l·d²/Σd²), l = 2k, drawn from a deterministic splitmix-style
-    hash of (vec_id, round, seed), so init is reproducible run-to-run.
-    d² is the exact squared Euclidean distance to the nearest candidate
-    (:func:`_d2`), for unit and raw-coordinate inputs alike. One more
-    pass weights each candidate by its nearest-point count. The reduce
-    (:func:`_reduce`) is deterministic, with no restarts: a weighted
-    farthest-first traversal (Gonzalez, TCS 1985) seeded at the
-    heaviest candidate, then weighted Lloyd rounds over the candidates.
+    A point is sampled with probability min(1, l·d²/Σd²), l = 2k,
+    drawn from a deterministic splitmix-style hash of (vec_id, round,
+    seed) (:func:`_accept`), so init is reproducible run-to-run. d² is
+    the exact squared Euclidean distance to the nearest candidate
+    (:func:`_d2`), for unit and raw-coordinate inputs alike.
+
+    Each of 4 rounds is ONE pass of :func:`_round_combiner`, planned
+    once per fit. A partition returns its Σd² and every row that passes
+    the test under its running Σd². d² ≥ 0, so a running sum never
+    exceeds the true total and that test is never stricter than the
+    true one: every row the driver's test accepts reaches it. The
+    driver sums the partition rows in collect order (the float sum a
+    separate cost pass would make) and re-tests the rows with it, so
+    the candidates, and their order, are those of a cost pass followed
+    by a sample pass. The overfetch is bounded: an Arrow batch passes
+    at most l rows in expectation, so a round sends about P·l rows when
+    each of the P partitions is one batch.
+
+    The seed job (lowest vec_id) builds the cache, so the input is
+    scanned once. One more pass weights each candidate by its
+    nearest-point count: 6 jobs in all. The reduce (:func:`_reduce`) is
+    deterministic, with no restarts: a weighted farthest-first
+    traversal (Gonzalez, TCS 1985) seeded at the heaviest candidate,
+    then weighted Lloyd rounds over the candidates.
 
     Returns a (k×d numpy array, cids array) pair compatible with
     lloyd_iterate's internals / StreamingKMeans; fewer than k rows when
     the input has fewer than k distinct points.
     """
-    ids_emb = embeddings.select("vec_id", "embedding")
-    seed_rows = ids_emb.orderBy("vec_id").limit(1).collect()
-    if not seed_rows:
-        # k-means needs at least one point; a bare IndexError here
-        # (or a numpy shape error deep in a worker) hid the actual
-        # problem (review r6).
-        raise ValueError("kmeans_parallel_init: embeddings table is empty")
-    C = np.array([list(seed_rows[0].embedding)], dtype="float64")
-
-    cached = ids_emb.persist()
-    with _ModelFile() as model:
-        embs = cached.select("embedding")
-        cost_df = embs.mapInArrow(partial(_cost_combiner, model.path), "c double")
-        sample_df = cached.mapInArrow(
-            partial(_sample_combiner, model.path),
-            "vec_id bigint, embedding array<double>",
-        )
-        weight_df = embs.mapInArrow(
-            partial(_stats_combiner, model.path), _STATS_SCHEMA
-        )
-        try:
+    ell = 2 * k
+    cached = embeddings.select("vec_id", "embedding").persist()
+    try:
+        seed_rows = cached.orderBy("vec_id").limit(1).collect()
+        if not seed_rows:
+            # k-means needs at least one point; a bare IndexError here
+            # (or a numpy shape error deep in a worker) hid the actual
+            # problem.
+            raise ValueError("kmeans_parallel_init: embeddings table is empty")
+        C = np.array([list(seed_rows[0].embedding)], dtype="float64")
+        with _ModelFile() as model:
+            round_df = cached.mapInArrow(
+                partial(_round_combiner, model.path), _ROUND_SCHEMA
+            )
+            weight_df = cached.select("embedding").mapInArrow(
+                partial(_stats_combiner, model.path), _STATS_SCHEMA
+            )
             for rnd in range(_ROUNDS):
-                model.publish(C, np.arange(len(C)), euclidean=True)
-                denom = sum(r.c for r in cost_df.collect())
+                salt = np.uint64(rnd * 1_000_003 + seed)
+                model.publish(C, np.arange(len(C)), euclidean=True, ell=ell, salt=salt)
+                rows = round_df.collect()
+                denom = sum(r.cost for r in rows if r.cost is not None)
                 if denom <= 0:
                     break
-                model.publish(
-                    C, np.arange(len(C)), euclidean=True, ell=2 * k, denom=denom,
-                    salt=np.uint64(rnd * 1_000_003 + seed),
+                hits = [r for r in rows if r.cost is None]
+                keep = _accept(
+                    np.array([r.vec_id for r in hits], dtype="int64"),
+                    np.array([r.d2 for r in hits], dtype="float64"),
+                    ell, denom, salt,
                 )
-                new = sample_df.collect()
-                if new:
-                    C = np.vstack(
-                        [C] + [np.array(r.embedding, dtype="float64") for r in new]
-                    )
+                C = np.vstack(
+                    [C] + [np.array(r.embedding, dtype="float64")
+                           for r, kept in zip(hits, keep) if kept]
+                )
             # Weight candidates by nearest-point counts (one more pass).
             cand = np.arange(len(C))
             model.publish(C, cand, euclidean=True)
             w = _fold_partials(weight_df.collect(), cand, C.shape[1])[1].astype(float)
-        finally:
-            cached.unpersist()
+    finally:
+        cached.unpersist()
 
     M = _reduce(C, w, k)
     return M, np.arange(len(M))
@@ -202,7 +219,7 @@ def update(assigned: DataFrame) -> DataFrame:
 class _ModelFile:
     """The one channel by which a model reaches the combiners: an npz
     side file each task loads at start. Everything that varies per
-    call (C, cids, the Euclidean flag, k-means||'s ell/denom/salt) goes
+    call (C, cids, the Euclidean flag, k-means||'s ell/salt) goes
     in it, so a loop plans its DataFrames ONCE and re-collects them
     every round (r13: re-planning cost ~150 ms per Lloyd round).
     ``publish`` swaps atomically; leaving the ``with`` block unlinks
@@ -379,38 +396,52 @@ def _d2(X, m):
     return np.maximum(0.0, (X * X).sum(axis=1) - 2.0 * _score(X, m)[1])
 
 
-def _cost_combiner(path, batches):
-    """One row: the partition's Σd² against the current candidates."""
+def _accept(ids, d2, ell, denom, salt):
+    """The k-means|| acceptance test, u < min(1, ell·d²/denom), with u
+    drawn from a deterministic splitmix-style hash of (vec_id, salt).
+    Nothing passes when denom is 0 (every d² is then 0)."""
+    h = (
+        (ids.astype(np.uint64) * np.uint64(0x9E3779B97F4A7C15)) ^ salt
+    ) * np.uint64(0xBF58476D1CE4E5B9)
+    u = (h >> np.uint64(11)).astype(np.float64) / float(1 << 53)
+    p = np.minimum(1.0, float(ell) * d2 / denom) if denom > 0 else d2 * 0
+    return u < p
+
+
+def _round_combiner(path, batches):
+    """One k-means|| round over a partition: a (vec_id, d2, embedding)
+    row for every row that passes :func:`_accept` under the partition's
+    running Σd² (summed batch by batch, each batch tested after its own
+    sum is added), then one row carrying the partition's Σd² in
+    ``cost``."""
     import pyarrow as pa
 
     m = _load_model(path)
     d = m["C"].shape[1]
-    total = sum((float(_d2(_decode(b, d), m).sum()) for b in batches), 0.0)
-    yield pa.RecordBatch.from_pydict({"c": [total]})
-
-
-def _sample_combiner(path, batches):
-    """k-means|| sampling: keep a row with probability
-    min(1, ell·d²/denom), drawn from a deterministic splitmix-style
-    hash of (vec_id, salt)."""
-    import pyarrow as pa
-
-    m = _load_model(path)
-    d = m["C"].shape[1]
-    ell, denom, salt = float(m["ell"]), float(m["denom"]), m["salt"]
+    ell, salt = m["ell"], m["salt"]
+    total = 0.0
     for b in batches:
         X = _decode(b, d)
         d2 = _d2(X, m)
+        total += float(d2.sum())
         ids = b.column("vec_id").to_numpy(zero_copy_only=False)
-        h = (
-            (ids.astype(np.uint64) * np.uint64(0x9E3779B97F4A7C15)) ^ salt
-        ) * np.uint64(0xBF58476D1CE4E5B9)
-        u = (h >> np.uint64(11)).astype(np.float64) / float(1 << 53)
-        p = np.minimum(1.0, ell * d2 / denom) if denom > 0 else d2 * 0
-        keep = u < p
+        keep = _accept(ids, d2, ell, total, salt)
         yield pa.RecordBatch.from_pydict(
-            {"vec_id": ids[keep].astype("int64"), "embedding": _list_column(X[keep])}
+            {
+                "cost": pa.nulls(int(keep.sum()), pa.float64()),
+                "vec_id": ids[keep].astype("int64"),
+                "d2": d2[keep],
+                "embedding": _list_column(X[keep]),
+            }
         )
+    yield pa.RecordBatch.from_pydict(
+        {
+            "cost": [total],
+            "vec_id": pa.nulls(1, pa.int64()),
+            "d2": pa.nulls(1, pa.float64()),
+            "embedding": pa.nulls(1, pa.list_(pa.float64())),
+        }
+    )
 
 
 def _reassign_combiner(path, batches):

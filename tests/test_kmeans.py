@@ -373,6 +373,27 @@ def test_driver_gate_boundary(spark, tmp_path, monkeypatch):
         assert C.tobytes() == C_other.tobytes(), n
 
 
+def _jobs_and_plans(spark, group, action):
+    """Run ``action`` under job group ``group``; return the number of
+    Spark jobs it ran and the physical plans of the SQL executions
+    those jobs belong to."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    plans = [
+        e.physicalPlanDescription()
+        for e in (execs.apply(i) for i in range(execs.size()))
+        if any(e.jobs().contains(j) for j in jobs)
+    ]
+    return len(jobs), plans
+
+
 def test_small_untracked_update_runs_one_jvm_job(spark, tmp_path, monkeypatch):
     """A small untracked update runs exactly one Spark job, and no plan
     it executes has a Python node, so no Python worker serves it.
@@ -384,29 +405,18 @@ def test_small_untracked_update_runs_one_jvm_job(spark, tmp_path, monkeypatch):
     pays the probe before that job."""
     from flink_streaming_kmeans_spark.streaming import kmeans as skm_mod
 
-    sc = spark.sparkContext
-    store = spark._jsparkSession.sharedState().statusStore()
     df, X = _vectors(spark, tmp_path, 200)
     same, _ = _vectors(spark, tmp_path, 1000, same=True)
 
     def update(batch, budget):
         monkeypatch.setattr(skm_mod, "_DRIVER_ELEMS", budget)
-        group = f"skm-update-{id(batch)}-{budget}"
-        sc.setJobGroup(group, group)
-        try:
-            skm_mod.StreamingKMeans(X[:4], np.arange(4)).update_batch(batch)
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
-        execs = store.executionsList()
-        plans = [
-            e.physicalPlanDescription()
-            for e in (execs.apply(i) for i in range(execs.size()))
-            if any(e.jobs().contains(j) for j in jobs)
-        ]
+        jobs, plans = _jobs_and_plans(
+            spark,
+            f"skm-update-{id(batch)}-{budget}",
+            lambda: skm_mod.StreamingKMeans(X[:4], np.arange(4)).update_batch(batch),
+        )
         python = [p for p in plans if "MapInArrow" in p or "Python" in p]
-        return len(jobs), len(plans), len(python)
+        return jobs, len(plans), len(python)
 
     assert update(df, 200 * 8) == (1, 1, 0)
     assert skm_mod._plan_bytes(df) > 2 * 8 * 100 * 8
@@ -558,3 +568,130 @@ def test_kmeans_parallel_init_wins_every_cluster_at_spread_005(spark, tmp_path):
         if len(won) < k:
             merged[seed] = len(won)
     assert not merged, f"seeds winning fewer than {k} clusters: {merged}"
+
+
+def _two_pass_candidates(parts, k, seed, batch):
+    """k-means|| candidates and weights from a separate cost pass and
+    sample pass, in numpy: per round, Σd² summed per Arrow batch of
+    ``batch`` rows, per partition, then across partitions in order;
+    then every row tested against that total with the splitmix hash of
+    (vec_id, round, seed). ``parts`` holds one (ids, X) per partition."""
+    chunks = [
+        [(ids[i : i + batch], X[i : i + batch]) for i in range(0, len(ids), batch)]
+        for ids, X in parts
+    ]
+    ids_all = np.concatenate([ids for ids, _ in parts])
+    C = np.concatenate([X for _, X in parts])[[int(np.argmin(ids_all))]]
+
+    def d2(X):
+        s = X @ C.T - 0.5 * (C * C).sum(axis=1)
+        return np.maximum(0.0, (X * X).sum(axis=1) - 2.0 * s.max(axis=1))
+
+    for rnd in range(4):
+        denom = sum(sum((float(d2(X).sum()) for _, X in p), 0.0) for p in chunks)
+        if denom <= 0:
+            break
+        salt = np.uint64(rnd * 1_000_003 + seed)
+        new = []
+        for p in chunks:
+            for ids, X in p:
+                h = (
+                    (ids.astype(np.uint64) * np.uint64(0x9E3779B97F4A7C15)) ^ salt
+                ) * np.uint64(0xBF58476D1CE4E5B9)
+                u = (h >> np.uint64(11)).astype(np.float64) / float(1 << 53)
+                new.append(X[u < np.minimum(1.0, 2 * k * d2(X) / denom)])
+        C = np.vstack([C] + new)
+    bias = 0.5 * (C * C).sum(axis=1)
+    w = np.zeros(len(C))
+    for p in chunks:
+        for _, X in p:
+            w += np.bincount(np.argmax(X @ C.T - bias, axis=1), minlength=len(C))
+    return C, w
+
+
+@pytest.mark.parametrize("parts", [1, 2, 4])
+def test_kmeans_parallel_init_candidates_equal_two_pass(spark, monkeypatch, parts):
+    """The fused round (each partition returns its Σd² and the rows that
+    pass under its running Σd²; the driver re-tests them with the true
+    sum) hands the reduce exactly the candidates, in order, and weights
+    of a separate cost pass and sample pass. The 240 rows are four
+    blocks of 60: copies of the seed (a partition of them has Σd² 0),
+    a far cluster (nearly all of Σd² in round 0), and two blocks near
+    the seed. On 4 partitions each block is its own partition; small
+    Arrow batches put several in each."""
+    from flink_streaming_kmeans_spark.operators import kmeans as km
+
+    k, d, batch, seed = 4, 8, 25, 0x5EED
+    rng = np.random.default_rng(3)
+    origin = rng.standard_normal(d)
+    far = np.eye(d)[0] * 20.0
+    blocks = [
+        np.repeat(origin[None], 60, axis=0),
+        far + 0.5 * rng.standard_normal((60, d)),
+        origin + 0.1 * rng.standard_normal((60, d)),
+        origin + 0.1 * rng.standard_normal((60, d)),
+    ]
+    rows = [(i, [float(v) for v in x]) for i, x in enumerate(np.concatenate(blocks))]
+    df = spark.createDataFrame(
+        spark.sparkContext.parallelize(rows, parts),
+        "vec_id bigint, embedding array<double>",
+    ).localCheckpoint()
+    parts_np = [
+        (np.array([r.vec_id for r in p]), np.array([r.embedding for r in p]))
+        for p in df.rdd.glom().collect()
+    ]
+    assert len(parts_np) == parts
+    if parts == 4:
+        assert (parts_np[0][1] == origin).all()
+    want_C, want_w = _two_pass_candidates(parts_np, k, seed, batch)
+
+    seen, tested = {}, []
+    reduce, accept = km._reduce, km._accept
+
+    def spy_reduce(C, w, k):
+        seen["C"], seen["w"] = C.copy(), w.copy()
+        return reduce(C, w, k)
+
+    def spy_accept(ids, *a):
+        keep = accept(ids, *a)
+        tested.append((len(ids), int(keep.sum())))
+        return keep
+
+    monkeypatch.setattr(km, "_reduce", spy_reduce)
+    monkeypatch.setattr(km, "_accept", spy_accept)
+    with scoped_confs(
+        spark, {"spark.sql.execution.arrow.maxRecordsPerBatch": str(batch)}
+    ):
+        km.kmeans_parallel_init(df, k=k, seed=seed)
+    assert len(tested) == km._ROUNDS
+    assert len(want_C) > 1 + 2 * k
+    assert seen["C"].tobytes() == want_C.tobytes()
+    assert seen["w"].tolist() == want_w.tolist()
+    if parts > 1:
+        # The partitions' running sums overfetched, so the driver's
+        # re-test with the true sum dropped rows.
+        assert any(got > kept for got, kept in tested), tested
+
+
+def test_kmeans_parallel_init_runs_one_job_per_round(spark, tmp_path):
+    """k-means|| init runs _ROUNDS + 2 Spark jobs: the seed row, read
+    from the cache it builds; one fused cost-and-sample pass per round;
+    and the candidate weights. All but the seed job run a MapInArrow
+    plan. An empty input raises and leaves no cache behind."""
+    from pyspark import StorageLevel
+
+    from flink_streaming_kmeans_spark.operators.kmeans import (
+        _ROUNDS,
+        kmeans_parallel_init,
+    )
+
+    df, _ = _vectors(spark, tmp_path, 400)
+    jobs, plans = _jobs_and_plans(
+        spark, "kmeans-parallel-init", lambda: kmeans_parallel_init(df, k=4)
+    )
+    assert jobs == _ROUNDS + 2
+    assert sum("MapInArrow" in p for p in plans) == _ROUNDS + 1
+    empty = spark.createDataFrame([], "vec_id bigint, embedding array<double>")
+    with pytest.raises(ValueError, match="embeddings table is empty"):
+        kmeans_parallel_init(empty, k=4)
+    assert empty.select("vec_id", "embedding").storageLevel == StorageLevel.NONE
