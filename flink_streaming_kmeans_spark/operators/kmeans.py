@@ -14,20 +14,29 @@ streaming iteration, so the idiomatic decomposition (SURVEY.md §7) is:
 - ``update``: posexplode to (cluster, dim, value) → hash-aggregate
   mean. Shuffle carries k×64 group rows, nothing more.
 - the co-operator itself, shared by ``kmeans_parallel_init``,
-  ``lloyd_iterate`` and ``streaming.kmeans.StreamingKMeans``: ONE
-  Arrow-native kernel — :func:`_decode` (zero-copy embedding matrix),
-  :func:`_score` (argmax X·Cᵀ − bias) and :func:`_accumulate`
-  (per-centroid partial sums) — run by thin ``mapInArrow`` combiners,
-  and folded by :func:`_partials` both in a worker and on the driver
-  (StreamingKMeans's small-batch path), from one :func:`_model` dict.
-  A k-means|| round is one pass too: :func:`_round_combiner` returns a
+  ``lloyd_iterate``, ``assign_fitted`` and
+  ``streaming.kmeans.StreamingKMeans``: ONE Arrow-native kernel —
+  :func:`_decode` (zero-copy embedding matrix), :func:`_score` (argmax
+  X·Cᵀ − bias) and :func:`_accumulate` (per-centroid partial sums).
+  Each pass body is a function of a :func:`_model` dict —
+  :func:`_partials`, :func:`_round_rows`, :func:`_assign_rows` — that
+  the driver calls directly and a thin ``mapInArrow`` combiner calls
+  after loading the model from its side file (:class:`_ModelFile`).
+  A k-means|| round is one pass too: :func:`_round_rows` returns a
   partition's Σd² with the rows that pass :func:`_accept` under its
   running Σd², a superset of the exact sample that the driver re-tests
   with the true sum.
-  The model reaches every combiner through one side file
-  (:class:`_ModelFile`), so each driver loop plans its passes once and
-  only the k×d matrix changes between rounds: constant-size plans, no
-  literal or lineage growth (SURVEY.md §7 hard-part 1).
+
+Where a pass runs is decided once per fit (or micro-batch) by one gate,
+:func:`_driver_table`: an input of at most ``_DRIVER_ELEMS`` embedding
+values is read with one bounded Arrow collect and every pass of the
+fit runs on the driver, with no Python worker, no side file and no
+cache (:class:`_FitInput`; the fit's assignment comes back as a local
+frame). A larger input, or one with no size estimate, runs each pass
+as a ``mapInArrow`` pass over the cached input, planned once per fit
+and re-collected every round; only the side file's k×d matrix changes
+between rounds: constant-size plans, no literal or lineage growth
+(SURVEY.md §7 hard-part 1).
 
 Embeddings are unit-normalized (SURVEY.md §1.3), so dot product ==
 cosine similarity; "nearest" = argmax dot, tie-broken on lowest
@@ -43,6 +52,7 @@ import uuid
 from functools import partial
 
 import numpy as np
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
@@ -52,6 +62,9 @@ from ..session import scratch_path
 _STATS_SCHEMA = "cid int, psum array<double>, n bigint"
 _DELTA_SCHEMA = "kind int, vec_id bigint, cid int, psum array<double>, n bigint"
 _ROUND_SCHEMA = "cost double, vec_id bigint, d2 double, embedding array<double>"
+_CLUSTER_ID_SCHEMA = "vec_id bigint, cluster_id int"
+# The columns a fit reads.
+_FIT_COLS = ("vec_id", "embedding")
 # k-means|| sampling rounds (Bahmani et al. find a handful ample at l = 2k).
 _ROUNDS = 4
 
@@ -93,7 +106,7 @@ def kmeans_parallel_init(embeddings: DataFrame, k: int = 10, seed: int = 0x5EED)
     the exact squared Euclidean distance to the nearest candidate
     (:func:`_d2`), for unit and raw-coordinate inputs alike.
 
-    Each of 4 rounds is ONE pass of :func:`_round_combiner`, planned
+    Each of 4 rounds is ONE pass of :func:`_round_rows`, planned
     once per fit. A partition returns its Σd² and every row that passes
     the test under its running Σd². d² ≥ 0, so a running sum never
     exceeds the true total and that test is never stricter than the
@@ -107,55 +120,45 @@ def kmeans_parallel_init(embeddings: DataFrame, k: int = 10, seed: int = 0x5EED)
 
     The seed job (lowest vec_id) builds the cache, so the input is
     scanned once. One more pass weights each candidate by its
-    nearest-point count: 6 jobs in all. The reduce (:func:`_reduce`) is
-    deterministic, with no restarts: a weighted farthest-first
-    traversal (Gonzalez, TCS 1985) seeded at the heaviest candidate,
-    then weighted Lloyd rounds over the candidates.
+    nearest-point count: 6 jobs in all. An input within the driver
+    budget (:class:`_FitInput`) runs the same rounds on the driver
+    instead, after a width probe and one bounded collect: 2 jobs, and
+    one partition, so the candidates do not depend on how the input is
+    split.
+
+    The reduce (:func:`_reduce`) is deterministic, with no restarts: a
+    weighted farthest-first traversal (Gonzalez, TCS 1985) seeded at
+    the heaviest candidate, then weighted Lloyd rounds over the
+    candidates.
 
     Returns a (k×d numpy array, cids array) pair compatible with
     lloyd_iterate's internals / StreamingKMeans; fewer than k rows when
     the input has fewer than k distinct points.
     """
     ell = 2 * k
-    cached = embeddings.select("vec_id", "embedding").persist()
-    try:
-        seed_rows = cached.orderBy("vec_id").limit(1).collect()
-        if not seed_rows:
+    with _FitInput(embeddings) as fit:
+        C = fit.seed()
+        if C is None:
             # k-means needs at least one point; a bare IndexError here
             # (or a numpy shape error deep in a worker) hid the actual
             # problem.
             raise ValueError("kmeans_parallel_init: embeddings table is empty")
-        C = np.array([list(seed_rows[0].embedding)], dtype="float64")
-        with _ModelFile() as model:
-            round_df = cached.mapInArrow(
-                partial(_round_combiner, model.path), _ROUND_SCHEMA
+        for rnd in range(_ROUNDS):
+            salt = np.uint64(rnd * 1_000_003 + seed)
+            out = fit.round(C, ell, salt)
+            cost = out.column("cost")
+            denom = sum(c for c in cost.to_pylist() if c is not None)
+            if denom <= 0:
+                break
+            hits = out.filter(cost.is_null())
+            keep = _accept(
+                hits.column("vec_id").to_numpy(), hits.column("d2").to_numpy(),
+                ell, denom, salt,
             )
-            weight_df = cached.select("embedding").mapInArrow(
-                partial(_stats_combiner, model.path), _STATS_SCHEMA
-            )
-            for rnd in range(_ROUNDS):
-                salt = np.uint64(rnd * 1_000_003 + seed)
-                model.publish(C, np.arange(len(C)), euclidean=True, ell=ell, salt=salt)
-                rows = round_df.collect()
-                denom = sum(r.cost for r in rows if r.cost is not None)
-                if denom <= 0:
-                    break
-                hits = [r for r in rows if r.cost is None]
-                keep = _accept(
-                    np.array([r.vec_id for r in hits], dtype="int64"),
-                    np.array([r.d2 for r in hits], dtype="float64"),
-                    ell, denom, salt,
-                )
-                C = np.vstack(
-                    [C] + [np.array(r.embedding, dtype="float64")
-                           for r, kept in zip(hits, keep) if kept]
-                )
-            # Weight candidates by nearest-point counts (one more pass).
-            cand = np.arange(len(C))
-            model.publish(C, cand, euclidean=True)
-            w = _fold_partials(weight_df.collect(), cand, C.shape[1])[1].astype(float)
-    finally:
-        cached.unpersist()
+            new = hits.column("embedding").filter(keep).to_pylist()
+            C = np.vstack([C, np.array(new, dtype="float64").reshape(-1, C.shape[1])])
+        # Weight candidates by nearest-point counts (one more pass).
+        w = fit.stats(C, np.arange(len(C)), euclidean=True)[1].astype(float)
 
     M = _reduce(C, w, k)
     return M, np.arange(len(M))
@@ -375,11 +378,10 @@ def _stats_combiner(path, batches):
     )
 
 
-def _assign_combiner(path, batches):
-    """(vec_id, cluster_id) of every row."""
+def _assign_rows(m, batches):
+    """(vec_id, cluster_id) of every row under model ``m``."""
     import pyarrow as pa
 
-    m = _load_model(path)
     for b in batches:
         best, _ = _score(_decode(b, m["C"].shape[1]), m)
         yield pa.RecordBatch.from_pydict(
@@ -388,6 +390,10 @@ def _assign_combiner(path, batches):
                 "cluster_id": m["cids"][best].astype("int32"),
             }
         )
+
+
+def _assign_combiner(path, batches):
+    yield from _assign_rows(_load_model(path), batches)
 
 
 def _d2(X, m):
@@ -408,7 +414,7 @@ def _accept(ids, d2, ell, denom, salt):
     return u < p
 
 
-def _round_combiner(path, batches):
+def _round_rows(m, batches):
     """One k-means|| round over a partition: a (vec_id, d2, embedding)
     row for every row that passes :func:`_accept` under the partition's
     running Σd² (summed batch by batch, each batch tested after its own
@@ -416,7 +422,6 @@ def _round_combiner(path, batches):
     ``cost``."""
     import pyarrow as pa
 
-    m = _load_model(path)
     d = m["C"].shape[1]
     ell, salt = m["ell"], m["salt"]
     total = 0.0
@@ -444,7 +449,11 @@ def _round_combiner(path, batches):
     )
 
 
-def _reassign_combiner(path, batches):
+def _round_combiner(path, batches):
+    yield from _round_rows(_load_model(path), batches)
+
+
+def _reassign_rows(m, batches):
     """REASSIGNMENT-aware streaming combiner (the reference
     co-operator's Feature add/remove arithmetic, SURVEY.md §1.1/§3.1
     [PK]): every arrival is added to its nearest centroid and removed
@@ -460,7 +469,6 @@ def _reassign_combiner(path, batches):
     Spark (two rows for one point would fan out the next join)."""
     import pyarrow as pa
 
-    m = _load_model(path)
     cids = m["cids"]
     k, d = m["C"].shape
     sums = np.zeros((k, d))
@@ -509,6 +517,193 @@ def _reassign_combiner(path, batches):
     )
 
 
+def _reassign_combiner(path, batches):
+    yield from _reassign_rows(_load_model(path), batches)
+
+
+# -- where a fit's passes run ------------------------------------------
+
+# Embedding values of the largest input whose kernel passes run on the
+# driver: 20k rows at d=64, 10 MB as float64. A budget in values, not
+# rows, because both paths cost in proportion to rows x d. Measured per
+# untracked micro-batch (StreamingKMeans._delta, one pass) of float32
+# points in one parquet file, local[4] on a shared 4-vCPU host, median
+# of 5 (driver path = bounded toArrow + kernel; executor path =
+# mapInArrow + collect):
+#     d=16:  20k rows 0.08 vs 0.20 s,  80k 0.15 vs 0.19 s, 160k 0.22 vs 0.20 s
+#     d=64:   2k rows 0.06 vs 0.17 s,  20k 0.12 vs 0.20 s,  80k 0.25 vs 0.25 s
+#     d=256: 2.5k rows 0.11 vs 0.19 s,  5k 0.12 vs 0.20 s,  20k 0.27 vs 0.25 s
+# Break-even lies between 2M and 5M values at every d, so at 1.28M the
+# driver path still wins by 0.08-0.12 s. The size estimate that guards
+# the collect (_plan_bytes and the element type) reads in about 2 ms;
+# the collect alone, wasted on an input it finds too large, costs
+# 0.04-0.06 s.
+# A batch fit (k-means|| init + 6 Lloyd iterations, k=16) makes 12
+# passes over its input, so the same budget should be conservative
+# there. Measured per fit of clustered float32 points in one parquet
+# file of 4 row groups, local[4], median of 3 (driver path forced by a
+# large budget vs executor path):
+#     d=64: 20k rows 1.9 vs 8.3 s,  80k 3.0 vs 8.3 s,  320k 10.8 vs 12.8 s
+#     d=2:  80k rows 3.1 vs 9.3 s, 640k 7.5 vs 8.4 s, 2.56M 26.2 vs 18.0 s
+# At d=64 the driver fit still wins at 16x the budget; at d=2, where
+# the cost goes per row, break-even lies between 1.28M and 5.1M values,
+# as it does for one pass, and the budget still wins by 0.9 s.
+_DRIVER_ELEMS = 1_280_000
+
+
+def _plan_bytes(df: DataFrame) -> int:
+    """The size estimate of ``df``'s analyzed plan, read without running
+    a job (or the optimizer: 0.9 ms against 3.7 ms). For a file source
+    it is the bytes of the input files; inside foreachBatch the batch's
+    LogicalRDD carries its source plan's estimate. A source that
+    reports none gives spark.sql.defaultSizeInBytes (Long.MaxValue)."""
+    stats = df._jdf.queryExecution().analyzed().stats()
+    return int(str(stats.sizeInBytes()))
+
+
+def _driver_table(df: DataFrame, cols, d: int | None = None):
+    """``df.select(*cols)`` as one Arrow table when it holds at most
+    ``_DRIVER_ELEMS`` embedding values of width ``d``, else None: the
+    one gate between the driver path and the mapInArrow path.
+
+    The size is read in two steps. First the plan's size estimate
+    (:func:`_plan_bytes`, no job) rejects an input whose files hold
+    more than twice the bytes of ``_DRIVER_ELEMS`` values; a value
+    takes about its type's width in a parquet file, a bit more with
+    the other columns and the footer, so twice it is slack. Only an
+    input that may be small pays the collect, ``limit(rows + 1)`` with
+    ``rows = _DRIVER_ELEMS // d`` collected with ``toArrow()``: one
+    JVM-only job that keeps at most ``rows + 1`` rows per partition and
+    shuffles them into one, whose result is the table the driver folds.
+    An input that passes the estimate but holds more than ``rows`` rows
+    (values that compress better than 2:1) pays the collect and then
+    the mapInArrow path. The row count itself has no free source:
+    inside foreachBatch the batch is a LogicalRDD, whose
+    ``inputFiles()`` is empty.
+
+    ``d=None`` (k-means|| init, which has no model yet) first reads the
+    width of one row, a one-row JVM-only job: a row cap without the
+    width would not bound the values collected."""
+    sel = df.select(*cols)
+    element = sel.schema["embedding"].dataType.elementType.typeName()
+    width = 4 if element == "float" else 8
+    if _plan_bytes(df) > 2 * width * _DRIVER_ELEMS:
+        return None
+    if d is None:
+        first = df.select(F.size("embedding")).limit(1).collect()
+        d = first[0][0] if first else 1  # no rows: any width collects none
+    rows = _DRIVER_ELEMS // d if d and d > 0 else 0  # 0: a null first row
+    if not rows:
+        return None
+    table = sel.limit(rows + 1).toArrow()
+    return table if table.num_rows <= rows else None
+
+
+class _FitInput:
+    """One fit's (vec_id, embedding) input and the one place its kernel
+    passes run, chosen once by :func:`_driver_table` (``d``: the model
+    width, or None to probe it).
+
+    Within the budget, ``batches`` holds the collected rows as one Arrow
+    batch, and every pass calls its body on the driver. The rows are
+    sorted by vec_id (the collect returns them in shuffle-block order),
+    so the fit does not depend on how the input is split. Otherwise
+    every pass is a mapInArrow combiner over the cached input, planned
+    once and re-collected with the model published to the side file.
+    An input the caller cached (``storageLevel``) is used as is and
+    left cached, so a caller that fits twice on one input builds one
+    cache; any other is cached for the ``with`` block when ``cache`` (a
+    one-pass caller gains nothing from a cache)."""
+
+    def __init__(self, embeddings: DataFrame, d: int | None = None, cache: bool = True):
+        table = _driver_table(embeddings, _FIT_COLS, d)
+        self.batches = None
+        if table is not None:
+            self.batches = table.sort_by("vec_id").combine_chunks().to_batches()
+        self._spark = embeddings.sparkSession
+        self._input = embeddings
+        self._cache = cache
+
+    def __enter__(self):
+        if self.batches is None:
+            self._own = self._cache and self._input.storageLevel == StorageLevel.NONE
+            self._cached = self._input.select(*_FIT_COLS)
+            if self._own:
+                self._cached = self._cached.persist()
+            self._model = _ModelFile()
+            self._passes = {}
+        return self
+
+    def __exit__(self, *exc):
+        if self.batches is None:
+            self._model.__exit__(*exc)
+            if self._own:
+                self._cached.unpersist()
+
+    def _pass(self, combiner, cols, schema, **model):
+        """Publish the model; return the combiner's pass over the cached
+        input, planned on first use."""
+        self._model.publish(**model)
+        if combiner not in self._passes:
+            self._passes[combiner] = self._cached.select(*cols).mapInArrow(
+                partial(combiner, self._model.path), schema
+            )
+        return self._passes[combiner]
+
+    def seed(self):
+        """The lowest-vec_id row as a 1×d matrix, or None when empty."""
+        if self.batches is not None:
+            b = next((b for b in self.batches if b.num_rows), None)
+            if b is None:
+                return None
+            first = b.slice(0, 1)  # a null one raises in _decode
+            return _decode(first, len(first.column("embedding")[0].as_py() or ()))
+        rows = self._cached.orderBy("vec_id").limit(1).collect()
+        return np.array([list(rows[0].embedding)], dtype="float64") if rows else None
+
+    def stats(self, C, cids, euclidean=False):
+        """Per-centroid (sums, counts) of the input under (C, cids)."""
+        if self.batches is not None:
+            return _partials(self.batches, _model(C, cids, euclidean))
+        # select("embedding"): an opaque mapInArrow defeats column
+        # pruning (guide §4.1), and the combiner never reads vec_id.
+        df = self._pass(
+            _stats_combiner, ("embedding",), _STATS_SCHEMA,
+            C=C, cids=cids, euclidean=euclidean,
+        )
+        return _fold_partials(df.collect(), cids, C.shape[1])
+
+    def round(self, C, ell, salt):
+        """One k-means|| round's rows (:func:`_round_rows`) as one Arrow
+        table, partitions in order."""
+        import pyarrow as pa
+
+        model = dict(C=C, cids=np.arange(len(C)), euclidean=True, ell=ell, salt=salt)
+        if self.batches is not None:
+            out = _round_rows(_model(**model), self.batches)
+            return pa.Table.from_batches(list(out))
+        return self._pass(_round_combiner, _FIT_COLS, _ROUND_SCHEMA, **model).toArrow()
+
+    def assign(self, C, cids, euclidean=False) -> DataFrame:
+        """(vec_id, cluster_id) of every row under (C, cids), depending
+        on no side file and no cache: a local frame built from the
+        driver's rows, or the combiner pass materialized BEFORE its
+        side file goes, so a caller's action never recomputes from it
+        (nor from an input the caller drops afterwards)."""
+        import pyarrow as pa
+
+        if self.batches is not None:
+            out = _assign_rows(_model(C, cids, euclidean), self.batches)
+            schema = pa.schema([("vec_id", pa.int64()), ("cluster_id", pa.int32())])
+            return self._spark.createDataFrame(
+                pa.Table.from_batches(list(out), schema=schema)
+            )
+        return self._pass(
+            _assign_combiner, _FIT_COLS, _CLUSTER_ID_SCHEMA,
+            C=C, cids=cids, euclidean=euclidean,
+        ).localCheckpoint(eager=True)
+
+
 def lloyd_iterate(
     spark: SparkSession,
     embeddings: DataFrame,
@@ -520,50 +715,37 @@ def lloyd_iterate(
 ) -> DataFrame:
     """Full Lloyd's to convergence; returns final (vec_id, cluster_id).
 
-    Scale shape: each iteration is ONE narrow kernel pass over the
-    cached embeddings, combined map-side into k partial (sum, count)
-    rows per partition — only k×P tiny rows reach the driver, with no
-    shuffle. The pass is planned once and re-collected every round;
-    only the side file's matrix changes (SURVEY.md §7 hard-part 1).
+    Scale shape: within the driver budget the whole loop runs on the
+    driver from one bounded collect (:class:`_FitInput`). Above it,
+    each iteration is ONE narrow kernel pass over the cached
+    embeddings, combined map-side into k partial (sum, count) rows per
+    partition — only k×P tiny rows reach the driver, with no shuffle.
+    The pass is planned once and re-collected every round; only the
+    side file's matrix changes (SURVEY.md §7 hard-part 1).
     """
     # init: e.g. kmeans_parallel_init's (k×d matrix, cids) pair.
     C, cids = init if init is not None else first_k_init(embeddings, k)
     C, cids = np.array(C, dtype="float64"), np.array(cids)
 
-    cached = embeddings.select("vec_id", "embedding").persist()
-    try:
-        with _ModelFile() as model:
-            # select("embedding"): an opaque mapInArrow defeats column
-            # pruning (guide §4.1), and the combiner never reads vec_id.
-            iter_df = cached.select("embedding").mapInArrow(
-                partial(_stats_combiner, model.path), _STATS_SCHEMA
-            )
-            for _ in range(max_iter):
-                model.publish(C, cids, euclidean)
-                sums, counts = _fold_partials(iter_df.collect(), cids, C.shape[1])
-                new_C = C.copy()  # empty cluster keeps its previous centroid
-                nz = counts > 0
-                new_C[nz] = sums[nz] / counts[nz, None]
-                shift = float(np.abs(new_C - C).max())
-                C = new_C
-                if shift < tol:
-                    break
-        return assign_fitted(cached, C, cids, euclidean)
-    finally:
-        cached.unpersist()
+    with _FitInput(embeddings, C.shape[1]) as fit:
+        for _ in range(max_iter):
+            sums, counts = fit.stats(C, cids, euclidean)
+            new_C = C.copy()  # empty cluster keeps its previous centroid
+            nz = counts > 0
+            new_C[nz] = sums[nz] / counts[nz, None]
+            shift = float(np.abs(new_C - C).max())
+            C = new_C
+            if shift < tol:
+                break
+        return fit.assign(C, cids, euclidean)
 
 
 def assign_fitted(embeddings: DataFrame, C, cids, euclidean: bool = False) -> DataFrame:
     """(vec_id, cluster_id) of every row under a fitted model (k×d C,
-    row j ↔ cids[j]): one kernel pass, materialized BEFORE its side
-    file goes, so a caller's action never recomputes from it (nor from
-    an input the caller drops afterwards)."""
-    with _ModelFile() as model:
-        model.publish(C, cids, euclidean)
-        return embeddings.select("vec_id", "embedding").mapInArrow(
-            partial(_assign_combiner, model.path),
-            "vec_id bigint, cluster_id int",
-        ).localCheckpoint(eager=True)
+    row j ↔ cids[j]): one kernel pass (:meth:`_FitInput.assign`)."""
+    C = np.array(C, dtype="float64")
+    with _FitInput(embeddings, C.shape[1], cache=False) as fit:
+        return fit.assign(C, np.array(cids), euclidean)
 
 
 # Shared DuckDB oracle CTE: one Lloyd assignment step (ten seed

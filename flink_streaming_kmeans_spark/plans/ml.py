@@ -105,10 +105,12 @@ def q_ml_kmeans_iter(spark, sf_dir):
         # with ASSIGN_CTE's emb CTE (r7 NULL-entity-id probe)
         F.col("vec_id").isNotNull() & emb_finite("embedding")
     )
-    # No fan_out here: each iteration is one vectorized numpy pass over
-    # the persisted input, and at this row count 32-way task launch per
-    # iteration costs more than it buys (measured 2.9 s → 4.5 s). At
-    # real scale the lake's natural splits provide the parallelism.
+    # No fan_out here: within the driver budget (operators/kmeans.
+    # _driver_table) the whole fit runs on the driver from one bounded
+    # collect, and above it each iteration is one vectorized numpy pass
+    # over the persisted input, where 32-way task launch per iteration
+    # costs more than it buys at this row count (measured 2.9 s → 4.5 s).
+    # At real scale the lake's natural splits provide the parallelism.
     return lloyd_iterate(spark, e, k=10, max_iter=20)
 
 
@@ -125,7 +127,7 @@ def q_kmeans_stream(spark, sf_dir):
     taking one file per trigger + ``availableNow`` delivers exactly
     5 micro-batches to ``foreachBatch(StreamingKMeans)`` (the shared
     k-means kernel per batch — on the driver from one bounded Arrow
-    collect for a batch within ``_DRIVER_ELEMS`` values, else one
+    collect for a batch within the kernel's driver budget, else one
     narrow mapInArrow pass with k×P partial rows to the driver — then
     the MacQueen batch update; streaming/kmeans.py). Output: one
     row per centroid (cluster_id, n_points, centroid_norm) — k rows

@@ -11,11 +11,12 @@ Spark Structured Streaming has no iteration edge; the idiomatic
 replacement (SURVEY.md §2.9/§7) is ``foreachBatch`` + driver-held
 state: per micro-batch, the shared k-means kernel (operators/kmeans.py)
 computes vectorized assignments and per-cluster (sum, count) partials
-against the CURRENT centroids. An untracked batch of at most
-``_DRIVER_ELEMS`` embedding values is folded on the driver from one
-bounded Arrow collect, with no Python worker; a larger one, and every
-tracked batch, takes one narrow mapInArrow pass. The
-driver then applies the batch MacQueen update
+against the CURRENT centroids. An untracked batch within the driver
+budget is folded on the driver from one bounded Arrow collect, with no
+Python worker; a larger one, and every tracked batch, takes one narrow
+mapInArrow pass. The budget and its size estimate are the kernel's one
+gate (operators/kmeans._driver_table), which every batch fit uses too.
+The driver then applies the batch MacQueen update
 
     c' = (c * n + batch_sum) / (n + batch_count)
 
@@ -46,8 +47,8 @@ keyed-state analog this container admits;
 transformWithStateInPandas's protobuf runner is broken here,
 SCALE.md).
 
-Scale: at most ``_DRIVER_ELEMS`` embedding values plus one row ever
-cross the driver (the untracked size probe); a larger untracked batch
+Scale: at most the gate's budget of embedding values plus one row
+ever cross the driver (the untracked size probe); a larger untracked batch
 and every tracked batch return only k×P-row partials (per-cluster
 delta partials, after one join + scan when tracked). Driver state is
 the k×d matrix + k counts. Assignment state is O(distinct points) ON
@@ -64,6 +65,7 @@ from pyspark.sql import DataFrame
 from ..operators.kmeans import (
     _DELTA_SCHEMA,
     _STATS_SCHEMA,
+    _driver_table,
     _fold_partials,
     _model,
     _ModelFile,
@@ -74,30 +76,6 @@ from ..operators.kmeans import (
 )
 
 _ASSIGN_SCHEMA = "vec_id bigint, cid int"
-# Embedding values of the largest untracked batch folded on the driver
-# (StreamingKMeans._delta): 20k rows at d=64, 10 MB as float64. A
-# budget in values, not rows, because both paths cost in proportion
-# to rows x d. Measured per batch of float32 points in one parquet
-# file, local[4] on a shared 4-vCPU host, median of 5 (driver path =
-# bounded toArrow + kernel; executor path = mapInArrow + collect):
-#     d=16:  20k rows 0.08 vs 0.20 s,  80k 0.15 vs 0.19 s, 160k 0.22 vs 0.20 s
-#     d=64:   2k rows 0.06 vs 0.17 s,  20k 0.12 vs 0.20 s,  80k 0.25 vs 0.25 s
-#     d=256: 2.5k rows 0.11 vs 0.19 s,  5k 0.12 vs 0.20 s,  20k 0.27 vs 0.25 s
-# Break-even lies between 2M and 5M values at every d, so at 1.28M the
-# driver path still wins by 0.08-0.12 s. The size estimate that guards
-# the probe (_plan_bytes and the element type) reads in about 2 ms; the
-# probe alone, wasted on a batch it finds too large, costs 0.04-0.06 s.
-_DRIVER_ELEMS = 1_280_000
-
-
-def _plan_bytes(df: DataFrame) -> int:
-    """The size estimate of ``df``'s analyzed plan, read without running
-    a job (or the optimizer: 0.9 ms against 3.7 ms). For a file source
-    it is the bytes of the input files; inside foreachBatch the batch's
-    LogicalRDD carries its source plan's estimate. A source that
-    reports none gives spark.sql.defaultSizeInBytes (Long.MaxValue)."""
-    stats = df._jdf.queryExecution().analyzed().stats()
-    return int(str(stats.sizeInBytes()))
 
 
 class StreamingKMeans:
@@ -338,39 +316,22 @@ class StreamingKMeans:
         """Untracked per-cluster (sums, counts) of the batch, or None
         for a batch with nothing to fold.
 
-        A batch of at most ``_DRIVER_ELEMS`` embedding values is folded
-        on the driver: one bounded Arrow collect, then the kernel, with
-        no side file and no Python worker. A larger one takes one
-        mapInArrow pass of the same kernel on the executors.
-
-        The size is read in two steps. First the plan's size estimate
-        (:func:`_plan_bytes`, no job) sends a batch whose input files
-        hold more than twice the bytes of ``_DRIVER_ELEMS`` values
-        straight to the executors. Only a batch that may be small pays
-        the probe, ``limit(rows + 1)`` collected with ``toArrow()``: one
-        JVM-only job that keeps at most ``rows + 1`` rows per partition
-        and shuffles them into one, whose result is the table the
-        driver folds. A batch that passes the estimate but holds more
-        than ``rows`` rows (values that compress better than 2:1) pays
-        the probe and then the mapInArrow pass. The row count itself
-        has no free source: inside foreachBatch the batch is a
-        LogicalRDD, whose ``inputFiles()`` is empty."""
+        A batch within the driver budget (operators/kmeans.
+        :func:`_driver_table`, the gate every fit uses too) is folded on
+        the driver from its one bounded Arrow collect, with no side file
+        and no Python worker. A larger one takes one mapInArrow pass of
+        the same kernel on the executors."""
         d = self.C.shape[1]
-        rows = _DRIVER_ELEMS // d
         # embedding only: the combiner never reads vec_id (guide §4.1 —
         # opaque fns defeat column pruning; project first).
+        table = _driver_table(batch_df, ("embedding",), d)
+        if table is not None:
+            if not table.num_rows:
+                return None
+            return _partials(
+                table.to_batches(), _model(self.C, self.cids, self.euclidean)
+            )
         emb = batch_df.select("embedding")
-        # A value takes about its type's width in a parquet file, a bit
-        # more with the vec_id column and the footer: twice it is slack.
-        width = 4 if emb.schema[0].dataType.elementType.typeName() == "float" else 8
-        if rows and _plan_bytes(batch_df) <= 2 * width * _DRIVER_ELEMS:
-            table = emb.limit(rows + 1).toArrow()
-            if table.num_rows <= rows:
-                if not table.num_rows:
-                    return None
-                return _partials(
-                    table.to_batches(), _model(self.C, self.cids, self.euclidean)
-                )
         with _ModelFile() as model:
             model.publish(self.C, self.cids, self.euclidean)
             partials = emb.mapInArrow(

@@ -145,20 +145,26 @@ def main(argv: list[str] | None = None) -> int:
     # large-magnitude centroids absorb everything on non-unit data).
     # Parquet embeddings keep the unit-vector dot contract.
     euclidean = fmt == "csv"
-    init = (
-        kmeans_parallel_init(pts, k=args.k)
-        if args.init == "kmeans||"
-        else first_k_init(pts, k=args.k)
-    )
-    extra: dict = {}
-    if args.stream:
-        assigned, extra = _run_streaming(spark, pts, args, init, euclidean)
-    else:
-        assigned = lloyd_iterate(
-            spark, pts, k=args.k, max_iter=args.max_iters, init=init,
-            euclidean=euclidean,
+    # One cache across init and the fit: both use a cached input as is
+    # and leave it cached (operators/kmeans._FitInput).
+    pts = pts.persist()
+    try:
+        init = (
+            kmeans_parallel_init(pts, k=args.k)
+            if args.init == "kmeans||"
+            else first_k_init(pts, k=args.k)
         )
-    assigned.write.mode("overwrite").parquet(args.output)
+        extra: dict = {}
+        if args.stream:
+            assigned, extra = _run_streaming(spark, pts, args, init, euclidean)
+        else:
+            assigned = lloyd_iterate(
+                spark, pts, k=args.k, max_iter=args.max_iters, init=init,
+                euclidean=euclidean,
+            )
+        assigned.write.mode("overwrite").parquet(args.output)
+    finally:
+        pts.unpersist()
 
     back = spark.read.parquet(args.output)
     sizes = {

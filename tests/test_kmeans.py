@@ -234,13 +234,14 @@ def test_reassign_combiner_equals_sequential_overlay(seed):
 def test_decode_rejects_ragged_and_null_embeddings(spark, tmp_path, monkeypatch, bad):
     """A flatten+reshape would silently misalign every later row on a
     wrong-length embedding (np.stack used to crash instead): the kernel
-    must raise a ValueError naming the column, on the Lloyd path and
-    on all three StreamingKMeans paths. The untracked driver path
-    raises it bare on the driver; the worker paths wrap it in a
-    PythonException whose text carries the same message. The rows go
-    through a parquet file, as a replayed batch does, so the batch
-    carries the size estimate the driver path needs."""
-    from flink_streaming_kmeans_spark.operators.kmeans import lloyd_iterate
+    must raise a ValueError naming the column, on both paths of the
+    batch fit (k-means|| init and Lloyd) and on all three
+    StreamingKMeans paths. The driver paths raise it bare on the
+    driver; the worker paths wrap it in a PythonException whose text
+    carries the same message. The rows go through a parquet file, as a
+    replayed batch does, so the input carries the size estimate the
+    driver paths need."""
+    from flink_streaming_kmeans_spark.operators import kmeans as km
     from flink_streaming_kmeans_spark.streaming import kmeans as skm_mod
 
     rows = [(i, [1.0, float(i)]) for i in range(6)] + [(6, bad)]
@@ -254,8 +255,14 @@ def test_decode_rejects_ragged_and_null_embeddings(spark, tmp_path, monkeypatch,
         "row .* has 1 elements, expected 2" if bad else "1 null embedding"
     )
     want = "ValueError: " + msg
-    with pytest.raises(Exception, match=want):
-        lloyd_iterate(spark, df, k=2, max_iter=2, init=init)
+
+    def fits(match):
+        with pytest.raises(Exception, match=match):
+            km.lloyd_iterate(spark, df, k=2, max_iter=2, init=init)
+        with pytest.raises(Exception, match=match):
+            km.kmeans_parallel_init(df, k=2)
+
+    fits("^" + msg)  # the driver path
 
     def new(track=False):
         return skm_mod.StreamingKMeans(
@@ -270,10 +277,11 @@ def test_decode_rejects_ragged_and_null_embeddings(spark, tmp_path, monkeypatch,
     with pytest.raises(Exception, match=want):
         tracked.update_batch(df)
     assert tracked.batches_seen == 0 and int(tracked.n.sum()) == 0
-    monkeypatch.setattr(skm_mod, "_DRIVER_ELEMS", 0)
+    monkeypatch.setattr(km, "_DRIVER_ELEMS", 0)
     with pytest.raises(Exception, match=want):
         skm.update_batch(df)  # the executor path
     assert skm.batches_seen == 0 and int(skm.n.sum()) == 0
+    fits(want)  # the executor path
 
 
 def _vectors(spark, tmp_path, n, d=8, seed=0, same=False):
@@ -322,14 +330,16 @@ def test_driver_path_partials_equal_executor_path(
     kernel as the executor path: on one partition its (sums, counts)
     are bit-equal to the executor path's; across partitions the fold
     order differs, so the sums agree to 1e-12 and the counts exactly."""
+    from flink_streaming_kmeans_spark.operators import kmeans as km
+
     skm_mod, calls = _skm_paths(monkeypatch)
-    k, budget = 5, skm_mod._DRIVER_ELEMS
+    k, budget = 5, km._DRIVER_ELEMS
     one_file, X = _vectors(spark, tmp_path, 400)
     for parts in (1, 3):
         df = one_file if parts == 1 else one_file.repartition(parts)
         got = {}
         for path, b in (("driver", budget), ("executor", 0)):
-            monkeypatch.setattr(skm_mod, "_DRIVER_ELEMS", b)
+            monkeypatch.setattr(km, "_DRIVER_ELEMS", b)
             skm = skm_mod.StreamingKMeans(X[:k], np.arange(k), euclidean=euclidean)
             before = dict(calls)
             skm.update_batch(df)
@@ -349,11 +359,13 @@ def test_driver_gate_boundary(spark, tmp_path, monkeypatch):
     same batch lands on the same centroids through the other path (one
     partition, so bit-equal). Both batches pass the no-job size
     estimate, so the row probe is what decides here."""
+    from flink_streaming_kmeans_spark.operators import kmeans as km
+
     skm_mod, calls = _skm_paths(monkeypatch)
     k, d, gate = 4, 8, 50
 
     def run(df, X, rows):
-        monkeypatch.setattr(skm_mod, "_DRIVER_ELEMS", rows * d)
+        monkeypatch.setattr(km, "_DRIVER_ELEMS", rows * d)
         before = dict(calls)
         skm = skm_mod.StreamingKMeans(X[:k], np.arange(k))
         skm.update_batch(df)
@@ -365,7 +377,7 @@ def test_driver_gate_boundary(spark, tmp_path, monkeypatch):
         (gate + 1, "executor", "driver", gate + 1),
     ):
         df, X = _vectors(spark, tmp_path, n, d=d, seed=n)
-        assert skm_mod._plan_bytes(df) <= 2 * 8 * gate * d, n
+        assert km._plan_bytes(df) <= 2 * 8 * gate * d, n
         C, ran = run(df, X, gate)
         assert ran == [path], (n, ran)
         C_other, ran = run(df, X, other_gate)
@@ -403,13 +415,14 @@ def test_small_untracked_update_runs_one_jvm_job(spark, tmp_path, monkeypatch):
     also shows the check can fail. Under the same budget, a batch of
     one repeated vector compresses below the estimate's bound, so it
     pays the probe before that job."""
+    from flink_streaming_kmeans_spark.operators import kmeans as km
     from flink_streaming_kmeans_spark.streaming import kmeans as skm_mod
 
     df, X = _vectors(spark, tmp_path, 200)
     same, _ = _vectors(spark, tmp_path, 1000, same=True)
 
     def update(batch, budget):
-        monkeypatch.setattr(skm_mod, "_DRIVER_ELEMS", budget)
+        monkeypatch.setattr(km, "_DRIVER_ELEMS", budget)
         jobs, plans = _jobs_and_plans(
             spark,
             f"skm-update-{id(batch)}-{budget}",
@@ -419,9 +432,9 @@ def test_small_untracked_update_runs_one_jvm_job(spark, tmp_path, monkeypatch):
         return jobs, len(plans), len(python)
 
     assert update(df, 200 * 8) == (1, 1, 0)
-    assert skm_mod._plan_bytes(df) > 2 * 8 * 100 * 8
+    assert km._plan_bytes(df) > 2 * 8 * 100 * 8
     assert update(df, 100 * 8) == (1, 1, 1)
-    assert skm_mod._plan_bytes(same) <= 2 * 8 * 100 * 8
+    assert km._plan_bytes(same) <= 2 * 8 * 100 * 8
     assert update(same, 100 * 8) == (2, 2, 1)
 
 
@@ -618,7 +631,9 @@ def test_kmeans_parallel_init_candidates_equal_two_pass(spark, monkeypatch, part
     blocks of 60: copies of the seed (a partition of them has Σd² 0),
     a far cluster (nearly all of Σd² in round 0), and two blocks near
     the seed. On 4 partitions each block is its own partition; small
-    Arrow batches put several in each."""
+    Arrow batches put several in each. A budget of 0 keeps init on the
+    executor path, whose partitions this is about (the frame reports no
+    size estimate either, which also keeps it there)."""
     from flink_streaming_kmeans_spark.operators import kmeans as km
 
     k, d, batch, seed = 4, 8, 25, 0x5EED
@@ -659,6 +674,7 @@ def test_kmeans_parallel_init_candidates_equal_two_pass(spark, monkeypatch, part
 
     monkeypatch.setattr(km, "_reduce", spy_reduce)
     monkeypatch.setattr(km, "_accept", spy_accept)
+    monkeypatch.setattr(km, "_DRIVER_ELEMS", 0)
     with scoped_confs(
         spark, {"spark.sql.execution.arrow.maxRecordsPerBatch": str(batch)}
     ):
@@ -673,18 +689,21 @@ def test_kmeans_parallel_init_candidates_equal_two_pass(spark, monkeypatch, part
         assert any(got > kept for got, kept in tested), tested
 
 
-def test_kmeans_parallel_init_runs_one_job_per_round(spark, tmp_path):
-    """k-means|| init runs _ROUNDS + 2 Spark jobs: the seed row, read
-    from the cache it builds; one fused cost-and-sample pass per round;
-    and the candidate weights. All but the seed job run a MapInArrow
-    plan. An empty input raises and leaves no cache behind."""
+def test_kmeans_parallel_init_runs_one_job_per_round(spark, tmp_path, monkeypatch):
+    """On the executor path (a budget of 0), k-means|| init runs
+    _ROUNDS + 2 Spark jobs: the seed row, read from the cache it
+    builds; one fused cost-and-sample pass per round; and the candidate
+    weights. All but the seed job run a MapInArrow plan. An empty input
+    raises and leaves no cache behind."""
     from pyspark import StorageLevel
 
+    from flink_streaming_kmeans_spark.operators import kmeans as km
     from flink_streaming_kmeans_spark.operators.kmeans import (
         _ROUNDS,
         kmeans_parallel_init,
     )
 
+    monkeypatch.setattr(km, "_DRIVER_ELEMS", 0)
     df, _ = _vectors(spark, tmp_path, 400)
     jobs, plans = _jobs_and_plans(
         spark, "kmeans-parallel-init", lambda: kmeans_parallel_init(df, k=4)
@@ -695,3 +714,205 @@ def test_kmeans_parallel_init_runs_one_job_per_round(spark, tmp_path):
     with pytest.raises(ValueError, match="embeddings table is empty"):
         kmeans_parallel_init(empty, k=4)
     assert empty.select("vec_id", "embedding").storageLevel == StorageLevel.NONE
+
+
+def _write_points(spark, path, ids, x, files=1):
+    """Rows (ids[i], x[i]) as ``files`` parquet files under ``path``,
+    one contiguous slice of the rows each."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    os.makedirs(path)
+    n, d = x.shape
+    for f, part in enumerate(np.array_split(np.arange(n), files)):
+        emb = pa.ListArray.from_arrays(
+            pa.array(np.arange(0, len(part) * d + 1, d, dtype=np.int32)),
+            pa.array(x[part].ravel()),
+        )
+        pq.write_table(
+            pa.table({"vec_id": ids[part].astype("int64"), "embedding": emb}),
+            os.path.join(path, f"part-{f}.parquet"),
+        )
+    return spark.read.parquet(path)
+
+
+def _fit(spark, monkeypatch, df, k, budget, euclidean=False, max_iter=6, tol=0.0):
+    """One k-means|| + Lloyd fit of ``df`` under a driver budget of
+    ``budget`` values: the reduce's candidates ``C`` and weights ``w``,
+    the ``init`` matrix, the ``final`` Lloyd centroids, the Lloyd
+    ``iterations`` and the ``assign`` dict (vec_id -> cluster_id)."""
+    from flink_streaming_kmeans_spark.operators import kmeans as km
+
+    seen = {"iterations": 0}
+    reduce, stats, assign = km._reduce, km._FitInput.stats, km._FitInput.assign
+
+    def spy_reduce(C, w, k):
+        seen["C"], seen["w"] = C.copy(), w.copy()
+        return reduce(C, w, k)
+
+    def spy_stats(self, *a):
+        seen["iterations"] += 1
+        return stats(self, *a)
+
+    def spy_assign(self, C, *a):
+        seen["final"] = C.copy()
+        return assign(self, C, *a)
+
+    with monkeypatch.context() as mp:
+        mp.setattr(km, "_DRIVER_ELEMS", budget)
+        mp.setattr(km, "_reduce", spy_reduce)
+        mp.setattr(km._FitInput, "assign", spy_assign)
+        init = km.kmeans_parallel_init(df, k=k)
+        mp.setattr(km._FitInput, "stats", spy_stats)
+        out = km.lloyd_iterate(
+            spark, df, k=k, max_iter=max_iter, tol=tol, init=init, euclidean=euclidean
+        )
+        seen["assign"] = {r.vec_id: r.cluster_id for r in out.collect()}
+    seen["init"] = init[0]
+    return seen
+
+
+@pytest.mark.parametrize("euclidean", [False, True], ids=["dot", "euclidean"])
+def test_driver_fit_equals_executor_fit(spark, tmp_path, monkeypatch, euclidean):
+    """On one input file, the driver fit (within the budget) and the
+    executor fit (a budget of 0) hand the reduce the same candidates
+    and weights, so the same init; their Lloyd centroids agree to
+    1e-12 (the fold order may differ) and they assign every row alike.
+    The Euclidean fit runs on raw, non-unit coordinates."""
+    from flink_streaming_kmeans_spark.operators import kmeans as km
+
+    x, _ = _clustered_points(np.random.default_rng(4), 1500, 8, 16, 0.1)
+    if euclidean:
+        x = 10.0 * x + 3.0
+    df = _write_points(spark, str(tmp_path / "in"), np.arange(len(x)), x)
+    drv = _fit(spark, monkeypatch, df, 8, km._DRIVER_ELEMS, euclidean)
+    exe = _fit(spark, monkeypatch, df, 8, 0, euclidean)
+    assert len(drv["C"]) > 8
+    assert drv["C"].tobytes() == exe["C"].tobytes()
+    assert drv["w"].tolist() == exe["w"].tolist()
+    assert drv["init"].tobytes() == exe["init"].tobytes()
+    np.testing.assert_allclose(drv["final"], exe["final"], rtol=0, atol=1e-12)
+    assert drv["assign"] == exe["assign"]
+    assert sorted(drv["assign"]) == list(range(len(x)))
+
+
+def test_fit_within_budget_runs_on_the_driver(spark, tmp_path):
+    """Within the budget no pass of a fit runs a Python worker: k-means||
+    init runs 2 Spark jobs (the width probe and the bounded collect)
+    and Lloyd 1 (the bounded collect), and no plan they execute has a
+    MapInArrow node. The assignment is a local frame: reading it runs
+    no Python either."""
+    from flink_streaming_kmeans_spark.operators.kmeans import (
+        kmeans_parallel_init,
+        lloyd_iterate,
+    )
+
+    df, _ = _vectors(spark, tmp_path, 400)
+    got = {}
+
+    def init():
+        got["init"] = kmeans_parallel_init(df, k=4)
+
+    def lloyd():
+        got["out"] = lloyd_iterate(spark, df, k=4, max_iter=3, init=got["init"])
+
+    jobs, plans = _jobs_and_plans(spark, "fit-driver-init", init)
+    assert jobs == 2 and not any("MapInArrow" in p for p in plans), plans
+    jobs, plans = _jobs_and_plans(spark, "fit-driver-lloyd", lloyd)
+    assert jobs == 1 and not any("MapInArrow" in p for p in plans), plans
+    jobs, plans = _jobs_and_plans(spark, "fit-driver-read", got["out"].collect)
+    assert not any("MapInArrow" in p or "Python" in p for p in plans), plans
+
+
+def test_driver_fit_is_independent_of_input_split(spark, tmp_path, monkeypatch):
+    """The driver fit sorts the collected rows by vec_id before folding,
+    so one input file and four (holding the rows in reverse id order,
+    which the collect returns in shuffle-block order) give a
+    bit-identical init, centroids and assignment, and three runs on one
+    input are bit-identical."""
+    from flink_streaming_kmeans_spark.operators import kmeans as km
+
+    x, _ = _clustered_points(np.random.default_rng(6), 1200, 6, 16, 0.1)
+    ids = np.arange(len(x))
+    one = _write_points(spark, str(tmp_path / "one"), ids, x)
+    four = _write_points(spark, str(tmp_path / "four"), ids[::-1], x[::-1], files=4)
+    assert four.rdd.getNumPartitions() == 4
+    budget = km._DRIVER_ELEMS
+    runs = [_fit(spark, monkeypatch, df, 6, budget) for df in (one, one, one, four)]
+    for r in runs[1:]:
+        assert r["init"].tobytes() == runs[0]["init"].tobytes()
+        assert r["final"].tobytes() == runs[0]["final"].tobytes()
+        assert r["assign"] == runs[0]["assign"]
+
+
+@pytest.mark.parametrize("budget", ["driver", "executor"])
+def test_fit_failure_modes_match_across_paths(spark, tmp_path, monkeypatch, budget):
+    """Both paths of a fit fail and stop alike: an empty input raises the
+    same ValueError; with fewer than k distinct points init returns
+    fewer centres; and ``tol`` stops Lloyd early, after the same number
+    of iterations on either path."""
+    from flink_streaming_kmeans_spark.operators import kmeans as km
+
+    b = km._DRIVER_ELEMS if budget == "driver" else 0
+    empty = _write_points(spark, str(tmp_path / "empty"), np.zeros(0), np.zeros((0, 4)))
+    with monkeypatch.context() as mp:
+        mp.setattr(km, "_DRIVER_ELEMS", b)
+        msg = "^kmeans_parallel_init: embeddings table is empty$"
+        with pytest.raises(ValueError, match=msg):
+            km.kmeans_parallel_init(empty, k=3)
+        with pytest.raises(ValueError, match="^embeddings table is empty$"):
+            km.lloyd_iterate(spark, empty, k=3)
+
+        three = np.random.default_rng(8).standard_normal((3, 4))
+        few = _write_points(
+            spark, str(tmp_path / "few"), np.arange(30), three[np.arange(30) % 3]
+        )
+        C, cids = km.kmeans_parallel_init(few, k=5)
+        assert len(C) == len(cids) == 3
+
+    x, _ = _clustered_points(np.random.default_rng(9), 600, 4, 8, 0.05)
+    df = _write_points(spark, str(tmp_path / "tol"), np.arange(len(x)), x)
+    fit = _fit(spark, monkeypatch, df, 4, b, max_iter=50, tol=1e-9)
+    ref = _fit(spark, monkeypatch, df, 4, 0, max_iter=50, tol=1e-9)
+    assert 1 < fit["iterations"] < 50
+    assert fit["iterations"] == ref["iterations"]
+
+
+def test_executor_fit_uses_a_caller_cache(spark, tmp_path, monkeypatch):
+    """On the executor path (a budget of 0), init and Lloyd use an input
+    the caller cached as is: neither builds a cache of its own, and the
+    caller's stays cached through both calls. An uncached input is
+    cached by each call in turn, which the same spy sees."""
+    from pyspark import StorageLevel
+
+    from flink_streaming_kmeans_spark.operators import kmeans as km
+
+    monkeypatch.setattr(km, "_DRIVER_ELEMS", 0)
+    df, _ = _vectors(spark, tmp_path, 400)
+    cls = type(df)
+    persist, persisted = cls.persist, []
+
+    def spy_persist(self, *a, **kw):
+        persisted.append(self)
+        return persist(self, *a, **kw)
+
+    def fit(data):
+        init = km.kmeans_parallel_init(data, k=4)
+        return km.lloyd_iterate(spark, data, k=4, max_iter=2, init=init).count()
+
+    cached = df.persist()
+    try:
+        with monkeypatch.context() as mp:
+            mp.setattr(cls, "persist", spy_persist)
+            assert fit(cached) == 400
+        assert persisted == []
+        assert cached.storageLevel != StorageLevel.NONE
+    finally:
+        cached.unpersist()
+    with monkeypatch.context() as mp:
+        mp.setattr(cls, "persist", spy_persist)
+        assert fit(df) == 400
+    assert len(persisted) == 2
+    assert df.storageLevel == StorageLevel.NONE

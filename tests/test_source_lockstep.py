@@ -29,10 +29,19 @@ The k-means math has one copy: operators/kmeans.py's ``_decode``,
 StreamingKMeans driver path reach through ``_partials`` and friends.
 The fifth test fails if any other package module calls one of them, so
 a second copy of the kernel cannot grow beside a caller.
+
+Whether a kernel pass runs on the driver is decided by one gate,
+operators/kmeans._driver_table: one budget (``_DRIVER_ELEMS``) and one
+bounded collect (``.limit(rows + 1).toArrow()``), used by every batch
+fit and by StreamingKMeans. The sixth test fails if any other package
+module reads the budget or collects with ``.toArrow(``, or if the
+kernel module reads the budget or makes a bounded Arrow collect
+outside the gate, so a second budget or probe cannot drift from it.
 """
 
 from __future__ import annotations
 
+import ast
 import os
 import re
 
@@ -158,3 +167,59 @@ def test_only_the_kernel_calls_its_math():
     )
     with open(os.path.join(REPO, owner)) as f:
         assert call.search(f.read()), "the kernel no longer defines its math"
+
+
+def _gate_uses(tree):
+    """(line, what, enclosing top-level function) of every read of
+    ``_DRIVER_ELEMS`` and every ``.toArrow(`` call in a module."""
+    uses = []
+    for top in tree.body:
+        fn = top.name if isinstance(top, (ast.FunctionDef, ast.ClassDef)) else None
+        for node in ast.walk(top):
+            if isinstance(node, ast.Name) and node.id == "_DRIVER_ELEMS":
+                if isinstance(node.ctx, ast.Load):
+                    uses.append((node.lineno, "budget", fn))
+            elif isinstance(node, ast.Attribute) and node.attr == "_DRIVER_ELEMS":
+                uses.append((node.lineno, "budget", fn))
+            elif isinstance(node, ast.alias) and node.name == "_DRIVER_ELEMS":
+                uses.append((top.lineno, "budget", fn))
+            elif (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "toArrow"
+            ):
+                recv = node.func.value
+                bounded = (
+                    isinstance(recv, ast.Call)
+                    and isinstance(recv.func, ast.Attribute)
+                    and recv.func.attr == "limit"
+                )
+                what = "bounded collect" if bounded else "collect"
+                uses.append((node.lineno, what, fn))
+    return uses
+
+
+def test_one_driver_gate():
+    owner = os.path.join("flink_streaming_kmeans_spark", "operators", "kmeans.py")
+    offenders, gate = [], []
+    for root, _, files in os.walk(PKG):
+        for name in sorted(files):
+            rel = os.path.relpath(os.path.join(root, name), REPO)
+            if not name.endswith(".py"):
+                continue
+            with open(os.path.join(REPO, rel)) as f:
+                uses = _gate_uses(ast.parse(f.read()))
+            for line, what, fn in uses:
+                if rel != owner:
+                    offenders.append(f"{rel}:{line} {what}")
+                elif fn == "_driver_table":
+                    gate.append(what)
+                elif what != "collect":
+                    offenders.append(f"{rel}:{line} {what} in {fn}")
+    assert not offenders, (
+        "size kernel inputs through operators/kmeans._driver_table instead of "
+        f"reading the budget or collecting them here: {offenders}"
+    )
+    assert {"budget", "bounded collect"} <= set(gate), (
+        f"the gate no longer reads the budget and collects: {gate}"
+    )
