@@ -32,11 +32,13 @@ Where a pass runs is decided once per fit (or micro-batch) by one gate,
 values is read with one bounded Arrow collect and every pass of the
 fit runs on the driver, with no Python worker, no side file and no
 cache (:class:`_FitInput`; the fit's assignment comes back as a local
-frame). A larger input, or one with no size estimate, runs each pass
-as a ``mapInArrow`` pass over the cached input, planned once per fit
-and re-collected every round; only the side file's k×d matrix changes
-between rounds: constant-size plans, no literal or lineage growth
-(SURVEY.md §7 hard-part 1).
+frame). k-means|| init hands the rows it read to the Lloyd fit that
+follows on the same DataFrame (:class:`_Init`), so a whole fit reads
+its input once. A larger input, or one with no size estimate, runs
+each pass as a ``mapInArrow`` pass over the cached input, planned once
+per fit and re-collected every round; only the side file's k×d matrix
+changes between rounds: constant-size plans, no literal or lineage
+growth (SURVEY.md §7 hard-part 1).
 
 Embeddings are unit-normalized (SURVEY.md §1.3), so dot product ==
 cosine similarity; "nearest" = argmax dot, tie-broken on lowest
@@ -49,6 +51,7 @@ from __future__ import annotations
 import contextlib
 import os
 import uuid
+import weakref
 from functools import partial
 
 import numpy as np
@@ -123,8 +126,8 @@ def kmeans_parallel_init(embeddings: DataFrame, k: int = 10, seed: int = 0x5EED)
     nearest-point count: 6 jobs in all. An input within the driver
     budget (:class:`_FitInput`) runs the same rounds on the driver
     instead, after a width probe and one bounded collect: 2 jobs, and
-    one partition, so the candidates do not depend on how the input is
-    split.
+    rows sorted by vec_id, so the candidates do not depend on how the
+    input is split.
 
     The reduce (:func:`_reduce`) is deterministic, with no restarts: a
     weighted farthest-first traversal (Gonzalez, TCS 1985) seeded at
@@ -133,7 +136,10 @@ def kmeans_parallel_init(embeddings: DataFrame, k: int = 10, seed: int = 0x5EED)
 
     Returns a (k×d numpy array, cids array) pair compatible with
     lloyd_iterate's internals / StreamingKMeans; fewer than k rows when
-    the input has fewer than k distinct points.
+    the input has fewer than k distinct points. Within the budget the
+    pair (an :class:`_Init`) also carries the rows init read, and a
+    ``lloyd_iterate`` handed it with the same ``embeddings`` object
+    fits those rows with no job: a fit reads its input once.
     """
     ell = 2 * k
     with _FitInput(embeddings) as fit:
@@ -161,7 +167,31 @@ def kmeans_parallel_init(embeddings: DataFrame, k: int = 10, seed: int = 0x5EED)
         w = fit.stats(C, np.arange(len(C)), euclidean=True)[1].astype(float)
 
     M = _reduce(C, w, k)
-    return M, np.arange(len(M))
+    return _Init(M, np.arange(len(M)), fit.batches, embeddings)
+
+
+class _Init(tuple):
+    """:func:`kmeans_parallel_init`'s (M, cids) pair. It also carries
+    the rows init read on the driver (``batches``: sorted by vec_id, or
+    None on the executor path) and a weak reference to the DataFrame
+    they came from, so a :func:`lloyd_iterate` on that same DataFrame
+    object fits them without reading its input again. It pickles and
+    copies as the plain pair."""
+
+    def __new__(cls, M, cids, batches, source: DataFrame):
+        pair = super().__new__(cls, (M, cids))
+        pair.batches = batches
+        pair._source = weakref.ref(source)
+        return pair
+
+    def __reduce__(self):
+        return tuple, (tuple(self),)
+
+    def rows_of(self, df: DataFrame):
+        """The carried rows if ``df`` is the very object they were read
+        from, else None: a new DataFrame, even of the same plan, is read
+        again."""
+        return self.batches if self._source() is df else None
 
 
 def _reduce(C, w, k: int):
@@ -309,7 +339,8 @@ def _decode(batch, d: int, col: str = "embedding"):
 def _score(X, m):
     """Nearest centroid position of every row of X, and its score:
     argmax(X·Cᵀ − bias), ties → lowest position (== lowest cid)."""
-    s = X @ m["C"].T - m["bias"]
+    s = X @ m["C"].T
+    s -= m["bias"]
     best = np.argmax(s, axis=1)
     return best, s[np.arange(len(X)), best]
 
@@ -572,9 +603,10 @@ def _driver_table(df: DataFrame, cols, d: int | None = None):
     takes about its type's width in a parquet file, a bit more with
     the other columns and the footer, so twice it is slack. Only an
     input that may be small pays the collect, ``limit(rows + 1)`` with
-    ``rows = _DRIVER_ELEMS // d`` collected with ``toArrow()``: one
-    JVM-only job that keeps at most ``rows + 1`` rows per partition and
-    shuffles them into one, whose result is the table the driver folds.
+    ``rows = _DRIVER_ELEMS // d`` collected with ``toArrow()`` after
+    ``coalesce(1)``: one JVM-only job of one task that reads the input's
+    splits in turn and stops at ``rows + 1`` rows, with no shuffle; its
+    result is the table the driver folds.
     An input that passes the estimate but holds more than ``rows`` rows
     (values that compress better than 2:1) pays the collect and then
     the mapInArrow path. The row count itself has no free source:
@@ -595,7 +627,7 @@ def _driver_table(df: DataFrame, cols, d: int | None = None):
     rows = _DRIVER_ELEMS // d if d and d > 0 else 0  # 0: a null first row
     if not rows:
         return None
-    table = sel.limit(rows + 1).toArrow()
+    table = sel.coalesce(1).limit(rows + 1).toArrow()
     return table if table.num_rows <= rows else None
 
 
@@ -606,20 +638,26 @@ class _FitInput:
 
     Within the budget, ``batches`` holds the collected rows as one Arrow
     batch, and every pass calls its body on the driver. The rows are
-    sorted by vec_id (the collect returns them in shuffle-block order),
-    so the fit does not depend on how the input is split. Otherwise
-    every pass is a mapInArrow combiner over the cached input, planned
-    once and re-collected with the model published to the side file.
+    sorted by vec_id (the collect returns them in split order), so the
+    fit does not depend on how the input is split. A caller that holds
+    those rows already (:meth:`_Init.rows_of`) passes them as
+    ``batches`` and skips the gate. Otherwise every pass is a
+    mapInArrow combiner over the cached input, planned once and
+    re-collected with the model published to the side file.
     An input the caller cached (``storageLevel``) is used as is and
     left cached, so a caller that fits twice on one input builds one
     cache; any other is cached for the ``with`` block when ``cache`` (a
     one-pass caller gains nothing from a cache)."""
 
-    def __init__(self, embeddings: DataFrame, d: int | None = None, cache: bool = True):
-        table = _driver_table(embeddings, _FIT_COLS, d)
-        self.batches = None
-        if table is not None:
-            self.batches = table.sort_by("vec_id").combine_chunks().to_batches()
+    def __init__(
+        self, embeddings: DataFrame, d: int | None = None, cache: bool = True,
+        batches=None,
+    ):
+        if batches is None:
+            table = _driver_table(embeddings, _FIT_COLS, d)
+            if table is not None:
+                batches = table.sort_by("vec_id").combine_chunks().to_batches()
+        self.batches = batches
         self._spark = embeddings.sparkSession
         self._input = embeddings
         self._cache = cache
@@ -716,7 +754,9 @@ def lloyd_iterate(
     """Full Lloyd's to convergence; returns final (vec_id, cluster_id).
 
     Scale shape: within the driver budget the whole loop runs on the
-    driver from one bounded collect (:class:`_FitInput`). Above it,
+    driver from one bounded collect (:class:`_FitInput`), or from none
+    when ``init`` is :func:`kmeans_parallel_init`'s result on this same
+    ``embeddings`` object, which carries the rows init read. Above it,
     each iteration is ONE narrow kernel pass over the cached
     embeddings, combined map-side into k partial (sum, count) rows per
     partition — only k×P tiny rows reach the driver, with no shuffle.
@@ -724,10 +764,11 @@ def lloyd_iterate(
     side file's matrix changes (SURVEY.md §7 hard-part 1).
     """
     # init: e.g. kmeans_parallel_init's (k×d matrix, cids) pair.
+    rows = init.rows_of(embeddings) if isinstance(init, _Init) else None
     C, cids = init if init is not None else first_k_init(embeddings, k)
     C, cids = np.array(C, dtype="float64"), np.array(cids)
 
-    with _FitInput(embeddings, C.shape[1]) as fit:
+    with _FitInput(embeddings, C.shape[1], batches=rows) as fit:
         for _ in range(max_iter):
             sums, counts = fit.stats(C, cids, euclidean)
             new_C = C.copy()  # empty cluster keeps its previous centroid

@@ -145,8 +145,11 @@ def main(argv: list[str] | None = None) -> int:
     # large-magnitude centroids absorb everything on non-unit data).
     # Parquet embeddings keep the unit-vector dot contract.
     euclidean = fmt == "csv"
-    # One cache across init and the fit: both use a cached input as is
-    # and leave it cached (operators/kmeans._FitInput).
+    # One cache across init and the fit, which matters only above the
+    # driver budget: there both use a cached input as is and leave it
+    # cached (operators/kmeans._FitInput). Within it kmeans|| init's one
+    # bounded collect is the only read: init hands those rows to the
+    # Lloyd fit on this same ``pts``.
     pts = pts.persist()
     try:
         init = (

@@ -800,16 +800,21 @@ def test_driver_fit_equals_executor_fit(spark, tmp_path, monkeypatch, euclidean)
 
 def test_fit_within_budget_runs_on_the_driver(spark, tmp_path):
     """Within the budget no pass of a fit runs a Python worker: k-means||
-    init runs 2 Spark jobs (the width probe and the bounded collect)
-    and Lloyd 1 (the bounded collect), and no plan they execute has a
-    MapInArrow node. The assignment is a local frame: reading it runs
-    no Python either."""
+    init runs 2 Spark jobs (the width probe and the bounded collect),
+    and Lloyd, handed that init on the same DataFrame, runs none. No
+    plan they execute has a MapInArrow node, and on a 4-file input each
+    job is one stage of one task: the bounded collect reads every file
+    in one task, with no shuffle (CollectLimit's shuffle into one
+    partition is a second stage, not an Exchange node in the plan).
+    The assignment is a local frame: reading it runs no Python either."""
     from flink_streaming_kmeans_spark.operators.kmeans import (
         kmeans_parallel_init,
         lloyd_iterate,
     )
 
-    df, _ = _vectors(spark, tmp_path, 400)
+    x = np.random.default_rng(0).standard_normal((400, 8))
+    df = _write_points(spark, str(tmp_path / "in"), np.arange(len(x)), x, files=4)
+    assert df.rdd.getNumPartitions() == 4
     got = {}
 
     def init():
@@ -820,8 +825,15 @@ def test_fit_within_budget_runs_on_the_driver(spark, tmp_path):
 
     jobs, plans = _jobs_and_plans(spark, "fit-driver-init", init)
     assert jobs == 2 and not any("MapInArrow" in p for p in plans), plans
+    tracker = spark.sparkContext.statusTracker()
+    stages = [
+        tracker.getStageInfo(s)
+        for j in tracker.getJobIdsForGroup("fit-driver-init")
+        for s in tracker.getJobInfo(j).stageIds
+    ]
+    assert [s.numTasks for s in stages] == [1, 1], stages
     jobs, plans = _jobs_and_plans(spark, "fit-driver-lloyd", lloyd)
-    assert jobs == 1 and not any("MapInArrow" in p for p in plans), plans
+    assert jobs == 0, plans
     jobs, plans = _jobs_and_plans(spark, "fit-driver-read", got["out"].collect)
     assert not any("MapInArrow" in p or "Python" in p for p in plans), plans
 
@@ -829,7 +841,7 @@ def test_fit_within_budget_runs_on_the_driver(spark, tmp_path):
 def test_driver_fit_is_independent_of_input_split(spark, tmp_path, monkeypatch):
     """The driver fit sorts the collected rows by vec_id before folding,
     so one input file and four (holding the rows in reverse id order,
-    which the collect returns in shuffle-block order) give a
+    which the collect returns in file-split order) give a
     bit-identical init, centroids and assignment, and three runs on one
     input are bit-identical."""
     from flink_streaming_kmeans_spark.operators import kmeans as km
@@ -845,6 +857,70 @@ def test_driver_fit_is_independent_of_input_split(spark, tmp_path, monkeypatch):
         assert r["init"].tobytes() == runs[0]["init"].tobytes()
         assert r["final"].tobytes() == runs[0]["final"].tobytes()
         assert r["assign"] == runs[0]["assign"]
+
+
+def test_lloyd_takes_the_rows_init_read(spark, tmp_path, monkeypatch):
+    """kmeans_parallel_init's pair carries the rows it read on the driver
+    to a lloyd_iterate on the same DataFrame object, which then runs no
+    Spark job. A plain tuple of the pair, and a second read of the same
+    path, each make Lloyd run its own bounded collect (1 job); the
+    three fits give byte-equal centroids and identical assignments.
+    Under a budget of 0 init carries no rows, and Lloyd runs the
+    executor path's jobs either way. The pair unpacks as before, and
+    pickles and copies as a plain 2-tuple."""
+    import copy
+    import pickle
+
+    from flink_streaming_kmeans_spark.operators import kmeans as km
+
+    x, _ = _clustered_points(np.random.default_rng(11), 800, 4, 8, 0.1)
+    path = str(tmp_path / "in")
+    df = _write_points(spark, path, np.arange(len(x)), x)
+    init = km.kmeans_parallel_init(df, k=4)
+    C, cids = init
+    assert init.batches is not None
+    assert np.array(init[0]).tobytes() == C.tobytes()
+    for plain in (pickle.loads(pickle.dumps(init)), copy.deepcopy(init)):
+        assert type(plain) is tuple and len(plain) == 2
+        assert plain[0].tobytes() == C.tobytes()
+        assert plain[1].tolist() == cids.tolist()
+
+    assign = km._FitInput.assign
+
+    def spy_assign(self, C, *a):
+        fits[-1]["final"] = C.copy()
+        return assign(self, C, *a)
+
+    monkeypatch.setattr(km._FitInput, "assign", spy_assign)
+    fits = []
+
+    def lloyd(data, start):
+        """Lloyd's job count; its centroids and assignment go to ``fits``."""
+        fit = {}
+        fits.append(fit)
+
+        def run():
+            fit["out"] = km.lloyd_iterate(spark, data, k=4, max_iter=4, tol=0.0, init=start)
+
+        jobs, _ = _jobs_and_plans(spark, f"handoff-{len(fits)}", run)
+        fit["assign"] = {r.vec_id: r.cluster_id for r in fit["out"].collect()}
+        return jobs
+
+    assert lloyd(df, init) == 0
+    assert lloyd(df, tuple(init)) == 1
+    assert lloyd(spark.read.parquet(path), init) == 1
+    for f in fits[1:]:
+        assert f["final"].tobytes() == fits[0]["final"].tobytes()
+        assert f["assign"] == fits[0]["assign"]
+    assert sorted(fits[0]["assign"]) == list(range(len(x)))
+
+    monkeypatch.setattr(km, "_DRIVER_ELEMS", 0)
+    exe = km.kmeans_parallel_init(df, k=4)
+    assert exe.batches is None
+    assert exe[0].tobytes() == C.tobytes()
+    # 4 iterations and the assignment's checkpoint: one job each.
+    assert lloyd(df, exe) == lloyd(df, tuple(exe)) == 5
+    assert fits[-1]["assign"] == fits[-2]["assign"] == fits[0]["assign"]
 
 
 @pytest.mark.parametrize("budget", ["driver", "executor"])
