@@ -18,27 +18,31 @@ streaming iteration, so the idiomatic decomposition (SURVEY.md §7) is:
   ``streaming.kmeans.StreamingKMeans``: ONE Arrow-native kernel —
   :func:`_decode` (zero-copy embedding matrix), :func:`_score` (argmax
   X·Cᵀ − bias) and :func:`_accumulate` (per-centroid partial sums).
-  Each pass body is a function of a :func:`_model` dict —
-  :func:`_partials`, :func:`_round_rows`, :func:`_assign_rows` — that
-  the driver calls directly and a thin ``mapInArrow`` combiner calls
-  after loading the model from its side file (:class:`_ModelFile`).
-  A k-means|| round is one pass too: :func:`_round_rows` returns a
-  partition's Σd² with the rows that pass :func:`_accept` under its
-  running Σd², a superset of the exact sample that the driver re-tests
-  with the true sum.
+  Each pass body is a function of a :func:`_model` dict and an
+  iterator of Arrow batches — :func:`_stats_rows`, :func:`_round_rows`,
+  :func:`_assign_rows`, :func:`_reassign_rows` — that the driver calls
+  directly. A worker runs it by one route: :func:`_kernel_pass` plans
+  the ``mapInArrow`` pass, and its one combiner, :func:`_combiner`,
+  loads the model from the side file (:class:`_ModelFile`) and calls
+  the body. A k-means|| round is one pass too: :func:`_round_rows`
+  returns a partition's Σd² with the rows that pass :func:`_accept`
+  under its running Σd², a superset of the exact sample that the
+  driver re-tests with the true sum.
 
-Where a pass runs is decided once per fit (or micro-batch) by one gate,
-:func:`_driver_table`: an input of at most ``_DRIVER_ELEMS`` embedding
-values is read with one bounded Arrow collect and every pass of the
-fit runs on the driver, with no Python worker, no side file and no
-cache (:class:`_FitInput`; the fit's assignment comes back as a local
-frame). k-means|| init hands the rows it read to the Lloyd fit that
-follows on the same DataFrame (:class:`_Init`), so a whole fit reads
-its input once. A larger input, or one with no size estimate, runs
-each pass as a ``mapInArrow`` pass over the cached input, planned once
-per fit and re-collected every round; only the side file's k×d matrix
-changes between rounds: constant-size plans, no literal or lineage
-growth (SURVEY.md §7 hard-part 1).
+Where a pass runs is decided once per input by one gate,
+:func:`_driver_table`, and one owner, :class:`_FitInput`, which every
+fit and every untracked ``StreamingKMeans`` micro-batch runs through.
+An input of at most ``_DRIVER_ELEMS`` embedding values is read with
+one bounded Arrow collect, sorted by vec_id, and every pass runs on the
+driver, with no Python worker, no side file and no cache (a fit's
+assignment comes back as a local frame). k-means|| init hands the rows
+it read to the Lloyd fit that follows on the same DataFrame
+(:class:`_Init`), so a whole fit reads its input once. A larger input,
+or one with no size estimate, runs each pass through
+:func:`_kernel_pass` over the input (cached for a fit), planned once
+per input and re-collected every round; only the side file's k×d
+matrix changes between rounds: constant-size plans, no literal or
+lineage growth (SURVEY.md §7 hard-part 1).
 
 Embeddings are unit-normalized (SURVEY.md §1.3), so dot product ==
 cosine similarity; "nearest" = argmax dot, tie-broken on lowest
@@ -250,11 +254,12 @@ def update(assigned: DataFrame) -> DataFrame:
 
 
 class _ModelFile:
-    """The one channel by which a model reaches the combiners: an npz
-    side file each task loads at start. Everything that varies per
-    call (C, cids, the Euclidean flag, k-means||'s ell/salt) goes
-    in it, so a loop plans its DataFrames ONCE and re-collects them
-    every round (r13: re-planning cost ~150 ms per Lloyd round).
+    """The one channel by which a model reaches a worker's pass: an npz
+    side file :func:`_combiner` loads at the start of each task.
+    Everything that varies per call (C, cids, the Euclidean flag,
+    k-means||'s ell/salt) goes in it, so a loop plans its DataFrames
+    ONCE and re-collects them every round (r13: re-planning cost
+    ~150 ms per Lloyd round).
     ``publish`` swaps atomically; leaving the ``with`` block unlinks
     the file, so leave it only after the last action that could
     recompute from it. Driver-local scratch suits local mode; a cluster
@@ -301,6 +306,20 @@ def _load_model(path: str) -> dict:
     """The published model (:meth:`_ModelFile.publish`) as a dict."""
     with np.load(path) as f:
         return _model(**{name: f[name] for name in f.files})
+
+
+def _combiner(body, path, batches):
+    """The one mapInArrow combiner: a partition's rows through a pass
+    body — :func:`_stats_rows`, :func:`_round_rows`, :func:`_assign_rows`
+    or :func:`_reassign_rows` — under the model published at ``path``."""
+    yield from body(_load_model(path), batches)
+
+
+def _kernel_pass(df: DataFrame, body, schema: str, model: _ModelFile) -> DataFrame:
+    """The one planner of a worker pass: ``body`` over ``df``'s
+    partitions, reading its model from the side file ``model``, which
+    must outlive every action on the result."""
+    return df.mapInArrow(partial(_combiner, body, model.path), schema)
 
 
 def _euclidean_model(C) -> dict:
@@ -384,8 +403,8 @@ def _fold_partials(rows, cids, d: int):
 def _partials(batches, m):
     """Per-centroid (sums, counts) of the Arrow batches' embeddings
     under model ``m``, folded batch by batch in arrival order — the one
-    copy of the assign-and-sum math, run by :func:`_stats_combiner` in
-    a worker and by ``StreamingKMeans`` on the driver."""
+    copy of the assign-and-sum math, run by :func:`_stats_rows` in a
+    worker and by :meth:`_FitInput.stats` on the driver."""
     k, d = m["C"].shape
     sums = np.zeros((k, d))
     counts = np.zeros(k, dtype="int64")
@@ -397,12 +416,11 @@ def _partials(batches, m):
     return sums, counts
 
 
-def _stats_combiner(path, batches):
+def _stats_rows(m, batches):
     """Per-partition (cid, psum, n) partials, k rows per partition —
     the map-side combine that makes an iteration shuffle-free."""
     import pyarrow as pa
 
-    m = _load_model(path)
     sums, counts = _partials(batches, m)
     yield pa.RecordBatch.from_pydict(
         {"cid": m["cids"].astype("int32"), "psum": _list_column(sums), "n": counts}
@@ -421,10 +439,6 @@ def _assign_rows(m, batches):
                 "cluster_id": m["cids"][best].astype("int32"),
             }
         )
-
-
-def _assign_combiner(path, batches):
-    yield from _assign_rows(_load_model(path), batches)
 
 
 def _d2(X, m):
@@ -478,10 +492,6 @@ def _round_rows(m, batches):
             "embedding": pa.nulls(1, pa.list_(pa.float64())),
         }
     )
-
-
-def _round_combiner(path, batches):
-    yield from _round_rows(_load_model(path), batches)
 
 
 def _reassign_rows(m, batches):
@@ -546,10 +556,6 @@ def _reassign_rows(m, batches):
             "n": np.append(counts, np.zeros(m_out, dtype="int64")),
         }
     )
-
-
-def _reassign_combiner(path, batches):
-    yield from _reassign_rows(_load_model(path), batches)
 
 
 # -- where a fit's passes run ------------------------------------------
@@ -632,9 +638,10 @@ def _driver_table(df: DataFrame, cols, d: int | None = None):
 
 
 class _FitInput:
-    """One fit's (vec_id, embedding) input and the one place its kernel
-    passes run, chosen once by :func:`_driver_table` (``d``: the model
-    width, or None to probe it).
+    """One fit's (vec_id, embedding) input — or one untracked
+    StreamingKMeans micro-batch's — and the one place its kernel passes
+    run, chosen once by :func:`_driver_table` (``d``: the model width,
+    or None to probe it).
 
     Within the budget, ``batches`` holds the collected rows as one Arrow
     batch, and every pass calls its body on the driver. The rows are
@@ -642,7 +649,7 @@ class _FitInput:
     fit does not depend on how the input is split. A caller that holds
     those rows already (:meth:`_Init.rows_of`) passes them as
     ``batches`` and skips the gate. Otherwise every pass is a
-    mapInArrow combiner over the cached input, planned once and
+    :func:`_kernel_pass` over the cached input, planned once and
     re-collected with the model published to the side file.
     An input the caller cached (``storageLevel``) is used as is and
     left cached, so a caller that fits twice on one input builds one
@@ -678,15 +685,15 @@ class _FitInput:
             if self._own:
                 self._cached.unpersist()
 
-    def _pass(self, combiner, cols, schema, **model):
-        """Publish the model; return the combiner's pass over the cached
-        input, planned on first use."""
+    def _pass(self, body, cols, schema, **model):
+        """Publish the model; return the pass of ``body`` over the
+        cached input, planned on first use."""
         self._model.publish(**model)
-        if combiner not in self._passes:
-            self._passes[combiner] = self._cached.select(*cols).mapInArrow(
-                partial(combiner, self._model.path), schema
+        if body not in self._passes:
+            self._passes[body] = _kernel_pass(
+                self._cached.select(*cols), body, schema, self._model
             )
-        return self._passes[combiner]
+        return self._passes[body]
 
     def seed(self):
         """The lowest-vec_id row as a 1×d matrix, or None when empty."""
@@ -704,9 +711,9 @@ class _FitInput:
         if self.batches is not None:
             return _partials(self.batches, _model(C, cids, euclidean))
         # select("embedding"): an opaque mapInArrow defeats column
-        # pruning (guide §4.1), and the combiner never reads vec_id.
+        # pruning (guide §4.1), and the stats body never reads vec_id.
         df = self._pass(
-            _stats_combiner, ("embedding",), _STATS_SCHEMA,
+            _stats_rows, ("embedding",), _STATS_SCHEMA,
             C=C, cids=cids, euclidean=euclidean,
         )
         return _fold_partials(df.collect(), cids, C.shape[1])
@@ -720,7 +727,7 @@ class _FitInput:
         if self.batches is not None:
             out = _round_rows(_model(**model), self.batches)
             return pa.Table.from_batches(list(out))
-        return self._pass(_round_combiner, _FIT_COLS, _ROUND_SCHEMA, **model).toArrow()
+        return self._pass(_round_rows, _FIT_COLS, _ROUND_SCHEMA, **model).toArrow()
 
     def assign(self, C, cids, euclidean=False) -> DataFrame:
         """(vec_id, cluster_id) of every row under (C, cids), depending
@@ -737,7 +744,7 @@ class _FitInput:
                 pa.Table.from_batches(list(out), schema=schema)
             )
         return self._pass(
-            _assign_combiner, _FIT_COLS, _CLUSTER_ID_SCHEMA,
+            _assign_rows, _FIT_COLS, _CLUSTER_ID_SCHEMA,
             C=C, cids=cids, euclidean=euclidean,
         ).localCheckpoint(eager=True)
 

@@ -8,7 +8,7 @@ operators/kmeans.py's iteration discipline:
 - The only distributed pass is moment collection: each partition
   emits ONE row of partial statistics (count, Σx, flattened Σx·xᵀ)
   through Arrow/mapInPandas with a numpy ``X.T @ X`` — the same
-  partial-stats shape the k-means `_stats_combiner` uses, so the shuffle
+  partial-stats shape the k-means `_stats_rows` body uses, so the shuffle
   carries P rows of ~d² doubles, independent of N. At 100 TB this is
   one scan; the driver state is d + d² + 1 numbers.
 - The eigendecomposition runs on the DRIVER on the d×d covariance

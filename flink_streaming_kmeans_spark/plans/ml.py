@@ -125,15 +125,18 @@ def q_kmeans_stream(spark, sf_dir):
     micro-batch files by ``vec_id mod 5``, copied into the source dir
     in batch order with increasing mtimes; a file-source readStream
     taking one file per trigger + ``availableNow`` delivers exactly
-    5 micro-batches to ``foreachBatch(StreamingKMeans)`` (the shared
-    k-means kernel per batch — on the driver from one bounded Arrow
-    collect for a batch within the kernel's driver budget, else one
-    narrow mapInArrow pass with k×P partial rows to the driver — then
-    the MacQueen batch update; streaming/kmeans.py). Output: one
-    row per centroid (cluster_id, n_points, centroid_norm) — k rows
-    always, the rows-tier contract. No SQL oracle: iterative streaming
-    state is outside DuckDB's model (SURVEY §2 rows-tier rule); Lloyd
-    parity and checkpoint-restart are asserted in tests/test_streaming.
+    5 micro-batches of (vec_id, embedding) rows to
+    ``foreachBatch(StreamingKMeans)``. Each batch runs through the
+    kernel's one fit input (operators/kmeans._FitInput): folded on the
+    driver in vec_id order from one bounded Arrow collect within the
+    kernel's driver budget, else one narrow worker pass of the kernel's
+    one combiner with k×P partial rows to the driver; then the MacQueen
+    batch update (streaming/kmeans.py). Output: one row per centroid
+    (cluster_id, n_points, centroid_norm) — k rows always, the
+    rows-tier contract. No SQL oracle: iterative streaming state is
+    outside DuckDB's model (SURVEY §2 rows-tier rule), so
+    tests/test_streaming pins the values against a numpy MacQueen run
+    and asserts Lloyd parity and checkpoint-restart.
     """
     import numpy as np
 

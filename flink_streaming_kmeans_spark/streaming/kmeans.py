@@ -11,11 +11,14 @@ Spark Structured Streaming has no iteration edge; the idiomatic
 replacement (SURVEY.md §2.9/§7) is ``foreachBatch`` + driver-held
 state: per micro-batch, the shared k-means kernel (operators/kmeans.py)
 computes vectorized assignments and per-cluster (sum, count) partials
-against the CURRENT centroids. An untracked batch within the driver
-budget is folded on the driver from one bounded Arrow collect, with no
-Python worker; a larger one, and every tracked batch, takes one narrow
-mapInArrow pass. The budget and its size estimate are the kernel's one
-gate (operators/kmeans._driver_table), which every batch fit uses too.
+against the CURRENT centroids. An untracked batch is a one-pass fit
+input (operators/kmeans._FitInput, which every batch fit runs through
+too): within the kernel's driver budget it is folded on the driver
+from one bounded Arrow collect in vec_id order, with no Python worker;
+a larger one takes one narrow worker pass. Every tracked batch takes
+one worker pass of the reassignment body after its state join. Every
+worker pass is planned by the kernel's one planner
+(operators/kmeans._kernel_pass) and runs its one combiner.
 The driver then applies the batch MacQueen update
 
     c' = (c * n + batch_sum) / (n + batch_count)
@@ -47,31 +50,28 @@ keyed-state analog this container admits;
 transformWithStateInPandas's protobuf runner is broken here,
 SCALE.md).
 
-Scale: at most the gate's budget of embedding values plus one row
-ever cross the driver (the untracked size probe); a larger untracked batch
-and every tracked batch return only k×P-row partials (per-cluster
-delta partials, after one join + scan when tracked). Driver state is
-the k×d matrix + k counts. Assignment state is O(distinct points) ON
-DISK, sharded by the join's shuffle partitioning.
+Scale: at most the gate's budget of embedding values (with their
+vec_ids) plus one row ever cross the driver (the untracked size
+probe); a larger untracked batch and every tracked batch return only
+k×P-row partials (per-cluster delta partials, after one join + scan
+when tracked). Driver state is the k×d matrix + k counts. Assignment
+state is O(distinct points) ON DISK, sharded by the join's shuffle
+partitioning.
 """
 
 from __future__ import annotations
 
 import os
-from functools import partial
 
 from pyspark.sql import DataFrame
 
 from ..operators.kmeans import (
     _DELTA_SCHEMA,
-    _STATS_SCHEMA,
-    _driver_table,
+    _FitInput,
     _fold_partials,
-    _model,
+    _kernel_pass,
     _ModelFile,
-    _partials,
-    _reassign_combiner,
-    _stats_combiner,
+    _reassign_rows,
     _write_npz,
 )
 
@@ -80,9 +80,12 @@ _ASSIGN_SCHEMA = "vec_id bigint, cid int"
 
 class StreamingKMeans:
     """Driver-held online k-means centroid state, updated per
-    micro-batch; assignment memory (when tracked) lives in parquet
-    generations ``state-v{gen}`` under ``assign_dir``, which tracking
-    requires and whose lifetime the caller owns.
+    micro-batch of (vec_id, embedding) rows; assignment memory (when
+    tracked) lives in parquet generations ``state-v{gen}`` under
+    ``assign_dir``, which tracking requires and whose lifetime the
+    caller owns. Within the driver budget the untracked fold sums a
+    batch in vec_id order, so it does not depend on how the batch is
+    split or ordered; a batch with no rows is not counted.
 
     ``state_path`` makes the centroid state durable across query
     restarts: after every applied batch the (C, S, n, cids, meta)
@@ -270,8 +273,8 @@ class StreamingKMeans:
                 # Order among copies is moot: a re-arrival carries the
                 # same vector (module contract), so argmax agrees.
                 joined = joined.repartition("vec_id")
-                out = joined.mapInArrow(
-                    partial(_reassign_combiner, model.path), _DELTA_SCHEMA
+                out = _kernel_pass(
+                    joined, _reassign_rows, _DELTA_SCHEMA, model
                 ).persist()
                 try:
                     # k rows per partition; may carry negative removals.
@@ -314,32 +317,13 @@ class StreamingKMeans:
 
     def _delta(self, batch_df: DataFrame):
         """Untracked per-cluster (sums, counts) of the batch, or None
-        for a batch with nothing to fold.
-
-        A batch within the driver budget (operators/kmeans.
-        :func:`_driver_table`, the gate every fit uses too) is folded on
-        the driver from its one bounded Arrow collect, with no side file
-        and no Python worker. A larger one takes one mapInArrow pass of
-        the same kernel on the executors."""
-        d = self.C.shape[1]
-        # embedding only: the combiner never reads vec_id (guide §4.1 —
-        # opaque fns defeat column pruning; project first).
-        table = _driver_table(batch_df, ("embedding",), d)
-        if table is not None:
-            if not table.num_rows:
-                return None
-            return _partials(
-                table.to_batches(), _model(self.C, self.cids, self.euclidean)
-            )
-        emb = batch_df.select("embedding")
-        with _ModelFile() as model:
-            model.publish(self.C, self.cids, self.euclidean)
-            partials = emb.mapInArrow(
-                partial(_stats_combiner, model.path), _STATS_SCHEMA
-            ).collect()
-        if not partials:
-            return None
-        return _fold_partials(partials, self.cids, d)
+        for a batch with no rows. The batch is a one-pass fit input
+        (operators/kmeans._FitInput): within the driver budget it is
+        folded on the driver from one bounded Arrow collect, in vec_id
+        order; a larger one takes one worker pass."""
+        with _FitInput(batch_df, self.C.shape[1], cache=False) as fit:
+            sums, counts = fit.stats(self.C, self.cids, self.euclidean)
+        return None if counts.sum() == 0 else (sums, counts)
 
     def foreach_batch(self):
         def fn(batch_df, batch_id):

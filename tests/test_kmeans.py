@@ -86,13 +86,12 @@ def test_kernel_partials_bit_equal_numpy(spark):
     decode or the side-file model would silently change which Lloyd
     fixpoint the loop reaches. Small Arrow batches put several batches
     in every partition; both metrics are checked."""
-    from functools import partial
-
     from flink_streaming_kmeans_spark.functions.vector import emb_finite
     from flink_streaming_kmeans_spark.operators.kmeans import (
         _STATS_SCHEMA,
+        _kernel_pass,
         _ModelFile,
-        _stats_combiner,
+        _stats_rows,
         init_centroids,
     )
     from flink_streaming_kmeans_spark.sources.loader import load_table
@@ -122,8 +121,8 @@ def test_kernel_partials_bit_equal_numpy(spark):
             bias = 0.5 * (C * C).sum(axis=1) if euclidean else 0.0
             with _ModelFile() as model:
                 model.publish(C, cids, euclidean)
-                got = e.select("embedding").mapInArrow(
-                    partial(_stats_combiner, model.path), _STATS_SCHEMA
+                got = _kernel_pass(
+                    e.select("embedding"), _stats_rows, _STATS_SCHEMA, model
                 ).collect()
             assert len(got) == len(parts) * len(cids)
             for p, X in enumerate(parts):
@@ -186,8 +185,9 @@ def test_reassign_combiner_equals_sequential_overlay(seed):
     import pyarrow as pa
 
     from flink_streaming_kmeans_spark.operators.kmeans import (
+        _combiner,
         _ModelFile,
-        _reassign_combiner,
+        _reassign_rows,
     )
 
     rng = np.random.default_rng(seed)
@@ -217,7 +217,7 @@ def test_reassign_combiner_equals_sequential_overlay(seed):
     with _ModelFile() as model:
         model.publish(C, cids)
         out = pa.Table.from_batches(
-            list(_reassign_combiner(model.path, iter(batches)))
+            list(_combiner(_reassign_rows, model.path, iter(batches)))
         ).to_pylist()
     deltas = [r for r in out if r["kind"] == 0]
     assert [r["cid"] for r in deltas] == cids.tolist()
@@ -301,12 +301,14 @@ def _vectors(spark, tmp_path, n, d=8, seed=0, same=False):
 
 
 def _skm_paths(monkeypatch):
-    """The streaming module with spies on both untracked paths: the
-    driver path's kernel fold and the executor path's side file."""
+    """The streaming module, with spies on both untracked paths of the
+    fit input it runs through: the driver path's kernel fold and the
+    executor path's side file."""
+    from flink_streaming_kmeans_spark.operators import kmeans as km
     from flink_streaming_kmeans_spark.streaming import kmeans as skm_mod
 
     calls = {"driver": 0, "executor": 0}
-    fold, model_file = skm_mod._partials, skm_mod._ModelFile
+    fold, model_file = km._partials, km._ModelFile
 
     def spy_fold(*a):
         calls["driver"] += 1
@@ -317,8 +319,8 @@ def _skm_paths(monkeypatch):
             calls["executor"] += 1
             super().__init__()
 
-    monkeypatch.setattr(skm_mod, "_partials", spy_fold)
-    monkeypatch.setattr(skm_mod, "_ModelFile", SpyModelFile)
+    monkeypatch.setattr(km, "_partials", spy_fold)
+    monkeypatch.setattr(km, "_ModelFile", SpyModelFile)
     return skm_mod, calls
 
 
@@ -383,6 +385,56 @@ def test_driver_gate_boundary(spark, tmp_path, monkeypatch):
         C_other, ran = run(df, X, other_gate)
         assert ran == [other], (n, ran)
         assert C.tobytes() == C_other.tobytes(), n
+
+
+@pytest.mark.parametrize("path", ["driver", "executor"])
+def test_empty_untracked_batch_is_not_counted(spark, tmp_path, monkeypatch, path):
+    """A batch with no rows moves nothing and is not counted, on both
+    untracked paths: the driver fold of no rows and the executor pass
+    that returns k zero partials per partition give the same answer."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from flink_streaming_kmeans_spark.operators import kmeans as km
+
+    skm_mod, calls = _skm_paths(monkeypatch)
+    if path == "executor":
+        monkeypatch.setattr(km, "_DRIVER_ELEMS", 0)
+    file = str(tmp_path / "empty.parquet")
+    schema = pa.schema([("vec_id", pa.int64()), ("embedding", pa.list_(pa.float64()))])
+    pq.write_table(schema.empty_table(), file)
+    df = spark.read.schema("vec_id bigint, embedding array<double>").parquet(file)
+    C = np.eye(3, 4)
+    skm = skm_mod.StreamingKMeans(C, np.arange(3))
+    skm.update_batch(df)
+    assert calls[path] == 1, calls
+    assert skm.batches_seen == 0
+    assert skm.C.tobytes() == C.tobytes() and int(skm.n.sum()) == 0
+
+
+def test_driver_fold_does_not_depend_on_row_order(spark, tmp_path, monkeypatch):
+    """The untracked driver path folds a batch in vec_id order, as a
+    fit does: one 400-row batch written in vec_id order and written
+    shuffled gives byte-equal (S, n)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    skm_mod, calls = _skm_paths(monkeypatch)
+    k = 5
+    ordered, X = _vectors(spark, tmp_path, 400)
+    perm = np.random.default_rng(1).permutation(400)
+    file = str(tmp_path / "shuffled.parquet")
+    emb = pa.FixedSizeListArray.from_arrays(pa.array(X[perm].ravel()), X.shape[1])
+    pq.write_table(pa.table({"vec_id": perm, "embedding": emb}), file)
+    shuffled = spark.read.schema("vec_id bigint, embedding array<double>").parquet(file)
+    got = []
+    for df in (ordered, shuffled):
+        skm = skm_mod.StreamingKMeans(X[:k], np.arange(k))
+        skm.update_batch(df)
+        got.append((skm.S.tobytes(), skm.n.tobytes()))
+    assert calls == {"driver": 2, "executor": 0}
+    assert int(skm.n.sum()) == 400
+    assert got[0] == got[1]
 
 
 def _jobs_and_plans(spark, group, action):

@@ -25,18 +25,27 @@ under one per-process root removed at exit. The fourth test fails if
 any package module other than session.py picks a temp location itself.
 
 The k-means math has one copy: operators/kmeans.py's ``_decode``,
-``_score`` and ``_accumulate``, which the mapInArrow combiners and the
-StreamingKMeans driver path reach through ``_partials`` and friends.
+``_score`` and ``_accumulate``, which every caller reaches through the
+pass bodies (``_partials``, ``_stats_rows`` and friends), on the driver
+or in a worker.
 The fifth test fails if any other package module calls one of them, so
 a second copy of the kernel cannot grow beside a caller.
 
 Whether a kernel pass runs on the driver is decided by one gate,
 operators/kmeans._driver_table: one budget (``_DRIVER_ELEMS``) and one
 bounded collect (``.limit(rows + 1).toArrow()``), used by every batch
-fit and by StreamingKMeans. The sixth test fails if any other package
+fit and by StreamingKMeans through ``_FitInput``. The sixth test fails if any other package
 module reads the budget or collects with ``.toArrow(``, or if the
 kernel module reads the budget or makes a bounded Arrow collect
 outside the gate, so a second budget or probe cannot drift from it.
+
+A worker runs a kernel pass by one route: operators/kmeans.py's
+``_kernel_pass`` plans every ``mapInArrow`` with the one combiner,
+``_combiner``, which loads the model from its side file and calls the
+pass body. The seventh test fails if any other package module calls
+``.mapInArrow(``, if the kernel module calls it outside that planner,
+or if more than one of its functions loads the model, so a second
+combiner or a hand-planned pass cannot grow beside the route.
 """
 
 from __future__ import annotations
@@ -163,7 +172,7 @@ def test_only_the_kernel_calls_its_math():
                     ]
     assert not offenders, (
         "reach the k-means math through operators/kmeans.py (_partials, the "
-        f"combiners) instead of calling its kernel here: {offenders}"
+        f"pass bodies) instead of calling its kernel here: {offenders}"
     )
     with open(os.path.join(REPO, owner)) as f:
         assert call.search(f.read()), "the kernel no longer defines its math"
@@ -222,4 +231,59 @@ def test_one_driver_gate():
     )
     assert {"budget", "bounded collect"} <= set(gate), (
         f"the gate no longer reads the budget and collects: {gate}"
+    )
+
+
+def _calls_by_function(tree, match):
+    """(line, innermost enclosing function) of every call in a module
+    for which ``match(call.func)`` holds; None outside any function."""
+    found = []
+
+    def visit(node, fn):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            fn = node.name
+        elif isinstance(node, ast.Call) and match(node.func):
+            found.append((node.lineno, fn))
+        for child in ast.iter_child_nodes(node):
+            visit(child, fn)
+
+    visit(tree, None)
+    return found
+
+
+def test_one_kernel_pass_route():
+    owner = os.path.join("flink_streaming_kmeans_spark", "operators", "kmeans.py")
+
+    def map_in_arrow(f):
+        return isinstance(f, ast.Attribute) and f.attr == "mapInArrow"
+
+    def load_model(f):
+        name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+        return name == "_load_model"
+
+    offenders = []
+    for root, _, files in os.walk(PKG):
+        for name in sorted(files):
+            rel = os.path.relpath(os.path.join(root, name), REPO)
+            if name.endswith(".py") and rel != owner:
+                with open(os.path.join(REPO, rel)) as f:
+                    tree = ast.parse(f.read())
+                offenders += [
+                    f"{rel}:{line}" for line, _ in _calls_by_function(tree, map_in_arrow)
+                ]
+    with open(os.path.join(REPO, owner)) as f:
+        tree = ast.parse(f.read())
+    planners = _calls_by_function(tree, map_in_arrow)
+    offenders += [
+        f"{owner}:{line} in {fn}" for line, fn in planners if fn != "_kernel_pass"
+    ]
+    assert not offenders, (
+        "plan worker passes through operators/kmeans._kernel_pass instead of "
+        f"calling mapInArrow here: {offenders}"
+    )
+    assert planners, "the planner no longer calls mapInArrow"
+    loaders = sorted({fn for _, fn in _calls_by_function(tree, load_model)})
+    assert len(loaders) == 1, (
+        f"one combiner loads the model, not {loaders}: run a pass body "
+        "through operators/kmeans._combiner"
     )

@@ -1487,3 +1487,51 @@ def test_streaming_kmeans_tracking_requires_assign_dir():
 
     with pytest.raises(ValueError, match="assign_dir"):
         StreamingKMeans([[1.0, 0.0]], [0], track_assignments=True)
+
+
+def test_streaming_registry_queries_pin_their_values(spark, registry):
+    """The two streaming registry queries are rows-only in preflight,
+    so their values are pinned here. ``q_kmeans_stream`` equals a numpy
+    MacQueen run over the same first-k init and the same five
+    ``vec_id mod 5`` batches: cluster ids and counts exactly, each
+    centroid norm to the query's ``mround`` precision (half a unit of
+    its 4th decimal, plus float slack for the fold order). Every row of
+    ``q_kmeans_stream_reassign`` counts one distinct point once, so its
+    Σ n_points is the distinct vec_id count."""
+    import numpy as np
+
+    from flink_streaming_kmeans_spark.functions.vector import emb_finite
+    from flink_streaming_kmeans_spark.sources.loader import load_table
+
+    queries, _ = registry
+    rows = (
+        load_table(spark, SF_SMOKE, "embeddings")
+        .where(F.col("vec_id").isNotNull() & emb_finite("embedding"))
+        .select("vec_id", "embedding")
+        .collect()
+    )
+    rows.sort(key=lambda r: r.vec_id)
+    ids = np.array([r.vec_id for r in rows])
+    X = np.array([list(r.embedding) for r in rows], dtype=np.float64)
+    k = 10
+    C, cids = X[:k].copy(), ids[:k]
+    S, n = np.zeros_like(C), np.zeros(k, dtype="int64")
+    for b in range(5):
+        Xb = X[ids % 5 == b]
+        best = np.argmax(Xb @ C.T, axis=1)
+        for j in range(k):
+            S[j] += Xb[best == j].sum(axis=0)
+            n[j] += int((best == j).sum())
+        nz = n > 0
+        C[nz] = S[nz] / n[nz, None]
+
+    got = queries["q_kmeans_stream"](spark, SF_SMOKE).collect()
+    assert [r.cluster_id for r in got] == sorted(cids.tolist())
+    by = dict(zip(cids.tolist(), zip(n.tolist(), np.linalg.norm(C, axis=1))))
+    for r in got:
+        want_n, want_norm = by[r.cluster_id]
+        assert r.n_points == want_n, r
+        assert abs(r.centroid_norm - want_norm) <= 0.5e-4 + 1e-9, (r, want_norm)
+
+    reassign = queries["q_kmeans_stream_reassign"](spark, SF_SMOKE).collect()
+    assert sum(r.n_points for r in reassign) == len(set(ids.tolist()))
