@@ -24,25 +24,32 @@ streaming iteration, so the idiomatic decomposition (SURVEY.md §7) is:
   directly. A worker runs it by one route: :func:`_kernel_pass` plans
   the ``mapInArrow`` pass, and its one combiner, :func:`_combiner`,
   loads the model from the side file (:class:`_ModelFile`) and calls
-  the body. A k-means|| round is one pass too: :func:`_round_rows`
-  returns a partition's Σd² with the rows that pass :func:`_accept`
-  under its running Σd², a superset of the exact sample that the
-  driver re-tests with the true sum.
+  the body. Per-centroid partials, from a worker or from the driver,
+  come back through one vectorized Arrow fold, :func:`_fold`. A
+  k-means|| round is one pass too: :func:`_round_rows` returns a
+  partition's Σd² with the rows that pass :func:`_accept` under its
+  running Σd², a superset of the exact sample that the driver re-tests
+  with the true sum.
 
-Where a pass runs is decided once per input by one gate,
-:func:`_driver_table`, and one owner, :class:`_FitInput`, which every
-fit and every untracked ``StreamingKMeans`` micro-batch runs through.
-An input of at most ``_DRIVER_ELEMS`` embedding values is read with
-one bounded Arrow collect, sorted by vec_id, and every pass runs on the
-driver, with no Python worker, no side file and no cache (a fit's
-assignment comes back as a local frame). k-means|| init hands the rows
-it read to the Lloyd fit that follows on the same DataFrame
-(:class:`_Init`), so a whole fit reads its input once. A larger input,
-or one with no size estimate, runs each pass through
-:func:`_kernel_pass` over the input (cached for a fit), planned once
-per input and re-collected every round; only the side file's k×d
-matrix changes between rounds: constant-size plans, no literal or
-lineage growth (SURVEY.md §7 hard-part 1).
+Callers outside this module reach the passes through two owners.
+:class:`_FitInput` runs every fit and every untracked
+``StreamingKMeans`` micro-batch. :func:`_reassign_pass` runs a tracked
+micro-batch: one worker pass of :func:`_reassign_rows` over the batch
+joined to its assignment state, folded and handed back with the next
+state generation's rows.
+
+Where a :class:`_FitInput` pass runs is decided once per input by one
+gate, :func:`_driver_table`. An input of at most ``_DRIVER_ELEMS``
+embedding values is read with one bounded Arrow collect, sorted by
+vec_id, and every pass runs on the driver, with no Python worker, no
+side file and no cache (a fit's assignment comes back as a local
+frame). k-means|| init hands the rows it read to the Lloyd fit that
+follows on the same DataFrame (:class:`_Init`), so a whole fit reads
+its input once. A larger input, or one with no size estimate, runs
+each pass through :func:`_kernel_pass` over the input (cached for a
+fit), planned once per input and re-collected every round; only the
+side file's k×d matrix changes between rounds: constant-size plans,
+no literal or lineage growth (SURVEY.md §7 hard-part 1).
 
 Embeddings are unit-normalized (SURVEY.md §1.3), so dot product ==
 cosine similarity; "nearest" = argmax dot, tie-broken on lowest
@@ -67,7 +74,9 @@ from ..functions.vector import dot64, sql_emb_finite
 from ..session import scratch_path
 
 _STATS_SCHEMA = "cid int, psum array<double>, n bigint"
-_DELTA_SCHEMA = "kind int, vec_id bigint, cid int, psum array<double>, n bigint"
+_DELTA_SCHEMA = (
+    "kind int, vec_id bigint, cid int, psum array<double>, n bigint, rows bigint"
+)
 _ROUND_SCHEMA = "cost double, vec_id bigint, d2 double, embedding array<double>"
 _CLUSTER_ID_SCHEMA = "vec_id bigint, cluster_id int"
 # The columns a fit reads.
@@ -258,8 +267,11 @@ class _ModelFile:
     side file :func:`_combiner` loads at the start of each task.
     Everything that varies per call (C, cids, the Euclidean flag,
     k-means||'s ell/salt) goes in it, so a loop plans its DataFrames
-    ONCE and re-collects them every round (r13: re-planning cost
-    ~150 ms per Lloyd round).
+    ONCE and re-collects them every round. A probe of executor-path
+    stats passes (local[4], 32 alternating passes a side) put the
+    saving at 20–40 ms a pass against carrying the model in the
+    closure with a fresh plan: 0.288 vs 0.310 s at 20k×64, 0.373 vs
+    0.401 s at 80k×64 (medians).
     ``publish`` swaps atomically; leaving the ``with`` block unlinks
     the file, so leave it only after the last action that could
     recompute from it. Driver-local scratch suits local mode; a cluster
@@ -387,24 +399,29 @@ def _list_column(rows):
     return pa.ListArray.from_arrays(offsets, pa.array(rows.ravel()))
 
 
-def _fold_partials(rows, cids, d: int):
-    """Driver side: sum per-partition (cid, psum, n) partials into k×d
-    sums and k counts, row j ↔ cids[j]."""
-    pos = {int(c): j for j, c in enumerate(cids)}
+def _fold(table, cids, d: int):
+    """Driver side: the per-centroid (sums, counts) of an Arrow table of
+    (cid, psum, n) partials, row j ↔ cids[j]. One ``np.add.at`` per
+    column adds the rows in arrival order, so the sums are those of a
+    row-by-row loop, bit for bit."""
+    by_cid = np.argsort(cids)
+    j = by_cid[np.searchsorted(cids, table.column("cid").to_numpy(), sorter=by_cid)]
+    psum = table.column("psum").combine_chunks().flatten()
     sums = np.zeros((len(cids), d))
     counts = np.zeros(len(cids), dtype="int64")
-    for r in rows:
-        j = pos[int(r.cid)]
-        sums[j] += np.array(r.psum)
-        counts[j] += int(r.n)
+    np.add.at(sums, j, psum.to_numpy().reshape(len(j), d))
+    np.add.at(counts, j, table.column("n").to_numpy())
     return sums, counts
 
 
-def _partials(batches, m):
-    """Per-centroid (sums, counts) of the Arrow batches' embeddings
-    under model ``m``, folded batch by batch in arrival order — the one
-    copy of the assign-and-sum math, run by :func:`_stats_rows` in a
-    worker and by :meth:`_FitInput.stats` on the driver."""
+def _stats_rows(m, batches):
+    """Per-partition (cid, psum, n) partials, k rows per partition: the
+    embeddings' per-centroid (sums, counts) under model ``m``, folded
+    batch by batch in arrival order — the map-side combine that makes
+    an iteration shuffle-free, and the one copy of the assign-and-sum
+    math, run in a worker and on the driver (:meth:`_FitInput.stats`)."""
+    import pyarrow as pa
+
     k, d = m["C"].shape
     sums = np.zeros((k, d))
     counts = np.zeros(k, dtype="int64")
@@ -413,15 +430,6 @@ def _partials(batches, m):
         s, c = _accumulate(X, _score(X, m)[0], k)
         sums += s
         counts += c
-    return sums, counts
-
-
-def _stats_rows(m, batches):
-    """Per-partition (cid, psum, n) partials, k rows per partition —
-    the map-side combine that makes an iteration shuffle-free."""
-    import pyarrow as pa
-
-    sums, counts = _partials(batches, m)
     yield pa.RecordBatch.from_pydict(
         {"cid": m["cids"].astype("int32"), "psum": _list_column(sums), "n": counts}
     )
@@ -505,15 +513,17 @@ def _reassign_rows(m, batches):
     vectorized through each row's previous-occurrence index over the
     whole partition (the caller co-locates every copy of a vec_id).
     Emits kind=0 rows — k (cid, psum, n) delta partials, possibly
-    negative — and kind=1 rows — ONE (vec_id, cid) per distinct vec_id,
-    its last copy's cluster, written to the next state generation in
-    Spark (two rows for one point would fan out the next join)."""
+    negative, each with the ``rows`` that arrived into its cluster, so
+    the partition's arrival count rides in the same rows — and kind=1
+    rows — ONE (vec_id, cid) per distinct vec_id, its last copy's
+    cluster, written to the next state generation in Spark (two rows
+    for one point would fan out the next join)."""
     import pyarrow as pa
 
     cids = m["cids"]
     k, d = m["C"].shape
     sums = np.zeros((k, d))
-    counts = np.zeros(k, dtype="int64")
+    counts = rows = np.zeros(k, dtype="int64")
     batches = [b for b in batches if b.num_rows]
     out_ids = out_cids = np.zeros(0, dtype="int64")
     if batches:
@@ -536,12 +546,12 @@ def _reassign_rows(m, batches):
         prev = np.zeros(len(ids), dtype=np.intp)
         prev[srt[1:]] = srt[:-1]
         removed = repeat | has_old
-        sums, counts = _accumulate(X, best, k)
+        sums, rows = _accumulate(X, best, k)
         rm_sums, rm_counts = _accumulate(
             X[removed], np.where(repeat, best[prev], old_pos)[removed], k
         )
         sums -= rm_sums
-        counts -= rm_counts
+        counts = rows - rm_counts
         last = srt[np.append(~same, True)]
         out_ids, out_cids = ids[last], cids[best[last]]
     m_out = len(out_ids)
@@ -554,8 +564,42 @@ def _reassign_rows(m, batches):
                 [_list_column(sums), pa.nulls(m_out, pa.list_(pa.float64()))]
             ),
             "n": np.append(counts, np.zeros(m_out, dtype="int64")),
+            "rows": np.append(rows, np.zeros(m_out, dtype="int64")),
         }
     )
+
+
+@contextlib.contextmanager
+def _reassign_pass(joined: DataFrame, C, cids, euclidean: bool = False):
+    """One tracked ``StreamingKMeans`` batch through
+    :func:`_reassign_rows`, in one worker pass. ``joined`` is the
+    batch's (vec_id, embedding) rows LEFT JOINED against the assignment
+    state, the state's cid renamed ``old_cid``. Yields ``(delta,
+    assignments)``: the batch's per-centroid (sums, counts), possibly
+    negative, folded by :func:`_fold`, or None when no row arrived; and
+    the (vec_id, cid) rows of the next state generation as a DataFrame
+    over the pass. The pass is persisted, so the fold and the caller's
+    one action on ``assignments`` run it once; its cache and side file
+    go when the ``with`` block ends, so act on ``assignments`` inside
+    it."""
+    with _ModelFile() as model:
+        model.publish(C, cids, euclidean)
+        # Co-locate every copy of a vec_id in ONE combiner partition
+        # (review r6): a broadcast state join keeps the scan
+        # partitioning, and a duplicate spanning two splits would be
+        # removed twice and commit two state rows. Order among copies
+        # is moot: a re-arrival carries the same vector, so argmax
+        # agrees.
+        out = _kernel_pass(
+            joined.repartition("vec_id"), _reassign_rows, _DELTA_SCHEMA, model
+        ).persist()
+        try:
+            partials = out.where(F.col("kind") == 0).toArrow()
+            arrived = partials.column("rows").to_numpy().sum()
+            delta = _fold(partials, cids, C.shape[1]) if arrived else None
+            yield delta, out.where(F.col("kind") == 1).select("vec_id", "cid")
+        finally:
+            out.unpersist()
 
 
 # -- where a fit's passes run ------------------------------------------
@@ -706,28 +750,33 @@ class _FitInput:
         rows = self._cached.orderBy("vec_id").limit(1).collect()
         return np.array([list(rows[0].embedding)], dtype="float64") if rows else None
 
+    def _rows(self, body, cols, schema, **model):
+        """``body``'s rows under ``model`` as one Arrow table, partitions
+        in order: run over ``batches`` on the driver, else the pass over
+        the cached input (its ``cols``, output ``schema``)."""
+        import pyarrow as pa
+
+        if self.batches is not None:
+            return pa.Table.from_batches(list(body(_model(**model), self.batches)))
+        return self._pass(body, cols, schema, **model).toArrow()
+
     def stats(self, C, cids, euclidean=False):
         """Per-centroid (sums, counts) of the input under (C, cids)."""
-        if self.batches is not None:
-            return _partials(self.batches, _model(C, cids, euclidean))
         # select("embedding"): an opaque mapInArrow defeats column
         # pruning (guide §4.1), and the stats body never reads vec_id.
-        df = self._pass(
+        table = self._rows(
             _stats_rows, ("embedding",), _STATS_SCHEMA,
             C=C, cids=cids, euclidean=euclidean,
         )
-        return _fold_partials(df.collect(), cids, C.shape[1])
+        return _fold(table, cids, C.shape[1])
 
     def round(self, C, ell, salt):
         """One k-means|| round's rows (:func:`_round_rows`) as one Arrow
         table, partitions in order."""
-        import pyarrow as pa
-
-        model = dict(C=C, cids=np.arange(len(C)), euclidean=True, ell=ell, salt=salt)
-        if self.batches is not None:
-            out = _round_rows(_model(**model), self.batches)
-            return pa.Table.from_batches(list(out))
-        return self._pass(_round_rows, _FIT_COLS, _ROUND_SCHEMA, **model).toArrow()
+        return self._rows(
+            _round_rows, _FIT_COLS, _ROUND_SCHEMA,
+            C=C, cids=np.arange(len(C)), euclidean=True, ell=ell, salt=salt,
+        )
 
     def assign(self, C, cids, euclidean=False) -> DataFrame:
         """(vec_id, cluster_id) of every row under (C, cids), depending

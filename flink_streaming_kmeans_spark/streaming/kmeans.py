@@ -11,14 +11,17 @@ Spark Structured Streaming has no iteration edge; the idiomatic
 replacement (SURVEY.md §2.9/§7) is ``foreachBatch`` + driver-held
 state: per micro-batch, the shared k-means kernel (operators/kmeans.py)
 computes vectorized assignments and per-cluster (sum, count) partials
-against the CURRENT centroids. An untracked batch is a one-pass fit
-input (operators/kmeans._FitInput, which every batch fit runs through
-too): within the kernel's driver budget it is folded on the driver
-from one bounded Arrow collect in vec_id order, with no Python worker;
-a larger one takes one narrow worker pass. Every tracked batch takes
-one worker pass of the reassignment body after its state join. Every
-worker pass is planned by the kernel's one planner
-(operators/kmeans._kernel_pass) and runs its one combiner.
+against the CURRENT centroids. ``update_batch`` has one flow: it asks
+the kernel for the batch's delta and applies it, or, for a batch with
+no rows, counts nothing, in either mode. An untracked batch is a
+one-pass fit input (operators/kmeans._FitInput, which every batch fit
+runs through too): within the kernel's driver budget it is folded on
+the driver from one bounded Arrow collect in vec_id order, with no
+Python worker; a larger one takes one narrow worker pass. A tracked
+batch takes one worker pass of the reassignment body after its state
+join (operators/kmeans._reassign_pass). Both come back through the
+kernel's one Arrow fold; every worker pass is planned and run by the
+kernel module, never here.
 The driver then applies the batch MacQueen update
 
     c' = (c * n + batch_sum) / (n + batch_count)
@@ -65,15 +68,7 @@ import os
 
 from pyspark.sql import DataFrame
 
-from ..operators.kmeans import (
-    _DELTA_SCHEMA,
-    _FitInput,
-    _fold_partials,
-    _kernel_pass,
-    _ModelFile,
-    _reassign_rows,
-    _write_npz,
-)
+from ..operators.kmeans import _FitInput, _reassign_pass, _write_npz
 
 _ASSIGN_SCHEMA = "vec_id bigint, cid int"
 
@@ -85,7 +80,8 @@ class StreamingKMeans:
     ``assign_dir``, which tracking requires and whose lifetime the
     caller owns. Within the driver budget the untracked fold sums a
     batch in vec_id order, so it does not depend on how the batch is
-    split or ordered; a batch with no rows is not counted.
+    split or ordered. A batch with no rows is not counted, tracked or
+    not, and commits no assignment generation.
 
     ``state_path`` makes the centroid state durable across query
     restarts: after every applied batch the (C, S, n, cids, meta)
@@ -237,7 +233,8 @@ class StreamingKMeans:
 
     def update_batch(self, batch_df: DataFrame) -> None:
         """foreachBatch body: combine-assign against current centroids,
-        then apply the batch MacQueen update.
+        then apply the batch MacQueen update; a batch with no rows is
+        not counted, in either mode.
 
         With ``track_assignments``, a re-arriving point that the moved
         centroids now place elsewhere is REMOVED from its old cluster
@@ -245,70 +242,10 @@ class StreamingKMeans:
         new one — the reference co-operator's add/remove arithmetic —
         so every centroid stays the exact mean of its CURRENT members
         and total mass equals the number of distinct points seen."""
-        if not self.track:
-            delta = self._delta(batch_df)
-            if delta is None:
-                return
-            sums, counts = delta
-        else:
-            from pyspark.sql import functions as F
-
-            d = self.C.shape[1]
-            # The side file outlives every action that could recompute
-            # from it, which is past out.unpersist().
-            with _ModelFile() as model:
-                model.publish(self.C, self.cids, self.euclidean)
-                # No empty-batch pre-check: replay never delivers an
-                # empty file, and an empty batch is harmless here (zero
-                # partials, a generation equal to its parent).
-                spark = batch_df.sparkSession
-                state = self._assign_state(spark)
-                joined = batch_df.select("vec_id", "embedding").join(
-                    state.withColumnRenamed("cid", "old_cid"), "vec_id", "left"
-                )
-                # Co-locate every copy of a vec_id in ONE combiner
-                # partition (review r6): a broadcast state join keeps the
-                # scan partitioning, and a duplicate spanning two splits
-                # would be removed twice and commit two state rows.
-                # Order among copies is moot: a re-arrival carries the
-                # same vector (module contract), so argmax agrees.
-                joined = joined.repartition("vec_id")
-                out = _kernel_pass(
-                    joined, _reassign_rows, _DELTA_SCHEMA, model
-                ).persist()
-                try:
-                    # k rows per partition; may carry negative removals.
-                    sums, counts = _fold_partials(
-                        out.where(F.col("kind") == 0).collect(), self.cids, d
-                    )
-                    # Next state generation, committed entirely in Spark:
-                    # rows for re-arrivals REPLACE their old row
-                    # (anti-join), first arrivals append. Nothing
-                    # data-proportional reaches the driver.
-                    new_assign = out.where(F.col("kind") == 1).select(
-                        "vec_id", "cid"
-                    )
-                    gen = self._assign_gen + 1
-                    merged = state.join(
-                        new_assign, "vec_id", "left_anti"
-                    ).unionByName(new_assign)
-                    merged.write.mode("overwrite").parquet(self._gen_path(gen))
-                finally:
-                    out.unpersist()
-                self._assign_gen = gen
-                # Explicit schema (guide §6; r12): skips one footer-
-                # inference pass per micro-batch.
-                self._assign_df = spark.read.schema(_ASSIGN_SCHEMA).parquet(
-                    self._gen_path(gen)
-                )
-                # Prune generation gen-2: gen is live, gen-1 stays as the
-                # crash-recovery fallback (a crash between this commit
-                # and the npz _save leaves meta pointing at gen-1), so
-                # on-disk state is <= 2 generations = O(distinct points).
-                if gen >= 2:
-                    import shutil
-
-                    shutil.rmtree(self._gen_path(gen - 2), ignore_errors=True)
+        delta = (self._tracked_delta if self.track else self._delta)(batch_df)
+        if delta is None:
+            return
+        sums, counts = delta
         self.S += sums
         self.n += counts
         nz = self.n > 0
@@ -324,6 +261,37 @@ class StreamingKMeans:
         with _FitInput(batch_df, self.C.shape[1], cache=False) as fit:
             sums, counts = fit.stats(self.C, self.cids, self.euclidean)
         return None if counts.sum() == 0 else (sums, counts)
+
+    def _tracked_delta(self, batch_df: DataFrame):
+        """Tracked per-cluster (sums, counts) of the batch, removals
+        subtracted, or None for a batch with no rows, which commits
+        nothing. Otherwise the batch's assignments are committed as the
+        next state generation: ``state anti-join batch ∪ batch``, so a
+        re-arrival's row REPLACES its old one and a first arrival
+        appends, entirely in Spark; nothing data-proportional reaches
+        the driver."""
+        state = self._assign_state(batch_df.sparkSession)
+        joined = batch_df.select("vec_id", "embedding").join(
+            state.withColumnRenamed("cid", "old_cid"), "vec_id", "left"
+        )
+        model = (self.C, self.cids, self.euclidean)
+        with _reassign_pass(joined, *model) as (delta, new_assign):
+            if delta is None:
+                return None
+            gen = self._assign_gen + 1
+            merged = state.join(new_assign, "vec_id", "left_anti").unionByName(new_assign)
+            merged.write.mode("overwrite").parquet(self._gen_path(gen))
+        self._assign_gen = gen
+        self._assign_df = None  # _assign_state reads generation gen
+        # Prune generation gen-2: gen is live, gen-1 stays as the
+        # crash-recovery fallback (a crash between this commit and the
+        # npz _save leaves meta pointing at gen-1), so on-disk state is
+        # <= 2 generations = O(distinct points).
+        if gen >= 2:
+            import shutil
+
+            shutil.rmtree(self._gen_path(gen - 2), ignore_errors=True)
+        return delta
 
     def foreach_batch(self):
         def fn(batch_df, batch_id):

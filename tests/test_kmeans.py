@@ -301,25 +301,25 @@ def _vectors(spark, tmp_path, n, d=8, seed=0, same=False):
 
 
 def _skm_paths(monkeypatch):
-    """The streaming module, with spies on both untracked paths of the
-    fit input it runs through: the driver path's kernel fold and the
+    """The streaming module, with spies on both paths of the kernel
+    passes it runs: the driver side of ``_FitInput._rows`` and the
     executor path's side file."""
     from flink_streaming_kmeans_spark.operators import kmeans as km
     from flink_streaming_kmeans_spark.streaming import kmeans as skm_mod
 
     calls = {"driver": 0, "executor": 0}
-    fold, model_file = km._partials, km._ModelFile
+    rows, model_file = km._FitInput._rows, km._ModelFile
 
-    def spy_fold(*a):
-        calls["driver"] += 1
-        return fold(*a)
+    def spy_rows(fit, *a, **kw):
+        calls["driver"] += fit.batches is not None
+        return rows(fit, *a, **kw)
 
     class SpyModelFile(model_file):
         def __init__(self):
             calls["executor"] += 1
             super().__init__()
 
-    monkeypatch.setattr(km, "_partials", spy_fold)
+    monkeypatch.setattr(km._FitInput, "_rows", spy_rows)
     monkeypatch.setattr(km, "_ModelFile", SpyModelFile)
     return skm_mod, calls
 
@@ -387,11 +387,13 @@ def test_driver_gate_boundary(spark, tmp_path, monkeypatch):
         assert C.tobytes() == C_other.tobytes(), n
 
 
-@pytest.mark.parametrize("path", ["driver", "executor"])
-def test_empty_untracked_batch_is_not_counted(spark, tmp_path, monkeypatch, path):
-    """A batch with no rows moves nothing and is not counted, on both
-    untracked paths: the driver fold of no rows and the executor pass
-    that returns k zero partials per partition give the same answer."""
+@pytest.mark.parametrize("path", ["driver", "executor", "tracked"])
+def test_empty_batch_is_not_counted(spark, tmp_path, monkeypatch, path):
+    """A batch with no rows moves nothing, is not counted and commits no
+    state generation, on both untracked paths and on the tracked one:
+    the driver fold of no rows, the executor pass that returns k zero
+    partials per partition, and the reassignment pass, whose partials
+    report no arrivals, give the same answer."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -405,11 +407,17 @@ def test_empty_untracked_batch_is_not_counted(spark, tmp_path, monkeypatch, path
     pq.write_table(schema.empty_table(), file)
     df = spark.read.schema("vec_id bigint, embedding array<double>").parquet(file)
     C = np.eye(3, 4)
-    skm = skm_mod.StreamingKMeans(C, np.arange(3))
+    assign_dir = tmp_path / "assign"
+    assign_dir.mkdir()
+    skm = skm_mod.StreamingKMeans(
+        C, np.arange(3), track_assignments=path == "tracked", assign_dir=str(assign_dir)
+    )
     skm.update_batch(df)
-    assert calls[path] == 1, calls
+    ran = "executor" if path == "tracked" else path
+    assert calls == {**{"driver": 0, "executor": 0}, ran: 1}, calls
     assert skm.batches_seen == 0
-    assert skm.C.tobytes() == C.tobytes() and int(skm.n.sum()) == 0
+    assert skm.C.tobytes() == C.tobytes() and not skm.n.any()
+    assert not list(assign_dir.glob("state-v*"))
 
 
 def test_driver_fold_does_not_depend_on_row_order(spark, tmp_path, monkeypatch):
@@ -488,6 +496,28 @@ def test_small_untracked_update_runs_one_jvm_job(spark, tmp_path, monkeypatch):
     assert update(df, 100 * 8) == (1, 1, 1)
     assert km._plan_bytes(same) <= 2 * 8 * 100 * 8
     assert update(same, 100 * 8) == (2, 2, 1)
+
+
+def test_tracked_update_job_counts(spark, tmp_path):
+    """A tracked batch runs 6 Spark jobs in 2 SQL executions, for a first
+    arrival and a re-arrival alike: the arrival count that tells an
+    empty batch apart rides in the pass's own partial rows, at no extra
+    job."""
+    from flink_streaming_kmeans_spark.streaming import kmeans as skm_mod
+
+    df, X = _vectors(spark, tmp_path, 200)
+    skm = skm_mod.StreamingKMeans(
+        X[:4], np.arange(4), track_assignments=True,
+        assign_dir=str(tmp_path / "assign"),
+    )
+    got = []
+    for arrival in ("first", "again"):
+        jobs, plans = _jobs_and_plans(
+            spark, f"tracked-{arrival}", lambda: skm.update_batch(df)
+        )
+        got.append((jobs, len(plans)))
+    assert got == [(6, 2), (6, 2)]
+    assert skm.batches_seen == 2 and int(skm.n.sum()) == 200
 
 
 def test_iter_better_than_random_and_uses_k_clusters(spark, registry):

@@ -26,8 +26,8 @@ any package module other than session.py picks a temp location itself.
 
 The k-means math has one copy: operators/kmeans.py's ``_decode``,
 ``_score`` and ``_accumulate``, which every caller reaches through the
-pass bodies (``_partials``, ``_stats_rows`` and friends), on the driver
-or in a worker.
+pass bodies (``_stats_rows``, ``_reassign_rows`` and friends), on the
+driver or in a worker.
 The fifth test fails if any other package module calls one of them, so
 a second copy of the kernel cannot grow beside a caller.
 
@@ -45,7 +45,13 @@ A worker runs a kernel pass by one route: operators/kmeans.py's
 pass body. The seventh test fails if any other package module calls
 ``.mapInArrow(``, if the kernel module calls it outside that planner,
 or if more than one of its functions loads the model, so a second
-combiner or a hand-planned pass cannot grow beside the route.
+combiner or a hand-planned pass cannot grow beside the route. The
+route stays inside that module: a fit or an untracked micro-batch
+reaches it through ``_FitInput``, a tracked micro-batch through
+``_reassign_pass``, and partials come back through the one fold,
+``_fold``. The eighth test fails if any other package module names the
+planner, the side file, the fold, a pass schema or a pass body, so a
+caller cannot grow a second pass or fold of its own.
 """
 
 from __future__ import annotations
@@ -171,8 +177,8 @@ def test_only_the_kernel_calls_its_math():
                         f"{rel}:{i}" for i, line in enumerate(f, 1) if call.search(line)
                     ]
     assert not offenders, (
-        "reach the k-means math through operators/kmeans.py (_partials, the "
-        f"pass bodies) instead of calling its kernel here: {offenders}"
+        "reach the k-means math through operators/kmeans.py (_FitInput, "
+        f"_reassign_pass) instead of calling its kernel here: {offenders}"
     )
     with open(os.path.join(REPO, owner)) as f:
         assert call.search(f.read()), "the kernel no longer defines its math"
@@ -286,4 +292,43 @@ def test_one_kernel_pass_route():
     assert len(loaders) == 1, (
         f"one combiner loads the model, not {loaders}: run a pass body "
         "through operators/kmeans._combiner"
+    )
+
+
+def test_kernel_passes_stay_in_the_kernel_module():
+    owner = os.path.join("flink_streaming_kmeans_spark", "operators", "kmeans.py")
+    with open(os.path.join(REPO, owner)) as f:
+        tree = ast.parse(f.read())
+    bodies = {
+        node.name
+        for node in tree.body
+        if isinstance(node, ast.FunctionDef) and node.name.endswith("_rows")
+    }
+    assert {"_stats_rows", "_reassign_rows"} <= bodies, bodies
+    private = {"_kernel_pass", "_ModelFile", "_fold", "_DELTA_SCHEMA", "_STATS_SCHEMA"}
+    private |= bodies
+
+    def named(node):
+        if isinstance(node, ast.Name):
+            return node.id
+        if isinstance(node, ast.Attribute):
+            return node.attr
+        if isinstance(node, ast.alias):
+            return node.name
+        return None
+
+    offenders = []
+    for root, _, files in os.walk(PKG):
+        for name in sorted(files):
+            rel = os.path.relpath(os.path.join(root, name), REPO)
+            if name.endswith(".py") and rel != owner:
+                with open(os.path.join(REPO, rel)) as f:
+                    offenders += [
+                        f"{rel}:{getattr(node, 'lineno', '?')} {named(node)}"
+                        for node in ast.walk(ast.parse(f.read()))
+                        if named(node) in private
+                    ]
+    assert not offenders, (
+        "run kernel passes through operators/kmeans._FitInput or "
+        f"_reassign_pass instead of naming the pass machinery here: {offenders}"
     )
