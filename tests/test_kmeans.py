@@ -143,6 +143,151 @@ def test_kernel_partials_bit_equal_numpy(spark):
                     )
 
 
+def _blas_pools():
+    """The loaded OpenBLAS pools, or a skip when none runs more than
+    one thread (the thread rule is then a no-op)."""
+    from flink_streaming_kmeans_spark.operators import kmeans as km
+
+    pools = km._openblas()
+    if not pools or max(get() for get, _ in pools) < 2:
+        pytest.skip("no multi-thread OpenBLAS loaded")
+    return pools
+
+
+def _threads(pools):
+    return [get() for get, _ in pools]
+
+
+@pytest.mark.parametrize("euclidean", [False, True], ids=["dot", "euclidean"])
+def test_score_equals_plain_gemm_on_both_sides_of_the_split(euclidean):
+    """``_score`` on either side of ``_BLAS_SPLIT_MACS`` is bit-equal to
+    a plain ``X @ C.T`` argmax: a large GEMM against the product on the
+    pool as numpy set it (exactly as before the rule), a small one
+    against the product on one thread, which is what the rule runs (a
+    1-thread and a 4-thread product may differ in the last bit). The
+    positions also equal the pool's argmax."""
+    from flink_streaming_kmeans_spark.operators import kmeans as km
+
+    pools = _blas_pools()
+    rng = np.random.default_rng(11)
+    d, k = 64, 16
+    C = rng.standard_normal((k, d))
+    m = km._model(C, np.arange(k), euclidean)
+    big = km._BLAS_SPLIT_MACS // (d * k) + 1
+    small = km._BLAS_SPLIT_MACS // (d * k) - 1
+    assert big * d * k >= km._BLAS_SPLIT_MACS > small * d * k
+    before = _threads(pools)
+    one = [1] * len(pools)
+    for n, threads in ((big, before), (small, one), (2000, one)):
+        X = rng.standard_normal((n, d))
+        for (_, set_), t in zip(pools, threads):
+            set_(t)
+        try:
+            s = X @ C.T - m["bias"]
+        finally:
+            for (_, set_), t in zip(pools, before):
+                set_(t)
+        best, score = km._score(X, m)
+        want = np.argmax(s, axis=1)
+        assert np.array_equal(best, want), n
+        assert score.tobytes() == s[np.arange(n), want].tobytes(), n
+        assert np.array_equal(best, np.argmax(X @ C.T - m["bias"], axis=1)), n
+    assert _threads(pools) == before
+
+
+def test_blas_thread_count_is_restored():
+    """After a small GEMM the pools' thread counts are what they were:
+    after one that raises inside the rule, and after small and large
+    ``_score`` calls from more threads than cores at once, switching
+    often (the lock spans get, set, GEMM and restore, so no thread can
+    save another's one and restore it)."""
+    import os
+    import sys
+    import threading
+
+    from flink_streaming_kmeans_spark.operators import kmeans as km
+
+    pools = _blas_pools()
+    before = _threads(pools)
+    with pytest.raises(RuntimeError):
+        with km._blas_threads(1):
+            assert _threads(pools) == [1] * len(pools)
+            raise RuntimeError("inside the GEMM")
+    assert _threads(pools) == before
+    with km._blas_threads(km._BLAS_SPLIT_MACS):
+        assert _threads(pools) == before
+
+    rng = np.random.default_rng(12)
+    C = rng.standard_normal((16, 64))
+    m = km._model(C, np.arange(16))
+    small, large = rng.standard_normal((2000, 64)), rng.standard_normal((20000, 64))
+    errors = []
+
+    def work(X):
+        try:
+            for _ in range(20):
+                km._score(X, m)
+        except Exception as e:  # surfaced below
+            errors.append(e)
+
+    n = 2 * (os.cpu_count() or 2)
+    threads = [
+        threading.Thread(target=work, args=(small if i % 2 else large,))
+        for i in range(n)
+    ]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    assert _threads(pools) == before
+
+
+def test_small_gemms_leave_no_spinning_pool():
+    """50 small ``_score`` calls 20 ms apart, the rhythm of a streaming
+    trigger, use under half their wall time in process CPU. On the pool,
+    each call leaves the helper threads busy-waiting ~0.1 s, so the
+    process burns about one CPU-second per wall second."""
+    import os
+    import time
+
+    from flink_streaming_kmeans_spark.operators import kmeans as km
+
+    _blas_pools()
+    rng = np.random.default_rng(13)
+    X, C = rng.standard_normal((2000, 64)), rng.standard_normal((16, 64))
+    assert len(X) * C.size < km._BLAS_SPLIT_MACS
+    m = km._model(C, np.arange(16))
+    t0 = os.times()
+    for _ in range(50):
+        km._score(X, m)
+        time.sleep(0.02)
+    t1 = os.times()
+    cpu = (t1.user - t0.user) + (t1.system - t0.system)
+    wall = t1.elapsed - t0.elapsed
+    assert cpu < 0.5 * wall, f"{cpu:.2f} CPU-s in {wall:.2f} s"
+
+
+def test_score_without_openblas(monkeypatch):
+    """With the library lookup finding nothing (MKL, Accelerate, not
+    Linux), the rule is a no-op and ``_score`` still scores."""
+    from flink_streaming_kmeans_spark.operators import kmeans as km
+
+    monkeypatch.setattr(km, "_openblas", lambda: ())
+    rng = np.random.default_rng(14)
+    X, C = rng.standard_normal((100, 8)), rng.standard_normal((4, 8))
+    best, score = km._score(X, km._model(C, np.arange(4)))
+    s = X @ C.T
+    assert np.array_equal(best, np.argmax(s, axis=1))
+    assert score.tobytes() == s.max(axis=1).tobytes()
+
+
 def _sequential_overlay(C, cids, batches):
     """The per-row reassign overlay the vectorized combiner replaced,
     kept verbatim as the reference: each row is added to its argmax
@@ -921,20 +1066,39 @@ def test_fit_within_budget_runs_on_the_driver(spark, tmp_path):
 
 
 def test_driver_fit_is_independent_of_input_split(spark, tmp_path, monkeypatch):
-    """The driver fit sorts the collected rows by vec_id before folding,
-    so one input file and four (holding the rows in reverse id order,
-    which the collect returns in file-split order) give a
+    """The driver fit folds the collected rows in vec_id order, so one
+    input file, four (holding the rows in reverse id order, which the
+    collect returns in file-split order) and one shuffled file give a
     bit-identical init, centroids and assignment, and three runs on one
-    input are bit-identical."""
+    input are bit-identical. The one sorted file arrives in order and
+    skips the sort; the other two arrive out of order and are sorted."""
     from flink_streaming_kmeans_spark.operators import kmeans as km
+
+    arrived = []
+    driver_table = km._driver_table
+
+    def spy_driver_table(*a):
+        table = driver_table(*a)
+        ids = table.column("vec_id").to_numpy()
+        arrived.append(bool((np.diff(ids) >= 0).all()))
+        return table
+
+    monkeypatch.setattr(km, "_driver_table", spy_driver_table)
 
     x, _ = _clustered_points(np.random.default_rng(6), 1200, 6, 16, 0.1)
     ids = np.arange(len(x))
     one = _write_points(spark, str(tmp_path / "one"), ids, x)
     four = _write_points(spark, str(tmp_path / "four"), ids[::-1], x[::-1], files=4)
     assert four.rdd.getNumPartitions() == 4
+    shuffle = np.random.default_rng(7).permutation(len(x))
+    shuffled = _write_points(
+        spark, str(tmp_path / "shuffled"), ids[shuffle], x[shuffle]
+    )
     budget = km._DRIVER_ELEMS
-    runs = [_fit(spark, monkeypatch, df, 6, budget) for df in (one, one, one, four)]
+    inputs = (one, one, one, four, shuffled)
+    runs = [_fit(spark, monkeypatch, df, 6, budget) for df in inputs]
+    # One collect per fit: Lloyd takes the rows init read.
+    assert arrived == [True, True, True, False, False], arrived
     for r in runs[1:]:
         assert r["init"].tobytes() == runs[0]["init"].tobytes()
         assert r["final"].tobytes() == runs[0]["final"].tobytes()

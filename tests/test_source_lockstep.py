@@ -29,7 +29,11 @@ The k-means math has one copy: operators/kmeans.py's ``_decode``,
 pass bodies (``_stats_rows``, ``_reassign_rows`` and friends), on the
 driver or in a worker.
 The fifth test fails if any other package module calls one of them, so
-a second copy of the kernel cannot grow beside a caller.
+a second copy of the kernel cannot grow beside a caller. It also fails
+on a matrix product in operators/kmeans.py outside ``_score`` (``@``,
+``dot``, ``matmul``, ``einsum``) or one there outside the
+``_blas_threads`` rule, so every kernel GEMM picks its BLAS threads
+by the same size rule.
 
 Whether a kernel pass runs on the driver is decided by one gate,
 operators/kmeans._driver_table: one budget (``_DRIVER_ELEMS``) and one
@@ -181,7 +185,47 @@ def test_only_the_kernel_calls_its_math():
         f"_reassign_pass) instead of calling its kernel here: {offenders}"
     )
     with open(os.path.join(REPO, owner)) as f:
-        assert call.search(f.read()), "the kernel no longer defines its math"
+        source = f.read()
+    assert call.search(source), "the kernel no longer defines its math"
+    gemms = _gemms(ast.parse(source))
+    assert [fn for _, fn, _ in gemms] == ["_score"], (
+        f"the kernel's one GEMM is _score's; found (line, function): {gemms}"
+    )
+    assert all(ruled for *_, ruled in gemms), (
+        f"_score's GEMM must run inside `with _blas_threads(...)`: {gemms}"
+    )
+
+
+def _gemms(tree):
+    """(line, enclosing top-level function, inside a ``_blas_threads``
+    ``with``) of every matrix product in a module: the ``@`` operator or
+    a ``dot``/``matmul``/``einsum`` call."""
+    found = []
+
+    def visit(node, fn, ruled):
+        if isinstance(node, ast.With):
+            ruled = ruled or any(
+                isinstance(i.context_expr, ast.Call)
+                and getattr(i.context_expr.func, "id", None) == "_blas_threads"
+                for i in node.items
+            )
+        gemm = (
+            isinstance(node, (ast.BinOp, ast.AugAssign))
+            and isinstance(node.op, ast.MatMult)
+        ) or (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr in ("dot", "matmul", "einsum")
+        )
+        if gemm:
+            found.append((node.lineno, fn, ruled))
+        for child in ast.iter_child_nodes(node):
+            visit(child, fn, ruled)
+
+    for top in tree.body:
+        fn = top.name if isinstance(top, (ast.FunctionDef, ast.ClassDef)) else None
+        visit(top, fn, False)
+    return found
 
 
 def _gate_uses(tree):
