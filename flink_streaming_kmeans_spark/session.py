@@ -11,6 +11,9 @@ place. Two paths:
 
 Any conf changed for a bounded scope goes through :func:`scoped_confs`,
 and every temp path the package writes comes from :func:`scratch_path`.
+A local session also gets the no-fork ``file://`` filesystem
+(``jvm/NoForkLocalFileSystem.java``), compiled once per user by
+:func:`_no_fork_classes`.
 
 Scale notes (100 TB): these confs are the local-mode projection of the
 cluster posture — AQE on (runtime re-plan, skew-join splitting,
@@ -21,12 +24,18 @@ from __future__ import annotations
 
 import atexit
 import contextlib
+import glob
+import hashlib
 import os
 import shutil
+import subprocess
+import sys
 import tempfile
 import threading
 import uuid
 
+import pyspark
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 # Runtime-settable SQL confs — safe to apply to a running session.
@@ -84,8 +93,6 @@ _ENSURED: dict[int, tuple] = {}
 def ensure_confs(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable confs to an existing session (idempotent,
     memoized per session × RUNTIME_CONFS snapshot)."""
-    import sys
-
     key = id(spark)
     snap = tuple(sorted(RUNTIME_CONFS.items()))
     if _ENSURED.get(key) == snap:
@@ -208,12 +215,90 @@ def _remove_dead_roots() -> None:
             pass  # alive, owned by another user
 
 
-def get_spark(app_name: str = "flink-streaming-kmeans-spark") -> SparkSession:
-    """Build (or reuse) a local session with the full conf set."""
+_NO_FORK_SRC = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "jvm", "NoForkLocalFileSystem.java"
+)
+NO_FORK_FS = "flink_streaming_kmeans_spark.jvm.NoForkLocalFileSystem"
+
+
+def _no_fork_classes() -> str | None:
+    """The class directory of the no-fork ``file://`` filesystem, or None
+    when this install has no ``javac`` or the compile fails.
+
+    Compiled once per user against the bundled Hadoop client jar into
+    ``$XDG_CACHE_HOME`` (or ``~/.cache``), in a directory named by a hash
+    of the source and the pyspark version, so a later session only finds
+    it. The build runs under scratch_path and is published with one
+    atomic rename, so no reader sees a partial directory; a process that
+    cannot write the cache uses its scratch build."""
+    with open(_NO_FORK_SRC, "rb") as f:
+        key = hashlib.sha256(f.read() + pyspark.__version__.encode()).hexdigest()
+    cache = os.path.join(
+        os.environ.get("XDG_CACHE_HOME") or os.path.expanduser("~/.cache"),
+        "flink_streaming_kmeans_spark",
+        f"nofork-{key[:16]}",
+    )
+    if os.path.isdir(cache):
+        return cache
+    javac = shutil.which("javac")
+    if javac is None:
+        return None
+    jars = os.path.join(os.path.dirname(pyspark.__file__), "jars")
+    build = scratch_path("nofork")
+    try:
+        api = glob.glob(os.path.join(jars, "hadoop-client-api-*.jar"))[0]
+        subprocess.run(
+            [javac, "--release", "17", "-cp", api, "-d", build, _NO_FORK_SRC],
+            check=True,
+            capture_output=True,
+        )
+    except (IndexError, OSError, subprocess.CalledProcessError) as exc:
+        shutil.rmtree(build, ignore_errors=True)
+        detail = getattr(exc, "stderr", b"") or b""
+        print(
+            "[session] WARNING: could not compile the no-fork local filesystem;"
+            f" local file writes fork chmod: {exc!r} {detail.decode(errors='replace')}",
+            file=sys.stderr,
+        )
+        return None
+    staging = f"{cache}.{uuid.uuid4().hex}"
+    try:
+        shutil.copytree(build, staging)
+        os.rename(staging, cache)
+        return cache
+    except OSError:
+        shutil.rmtree(staging, ignore_errors=True)
+        # Another process published first, or the cache is not writable.
+        return cache if os.path.isdir(cache) else build
+
+
+def _no_fork_confs(master: str) -> dict[str, str]:
+    """The builder confs that make ``file://`` the no-fork filesystem.
+
+    Only a ``local`` master, whose executors run in the driver JVM, and
+    only before this process has launched that JVM: a class directory
+    on ``spark.driver.extraClassPath`` reaches the JVM's classpath only
+    when it starts. Otherwise, or without ``javac``, there are none and
+    the session keeps the stock filesystem and its forks."""
+    local = master == "local" or master.startswith("local[")
+    if not local or SparkContext._gateway is not None:
+        return {}
+    classes = _no_fork_classes()
+    if classes is None:
+        return {}
+    return {
+        "spark.driver.extraClassPath": classes,
+        "spark.hadoop.fs.file.impl": NO_FORK_FS,
+    }
+
+
+def _builder(app_name: str) -> SparkSession.Builder:
+    """The builder get_spark starts its session from."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
+    master = os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]"))
+        .master(master)
         .config("spark.sql.shuffle.partitions", SHUFFLE_PARTITIONS)
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
@@ -239,8 +324,13 @@ def get_spark(app_name: str = "flink-streaming-kmeans-spark") -> SparkSession:
         # against a 32 g heap).
         .config("spark.sql.codegen.cache.maxEntries", CODEGEN_CACHE_ENTRIES)
     )
-    for k, v in RUNTIME_CONFS.items():
+    for k, v in {**RUNTIME_CONFS, **_no_fork_confs(master)}.items():
         builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    return builder
+
+
+def get_spark(app_name: str = "flink-streaming-kmeans-spark") -> SparkSession:
+    """Build (or reuse) a local session with the full conf set."""
+    spark = _builder(app_name).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return ensure_confs(spark)

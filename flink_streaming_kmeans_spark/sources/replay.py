@@ -375,10 +375,13 @@ def run_available_now(
     ckpt = scratch_path("ckpt") if checkpoint is None else checkpoint
     if _filesystem_scheme(spark, ckpt) == "file":
         # A local checkpoint's logs go through FileSystem calls, not
-        # FileContext: without the native Hadoop library, FileContext's
-        # local permission and status calls fork a chmod or a stat from
-        # the driver JVM per log file (631 forks for a 10-trigger drive,
-        # against 136). A local-filesystem tax only: HDFS keeps
+        # FileContext: without the native Hadoop library, a local
+        # permission call forks a chmod from the driver JVM per log
+        # file. session.get_spark's no-fork file:// filesystem removes
+        # them on the FileSystem path, but FileContext's LocalFs builds
+        # its own RawLocalFileSystem and ignores fs.file.impl, so a
+        # 10-trigger drive still forks 67 chmods there, against 0 here.
+        # A local-filesystem tax only: HDFS keeps
         # FileContext, and object stores get this manager anyway. What
         # it gives up is the atomic no-overwrite rename, so two writers
         # of one batch id in two processes could race; in one process

@@ -23,6 +23,11 @@ replaces the checkpoint its drive sets.
 Every temp path the package writes comes from session.scratch_path,
 under one per-process root removed at exit. The fourth test fails if
 any package module other than session.py picks a temp location itself.
+Likewise session.get_spark alone decides the JVM classpath and the
+``file://`` filesystem class, and session._no_fork_classes alone runs
+``javac``: the next test fails if any other module of the package or
+tools/ sets ``fs.file.impl`` or ``spark.driver.extraClassPath`` or
+invokes ``javac``.
 
 The k-means math has one copy: operators/kmeans.py's ``_decode``,
 ``_score`` and ``_accumulate``, which every caller reaches through the
@@ -166,6 +171,29 @@ def test_only_session_makes_scratch():
     assert _mentions(os.path.join(REPO, CONF_OWNER), "tempfile.mkdtemp"), (
         "scratch_path no longer makes the root"
     )
+
+
+def test_only_session_sets_the_filesystem_and_classpath():
+    needle = re.compile(r"fs\.file\.impl[\"']|extraClassPath|[\"']javac\b")
+    offenders = []
+    for top in ("flink_streaming_kmeans_spark", "tools"):
+        for root, _, files in os.walk(os.path.join(REPO, top)):
+            for name in sorted(files):
+                rel = os.path.relpath(os.path.join(root, name), REPO)
+                if name.endswith(".py") and rel != CONF_OWNER:
+                    with open(os.path.join(REPO, rel)) as f:
+                        offenders += [
+                            f"{rel}:{i}"
+                            for i, line in enumerate(f, 1)
+                            if needle.search(line)
+                        ]
+    assert not offenders, (
+        "let session.get_spark set the filesystem class and classpath, and "
+        f"session._no_fork_classes compile, instead of doing it here: {offenders}"
+    )
+    with open(os.path.join(REPO, CONF_OWNER)) as f:
+        found = set(needle.findall(f.read()))
+    assert found >= {'fs.file.impl"', "extraClassPath", '"javac'}, found
 
 
 def test_only_the_kernel_calls_its_math():
