@@ -48,9 +48,9 @@ gate, :func:`_driver_table`. An input of at most ``_DRIVER_ELEMS``
 embedding values is read with one bounded Arrow collect, sorted by
 vec_id, and every pass runs on the driver, with no Python worker, no
 side file and no cache (a fit's assignment comes back as a local
-frame). k-means|| init hands the rows it read to the Lloyd fit that
-follows on the same DataFrame (:class:`_Init`), so a whole fit reads
-its input once. A larger input, or one with no size estimate, runs
+frame). The gate keeps the table it last admitted for as long as that
+DataFrame object lives, so init, Lloyd and an assignment on one object
+read it once. A larger input, or one with no size estimate, runs
 each pass through :func:`_kernel_pass` over the input (cached for a
 fit), planned once per input and re-collected every round; only the
 side file's k×d matrix changes between rounds: constant-size plans,
@@ -69,7 +69,6 @@ import ctypes
 import os
 import threading
 import uuid
-import weakref
 from functools import cache, partial
 
 import numpy as np
@@ -154,12 +153,11 @@ def kmeans_parallel_init(embeddings: DataFrame, k: int = 10, seed: int = 0x5EED)
     the heaviest candidate, then weighted Lloyd rounds over the
     candidates.
 
-    Returns a (k×d numpy array, cids array) pair compatible with
+    Returns a (k×d numpy array, cids array) tuple compatible with
     lloyd_iterate's internals / StreamingKMeans; fewer than k rows when
-    the input has fewer than k distinct points. Within the budget the
-    pair (an :class:`_Init`) also carries the rows init read, and a
-    ``lloyd_iterate`` handed it with the same ``embeddings`` object
-    fits those rows with no job: a fit reads its input once.
+    the input has fewer than k distinct points. Within the budget a
+    ``lloyd_iterate`` on the same ``embeddings`` object finds the rows
+    init read in the gate (:func:`_driver_table`) and runs no job.
     """
     ell = 2 * k
     with _FitInput(embeddings) as fit:
@@ -187,31 +185,7 @@ def kmeans_parallel_init(embeddings: DataFrame, k: int = 10, seed: int = 0x5EED)
         w = fit.stats(C, np.arange(len(C)), euclidean=True)[1].astype(float)
 
     M = _reduce(C, w, k)
-    return _Init(M, np.arange(len(M)), fit.batches, embeddings)
-
-
-class _Init(tuple):
-    """:func:`kmeans_parallel_init`'s (M, cids) pair. It also carries
-    the rows init read on the driver (``batches``: sorted by vec_id, or
-    None on the executor path) and a weak reference to the DataFrame
-    they came from, so a :func:`lloyd_iterate` on that same DataFrame
-    object fits them without reading its input again. It pickles and
-    copies as the plain pair."""
-
-    def __new__(cls, M, cids, batches, source: DataFrame):
-        pair = super().__new__(cls, (M, cids))
-        pair.batches = batches
-        pair._source = weakref.ref(source)
-        return pair
-
-    def __reduce__(self):
-        return tuple, (tuple(self),)
-
-    def rows_of(self, df: DataFrame):
-        """The carried rows if ``df`` is the very object they were read
-        from, else None: a new DataFrame, even of the same plan, is read
-        again."""
-        return self.batches if self._source() is df else None
+    return M, np.arange(len(M))
 
 
 def _reduce(C, w, k: int):
@@ -735,10 +709,25 @@ def _plan_bytes(df: DataFrame) -> int:
     return int(str(stats.sizeInBytes()))
 
 
-def _driver_table(df: DataFrame, cols, d: int | None = None):
-    """``df.select(*cols)`` as one Arrow table when it holds at most
-    ``_DRIVER_ELEMS`` embedding values of width ``d``, else None: the
-    one gate between the driver path and the mapInArrow path.
+# The gate's one slot: (weak reference to the DataFrame it last
+# admitted, its width d, its table). Replaced by one assignment and read
+# once into a local, so concurrent drives at worst miss it.
+_admitted = None
+
+
+def _forget(ref) -> None:
+    """Empty the slot when its DataFrame dies: keep no dead input's rows."""
+    global _admitted
+    slot = _admitted
+    if slot is not None and slot[0] is ref:
+        _admitted = None
+
+
+def _driver_table(df: DataFrame, d: int | None = None):
+    """``df``'s (vec_id, embedding) rows as one Arrow table, sorted by
+    vec_id, when they hold at most ``_DRIVER_ELEMS`` embedding values of
+    width ``d``, else None: the one gate between the driver path and
+    the mapInArrow path.
 
     The size is read in two steps. First the plan's size estimate
     (:func:`_plan_bytes`, no job) rejects an input whose files hold
@@ -758,8 +747,24 @@ def _driver_table(df: DataFrame, cols, d: int | None = None):
 
     ``d=None`` (k-means|| init, which has no model yet) first reads the
     width of one row, a one-row JVM-only job: a row cap without the
-    width would not bound the values collected."""
-    sel = df.select(*cols)
+    width would not bound the values collected.
+
+    The rows are sorted by vec_id (the collect returns them in split
+    order), so a fit does not depend on how its input is split. While
+    the DataFrame object lives, the gate keeps the table it admitted
+    last (``_admitted``): init, Lloyd and an assignment on that very
+    object get it back with no job and no plan analysis, or None when it
+    exceeds the budget in force (at the caller's ``d``, else its own), as
+    a new read would. Any other object, even of the same path, reads."""
+    import weakref
+
+    global _admitted
+    slot = _admitted
+    if slot is not None and slot[0]() is df:
+        d = slot[1] if d is None else d
+        rows = _DRIVER_ELEMS // d if d > 0 else 0
+        return slot[2] if rows and slot[2].num_rows <= rows else None
+    sel = df.select(*_FIT_COLS)
     element = sel.schema["embedding"].dataType.elementType.typeName()
     width = 4 if element == "float" else 8
     if _plan_bytes(df) > 2 * width * _DRIVER_ELEMS:
@@ -771,7 +776,18 @@ def _driver_table(df: DataFrame, cols, d: int | None = None):
     if not rows:
         return None
     table = sel.coalesce(1).limit(rows + 1).toArrow()
-    return table if table.num_rows <= rows else None
+    if table.num_rows > rows:
+        return None
+    import pyarrow.compute as pc
+
+    ids = table.column("vec_id")
+    # A stable sort of a sorted column is the identity, and a 20k-row
+    # sort costs 9-15 ms: sort only when out of order.
+    if not pc.all(pc.less_equal(ids[:-1], ids[1:]), skip_nulls=False).as_py():
+        table = table.sort_by("vec_id")
+    table = table.combine_chunks()
+    _admitted = (weakref.ref(df, _forget), d, table)
+    return table
 
 
 class _FitInput:
@@ -780,36 +796,19 @@ class _FitInput:
     run, chosen once by :func:`_driver_table` (``d``: the model width,
     or None to probe it).
 
-    Within the budget, ``batches`` holds the collected rows as one Arrow
-    batch, and every pass calls its body on the driver. The rows are
-    sorted by vec_id (the collect returns them in split order), so the
-    fit does not depend on how the input is split. A caller that holds
-    those rows already (:meth:`_Init.rows_of`) passes them as
-    ``batches`` and skips the gate. Otherwise every pass is a
-    :func:`_kernel_pass` over the cached input, planned once and
-    re-collected with the model published to the side file.
+    Within the budget, ``batches`` holds the gate's vec_id-sorted table
+    as one Arrow batch, and every pass calls its body on the driver.
+    Otherwise every pass is a :func:`_kernel_pass` over the cached
+    input, planned once and re-collected with the model published to
+    the side file.
     An input the caller cached (``storageLevel``) is used as is and
     left cached, so a caller that fits twice on one input builds one
     cache; any other is cached for the ``with`` block when ``cache`` (a
     one-pass caller gains nothing from a cache)."""
 
-    def __init__(
-        self, embeddings: DataFrame, d: int | None = None, cache: bool = True,
-        batches=None,
-    ):
-        if batches is None:
-            table = _driver_table(embeddings, _FIT_COLS, d)
-            if table is not None:
-                import pyarrow.compute as pc
-
-                ids = table.column("vec_id")
-                # A stable sort of a sorted column is the identity, and a
-                # 20k-row sort costs 9-15 ms: sort only when out of order.
-                ordered = pc.all(pc.less_equal(ids[:-1], ids[1:]), skip_nulls=False)
-                if not ordered.as_py():
-                    table = table.sort_by("vec_id")
-                batches = table.combine_chunks().to_batches()
-        self.batches = batches
+    def __init__(self, embeddings: DataFrame, d: int | None = None, cache: bool = True):
+        table = _driver_table(embeddings, d)
+        self.batches = None if table is None else table.to_batches()
         self._spark = embeddings.sparkSession
         self._input = embeddings
         self._cache = cache
@@ -912,8 +911,8 @@ def lloyd_iterate(
 
     Scale shape: within the driver budget the whole loop runs on the
     driver from one bounded collect (:class:`_FitInput`), or from none
-    when ``init`` is :func:`kmeans_parallel_init`'s result on this same
-    ``embeddings`` object, which carries the rows init read. Above it,
+    when the gate already read this same ``embeddings`` object, as
+    :func:`kmeans_parallel_init` on it does. Above it,
     each iteration is ONE narrow kernel pass over the cached
     embeddings, combined map-side into k partial (sum, count) rows per
     partition — only k×P tiny rows reach the driver, with no shuffle.
@@ -921,11 +920,10 @@ def lloyd_iterate(
     side file's matrix changes (SURVEY.md §7 hard-part 1).
     """
     # init: e.g. kmeans_parallel_init's (k×d matrix, cids) pair.
-    rows = init.rows_of(embeddings) if isinstance(init, _Init) else None
     C, cids = init if init is not None else first_k_init(embeddings, k)
     C, cids = np.array(C, dtype="float64"), np.array(cids)
 
-    with _FitInput(embeddings, C.shape[1], batches=rows) as fit:
+    with _FitInput(embeddings, C.shape[1]) as fit:
         for _ in range(max_iter):
             sums, counts = fit.stats(C, cids, euclidean)
             new_C = C.copy()  # empty cluster keeps its previous centroid

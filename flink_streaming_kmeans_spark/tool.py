@@ -147,9 +147,8 @@ def main(argv: list[str] | None = None) -> int:
     euclidean = fmt == "csv"
     # One cache across init and the fit, which matters only above the
     # driver budget: there both use a cached input as is and leave it
-    # cached (operators/kmeans._FitInput). Within it kmeans|| init's one
-    # bounded collect is the only read: init hands those rows to the
-    # Lloyd fit on this same ``pts``.
+    # cached (operators/kmeans._FitInput). Within it the gate's one
+    # bounded collect of this same ``pts`` serves init and the fit.
     pts = pts.persist()
     try:
         init = (

@@ -1070,24 +1070,34 @@ def test_driver_fit_is_independent_of_input_split(spark, tmp_path, monkeypatch):
     input file, four (holding the rows in reverse id order, which the
     collect returns in file-split order) and one shuffled file give a
     bit-identical init, centroids and assignment, and three runs on one
-    input are bit-identical. The one sorted file arrives in order and
-    skips the sort; the other two arrive out of order and are sorted."""
+    input, each on its own DataFrame object, are bit-identical. Every
+    fit reads its input once. The one sorted file arrives in order and
+    skips the sort; the other two arrive out of order and are sorted
+    once per fit. ``pyarrow.Table`` is an immutable type, so the sort
+    spy sits on the ``pyarrow.compute.sort_indices`` that
+    ``Table.sort_by`` calls."""
+    import pyarrow.compute as pc
+
     from flink_streaming_kmeans_spark.operators import kmeans as km
 
-    arrived = []
-    driver_table = km._driver_table
+    counts = {"sorts": 0, "reads": 0}
+    sort_indices, plan_bytes = pc.sort_indices, km._plan_bytes
 
-    def spy_driver_table(*a):
-        table = driver_table(*a)
-        ids = table.column("vec_id").to_numpy()
-        arrived.append(bool((np.diff(ids) >= 0).all()))
-        return table
+    def spy_sort_indices(*a, **kw):
+        counts["sorts"] += 1
+        return sort_indices(*a, **kw)
 
-    monkeypatch.setattr(km, "_driver_table", spy_driver_table)
+    def spy_plan_bytes(df):
+        counts["reads"] += 1  # the gate sizes every input it reads
+        return plan_bytes(df)
+
+    monkeypatch.setattr(pc, "sort_indices", spy_sort_indices)
+    monkeypatch.setattr(km, "_plan_bytes", spy_plan_bytes)
 
     x, _ = _clustered_points(np.random.default_rng(6), 1200, 6, 16, 0.1)
     ids = np.arange(len(x))
-    one = _write_points(spark, str(tmp_path / "one"), ids, x)
+    one = str(tmp_path / "one")
+    _write_points(spark, one, ids, x)
     four = _write_points(spark, str(tmp_path / "four"), ids[::-1], x[::-1], files=4)
     assert four.rdd.getNumPartitions() == 4
     shuffle = np.random.default_rng(7).permutation(len(x))
@@ -1095,27 +1105,36 @@ def test_driver_fit_is_independent_of_input_split(spark, tmp_path, monkeypatch):
         spark, str(tmp_path / "shuffled"), ids[shuffle], x[shuffle]
     )
     budget = km._DRIVER_ELEMS
-    inputs = (one, one, one, four, shuffled)
-    runs = [_fit(spark, monkeypatch, df, 6, budget) for df in inputs]
-    # One collect per fit: Lloyd takes the rows init read.
-    assert arrived == [True, True, True, False, False], arrived
+    inputs = [spark.read.parquet(one) for _ in range(3)] + [four, shuffled]
+    runs, per_fit = [], []
+    for df in inputs:
+        before = dict(counts)
+        runs.append(_fit(spark, monkeypatch, df, 6, budget))
+        per_fit.append(tuple(counts[c] - before[c] for c in ("reads", "sorts")))
+    assert per_fit == [(1, 0), (1, 0), (1, 0), (1, 1), (1, 1)], per_fit
     for r in runs[1:]:
         assert r["init"].tobytes() == runs[0]["init"].tobytes()
         assert r["final"].tobytes() == runs[0]["final"].tobytes()
         assert r["assign"] == runs[0]["assign"]
 
 
-def test_lloyd_takes_the_rows_init_read(spark, tmp_path, monkeypatch):
-    """kmeans_parallel_init's pair carries the rows it read on the driver
-    to a lloyd_iterate on the same DataFrame object, which then runs no
-    Spark job. A plain tuple of the pair, and a second read of the same
-    path, each make Lloyd run its own bounded collect (1 job); the
-    three fits give byte-equal centroids and identical assignments.
-    Under a budget of 0 init carries no rows, and Lloyd runs the
-    executor path's jobs either way. The pair unpacks as before, and
-    pickles and copies as a plain 2-tuple."""
+def test_gate_reads_each_dataframe_object_once(spark, tmp_path, monkeypatch):
+    """The driver gate keeps the table it last admitted while that
+    DataFrame object lives. kmeans_parallel_init returns a plain
+    (M, cids) tuple, and a lloyd_iterate after it on the same object
+    runs no Spark job, whatever carries the pair: the tuple itself, a
+    copy of it or an unpickled one (until the gate kept the table, a
+    copy read again). An assign_fitted right after that fit runs none
+    either. A new read of the same path runs its own bounded collect
+    (1 job), and so does the first object once the slot has moved to
+    another. All these fits give byte-equal centroids and identical
+    assignments. A budget of 0 put in force after a driver fit sends
+    the same object to the executor path. The slot holds its DataFrame
+    weakly: once the object is gone, so is the slot."""
     import copy
+    import gc
     import pickle
+    import weakref
 
     from flink_streaming_kmeans_spark.operators import kmeans as km
 
@@ -1123,13 +1142,8 @@ def test_lloyd_takes_the_rows_init_read(spark, tmp_path, monkeypatch):
     path = str(tmp_path / "in")
     df = _write_points(spark, path, np.arange(len(x)), x)
     init = km.kmeans_parallel_init(df, k=4)
+    assert type(init) is tuple and len(init) == 2
     C, cids = init
-    assert init.batches is not None
-    assert np.array(init[0]).tobytes() == C.tobytes()
-    for plain in (pickle.loads(pickle.dumps(init)), copy.deepcopy(init)):
-        assert type(plain) is tuple and len(plain) == 2
-        assert plain[0].tobytes() == C.tobytes()
-        assert plain[1].tolist() == cids.tolist()
 
     assign = km._FitInput.assign
 
@@ -1148,25 +1162,79 @@ def test_lloyd_takes_the_rows_init_read(spark, tmp_path, monkeypatch):
         def run():
             fit["out"] = km.lloyd_iterate(spark, data, k=4, max_iter=4, tol=0.0, init=start)
 
-        jobs, _ = _jobs_and_plans(spark, f"handoff-{len(fits)}", run)
+        jobs, _ = _jobs_and_plans(spark, f"gate-{len(fits)}", run)
         fit["assign"] = {r.vec_id: r.cluster_id for r in fit["out"].collect()}
         return jobs
 
-    assert lloyd(df, init) == 0
-    assert lloyd(df, tuple(init)) == 1
+    copies = (tuple(init), pickle.loads(pickle.dumps(init)), copy.deepcopy(init))
+    assert [lloyd(df, start) for start in (init, *copies)] == [0, 0, 0, 0]
+    final = fits[0]["final"]
+    fits.append({})
+    jobs, _ = _jobs_and_plans(
+        spark, "gate-assign",
+        lambda: fits[-1].update(out=km.assign_fitted(df, final, cids)),
+    )
+    assert jobs == 0
+    assigned = fits.pop()["out"].collect()
+    assert {r.vec_id: r.cluster_id for r in assigned} == fits[0]["assign"]
     assert lloyd(spark.read.parquet(path), init) == 1
+    assert lloyd(df, init) == 1
     for f in fits[1:]:
-        assert f["final"].tobytes() == fits[0]["final"].tobytes()
+        assert f["final"].tobytes() == final.tobytes()
         assert f["assign"] == fits[0]["assign"]
     assert sorted(fits[0]["assign"]) == list(range(len(x)))
 
     monkeypatch.setattr(km, "_DRIVER_ELEMS", 0)
     exe = km.kmeans_parallel_init(df, k=4)
-    assert exe.batches is None
     assert exe[0].tobytes() == C.tobytes()
     # 4 iterations and the assignment's checkpoint: one job each.
     assert lloyd(df, exe) == lloyd(df, tuple(exe)) == 5
     assert fits[-1]["assign"] == fits[-2]["assign"] == fits[0]["assign"]
+
+    assert km._admitted[0]() is df
+    probe = weakref.ref(df)
+    del df
+    gc.collect()
+    assert probe() is None and km._admitted is None
+
+
+def test_concurrent_fits_match_sequential_fits(spark, tmp_path):
+    """Six threads, more than the host's cores, fit three inputs at once,
+    two on each, every thread on its own DataFrame object, and each
+    gets the init and the assignment of a sequential fit. All inits
+    finish before any Lloyd starts, so the gate's one slot holds at most
+    one of the inputs and the other fits read theirs again: a lost slot
+    is a miss, never another input's rows."""
+    import sys
+    import threading
+    from concurrent.futures import ThreadPoolExecutor
+
+    from flink_streaming_kmeans_spark.operators import kmeans as km
+
+    paths = []
+    for i in range(3):
+        x, _ = _clustered_points(np.random.default_rng(20 + i), 600, 4, 8, 0.1)
+        paths.append(str(tmp_path / f"in{i}"))
+        _write_points(spark, paths[-1], np.arange(len(x)) + 1000 * i, x)
+    inits_done = threading.Barrier(2 * len(paths))
+
+    def fit(path, together=False):
+        df = spark.read.parquet(path)
+        init = km.kmeans_parallel_init(df, k=4)
+        if together:
+            inits_done.wait(timeout=120)
+        out = km.lloyd_iterate(spark, df, k=4, max_iter=4, tol=0.0, init=init)
+        return init[0].tobytes(), {r.vec_id: r.cluster_id for r in out.collect()}
+
+    want = [fit(p) for p in paths]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(2 * len(paths)) as pool:
+            got = list(pool.map(lambda p: fit(p, together=True), paths * 2))
+    finally:
+        sys.setswitchinterval(interval)
+    assert got == want * 2
 
 
 @pytest.mark.parametrize("budget", ["driver", "executor"])

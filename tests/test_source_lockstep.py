@@ -41,12 +41,15 @@ on a matrix product in operators/kmeans.py outside ``_score`` (``@``,
 by the same size rule.
 
 Whether a kernel pass runs on the driver is decided by one gate,
-operators/kmeans._driver_table: one budget (``_DRIVER_ELEMS``) and one
-bounded collect (``.limit(rows + 1).toArrow()``), used by every batch
-fit and by StreamingKMeans through ``_FitInput``. The sixth test fails if any other package
-module reads the budget or collects with ``.toArrow(``, or if the
-kernel module reads the budget or makes a bounded Arrow collect
-outside the gate, so a second budget or probe cannot drift from it.
+operators/kmeans._driver_table: one budget (``_DRIVER_ELEMS``), one
+bounded collect (``.limit(rows + 1).toArrow()``) and one slot that
+keeps the table it last admitted under a weak reference to its
+DataFrame, used by every batch fit and by StreamingKMeans through
+``_FitInput``. The sixth test fails if any other package module reads
+the budget, collects with ``.toArrow(`` or names ``weakref``, or if
+the kernel module does any of these outside the gate (a plain
+``.toArrow(`` of a pass aside), so a second budget, probe or carrier
+of collected rows cannot grow beside it.
 
 A worker runs a kernel pass by one route: operators/kmeans.py's
 ``_kernel_pass`` plans every ``mapInArrow`` with the one combiner,
@@ -258,12 +261,19 @@ def _gemms(tree):
 
 def _gate_uses(tree):
     """(line, what, enclosing top-level function) of every read of
-    ``_DRIVER_ELEMS`` and every ``.toArrow(`` call in a module."""
+    ``_DRIVER_ELEMS``, every ``.toArrow(`` call and every name of the
+    ``weakref`` module in a module."""
     uses = []
     for top in tree.body:
         fn = top.name if isinstance(top, (ast.FunctionDef, ast.ClassDef)) else None
         for node in ast.walk(top):
-            if isinstance(node, ast.Name) and node.id == "_DRIVER_ELEMS":
+            if (
+                (isinstance(node, ast.Name) and node.id == "weakref")
+                or (isinstance(node, ast.alias) and node.name == "weakref")
+                or (isinstance(node, ast.ImportFrom) and node.module == "weakref")
+            ):
+                uses.append((node.lineno, "weakref", fn))
+            elif isinstance(node, ast.Name) and node.id == "_DRIVER_ELEMS":
                 if isinstance(node.ctx, ast.Load):
                     uses.append((node.lineno, "budget", fn))
             elif isinstance(node, ast.Attribute) and node.attr == "_DRIVER_ELEMS":
@@ -305,10 +315,10 @@ def test_one_driver_gate():
                     offenders.append(f"{rel}:{line} {what} in {fn}")
     assert not offenders, (
         "size kernel inputs through operators/kmeans._driver_table instead of "
-        f"reading the budget or collecting them here: {offenders}"
+        f"reading the budget, collecting them or keeping their rows here: {offenders}"
     )
-    assert {"budget", "bounded collect"} <= set(gate), (
-        f"the gate no longer reads the budget and collects: {gate}"
+    assert {"budget", "bounded collect", "weakref"} <= set(gate), (
+        f"the gate no longer reads the budget, collects and keeps its table: {gate}"
     )
 
 
